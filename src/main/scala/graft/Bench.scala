@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -16,13 +15,7 @@ object Bench {
     if (starved) System.err.println(
       s"[bench] STARVED: SPARK_GRAFT_CPUS=${if (cpusSet) cpus else "<unset>"}" +
         " (need >= 8 for a priced run); stamping starved:true, exit 2")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: first Spark action in a JVM pays ~4s of classloading
     // + codegen compilation that has nothing to do with any query's cost.

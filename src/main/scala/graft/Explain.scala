@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection tool: `runMain graft.Explain <q1[,q2,...]> [sfDir] [outDir]`
   * prints the formatted physical plan of SparkEntry queries — used to
@@ -17,13 +16,7 @@ object Explain {
     val outDir = if (args.length > 2) Some(args(2)) else None
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

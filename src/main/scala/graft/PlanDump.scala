@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -20,13 +19,7 @@ object PlanDump {
     val outDir = if (args.length > 2) args(2) else "/tmp/plans"
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val recorded =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Job/FS-op profiler for a single named query — the instrument behind
   * the lifecycle-cost work (VERDICT r7 #1: q119/q81/q139 drifted in the
@@ -17,13 +16,7 @@ object ProfileQ {
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -41,13 +41,7 @@ object ScaleQ {
     val flagAt = sys.env.getOrElse("SPARK_GRAFT_SWEEP_FLAG_AT", "15.0").toDouble
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def scrub(): Unit = {

@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.build("32")
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {

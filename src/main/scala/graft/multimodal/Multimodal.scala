@@ -794,14 +794,20 @@ object Multimodal {
         .newFixedThreadPool(TakedownTables.size)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(TakedownTables.map { t =>
-        Future {
-          val Array(layer, tbl) = t.split('.')
-          graft.layout.DeletionVectors.deleteKeys(spark,
-            cat.path(layer, tbl), flagged, Seq("doc_id"))
+      try {
+        val deletes = TakedownTables.map { t =>
+          Future {
+            val Array(layer, tbl) = t.split('.')
+            graft.layout.DeletionVectors.deleteKeys(spark,
+              cat.path(layer, tbl), flagged, Seq("doc_id"))
+          }
         }
-      }), Duration.Inf)
-      finally pool.shutdown()
+        // settle EVERY delete before surfacing a failure: failing on the
+        // first error would unwind the caller while sibling deletes are
+        // still committing
+        deletes.map(f => Await.ready(f, Duration.Inf).value.get)
+          .collectFirst { case scala.util.Failure(e) => throw e }
+      } finally pool.shutdown()
     }
     val ep = graft.pipeline.PipelineEpoch.commit(spark, cat,
       TakedownPipe, TakedownTables)

@@ -164,7 +164,7 @@ object MergeQueries {
     source.join(newKeys, Seq("customer_id"), "left")
       .createOrReplaceTempView("graft_q70_updates")
 
-    graft.sql.GraftSql.merge(spark, s"""
+    graft.sql.GraftSql.sql(spark, s"""
       MERGE INTO gold.$table AS target
       USING graft_q70_updates AS source
       ON target.customer_id = source.customer_id

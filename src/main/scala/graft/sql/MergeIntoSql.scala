@@ -952,129 +952,20 @@ case class GraftRestoreCommand(nameParts: Seq[String],
   }
 }
 
-/** Delegating parser: everything is the session's own parser, except
-  *  - parsed MERGE / DELETE FROM / UPDATE statements are wrapped for
-  *    [[MergeIntoRunner]] / [[DmlRunner]] execution (Spark parses all
-  *    three but executes them only against v2 merge-capable catalogs);
-  *  - `VERSION AS OF n` / `TIMESTAMP AS OF ts` over a graft-registered
-  *    parquet table resolve to the catalog's snapshot-log entry (Spark only
-  *    supports time travel for v2 merge-capable catalogs). Tables that
-  *    aren't ours pass through to Spark's own resolution;
-  *  - statements outside Spark's grammar are intercepted as anchored
-  *    text: `DESCRIBE HISTORY` / `DESCRIBE DETAIL`, `OPTIMIZE [ZORDER
-  *    BY]`, `VACUUM [RETAIN n VERSIONS] [DRY RUN]`, `RESTORE …
-  *    VERSION|TIMESTAMP AS OF`,
-  *    `COPY INTO`, `CREATE TABLE … DEEP|SHALLOW CLONE … [VERSION AS OF]`,
-  *    `SELECT * FROM table_changes(...)`,
-  *    `SELECT * FROM pipeline_epoch('p'[, n], 't')` /
-  *    `pipeline_epochs('p', 't')`, `ALTER TABLE … ADD/DROP
-  *    CONSTRAINT`, `ALTER TABLE … ADD COLUMN … GENERATED ALWAYS AS
-  *    IDENTITY`, `INSERT INTO … REPLACE WHERE`, and `ANALYZE TABLE …
-  *    COMPUTE SKIPPING STATISTICS`;
-  *  - parsed `ALTER TABLE … RENAME COLUMN / DROP COLUMN(S)` over a
-  *    graft-resolvable table lower onto the catalog's versioned rewrite
-  *    (Spark executes them only against v2 catalogs);
-  *  - parsed `INSERT INTO / INSERT OVERWRITE` over a graft-resolvable
-  *    table lower onto the versioned link-append / snapshot overwrite
-  *    (Spark's own v1 insert writes files in place, skipping the version
-  *    log, CHECK constraints, and generated columns).
-  */
+/** The extension-session entry point: a delegating parser that runs every
+  * statement through [[GraftSql.intercept]] (identifiers and sub-queries
+  * parsed by `delegate`) and lowers anything else with [[GraftSql.lower]].
+  * Everything that is not a whole statement (expressions, identifiers,
+  * types) is the delegate's. [[GraftSql.sql]] is the other entry point,
+  * for sessions built without the extension; both share one statement
+  * table and one lowering, so the two cannot disagree on a statement. */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
-  private def wrap(plan: LogicalPlan): LogicalPlan =
-    GraftSql.rewriteTimeTravel(session, plan) match {
-      case m: MergeIntoTable => GraftMergeIntoCommand(m)
-      case d: DeleteFromTable => GraftDeleteCommand(d)
-      case u: UpdateTable => GraftUpdateCommand(u)
-      // ALTER TABLE RENAME/DROP COLUMN parse natively but execute only
-      // against v2 catalogs — graft-resolvable targets lower onto the
-      // catalog's versioned rewrite; anything else passes through.
-      case other => GraftSql.rewriteColumnDdl(session, other)
-    }
   private def parseOrIntercept(sqlText: String,
       parse: String => LogicalPlan): LogicalPlan =
-    sqlText match {
-      case GraftSql.DescribeHistoryRe(ident) =>
-        GraftDescribeHistoryCommand(delegate.parseMultipartIdentifier(ident))
-      case GraftSql.DescribeDetailRe(ident) =>
-        GraftDescribeDetailCommand(delegate.parseMultipartIdentifier(ident))
-      case GraftSql.OptimizeRe(ident, wpred, zcols) =>
-        GraftOptimizeCommand(delegate.parseMultipartIdentifier(ident),
-          GraftSql.splitZOrderCols(zcols), Option(wpred).map(_.trim))
-      case GraftSql.TableChangesRe(ident, v1, v2, ks) =>
-        GraftSql.tableChangesPlan(session, ident, v1, v2, ks)
-          .queryExecution.logical
-      case GraftSql.PipelineEpochRe(pipe, epoch, ident) =>
-        GraftSql.pipelineEpochPlan(session, pipe, epoch, ident)
-          .queryExecution.logical
-      case GraftSql.PipelineEpochsRe(pipe, ident) =>
-        GraftSql.pipelineEpochsPlan(session, pipe, ident)
-          .queryExecution.logical
-      case GraftSql.PipelineEpochHistoryRe(pipe, ident) =>
-        GraftSql.pipelineEpochHistoryPlan(session, pipe, ident)
-          .queryExecution.logical
-      case GraftSql.CopyIntoRe(ident, src, fmt, opts) =>
-        GraftCopyIntoCommand(delegate.parseMultipartIdentifier(ident), src,
-          fmt.toLowerCase, GraftSql.parseFormatOptions(opts))
-      case GraftSql.CloneRe(dst, kind, src, v) =>
-        GraftCloneCommand(delegate.parseMultipartIdentifier(dst),
-          delegate.parseMultipartIdentifier(src),
-          Option(v).map(_.toInt), kind.equalsIgnoreCase("SHALLOW"))
-      case GraftSql.VacuumRe(ident, retain, dry) =>
-        GraftVacuumCommand(delegate.parseMultipartIdentifier(ident),
-          keepVersions = Option(retain).map(_.toInt), dryRun = dry != null)
-      case GraftSql.ShowEngineHealthRe(ident) =>
-        GraftShowEngineHealthCommand(
-          Option(ident).map(delegate.parseMultipartIdentifier))
-      case GraftSql.ShowPartitionsRe(ident)
-          if GraftSql.resolvesToGraftTable(session, ident) =>
-        GraftShowPartitionsCommand(delegate.parseMultipartIdentifier(ident))
-      case GraftSql.ShowTblPropertiesRe(ident, key)
-          if GraftSql.resolvesToGraftTable(session, ident) =>
-        GraftShowTblPropertiesCommand(
-          delegate.parseMultipartIdentifier(ident), Option(key))
-      case GraftSql.RestoreRe(ident, v) =>
-        GraftRestoreCommand(delegate.parseMultipartIdentifier(ident),
-          Some(v.toInt))
-      case GraftSql.RestoreTsRe(ident, ts) =>
-        GraftRestoreCommand(delegate.parseMultipartIdentifier(ident),
-          None, Some(ts))
-      case GraftSql.ReplaceWhereRe(ident, cond, query) =>
-        GraftReplaceWhereCommand(delegate.parseMultipartIdentifier(ident),
-          cond.trim, delegate.parseQuery(query))
-      case GraftSql.CreateMviewRe(ident, keys, select) =>
-        GraftCreateMviewCommand(
-          delegate.parseMultipartIdentifier(ident),
-          GraftSql.splitZOrderCols(keys), select)
-      case GraftSql.CtasRe(replace, ident, parts, select) =>
-        GraftCtasCommand(delegate.parseMultipartIdentifier(ident),
-          replace != null, select, GraftSql.splitZOrderCols(parts))
-      case GraftSql.RefreshMviewRe(ident, full) =>
-        GraftRefreshMviewCommand(
-          delegate.parseMultipartIdentifier(ident), full != null)
-      case GraftSql.DropMviewRe(ident) =>
-        GraftDropMviewCommand(delegate.parseMultipartIdentifier(ident))
-      case GraftSql.AddIdentityRe(ident, cname, start, step) =>
-        GraftAddIdentityCommand(delegate.parseMultipartIdentifier(ident),
-          cname, Option(start).map(_.toLong).getOrElse(1L),
-          Option(step).map(_.toLong).getOrElse(1L))
-      case GraftSql.ReorgPurgeRe(ident) =>
-        GraftReorgPurgeCommand(delegate.parseMultipartIdentifier(ident))
-      case GraftSql.SetDvModeRe(ident, flag) =>
-        GraftSetDvModeCommand(delegate.parseMultipartIdentifier(ident),
-          flag.equalsIgnoreCase("true"))
-      case GraftSql.AddConstraintRe(ident, cname, check) =>
-        GraftAddConstraintCommand(delegate.parseMultipartIdentifier(ident),
-          cname, check.trim)
-      case GraftSql.DropConstraintRe(ident, cname) =>
-        GraftDropConstraintCommand(delegate.parseMultipartIdentifier(ident),
-          cname)
-      case GraftSql.AnalyzeSkippingRe(ident, cols, blooms) =>
-        GraftAnalyzeSkippingCommand(delegate.parseMultipartIdentifier(ident),
-          GraftSql.splitZOrderCols(cols), GraftSql.splitZOrderCols(blooms))
-      case _ =>
-        wrap(parse(GraftSql.lowerQualify(sqlText).getOrElse(sqlText)))
-    }
+    GraftSql.intercept(session, delegate, sqlText).getOrElse(
+      GraftSql.lower(session,
+        parse(GraftSql.lowerQualify(sqlText).getOrElse(sqlText))))
   override def parsePlan(sqlText: String): LogicalPlan =
     parseOrIntercept(sqlText, delegate.parsePlan)
   override def parsePlanWithParameters(sqlText: String,
@@ -1101,9 +992,15 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     delegate.parseDataType(sqlText)
 }
 
-/** SQL entry points for sessions built WITHOUT the parser extension (a
-  * parser cannot be injected into an already-built `SessionState`): the
-  * same rewrites `spark.sql` reaches through [[GraftSqlParser]]. */
+/** The engine's SQL statement surface: one statement table
+  * ([[GraftSql.intercept]]) and one lowering ([[GraftSql.lower]]) behind
+  * two entry points.
+  *  - `spark.sql` on a session built with [[graft.functions.GraftExtensions]]
+  *    reaches them through [[GraftSqlParser]];
+  *  - [[GraftSql.sql]] reaches them on any session, including one built
+  *    without the extension (a parser cannot be injected into an
+  *    already-built `SessionState`).
+  * Both entry points produce the same command for the same text. */
 object GraftSql {
   import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
 
@@ -1240,9 +1137,9 @@ object GraftSql {
     """(?is)^\s*SELECT\s+\*\s+FROM\s+pipeline_epoch_history\(\s*'(\w+)'\s*,\s*'([\w.`]+)'\s*\)\s*;?\s*$""".r
 
   private[sql] def pipelineEpochHistoryPlan(session: SparkSession,
-      pipeline: String, ident: String): org.apache.spark.sql.DataFrame = {
-    val dir = resolveDir(session, splitIdent(ident),
-      "pipeline_epoch_history")
+      pipeline: String, nameParts: Seq[String])
+      : org.apache.spark.sql.DataFrame = {
+    val dir = resolveDir(session, nameParts, "pipeline_epoch_history")
     val rows = graft.pipeline.PipelineEpoch
       .historyRows(session, dir, pipeline)
     import session.implicits._
@@ -1251,27 +1148,28 @@ object GraftSql {
   }
 
   private[sql] def pipelineEpochPlan(session: SparkSession,
-      pipeline: String, epochGroup: String, ident: String)
+      pipeline: String, epochGroup: String, nameParts: Seq[String])
       : org.apache.spark.sql.DataFrame = {
-    val dir = resolveDir(session, splitIdent(ident), "pipeline_epoch")
+    val dir = resolveDir(session, nameParts, "pipeline_epoch")
     val epoch = Option(epochGroup).map(_.toInt).getOrElse(
       graft.pipeline.PipelineEpoch.currentEpochPath(session, dir, pipeline))
     graft.pipeline.PipelineEpoch.readAtPath(session, dir, pipeline, epoch)
   }
 
   private[sql] def pipelineEpochsPlan(session: SparkSession,
-      pipeline: String, ident: String): org.apache.spark.sql.DataFrame = {
-    val dir = resolveDir(session, splitIdent(ident), "pipeline_epochs")
+      pipeline: String, nameParts: Seq[String])
+      : org.apache.spark.sql.DataFrame = {
+    val dir = resolveDir(session, nameParts, "pipeline_epochs")
     val rows = graft.pipeline.PipelineEpoch
       .manifestRows(session, dir, pipeline)
     import session.implicits._
     rows.toDF("epoch", "table_name", "version")
   }
 
-  private[sql] def tableChangesPlan(session: SparkSession, ident: String,
-      fromV: String, toV: String, keysGroup: String)
+  private[sql] def tableChangesPlan(session: SparkSession,
+      nameParts: Seq[String], fromV: String, toV: String, keysGroup: String)
       : org.apache.spark.sql.DataFrame = {
-    val dir = resolveDir(session, splitIdent(ident), "table_changes")
+    val dir = resolveDir(session, nameParts, "table_changes")
     val keys = Option(keysGroup).toSeq.flatMap(_.split(","))
       .map(_.trim).filter(_.nonEmpty)
     graft.catalog.ChangeFeed.tableChanges(session, dir,
@@ -1398,17 +1296,17 @@ object GraftSql {
     } catch { case _: Exception => () } // path-only targets have no entry
   }
 
-  /** A statement target's storage directory (raises for temp views /
-    * tables without a location). */
-  /** Does the identifier resolve to a storage-backed catalog table this
+  /** Does the name resolve to a storage-backed catalog table this
     * engine manages? Used to pass statements Spark can also execute
     * (SHOW PARTITIONS on its own catalog tables) through to the
     * delegate when the target is not ours. */
   private[sql] def resolvesToGraftTable(spark: SparkSession,
-      ident: String): Boolean =
-    try GraftShims.tableStorage(spark, splitIdent(ident)).isDefined
+      nameParts: Seq[String]): Boolean =
+    try GraftShims.tableStorage(spark, nameParts).isDefined
     catch { case _: Exception => false }
 
+  /** A statement target's storage directory (raises for temp views /
+    * tables without a location). */
   private[sql] def resolveDir(spark: SparkSession, nameParts: Seq[String],
       stmt: String): String = {
     val (uri, _) = GraftShims.tableStorage(spark, nameParts).getOrElse(
@@ -1463,124 +1361,107 @@ object GraftSql {
         }
     }
 
-  private def splitIdent(ident: String): Seq[String] =
-    ident.split('.').toSeq.map(_.stripPrefix("`").stripSuffix("`"))
-
-  def merge(spark: SparkSession, sqlText: String): Unit =
-    GraftShims.parsePlan(spark, sqlText) match {
-      case m: MergeIntoTable =>
-        MergeIntoRunner.run(spark,
-          rewriteTimeTravel(spark, m).asInstanceOf[MergeIntoTable])
-      // a session built WITH the parser extension already wrapped it
-      case c: GraftMergeIntoCommand => MergeIntoRunner.run(spark, c.merge)
-      case other => throw new IllegalArgumentException(
-        s"not a MERGE statement (parsed to ${other.nodeName})")
-    }
-
-  /** Universal entry: MERGE statements run through the graft lowering,
-    * `VERSION AS OF` resolves against the snapshot log, anything else is
-    * plain `spark.sql`. Gives extension-less sessions the full surface
-    * (and stays correct on extension sessions, whose parser has already
-    * wrapped MERGE / rewritten time travel). */
-  def sql(spark: SparkSession, sqlText: String): org.apache.spark.sql.DataFrame =
-    sqlText match {
-      case DescribeHistoryRe(ident) =>
-        GraftShims.ofRows(spark, GraftDescribeHistoryCommand(splitIdent(ident)))
-      case DescribeDetailRe(ident) =>
-        GraftShims.ofRows(spark, GraftDescribeDetailCommand(splitIdent(ident)))
-      case OptimizeRe(ident, wpred, zcols) =>
-        GraftShims.ofRows(spark,
-          GraftOptimizeCommand(splitIdent(ident), splitZOrderCols(zcols),
-            Option(wpred).map(_.trim)))
-      case TableChangesRe(ident, v1, v2, ks) =>
-        tableChangesPlan(spark, ident, v1, v2, ks)
-      case PipelineEpochRe(pipe, epoch, ident) =>
-        pipelineEpochPlan(spark, pipe, epoch, ident)
-      case PipelineEpochsRe(pipe, ident) =>
-        pipelineEpochsPlan(spark, pipe, ident)
-      case PipelineEpochHistoryRe(pipe, ident) =>
-        pipelineEpochHistoryPlan(spark, pipe, ident)
-      case CopyIntoRe(ident, src, fmt, opts) =>
-        GraftShims.ofRows(spark, GraftCopyIntoCommand(splitIdent(ident),
-          src, fmt.toLowerCase, parseFormatOptions(opts)))
+  /** The statement table: statements outside Spark's grammar, matched as
+    * anchored text — `DESCRIBE HISTORY` / `DESCRIBE DETAIL`, `OPTIMIZE
+    * [WHERE] [ZORDER BY]`, `VACUUM [RETAIN n VERSIONS] [DRY RUN]`,
+    * `RESTORE … VERSION|TIMESTAMP AS OF`, `COPY INTO`, `CREATE TABLE …
+    * DEEP|SHALLOW CLONE`, `SELECT * FROM table_changes(...)` /
+    * `pipeline_epoch(...)` / `pipeline_epochs(...)` /
+    * `pipeline_epoch_history(...)`, `SHOW ENGINE HEALTH`, `SHOW
+    * PARTITIONS` / `SHOW TBLPROPERTIES` over a graft table, `INSERT INTO …
+    * REPLACE WHERE`, `CREATE [OR REPLACE] TABLE … AS`, materialized-view
+    * DDL, identity / constraint / deletion-vector DDL, `REORG TABLE …
+    * APPLY (PURGE)` and `ANALYZE TABLE … COMPUTE SKIPPING STATISTICS`.
+    * Identifiers and sub-queries come from `parser`. None = not one of
+    * these: parse the text natively and [[lower]] the plan. */
+  def intercept(session: SparkSession, parser: ParserInterface,
+      text: String): Option[LogicalPlan] = {
+    def ident(s: String): Seq[String] = parser.parseMultipartIdentifier(s)
+    def ours(s: String): Boolean = resolvesToGraftTable(session, ident(s))
+    PartialFunction.condOpt(text) {
+      case DescribeHistoryRe(t) => GraftDescribeHistoryCommand(ident(t))
+      case DescribeDetailRe(t) => GraftDescribeDetailCommand(ident(t))
+      case OptimizeRe(t, wpred, zcols) =>
+        GraftOptimizeCommand(ident(t), splitZOrderCols(zcols),
+          Option(wpred).map(_.trim))
+      case TableChangesRe(t, v1, v2, ks) =>
+        tableChangesPlan(session, ident(t), v1, v2, ks).queryExecution.logical
+      case PipelineEpochRe(pipe, epoch, t) =>
+        pipelineEpochPlan(session, pipe, epoch, ident(t))
+          .queryExecution.logical
+      case PipelineEpochsRe(pipe, t) =>
+        pipelineEpochsPlan(session, pipe, ident(t)).queryExecution.logical
+      case PipelineEpochHistoryRe(pipe, t) =>
+        pipelineEpochHistoryPlan(session, pipe, ident(t))
+          .queryExecution.logical
+      case CopyIntoRe(t, src, fmt, opts) =>
+        GraftCopyIntoCommand(ident(t), src, fmt.toLowerCase,
+          parseFormatOptions(opts))
       case CloneRe(dst, kind, src, v) =>
-        GraftShims.ofRows(spark,
-          GraftCloneCommand(splitIdent(dst), splitIdent(src),
-            Option(v).map(_.toInt), kind.equalsIgnoreCase("SHALLOW")))
-      case VacuumRe(ident, retain, dry) =>
-        GraftShims.ofRows(spark,
-          GraftVacuumCommand(splitIdent(ident),
-            keepVersions = Option(retain).map(_.toInt),
-            dryRun = dry != null))
-      case ShowEngineHealthRe(ident) =>
-        GraftShims.ofRows(spark,
-          GraftShowEngineHealthCommand(Option(ident).map(splitIdent)))
-      case ShowPartitionsRe(ident) if resolvesToGraftTable(spark, ident) =>
-        GraftShims.ofRows(spark,
-          GraftShowPartitionsCommand(splitIdent(ident)))
-      case ShowTblPropertiesRe(ident, key)
-          if resolvesToGraftTable(spark, ident) =>
-        GraftShims.ofRows(spark,
-          GraftShowTblPropertiesCommand(splitIdent(ident), Option(key)))
-      case RestoreRe(ident, v) =>
-        GraftShims.ofRows(spark,
-          GraftRestoreCommand(splitIdent(ident), Some(v.toInt)))
-      case RestoreTsRe(ident, ts) =>
-        GraftShims.ofRows(spark,
-          GraftRestoreCommand(splitIdent(ident), None, Some(ts)))
-      case ReplaceWhereRe(ident, cond, query) =>
-        GraftShims.ofRows(spark,
-          GraftReplaceWhereCommand(splitIdent(ident), cond.trim,
-            GraftShims.parsePlan(spark, query)))
-      case CreateMviewRe(ident, keys, select) =>
-        GraftShims.ofRows(spark,
-          GraftCreateMviewCommand(splitIdent(ident),
-            splitZOrderCols(keys), select))
-      case CtasRe(replace, ident, parts, select) =>
-        GraftShims.ofRows(spark,
-          GraftCtasCommand(splitIdent(ident), replace != null, select,
-            splitZOrderCols(parts)))
-      case RefreshMviewRe(ident, full) =>
-        GraftShims.ofRows(spark,
-          GraftRefreshMviewCommand(splitIdent(ident), full != null))
-      case DropMviewRe(ident) =>
-        GraftShims.ofRows(spark,
-          GraftDropMviewCommand(splitIdent(ident)))
-      case AddIdentityRe(ident, cname, start, step) =>
-        GraftShims.ofRows(spark,
-          GraftAddIdentityCommand(splitIdent(ident), cname,
-            Option(start).map(_.toLong).getOrElse(1L),
-            Option(step).map(_.toLong).getOrElse(1L)))
-      case ReorgPurgeRe(ident) =>
-        GraftShims.ofRows(spark, GraftReorgPurgeCommand(splitIdent(ident)))
-      case SetDvModeRe(ident, flag) =>
-        GraftShims.ofRows(spark, GraftSetDvModeCommand(
-          splitIdent(ident), flag.equalsIgnoreCase("true")))
-      case AddConstraintRe(ident, cname, check) =>
-        GraftShims.ofRows(spark,
-          GraftAddConstraintCommand(splitIdent(ident), cname, check.trim))
-      case DropConstraintRe(ident, cname) =>
-        GraftShims.ofRows(spark,
-          GraftDropConstraintCommand(splitIdent(ident), cname))
-      case AnalyzeSkippingRe(ident, cols, blooms) =>
-        GraftShims.ofRows(spark, GraftAnalyzeSkippingCommand(
-          splitIdent(ident), splitZOrderCols(cols), splitZOrderCols(blooms)))
-      case _ => GraftShims.parsePlan(spark,
-          lowerQualify(sqlText).getOrElse(sqlText)) match {
-        case m: MergeIntoTable =>
-          MergeIntoRunner.run(spark,
-            rewriteTimeTravel(spark, m).asInstanceOf[MergeIntoTable])
-          spark.emptyDataFrame
-        case c: GraftMergeIntoCommand =>
-          MergeIntoRunner.run(spark, c.merge)
-          spark.emptyDataFrame
-        case d: DeleteFromTable => GraftShims.ofRows(spark,
-          GraftDeleteCommand(d))
-        case u: UpdateTable => GraftShims.ofRows(spark,
-          GraftUpdateCommand(u))
-        case other =>
-          GraftShims.ofRows(spark,
-            rewriteColumnDdl(spark, rewriteTimeTravel(spark, other)))
-      }
+        GraftCloneCommand(ident(dst), ident(src), Option(v).map(_.toInt),
+          kind.equalsIgnoreCase("SHALLOW"))
+      case VacuumRe(t, retain, dry) =>
+        GraftVacuumCommand(ident(t),
+          keepVersions = Option(retain).map(_.toInt), dryRun = dry != null)
+      case ShowEngineHealthRe(t) =>
+        GraftShowEngineHealthCommand(Option(t).map(ident))
+      case ShowPartitionsRe(t) if ours(t) =>
+        GraftShowPartitionsCommand(ident(t))
+      case ShowTblPropertiesRe(t, key) if ours(t) =>
+        GraftShowTblPropertiesCommand(ident(t), Option(key))
+      case RestoreRe(t, v) => GraftRestoreCommand(ident(t), Some(v.toInt))
+      case RestoreTsRe(t, ts) => GraftRestoreCommand(ident(t), None, Some(ts))
+      case ReplaceWhereRe(t, cond, query) =>
+        GraftReplaceWhereCommand(ident(t), cond.trim, parser.parseQuery(query))
+      case CreateMviewRe(t, keys, select) =>
+        GraftCreateMviewCommand(ident(t), splitZOrderCols(keys), select)
+      case CtasRe(replace, t, parts, select) =>
+        GraftCtasCommand(ident(t), replace != null, select,
+          splitZOrderCols(parts))
+      case RefreshMviewRe(t, full) =>
+        GraftRefreshMviewCommand(ident(t), full != null)
+      case DropMviewRe(t) => GraftDropMviewCommand(ident(t))
+      case AddIdentityRe(t, cname, start, step) =>
+        GraftAddIdentityCommand(ident(t), cname,
+          Option(start).map(_.toLong).getOrElse(1L),
+          Option(step).map(_.toLong).getOrElse(1L))
+      case ReorgPurgeRe(t) => GraftReorgPurgeCommand(ident(t))
+      case SetDvModeRe(t, flag) =>
+        GraftSetDvModeCommand(ident(t), flag.equalsIgnoreCase("true"))
+      case AddConstraintRe(t, cname, check) =>
+        GraftAddConstraintCommand(ident(t), cname, check.trim)
+      case DropConstraintRe(t, cname) =>
+        GraftDropConstraintCommand(ident(t), cname)
+      case AnalyzeSkippingRe(t, cols, blooms) =>
+        GraftAnalyzeSkippingCommand(ident(t), splitZOrderCols(cols),
+          splitZOrderCols(blooms))
     }
+  }
+
+  /** The lowering of a natively parsed statement. Spark parses these but
+    * executes them only against v2 catalogs, so they become graft commands:
+    *  - `VERSION AS OF n` / `TIMESTAMP AS OF ts` over a graft table read
+    *    the catalog's snapshot log ([[rewriteTimeTravel]]);
+    *  - MERGE / DELETE FROM / UPDATE run through [[MergeIntoRunner]] /
+    *    [[DmlRunner]];
+    *  - `ALTER TABLE … RENAME COLUMN / DROP COLUMN(S)` and `INSERT INTO /
+    *    OVERWRITE` over a graft table become versioned rewrites
+    *    ([[rewriteColumnDdl]]).
+    * Anything else passes through. Idempotent: on an extension session the
+    * parser has already lowered the plan [[sql]] lowers again. */
+  def lower(session: SparkSession, plan: LogicalPlan): LogicalPlan =
+    rewriteTimeTravel(session, plan) match {
+      case m: MergeIntoTable => GraftMergeIntoCommand(m)
+      case d: DeleteFromTable => GraftDeleteCommand(d)
+      case u: UpdateTable => GraftUpdateCommand(u)
+      case other => rewriteColumnDdl(session, other)
+    }
+
+  /** The entry point for any session: the statement table, else the
+    * session's own parse (after QUALIFY lowering) and [[lower]]. */
+  def sql(spark: SparkSession, sqlText: String): DataFrame = {
+    val parser = spark.sessionState.sqlParser
+    GraftShims.ofRows(spark, intercept(spark, parser, sqlText).getOrElse(
+      lower(spark, parser.parsePlan(lowerQualify(sqlText).getOrElse(sqlText)))))
+  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * `graft.functions.VectorFunctions`, `graft.sql.MergeIntoSql`): wrapping an
   * `Expression` in a user-facing `Column`, registering a function builder on
   * an already-built session, running a parsed `LogicalPlan` as a DataFrame,
-  * parsing SQL text, and reading a table's catalog entry. The same
+  * and reading a table's catalog entry. The same
   * extension-package pattern every open-source Spark format layer uses
   * (Delta ships `org.apache.spark.sql.delta` for exactly these seams);
   * everything else in the engine uses public API.
@@ -31,11 +31,6 @@ object GraftShims {
   /** Analyze + wrap a logical plan as a DataFrame (`Dataset.ofRows`). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Parse SQL text with the session's own parser (so an engine entry point
-    * can accept MERGE text on sessions built WITHOUT the parser extension). */
-  def parsePlan(spark: SparkSession, sqlText: String): LogicalPlan =
-    spark.sessionState.sqlParser.parsePlan(sqlText)
 
   /** Rebuild a [[org.apache.spark.sql.execution.datasources.HadoopFsRelation]]
     * over an explicit surviving-file list (the data-skipping rule's seam):

@@ -147,7 +147,7 @@ class MergeProps extends SparkSuite {
       source0.join(newKeys, Seq("customer_id"), "left")
         .createOrReplaceTempView(s"prop_merge_src_$i")
 
-      graft.sql.GraftSql.merge(spark, s"""
+      graft.sql.GraftSql.sql(spark, s"""
         MERGE INTO gold.$table AS target
         USING prop_merge_src_$i AS source
         ON target.customer_id = source.customer_id

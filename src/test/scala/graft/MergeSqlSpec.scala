@@ -12,7 +12,7 @@ import graft.sql.GraftSql
   * session and equal MergeEngine.scd1 row-for-row; plus the fact-upsert
   * text shape (Gold_Orders.py:60-81), DELETE / NOT MATCHED BY SOURCE
   * clauses, the multi-match cardinality guard, and the non-extension entry
-  * point GraftSql.merge. */
+  * point GraftSql.sql. */
 class MergeSqlSpec extends SparkSuite {
   import spark.implicits._
 
@@ -102,7 +102,7 @@ class MergeSqlSpec extends SparkSuite {
       "SQL MERGE result differs from MergeEngine.scd1")
   }
 
-  test("fact-upsert MERGE text via GraftSql.merge on a plain (extension-less) session") {
+  test("fact-upsert MERGE text via GraftSql.sql on a plain (extension-less) session") {
     val cat = new graft.catalog.Catalog(spark, tmpDir("graft-mergesql-fact"))
     val target = Seq((1L, "F", 10.0), (2L, "O", 20.0))
       .toDF("order_id", "status", "total")
@@ -113,7 +113,7 @@ class MergeSqlSpec extends SparkSuite {
       .createOrReplaceTempView("order_updates")
 
     // Gold_Orders.py:60-81's clause shape: matched → touch updated_dt only
-    GraftSql.merge(spark, s"""
+    GraftSql.sql(spark, s"""
       MERGE INTO gold.fact_orders_sql t
       USING order_updates s
       ON t.order_id = s.order_id

@@ -210,7 +210,7 @@ class PlanQualitySpec extends SparkSuite {
     cat.register("gold", "plan_eq")
     Seq((1L, "x")).toDF("id", "val").createOrReplaceTempView("plan_eq_src")
     def loweredPlan(on: String): String = {
-      val m = org.apache.spark.sql.GraftShims.parsePlan(spark, s"""
+      val m = spark.sessionState.sqlParser.parsePlan(s"""
         MERGE INTO gold.plan_eq t USING plan_eq_src s ON $on
         WHEN MATCHED THEN UPDATE SET t.val = s.val
       """).asInstanceOf[MergeIntoTable]

@@ -44,4 +44,32 @@ class TakedownApplySpec extends SparkSuite {
         else nDocs - nFlagged))
     }
   }
+
+  test("a failed takedown delete surfaces only after the sibling deletes " +
+      "have committed, and no epoch is stamped") {
+    val cat = Multimodal.stageTakedownTables(spark, sf0001)
+    val storeRoot = Multimodal.modalityClusterRoot(spark, sf0001)
+    def dirOf(t: String): String = {
+      val Array(layer, tbl) = t.split('.')
+      cat.path(layer, tbl)
+    }
+    def version(t: String): Int = graft.catalog.Catalog
+      .historyRows(spark, dirOf(t)).filter(_._2).map(_._1).head
+    val broken = "bronze.audio"
+    val others = Multimodal.TakedownTables.filterNot(_ == broken)
+    val before = others.map(t => t -> version(t)).toMap
+    // a missing table directory fails its delete before any Spark job,
+    // while the sibling deletes are still running theirs
+    val gone = new org.apache.hadoop.fs.Path(dirOf(broken))
+    gone.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(gone, true)
+    val err = intercept[IllegalArgumentException](
+      Multimodal.takedownApplyInto(spark, storeRoot, cat))
+    assert(err.getMessage.contains("no table at"), err.getMessage)
+    for (t <- others)
+      assert(version(t) === before(t) + 1,
+        s"$t had not committed its delete when the failure surfaced")
+    assert(PipelineEpoch.currentEpoch(spark, cat, Multimodal.TakedownPipe)
+      === 1, "an epoch was stamped over a failed takedown")
+  }
 }
