@@ -67,9 +67,7 @@ object Bench {
     // what the per-query history prices), while still guaranteeing each
     // query starts from a clean BlockManager.
     def scrub(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pin.releaseAll(spark)
       // Force reclaim NOW, between queries: unpersist only drops
       // references, and letting ~600 executions' old-gen churn collect
       // lazily lands multi-second G1 mixed cycles on random queries'

@@ -76,9 +76,7 @@ object ProfileQ {
         sites.asScala.toSeq.foreach(s => println(s"[profile]  job $s"))
       }
       sites.clear()
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pin.releaseAll(spark)
       System.gc()
     }
     spark.stop()

@@ -45,9 +45,7 @@ object ScaleQ {
     spark.sparkContext.setLogLevel("WARN")
 
     def scrub(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pin.releaseAll(spark)
       System.gc()
     }
 

@@ -33,9 +33,7 @@ object Verify {
       // ~200 queries in one JVM the dead storage otherwise squeezes
       // execution memory (see the same scrub in Bench.scala, where it
       // halved the suite's wall clock).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pin.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -320,18 +320,13 @@ object Audio {
     * keys are 14-bit ints, candidates are an equi-join — never
     * all-pairs; the decode is map-only and id-repartitioned. */
   def nearDupQuery(spark: SparkSession, dir: String,
-      maxHamming: Int = 3, checkpointResult: Boolean = true): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     val fps = fingerprintFrame(spark, dir)
-    val res = nearDupFromFps(fps, maxHamming)
     // pin the slim pair result, release the fingerprint cache (the
-    // fuzzyDecontam protocol); plan-inspection callers pass
-    // checkpointResult = false and own the cache lifetime
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      fps.unpersist(blocking = false)
-      fin
-    }
+    // fuzzyDecontam protocol)
+    val fin = nearDupFromFps(fps, maxHamming).localCheckpoint()
+    fps.unpersist(blocking = false)
+    fin
   }
 
   /** Decoded, length-gated, CACHED (asset_id, sig) fingerprint frame —

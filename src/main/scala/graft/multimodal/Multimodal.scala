@@ -401,7 +401,7 @@ object Multimodal {
     * 14-bit ints — the candidate table is radically smaller than the
     * media it indexes; decode runs once, map-only, upstream. */
   def imageNearDupQuery(spark: SparkSession, dir: String,
-      maxHamming: Int = 6, checkpointResult: Boolean = true): DataFrame = {
+      maxHamming: Int = 6): DataFrame = {
     // cache() the 16-byte-per-asset hash frame: the banded self-join
     // references it on BOTH sides, and (object-typed MapPartitions
     // subtrees not canonicalizing equal) each side would otherwise
@@ -412,13 +412,9 @@ object Multimodal {
       .filter(col("decoded"))
       .select(col("asset_id"), col("dhash"))
       .cache()
-    val res = imageNearDupFromHashes(hashes, maxHamming)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      hashes.unpersist(blocking = false)
-      fin
-    }
+    val fin = imageNearDupFromHashes(hashes, maxHamming).localCheckpoint()
+    hashes.unpersist(blocking = false)
+    fin
   }
 
   /** Banded-candidate near-dup pairs over a (asset_id, dhash) frame —
@@ -811,7 +807,7 @@ object Multimodal {
     }
     val ep = graft.pipeline.PipelineEpoch.commit(spark, cat,
       TakedownPipe, TakedownTables)
-    graft.operators.Dedup.releasePinned(flagged)
+    graft.Pin.release(flagged)
     ep
   }
 
@@ -870,7 +866,7 @@ object Multimodal {
     val cc = graft.operators.Dedup.connectedComponents(labels0, pairs)
     vf.unpersist(blocking = false)
     // videoSigsOf pins its decoded frame-hash table internally — free it
-    graft.operators.Dedup.releasePinned(vf)
+    graft.Pin.release(vf)
     cc.select(col("doc_id").as("video"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).cast("int").as("is_kept"))
       .orderBy("video")
@@ -916,7 +912,7 @@ object Multimodal {
           .as("jaccard_ppm"))
       .orderBy("vid_a", "vid_b")
       .localCheckpoint()
-    graft.operators.Dedup.releasePinned(vf)
+    graft.Pin.release(vf)
     fin
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.catalog.Catalog
 import graft.layout.DeletionVectors
 
@@ -84,24 +85,27 @@ final class ClusterStore(spark: SparkSession, root: String,
   /** The persisted cluster table: (doc_id, cluster_id, is_kept). */
   def clusters: DataFrame = DeletionVectors.readPath(spark, clustersDir)
 
+  /** The docs' signatures, pinned so they decode exactly once. A sigsOf
+    * may pin frames of its OWN (videoSigsOf checkpoints its decoded
+    * frame-hash table); the outer checkpoint replaced the plan, so those
+    * pins are released here. Every op releases its pins in `finally`:
+    * a failed op must not strand blocks for the driver's lifetime. */
+  private def pinnedSigs(docs: DataFrame): DataFrame = {
+    val raw = spec.sigsOf(docs)
+    try raw.localCheckpoint() finally Pin.release(raw)
+  }
+
   /** Initial build over a corpus slice: decode once, full self-pairing
     * (probe = index, every row new), fold, persist all three tables. */
   def build(docs: DataFrame): Unit = {
-    // pinned: the pair join consumes the signature frame on BOTH sides
-    // and the table write reads it once more — decode exactly once
-    val raw = spec.sigsOf(docs)
-    val sigs = raw.localCheckpoint()
-    // a sigsOf may pin frames of its OWN (videoSigsOf checkpoints its
-    // decoded frame-hash table); the outer checkpoint replaced the plan,
-    // so release the raw frame's pins too or every build/append leaks
-    // one pinned RDD per modality for the driver's lifetime
-    Dedup.releasePinned(raw)
-    Catalog.overwritePath(spark, sigs, sigsDir, commitTag = recipeTag)
-    Catalog.overwritePath(spark,
-      spec.pairsOf(sigs, sigs.withColumn("is_new", lit(true))), pairsDir,
-      commitTag = recipeTag)
-    recluster()
-    Dedup.releasePinned(sigs)
+    val sigs = pinnedSigs(docs)
+    try {
+      Catalog.overwritePath(spark, sigs, sigsDir, commitTag = recipeTag)
+      Catalog.overwritePath(spark,
+        spec.pairsOf(sigs, sigs.withColumn("is_new", lit(true))), pairsDir,
+        commitTag = recipeTag)
+      recluster()
+    } finally Pin.release(sigs)
   }
 
   /** TEST SEAM (ClusterStoreSpec's crash-replay case): invoked between
@@ -135,41 +139,42 @@ final class ClusterStore(spark: SparkSession, root: String,
       // might have been lost to the crash
       recluster(); return
     }
-    val raw = spec.sigsOf(docs)
-    val newSigs = raw.localCheckpoint()
-    Dedup.releasePinned(raw) // sigsOf-internal pins (see build)
-    val index = readSigs
-      .join(newSigs.select("doc_id").distinct(), Seq("doc_id"),
-        "left_anti")
-      .withColumn("is_new", lit(false))
-      .unionByName(newSigs.withColumn("is_new", lit(true)))
-    // pin the batch's edges BEFORE the sig append: `index` reads the
-    // sigs table lazily, and appending first would double the batch
-    val newPairs = spec.pairsOf(newSigs, index).localCheckpoint()
-    val tag = batchTag.map { case (k, id) => (k, id.toString) }
-    if (!alreadyOn(sigsDir))
-      Catalog.appendPath(spark, newSigs, sigsDir,
-        commitTag = tag.orElse(recipeTag))
-    onSigsAppended()
-    if (!alreadyOn(pairsDir))
-      Catalog.appendPath(spark, newPairs, pairsDir,
-        commitTag = tag.orElse(recipeTag))
-    // COST-BASED refold choice (r15): the incremental merge-fold wins
-    // when the batch's edge set is small next to the persisted pairs —
-    // the steady state at scale. A bootstrap-sized batch (pairs
-    // comparable to the whole table) degenerates to a super-graph the
-    // size of the full fold plus remap overhead, so it takes the full
-    // recluster instead. Both counts are cheap: newPairs is pinned,
-    // the pairs table is a metadata-scale count. Ratio conf-tunable
-    // (graft.cluster.incrementalRefoldMaxRatio, default 0.25).
-    val nNew = newPairs.count()
-    val nAll = math.max(1L, readPairs.count())
-    val maxRatio = spark.conf
-      .get("graft.cluster.incrementalRefoldMaxRatio", "0.25").toDouble
-    if (nNew <= nAll * maxRatio) reclusterAppend(newSigs, newPairs)
-    else recluster()
-    Dedup.releasePinned(newSigs)
-    Dedup.releasePinned(newPairs)
+    val newSigs = pinnedSigs(docs)
+    try {
+      val index = readSigs
+        .join(newSigs.select("doc_id").distinct(), Seq("doc_id"),
+          "left_anti")
+        .withColumn("is_new", lit(false))
+        .unionByName(newSigs.withColumn("is_new", lit(true)))
+      // pin the batch's edges BEFORE the sig append: `index` reads the
+      // sigs table lazily, and appending first would double the batch
+      val newPairs = spec.pairsOf(newSigs, index).localCheckpoint()
+      try {
+        val tag = batchTag.map { case (k, id) => (k, id.toString) }
+        if (!alreadyOn(sigsDir))
+          Catalog.appendPath(spark, newSigs, sigsDir,
+            commitTag = tag.orElse(recipeTag))
+        onSigsAppended()
+        if (!alreadyOn(pairsDir))
+          Catalog.appendPath(spark, newPairs, pairsDir,
+            commitTag = tag.orElse(recipeTag))
+        // COST-BASED refold choice (r15): the incremental merge-fold
+        // wins when the batch's edge set is small next to the persisted
+        // pairs — the steady state at scale. A bootstrap-sized batch
+        // (pairs comparable to the whole table) degenerates to a
+        // super-graph the size of the full fold plus remap overhead, so
+        // it takes the full recluster instead. Both counts are cheap:
+        // newPairs is pinned, the pairs table is a metadata-scale count.
+        // Ratio conf-tunable (graft.cluster.incrementalRefoldMaxRatio,
+        // default 0.25).
+        val nNew = newPairs.count()
+        val nAll = math.max(1L, readPairs.count())
+        val maxRatio = spark.conf
+          .get("graft.cluster.incrementalRefoldMaxRatio", "0.25").toDouble
+        if (nNew <= nAll * maxRatio) reclusterAppend(newSigs, newPairs)
+        else recluster()
+      } finally Pin.release(newPairs)
+    } finally Pin.release(newSigs)
   }
 
   /** Incremental refold after an APPEND (r15, VERDICT r14 #7): an
@@ -211,30 +216,32 @@ final class ClusterStore(spark: SparkSession, root: String,
       .join(broadcast(newPairs.select("doc_a", "doc_b")), Seq("doc_a"))
       .select(col("ca"), col("doc_b"))
       .localCheckpoint()
-    val superEdges = m.select(col("doc_id").as("doc_b"),
-        col("cluster_id").as("cb"))
-      .join(broadcast(e1), Seq("doc_b"))
-      .filter(col("ca") =!= col("cb"))
-      .select(col("ca").as("doc_a"), col("cb").as("doc_b"))
-      .localCheckpoint()
-    Dedup.releasePinned(e1)
-    val touched = superEdges.select(col("doc_a").as("doc_id"))
-      .unionByName(superEdges.select(col("doc_b").as("doc_id")))
-      .distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    val superL = Dedup.connectedComponents(touched, superEdges)
-      .select(col("doc_id").as("__old_label"),
-        col("cluster_id").as("__new_label"))
-    val next = m.join(broadcast(superL),
-        m("cluster_id") === col("__old_label"), "left")
-      .select(m("doc_id"),
-        coalesce(col("__new_label"), m("cluster_id")).as("cluster_id"))
-    Catalog.overwritePath(spark,
-      next.withColumn("is_kept",
-        (col("doc_id") === col("cluster_id")).cast("int")),
-      clustersDir, commitTag = recipeTag)
-    Dedup.releasePinned(superL)
-    Dedup.releasePinned(superEdges)
+    val superEdges =
+      try m.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb"))
+        .join(broadcast(e1), Seq("doc_b"))
+        .filter(col("ca") =!= col("cb"))
+        .select(col("ca").as("doc_a"), col("cb").as("doc_b"))
+        .localCheckpoint()
+      finally Pin.release(e1)
+    try {
+      val touched = superEdges.select(col("doc_a").as("doc_id"))
+        .unionByName(superEdges.select(col("doc_b").as("doc_id")))
+        .distinct()
+        .select(col("doc_id"), col("doc_id").as("cluster_id"))
+      val superL = Dedup.connectedComponents(touched, superEdges)
+        .select(col("doc_id").as("__old_label"),
+          col("cluster_id").as("__new_label"))
+      try {
+        val next = m.join(broadcast(superL),
+            m("cluster_id") === col("__old_label"), "left")
+          .select(m("doc_id"),
+            coalesce(col("__new_label"), m("cluster_id")).as("cluster_id"))
+        Catalog.overwritePath(spark,
+          next.withColumn("is_kept",
+            (col("doc_id") === col("cluster_id")).cast("int")),
+          clustersDir, commitTag = recipeTag)
+      } finally Pin.release(superL)
+    } finally Pin.release(superEdges)
   }
 
   /** Drain a stream of document batches into this store — the INGEST
@@ -286,11 +293,11 @@ final class ClusterStore(spark: SparkSession, root: String,
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
     val cc = Dedup.connectedComponents(labels0,
       readPairs.select("doc_a", "doc_b"))
-    Catalog.overwritePath(spark,
+    try Catalog.overwritePath(spark,
       cc.withColumn("is_kept",
         (col("doc_id") === col("cluster_id")).cast("int")),
       clustersDir, commitTag = recipeTag)
-    Dedup.releasePinned(cc)
+    finally Pin.release(cc)
   }
 }
 

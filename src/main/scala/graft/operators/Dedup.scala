@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.functions.TextFunctions._
 
 /** Deduplication for LLM-training corpora over the `documents` table:
@@ -46,55 +46,6 @@ object Dedup {
   private def spread(df: DataFrame): DataFrame = {
     val nPart = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < nPart) df.repartition(nPart) else df
-  }
-
-  /** Release the materialized blocks behind a localCheckpoint-pinned
-    * frame (the CC-loop release, shared by the incremental-ingest
-    * queries for their superseded per-generation pins): the frame's plan
-    * is a LogicalRDD, which the CacheManager doesn't track — unpersist
-    * the RDD directly. No-op on lazy frames. */
-  private[graft] def releasePinned(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Eager lineage-truncating materialization for one round of a
-    * driver-looped iterative (CC / pageRank / k-center) — the shared
-    * snap half of the snap/[[releasePinned]] discipline.
-    * `localCheckpoint` by default (fast; an executor loss fails the
-    * job, the job reruns — fine for a driver-looped refinement);
-    * with `checkpointDir`, reliable `checkpoint()` into fault-tolerant
-    * storage so a round survives executor loss on a long cluster run.
-    * Both are EAGER (materialize AND truncate lineage) and release
-    * through [[releasePinned]].
-    *
-    * The checkpoint dir is set only when the context's CURRENT dir does
-    * not already live under the requested root: `setCheckpointDir`
-    * mints a fresh UUID subdirectory per call AND mutates global
-    * SparkContext state, so calling it per round would create N dirs
-    * per N-round loop and race concurrent driver-threaded loops
-    * (ADVICE r13). One loop = one subdirectory; concurrent loops
-    * sharing a root share one. Loops with DIFFERENT roots on
-    * concurrent threads still race the global setting — callers pass
-    * one checkpoint root per session (the documented shape). */
-  private[graft] def snap(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame = {
-    checkpointDir.foreach { d =>
-      val sc = df.sparkSession.sparkContext
-      val want = {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toString
-      }
-      val alreadyUnder = sc.getCheckpointDir.exists { cur =>
-        Option(new org.apache.hadoop.fs.Path(cur).getParent)
-          .exists(_.toString == want)
-      }
-      if (!alreadyUnder) sc.setCheckpointDir(d)
-    }
-    if (checkpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
   }
 
   /** Exact dedup: md5 text hash, keep the lowest doc_id of each group
@@ -208,10 +159,7 @@ object Dedup {
     (res, Seq(distinctW, msk))
   }
 
-  /** Plan-inspection callers pass `checkpointResult = false` and own the
-    * cache lifetimes (the fuzzyDecontam protocol). */
-  def minhashLsh(spark: SparkSession, dir: String,
-      checkpointResult: Boolean = true): DataFrame = {
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // The fixture is one small parquet file → a 1-partition scan; the
     // signature computation and (quadratic) candidate expansion would run
@@ -254,12 +202,9 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
     // pin the surviving-pair result, release every cache this query
     // built (shingle projection, band explode, vocab, masks)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      (wiCaches ++ Seq(exploded, d)).foreach(_.unpersist(blocking = false))
-      fin
-    }
+    val fin = res.localCheckpoint()
+    (wiCaches ++ Seq(exploded, d)).foreach(_.unpersist(blocking = false))
+    fin
   }
 
   /** Per-word hash for SimHash (md5-hex-prefix → 60-bit integer). */
@@ -313,8 +258,7 @@ object Dedup {
     * keys; pairs agreeing on any band (hamming LSH — any fingerprint with
     * hamming<=3 differs in at most 3 of the 4 bands, so it MUST agree on
     * one) with hamming distance <= 3 over the full 60 bits. */
-  def simhashPairs(spark: SparkSession, dir: String,
-      checkpointResult: Boolean = true): DataFrame = {
+  def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     // cached: referenced three times (band explode + both pair-fetch sides)
     val s = simhash(spark, dir).cache()
     // Band into 4 15-bit keys; one explode + one self-join on the
@@ -346,12 +290,9 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
     // pin the surviving-pair result, release the fingerprint cache (the
     // fuzzyDecontam protocol — VERDICT r9 #2)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      s.unpersist(blocking = false)
-      fin
-    }
+    val fin = res.localCheckpoint()
+    s.unpersist(blocking = false)
+    fin
   }
 
   /** N-gram (3-word shingle) Jaccard near-dup within blocking buckets
@@ -365,7 +306,7 @@ object Dedup {
     *
     * The returned frame is localCheckpoint-PINNED (eager, lineage-free);
     * ownership of the pin transfers to the CALLER — release it with
-    * [[releasePinned]] once consumed, or rely on a session-level scrub
+    * [[graft.Pin.release]] once consumed, or rely on a session-level scrub
     * (Bench/Verify unpersist all stray blocks between queries). Repeated
     * un-released invocations in one JVM accumulate pinned RDD blocks
     * (ADVICE r14). */
@@ -642,14 +583,10 @@ object Dedup {
     *
     * Edge layout (r14 §2.4): the pair GENERATION — often the most
     * expensive subtree in the query (codec passes, band joins) — is
-    * materialized ONCE (`snap`), then the both-orientations union is
-    * re-materialized pre-partitioned on the probe key `doc_b`. The
-    * checkpointed frame advertises that hash partitioning, so the
-    * per-round label join never re-shuffles the edge table — only the
-    * (smaller) label side moves each round. The old shape cached the
-    * union of two pair-subtree instances (computing the generation
-    * twice) under UnknownPartitioning (re-shuffling 2·E rows every
-    * round).
+    * materialized ONCE, then the both-orientations union is cached
+    * pre-partitioned on the probe key `doc_b` ([[graft.Pin.keyed]]), so
+    * the per-round label join never re-shuffles the edge table — only
+    * the (smaller) label side moves each round.
     *
     * @param labels0 (doc_id, cluster_id) initial labels, cluster_id=doc_id
     * @param pairs   (doc_a, doc_b) undirected edges, either orientation
@@ -657,41 +594,16 @@ object Dedup {
     *                      instead of executor-local `localCheckpoint()` */
   def connectedComponents(labels0: DataFrame, pairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
-    // the shared snap/releasePinned discipline: eager materialization
-    // truncates lineage per round; the superseded round's LogicalRDD
-    // blocks are unpersisted directly (the CacheManager doesn't track
-    // checkpointed frames, so df.unpersist() would miss them)
-    def snap(df: DataFrame): DataFrame = Dedup.snap(df, checkpointDir)
-    def release(df: DataFrame): Unit = releasePinned(df)
-    val spark = labels0.sparkSession
-    // pair generation runs exactly once; the union below only reads
-    // the pinned blocks
-    val p0 = snap(pairs.select("doc_a", "doc_b"))
-    // SIZE-AWARE width (r15, guide §2): the union is 2·|pairs| slim id
-    // rows — counting the already-materialized p0 blocks is one cheap
-    // job, and deriving the partition count from it replaces the fixed
-    // defaultParallelism width that paid 32-wide task overhead per CC
-    // round on fixture-sized graphs while capping a 100 TB edge set at
-    // core count. The per-round label join still never re-shuffles the
-    // edge side — only its width now follows the data.
-    val edgeParts = Tables.sizedPartitions(spark, p0.count() * 2)
-    // CACHE (not localCheckpoint) for the partitioned union: a
-    // checkpointed LogicalRDD advertises UnknownPartitioning (verified
-    // against Spark 4.1 plans, r15 — plans/r15/q57_*: `Scan ExistingRDD
-    // …, UnknownPartitioning(0)`), so a snap here silently put the
-    // 2·E-row exchange back into EVERY round's label join. An
-    // InMemoryRelation preserves its child's hashpartitioning(doc_b)
-    // (AQE cannot re-shape a cached plan's output partitioning by
-    // default), so the hop join consumes the clustering — only labels
-    // move per round, now for real. p0 stays pinned until the loop ends:
-    // a recomputed cache partition must still find its source blocks.
-    val edges = p0
-      .unionByName(p0.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b")))
-      .repartition(edgeParts, col("doc_b"))
-      .cache()
-    edges.count() // materialize before round 1's concurrent subtrees
-    var labels = snap(labels0.select(col("doc_id"), col("cluster_id")))
+    // pair generation runs exactly once; the width follows the
+    // 2·|pairs| symmetrized union (r15, guide §2) — no fixed
+    // defaultParallelism width paying 32-wide task overhead per round on
+    // fixture-sized graphs while capping a 100 TB edge set at core count
+    val pairPin = Pin.keyed(pairs.select("doc_a", "doc_b"),
+      rowsPerSourceRow = 2, checkpointDir)
+    val edges = pairPin.by("doc_b", p0 => p0.unionByName(
+      p0.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    var labels = Pin.snap(
+      labels0.select(col("doc_id"), col("cluster_id")), checkpointDir)
     // (sum, count) in ONE aggregate (ADVICE r14): the count is free in
     // the same two-stage agg and guards the two implicit preconditions
     // of sum-convergence — a round-1 doc-set GROWTH (edge endpoints
@@ -708,15 +620,9 @@ object Dedup {
     var (prevSum, prevN) = sumOf(labels)
     var converged = false
     while (!converged) {
-      // the label side is re-keyed to the EDGE table's exact layout
-      // (hash(doc_id, edgeParts)) before the join: a checkpointed label
-      // frame carries UnknownPartitioning, and letting EnsureRequirements
-      // shuffle it would land on spark.sql.shuffle.partitions — a width
-      // MISMATCH that drags the cached edge side back into an exchange
-      // of 2·E rows per round (r15 plan evidence). This explicit
-      // repartition costs exactly the label exchange the join needed
-      // anyway; SHUFFLE_HASH skips the per-round sorts.
-      val aligned = labels.repartition(edgeParts, col("doc_id"))
+      // labels re-keyed to the edge copy's layout (see Pin.keyed): the
+      // exchange the join needed anyway; SHUFFLE_HASH skips the sorts
+      val aligned = labels.repartition(pairPin.width, col("doc_id"))
       val viaEdges = edges
         .join(aligned.hint("SHUFFLE_HASH"),
           edges("doc_b") === aligned("doc_id"))
@@ -733,7 +639,8 @@ object Dedup {
           col("cluster_id") === col("__lbl"))
         .select(col("doc_id"),
           least(col("cluster_id"), col("__lbl_of_lbl")).as("cluster_id"))
-      val snapped = snap(next) // eager: materializes AND truncates lineage
+      // eager: materializes AND truncates lineage
+      val snapped = Pin.snap(next, checkpointDir)
       val (roundSum, roundN) = sumOf(snapped)
       require(roundSum.isDefined || roundN == 0,
         "connectedComponents: decimal(38,0) label-sum overflowed — " +
@@ -744,11 +651,12 @@ object Dedup {
       converged = roundSum == prevSum && roundN == prevN
       prevSum = roundSum
       prevN = roundN
-      release(labels) // superseded round: free its blocks before moving on
+      // superseded round: free its blocks before moving on (a pin is
+      // a LogicalRDD the CacheManager doesn't track — see Pin.release)
+      Pin.release(labels)
       labels = snapped
     }
-    edges.unpersist(blocking = false)
-    release(p0)
+    pairPin.release()
     labels
   }
 
@@ -862,8 +770,7 @@ object Dedup {
     * pairs only. The benchmark membership rule (`doc_id % benchMod`)
     * stands in for the eval-suite table a real pipeline would join. */
   def fuzzyDecontam(spark: SparkSession, dir: String, benchMod: Int = 5,
-      minJaccardPpm: Long = 500000L,
-      checkpointResult: Boolean = true): DataFrame = {
+      minJaccardPpm: Long = 500000L): DataFrame = {
     // one cached slim projection: distinct shingle set per doc (the
     // 12 sig components, the verify arrays, and the bench split all
     // read it), spread off the 1-partition fixture scan
@@ -896,16 +803,11 @@ object Dedup {
       .orderBy("doc_id", "bench_id")
     // pin the (small) contaminated-pair result, then release both caches
     // (the seedDistance protocol): cached shingle/band blocks must not
-    // leak across queries in long Verify/Bench sessions. Callers that
-    // need the LAZY plan (plan-inspection specs, further composition)
-    // pass checkpointResult = false and own the cache lifetime.
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      bands.unpersist(blocking = false)
-      d.unpersist(blocking = false)
-      fin
-    }
+    // leak across queries in long Verify/Bench sessions.
+    val fin = res.localCheckpoint()
+    bands.unpersist(blocking = false)
+    d.unpersist(blocking = false)
+    fin
   }
 
   /** q225: incremental ingest dedup against a PERSISTED band index — the
@@ -934,8 +836,7 @@ object Dedup {
     * index rows. Nothing re-reads or re-pairs the existing corpus; the
     * per-ingest cost is O(batch + candidates), which is the whole point. */
   def incrementalDedup(spark: SparkSession, dir: String, gens: Int = 3,
-      minJaccardPpm: Long = 800000L,
-      checkpointResult: Boolean = true): DataFrame = {
+      minJaccardPpm: Long = 800000L): DataFrame = {
     val d = spread(Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
         (col("doc_id") % gens).cast("int").as("gen"),
@@ -979,26 +880,19 @@ object Dedup {
           col("m.matched_id").as("matched_id"),
           col("m.jaccard_ppm").as("jaccard_ppm"))
       // pin this batch's verdicts BEFORE appending its bands (the append
-      // mutates the index the verdicts were computed against) — even
-      // with checkpointResult = false, per-gen pinning is semantic, not
-      // hygiene, so only the LAST generation can stay lazy for a plan
-      // inspection
-      val pinned = if (checkpointResult || g < gens - 1)
-        verified.localCheckpoint() else verified
+      // mutates the index the verdicts were computed against)
+      val pinned = verified.localCheckpoint()
       graft.catalog.Catalog.appendPath(spark, newBands, idx,
         commitTag = Some((BandRecipeTag, BandRecipe)))
       pinned
     }
-    val res = perGen.reduce(_ unionByName _).orderBy("doc_id")
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      // the final pin supersedes the per-generation pins — release them
-      // along with the shingle cache (cache-lifetime protocol)
-      perGen.foreach(releasePinned)
-      d.unpersist(blocking = false)
-      fin
-    }
+    val fin = perGen.reduce(_ unionByName _).orderBy("doc_id")
+      .localCheckpoint()
+    // the final pin supersedes the per-generation pins — release them
+    // along with the shingle cache (cache-lifetime protocol)
+    perGen.foreach(Pin.release)
+    d.unpersist(blocking = false)
+    fin
   }
 
   /** Band-index COMPACTION against the source table's live rows: drop
@@ -1419,8 +1313,7 @@ object Dedup {
     * join back per surviving pair. shared ≥ 2 prunes the
     * single-coincidence tail before the ratio gate. */
   def containmentDup(spark: SparkSession, dir: String,
-      minContainmentPpm: Long = 800000L,
-      checkpointResult: Boolean = true): DataFrame = {
+      minContainmentPpm: Long = 800000L): DataFrame = {
     import graft.functions.TextFunctions.shingles3
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -1470,13 +1363,10 @@ object Dedup {
       .orderBy("id1", "id2")
     // pin the surviving-pair result, release both slim gram caches (the
     // fuzzyDecontam protocol — VERDICT r9 #2)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      g.unpersist(blocking = false)
-      ex.unpersist(blocking = false)
-      fin
-    }
+    val fin = res.localCheckpoint()
+    g.unpersist(blocking = false)
+    ex.unpersist(blocking = false)
+    fin
   }
 
   /** q204: entity resolution (record linkage) — the Fellegi–Sunter

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 
 /** Graph centrality over relationship graphs mined from the warehouse —
   * the power-iteration counterpart to the pointer-doubling connected
@@ -64,7 +64,7 @@ object GraphQueries {
     *
     * @param checkpointDir when set, every round's O(nodes) rank frame
     *   reliably `checkpoint()`s into fault-tolerant storage (the
-    *   [[Dedup.connectedComponents]] option, same snap/release
+    *   [[Dedup.connectedComponents]] option, same [[graft.Pin]]
     *   protocol) so a long cluster run survives executor loss
     *   mid-iteration; default keeps the fast path — no per-round pin
     *   at all (plan growth is linear in the small fixed `iters`), one
@@ -73,31 +73,20 @@ object GraphQueries {
       checkpointDir: Option[String] = None): DataFrame = {
     val edges = tradeEdges(spark, dir)
     val out = edges.groupBy("src").agg(sum(col("w")).as("wout"))
-    // Edge layout (r15, the CC-fold discipline): the old `cache()` held
-    // ew under UnknownPartitioning, so every iteration re-shuffled (and
-    // sorted) the edge table into its rank join. Materialize it ONCE,
-    // pre-partitioned on the join key `src` at a size-derived width —
-    // each iteration then only moves the O(nodes) rank frame, and the
-    // contribution shuffle (groupBy dst) that pagerank fundamentally
-    // needs. localCheckpoint doubles as the up-front materialization the
-    // old count() provided (the final plan holds one ew reference per
-    // iteration).
-    val p0 = edges.join(out, Seq("src")).localCheckpoint()
-    val nP = graft.Tables.sizedPartitions(spark, p0.count())
-    // CACHE the partitioned copy (not localCheckpoint): a checkpointed
-    // LogicalRDD advertises UnknownPartitioning (r15 plan evidence, see
-    // connectedComponents), so only an InMemoryRelation hands
-    // hash(src, nP) to the per-iteration rank join. p0 stays pinned
-    // until the final ranks are pinned.
-    val ew = p0.repartition(nP, col("src")).cache()
-    ew.count()
+    // Edge layout (r15, the CC-fold discipline): the edge table is keyed
+    // ONCE on the join key `src` (Pin.keyed) — each iteration then only
+    // moves the O(nodes) rank frame, and the contribution shuffle
+    // (groupBy dst) that pagerank fundamentally needs.
+    val edgePin = Pin.keyed(edges.join(out, Seq("src")))
+    val nP = edgePin.width
+    val ew = edgePin.by("src")
     var ranks = ew.select(col("src").as("node")).distinct()
       .withColumn("rank", lit(1000000000L))
-    // releasePinned walks the WHOLE plan tree; the INITIAL rank frame is
+    // Pin.release walks the WHOLE plan tree; the INITIAL rank frame is
     // lazy over ew's LogicalRDD, so releasing it round 1 would kill the
     // pinned edge table mid-loop (it did, once ew moved from cache() to
     // localCheckpoint — caught by GraphQueriesSpec's checkpointDir case).
-    // Only rounds that snap() produced are released.
+    // Only rounds that Pin.snap produced are released.
     var ranksPinned = false
     for (_ <- 1 to iters) {
       // rank side re-keyed to the edge cache's width (see seedDistance)
@@ -113,8 +102,8 @@ object GraphQueries {
         else {
           // reliable per-round pin: truncates lineage AND survives
           // executor loss; the superseded round's blocks are released
-          val snapped = graft.operators.Dedup.snap(next, checkpointDir)
-          if (ranksPinned) graft.operators.Dedup.releasePinned(ranks)
+          val snapped = Pin.snap(next, checkpointDir)
+          if (ranksPinned) Pin.release(ranks)
           ranksPinned = true
           snapped
         }
@@ -126,8 +115,7 @@ object GraphQueries {
     // final round is already pinned — no second materialization.)
     val fin =
       if (checkpointDir.isEmpty) ranks.localCheckpoint() else ranks
-    ew.unpersist(blocking = false)
-    graft.operators.Dedup.releasePinned(p0)
+    edgePin.release()
     fin.select(col("node"), col("rank").as("rank_ppb"))
       .orderBy("node")
   }
@@ -280,25 +268,19 @@ object GraphQueries {
       minSupport: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Edge layout (r15, the CC-fold discipline): the support-pruned
-    // edge build runs ONCE (snap), the symmetrized union is re-pinned
+    // edge build runs ONCE (Pin.keyed), the symmetrized union is cached
     // pre-partitioned on the probe key `b` at a size-derived width, and
     // each round's label frame is kept hash-partitioned on `a`/`node`
     // at the SAME width — the per-round join is co-partitioned and the
     // (a,label) count + per-a window pick share ONE exchange (clustering
     // by `a` satisfies both), where the old shape re-shuffled the cached
     // edge table every round plus two label exchanges.
-    def release(df: DataFrame): Unit = Dedup.releasePinned(df)
-    val p0 = supportEdges(spark, dir, minSupport).localCheckpoint()
-    val nP = graft.Tables.sizedPartitions(spark, p0.count() * 2)
-    // CACHED partitioned union (not a snap): a checkpointed LogicalRDD
-    // advertises UnknownPartitioning (r15 plan evidence, see
-    // connectedComponents) — the cache is what actually hands
-    // hash(b, nP) to each round's join. p0 stays pinned to the end.
-    val sym = p0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(p0.select(col("v").as("a"), col("u").as("b")))
-      .repartition(nP, col("b"))
-      .cache()
-    sym.count()
+    val edgePin = Pin.keyed(supportEdges(spark, dir, minSupport),
+      rowsPerSourceRow = 2)
+    val nP = edgePin.width
+    val sym = edgePin.by("b", p0 =>
+      p0.select(col("u").as("a"), col("v").as("b"))
+        .unionAll(p0.select(col("v").as("a"), col("u").as("b"))))
     var labels = sym.select(col("a").as("node"))
       .repartition(nP, col("node")).distinct()
       .withColumn("label", col("node"))
@@ -316,8 +298,7 @@ object GraphQueries {
     // pin the O(nodes) result eagerly so the edge blocks can be released
     // before the caller's action runs
     val fin = labels.localCheckpoint()
-    sym.unpersist(blocking = false)
-    release(p0)
+    edgePin.release()
     fin
       .withColumn("community_size", count(lit(1)).over(
         Window.partitionBy("label")))
@@ -348,35 +329,22 @@ object GraphQueries {
     // rescale). The q57 CC recipe applies: localCheckpoint each score
     // frame (eager, O(nodes) rows) and release superseded rounds, so
     // every half-round is evaluated exactly once.
-    def snap(df: DataFrame): DataFrame = df.localCheckpoint()
-    def release(df: DataFrame): Unit =
-      df.queryExecution.logical.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
     val orders = Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     // Edge layout (r15, the CC-fold discipline): HITS joins the edge
     // aggregate on ALTERNATING keys (cust for the authority push, supp
-    // for the hub push), so ONE pre-partitioned copy can't serve both.
-    // Pin TWO slim copies, each hash-partitioned on its half-round's
-    // key at a size-derived width — every half-round then moves only
-    // the O(nodes) score frame; the old UnknownPartitioning cache
-    // re-shuffled (and sorted) the edge table into every half-round.
-    val eAgg = snap(li.join(orders, li("l_orderkey") === orders("o_orderkey"))
-      .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .agg(count(lit(1)).as("w")))
-    val nP = graft.Tables.sizedPartitions(spark, eAgg.count())
-    // CACHED partitioned copies (not snaps): a checkpointed LogicalRDD
-    // advertises UnknownPartitioning (r15 plan evidence, see
-    // connectedComponents), so only InMemoryRelations hand each
-    // half-round its key's clustering. eAgg stays pinned to the end.
-    val eByCust = eAgg.repartition(nP, col("cust")).cache()
-    val eBySupp = eAgg.repartition(nP, col("supp")).cache()
-    eByCust.count(); eBySupp.count()
+    // for the hub push), so ONE keyed copy can't serve both: two keyed
+    // copies (Pin.keyed), and every half-round moves only the O(nodes)
+    // score frame.
+    val edgePin = Pin.keyed(
+      li.join(orders, li("l_orderkey") === orders("o_orderkey"))
+        .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+        .agg(count(lit(1)).as("w")))
+    val nP = edgePin.width
+    val eByCust = edgePin.by("cust")
+    val eBySupp = edgePin.by("supp")
     var hubs = eByCust.select(col("cust")).distinct()
       .withColumn("h", lit(1000000L))
     var auths: DataFrame = null
@@ -386,13 +354,13 @@ object GraphQueries {
       // the max and the rescale are lazy projections over the cached
       // frame, so no half-round is ever evaluated twice
       // score sides re-keyed to the edge caches' width (see seedDistance)
-      val araw = snap(eByCust.join(hubs.repartition(nP, col("cust"))
+      val araw = Pin.snap(eByCust.join(hubs.repartition(nP, col("cust"))
           .hint("SHUFFLE_HASH"), "cust")
         .groupBy("supp").agg(sum(col("h") * col("w")).as("ar")))
       val amax = araw.agg(max(col("ar")).as("am"))
       auths = araw.crossJoin(broadcast(amax))
         .select(col("supp"), expr("ar * 1000000 DIV am").as("a"))
-      val hraw = snap(eBySupp.join(auths.repartition(nP, col("supp"))
+      val hraw = Pin.snap(eBySupp.join(auths.repartition(nP, col("supp"))
           .hint("SHUFFLE_HASH"), "supp")
         .groupBy("cust").agg(sum(col("a") * col("w")).as("hr")))
       val hmax = hraw.agg(max(col("hr")).as("hm"))
@@ -402,10 +370,8 @@ object GraphQueries {
     }
     // superseded rounds are released; the final round's two raw frames
     // back the returned (lazily normalized) result and stay pinned
-    snapped.dropRight(2).foreach(release)
-    eByCust.unpersist(blocking = false) // final frames are materialized
-    eBySupp.unpersist(blocking = false)
-    release(eAgg)
+    snapped.dropRight(2).foreach(Pin.release)
+    edgePin.release() // final frames are materialized
     hubs.select(lit("hub").as("role"), col("cust").as("node"),
         col("h").as("score_ppm"))
       .unionAll(auths.select(lit("authority").as("role"),
@@ -430,27 +396,15 @@ object GraphQueries {
     * round's join is co-located — the PartitionedMerge layout contract. */
   def seedDistance(spark: SparkSession, dir: String, maxHops: Int = 3)
       : DataFrame = {
-    // Edge layout (r15, the CC-fold discipline from guide §2.4): the old
-    // shape cached the edge frame under UnknownPartitioning, so EVERY
-    // hop re-shuffled (and sort-merge-sorted) the 2·E edge rows into the
-    // join plus both label frames into the min-aggregate — ~3 exchanges
-    // per hop over the largest table in the query. Now the edges are
-    // materialized ONCE, pre-partitioned on the probe key `dst` at a
-    // size-derived width, and every label frame is kept hash-partitioned
-    // on `node` at the SAME width — the per-hop join is co-partitioned
-    // (zero exchanges; SHUFFLE_HASH so no per-hop sort either) and the
-    // only exchange left per hop is the one the min-aggregate
-    // fundamentally needs (the hopped rows moving back to their node).
-    def release(df: DataFrame): Unit = Dedup.releasePinned(df)
-    val p0 = tradeEdges(spark, dir).select("src", "dst").localCheckpoint()
-    val nP = graft.Tables.sizedPartitions(spark, p0.count())
-    // CACHE the partitioned copy: a checkpointed LogicalRDD advertises
-    // UnknownPartitioning (r15 plan evidence, see connectedComponents),
-    // so only an InMemoryRelation actually hands hash(dst, nP) to the
-    // per-hop join. p0 stays pinned until the loop ends (cache
-    // recomputation must find its source blocks).
-    val edges = p0.repartition(nP, col("dst")).cache()
-    edges.count()
+    // Edge layout (r15, the CC-fold discipline from guide §2.4): the
+    // edges are keyed ONCE on the probe key `dst` (Pin.keyed) and every
+    // label frame is kept hash-partitioned on `node` at the SAME width —
+    // the per-hop join is co-partitioned (zero exchanges; SHUFFLE_HASH
+    // so no per-hop sort either) and the only exchange left per hop is
+    // the one the min-aggregate fundamentally needs.
+    val edgePin = Pin.keyed(tradeEdges(spark, dir).select("src", "dst"))
+    val nP = edgePin.width
+    val edges = edgePin.by("dst")
     val Unreached = 999L
     var labels = edges.select(col("src").as("node"))
       .repartition(nP, col("node")).distinct()
@@ -460,10 +414,7 @@ object GraphQueries {
           .otherwise(Unreached))
       .localCheckpoint()
     for (_ <- 1 to maxHops) {
-      // re-key the (checkpointed, UnknownPartitioning) label frame to
-      // the edge cache's exact width — otherwise EnsureRequirements
-      // shuffles labels to spark.sql.shuffle.partitions and the width
-      // mismatch re-exchanges the edge side too (r15 plan evidence)
+      // labels re-keyed to the edge copy's width (see Pin.keyed)
       val hopped = edges
         .join(labels.repartition(nP, col("node")).hint("SHUFFLE_HASH"),
           col("dst") === col("node"))
@@ -476,11 +427,10 @@ object GraphQueries {
         .repartition(nP, col("node"))
         .groupBy("node").agg(min(col("dist")).as("dist"))
         .localCheckpoint()
-      release(labels)
+      Pin.release(labels)
       labels = next
     }
-    edges.unpersist(blocking = false) // labels already materialized
-    release(p0)
+    edgePin.release() // labels already materialized
     labels.select(col("node"),
         when(col("dist") === Unreached, lit(-1L))
           .otherwise(col("dist")).as("dist"))

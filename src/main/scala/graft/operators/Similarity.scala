@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Pin, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline, and a sign-LSH-bucketed
@@ -290,7 +290,7 @@ object Similarity {
     val fin = out.localCheckpoint()
     // the final pin supersedes the per-generation pins — release them
     // along with the embedding cache (cache-lifetime protocol)
-    perGen.foreach(Dedup.releasePinned)
+    perGen.foreach(Pin.release)
     e.unpersist(blocking = false)
     fin
   }
@@ -1347,8 +1347,8 @@ object Similarity {
     * (d floats), updates the per-point best-similarity state in a
     * single codegen'd map-join pass, and takes a global top-1
     * (TakeOrdered, no full sort). Driver state is the k selected ids;
-    * per-round state is snap-pinned so lineage stays O(1) across
-    * rounds (the kmeans/CC discipline) — `localCheckpoint` by
+    * per-round state is [[graft.Pin.snap]]-pinned so lineage stays O(1)
+    * across rounds (the kmeans/CC discipline) — `localCheckpoint` by
     * default, reliable `checkpoint()` when `checkpointDir` is given
     * (the [[graft.operators.Dedup.connectedComponents]] option: a
     * long cluster run survives executor loss mid-selection). O(k·N·d)
@@ -1377,7 +1377,7 @@ object Similarity {
           .withColumn("best", greatest(col("best"), col("cos_new")))
           .drop("cos_new")
       val prev = state
-      state = Dedup.snap(updated, checkpointDir)
+      state = Pin.snap(updated, checkpointDir)
       // selected ids are excluded explicitly — a bounded k-literal
       // predicate, driver-held metadata scale
       val sel = state
@@ -1387,10 +1387,10 @@ object Similarity {
       // the collect above materialized the new pin — the previous
       // round's state is dead; release it so exactly ONE O(N) state
       // copy is ever live, whatever k is
-      if (prev != null) Dedup.releasePinned(prev)
+      if (prev != null) Pin.release(prev)
       selected = selected :+ (sel.getLong(0), Some(sel.getDouble(1)))
     }
-    if (state != null) Dedup.releasePinned(state)
+    if (state != null) Pin.release(state)
     e.unpersist(blocking = false)
     selected.zipWithIndex.map { case ((id, s), r) => (r, id, s) }
       .toDF("rnd", "center_id", "sel_cos")
@@ -1566,10 +1566,9 @@ object Similarity {
     * cluster scale. Per-pair cost is the native vec_dot loop; the two
     * top-k neighborhoods are windows over the bucketed pair frame,
     * cached once for its three consumers, released when the (topK-row)
-    * result is pinned. Plan-inspection callers pass
-    * `checkpointResult = false` and own the cache lifetime. */
+    * result is pinned. */
   def bitextMargin(spark: SparkSession, dir: String, k: Int = 4,
-      topK: Int = 50, checkpointResult: Boolean = true): DataFrame = {
+      topK: Int = 50): DataFrame = {
     import graft.functions.VectorFunctions.dotF
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
@@ -1617,12 +1616,9 @@ object Similarity {
     // pin the topK-row result, release the pair-frame cache (the
     // fuzzyDecontam protocol — cached blocks must not leak across
     // queries in long Verify/Bench sessions)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      pairs.unpersist(blocking = false)
-      fin
-    }
+    val fin = res.localCheckpoint()
+    pairs.unpersist(blocking = false)
+    fin
   }
 
   /** Full Lloyd's k-means over the embedding store — the iterated
@@ -1658,7 +1654,7 @@ object Similarity {
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
     val e =
-      if (checkpointDir.isEmpty) e0 else Dedup.snap(e0, checkpointDir)
+      if (checkpointDir.isEmpty) e0 else Pin.snap(e0, checkpointDir)
     // exact mean of each vec_id % k group: same scaled-integer arithmetic
     // as labelCentroids, so the init is engine- and partitioning-proof
     def centroidsOf(assigned: DataFrame): Array[Array[Double]] = {
@@ -1691,7 +1687,7 @@ object Similarity {
     }
     // the result is k×d driver-side literals — the pinned projection
     // has no further reader
-    if (checkpointDir.nonEmpty) Dedup.releasePinned(e)
+    if (checkpointDir.nonEmpty) Pin.release(e)
     (centsToDf(spark, cents), rounds)
   }
 
@@ -1748,10 +1744,9 @@ object Similarity {
     * controls the block size; the paper runs k≈100k on web scale). The
     * k×d centroid table is broadcast; the duplicate-id set is a slim
     * DISTINCT on vec_id equi-joined back. Returns one row per vector:
-    * (vec_id, cluster, kept 1/0). Plan-inspection callers pass
-    * `checkpointResult = false` and own the assignment cache's lifetime. */
+    * (vec_id, cluster, kept 1/0). */
   def semanticDedup(spark: SparkSession, dir: String, k: Int = 10,
-      tau: Double = 0.35, checkpointResult: Boolean = true): DataFrame = {
+      tau: Double = 0.35): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -1797,12 +1792,9 @@ object Similarity {
       .orderBy("vec_id")
     // pin the O(vectors)-slim result, release the assignment cache (the
     // fuzzyDecontam protocol — VERDICT r9 #2)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      assigned.unpersist(blocking = false)
-      fin
-    }
+    val fin = res.localCheckpoint()
+    assigned.unpersist(blocking = false)
+    fin
   }
 
   /** Assign every vector to its nearest centroid from a (cluster, pos, c)
@@ -2040,12 +2032,9 @@ object Similarity {
     * candidate scoring never touches float rows — the two cuts compose:
     * IO ∝ (probed fraction) × (code bytes), which is the product of the
     * q44 and q132 levers. Both building blocks are the oracle-pinned
-    * recipes, so the composition is hash-checked end to end.
-    * Plan-inspection callers pass `checkpointResult = false` and own the
-    * assignment cache's lifetime. */
+    * recipes, so the composition is hash-checked end to end. */
   def ivfAdc(spark: SparkSession, dir: String, m: Int = 8, ksub: Int = 16,
-      nprobe: Int = 2, pool: Int = 20, k: Int = 5,
-      checkpointResult: Boolean = true): DataFrame = {
+      nprobe: Int = 2, pool: Int = 20, k: Int = 5): DataFrame = {
     val dsub = 64 / m
     val e = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
@@ -2103,12 +2092,9 @@ object Similarity {
       .orderBy("query_id", "rn")
     // pin the k·|queries|-row result, release the assignment cache (the
     // fuzzyDecontam protocol — VERDICT r9 #2)
-    if (!checkpointResult) res
-    else {
-      val fin = res.localCheckpoint()
-      assigned.unpersist(blocking = false)
-      fin
-    }
+    val fin = res.localCheckpoint()
+    assigned.unpersist(blocking = false)
+    fin
   }
 
   /** q202: covariance matrix of the embedding dimensions — the first step

@@ -30,14 +30,14 @@ class CacheDisciplineSpec extends SparkSuite {
     "q162_bitext_margin", "q228_incremental_ann", "q169_image_neardup",
     "q178_image_dedup_clusters", "q195_audio_neardup",
     "q198_audio_dedup_clusters", "q222_cluster_sizes", "q143_pagerank",
-    "q183_hits", "q219_seed_distance")
+    "q183_hits", "q219_seed_distance", "q57_dedup_clusters",
+    "q175_label_prop", "q238_link_prediction", "q199_video_dedup_clusters",
+    "q204_entity_resolution")
 
   test("cache-using queries leave no DataFrame cache and at most their " +
       "pinned result in the persistent-RDD registry") {
     for (name <- cacheUsers) {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pin.releaseAll(spark)
       val before = spark.sparkContext.getPersistentRDDs.size
       SparkEntry.queries(name)(spark, sf0001).count()
       assert(spark.sharedState.cacheManager.isEmpty,

@@ -86,9 +86,13 @@ class ClusterStoreSpec extends SparkSuite {
     // crash in the window a micro-batch replay must heal: sigs
     // committed, pairs not, marker not advanced
     store.onSigsAppended = () => throw new RuntimeException("crash")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     intercept[RuntimeException] {
       store.append(batch, batchTag = Some(("cs-replay", 1L)))
     }
+    // the failed op released the batch's pinned sigs and pairs
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore,
+      "a failed append left its pins in the persistent-RDD registry")
     store.onSigsAppended = () => ()
     // the replay: same batch, same tag — sigs must skip (already
     // stamped), pairs must land, and the probe index must NOT see the

@@ -15,6 +15,38 @@ class PlanQualitySpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Runs an operator that pins its own result and returns that result
+    * with the final executed plans of the `localCheckpoint` executions
+    * it ran — the plans that actually computed the result, in the same
+    * format [[plan]] gives for a lazy frame. They are read through a
+    * QueryExecutionListener; plain actions (the operators' `count()`s
+    * of cached inputs, whose `Exchange SinglePartition` is not part of
+    * any result plan) are left out. The listener bus is asynchronous,
+    * so it is drained before the listener is registered (earlier
+    * executions must not leak in) and again before the plans are read. */
+  private def pinnedPlans(op: => org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, String) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val df = op
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+      assert(!plans.isEmpty, "the operator ran no localCheckpoint")
+      (df, String.join("\n", plans))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("q02: filters and projection pushed into the parquet scan") {
     val p = plan(Relational.filterProject(spark, sfDir))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate)"),
@@ -89,7 +121,7 @@ class PlanQualitySpec extends SparkSuite {
 
   test("q34: pair-join feature columns stay slim until after pair dedup; " +
       "vocab ids are distributed (no single-partition stage)") {
-    val p = plan(Dedup.minhashLsh(spark, sfDir, checkpointResult = false))
+    val p = pinnedPlans(Dedup.minhashLsh(spark, sfDir))._2
     // the distinct over candidate pairs must group ONLY (doc_a, doc_b) —
     // wide arrays in those keys would mean features ride through the
     // quadratic expansion again
@@ -115,9 +147,8 @@ class PlanQualitySpec extends SparkSuite {
     spark.conf.set("graft.dedup.broadcastMaxDocs", "0")
     val got =
       try {
-        val df = Dedup.minhashLsh(spark, sfDir, checkpointResult = false)
+        val (df, p) = pinnedPlans(Dedup.minhashLsh(spark, sfDir))
         val r = df.collect().toSet
-        val p = df.queryExecution.executedPlan.toString
         assert(p.contains("ShuffledHashJoin"),
           s"gated path did not shuffle-hash-join:\n$p")
         assert(!p.contains("BroadcastHashJoin"),
@@ -125,8 +156,7 @@ class PlanQualitySpec extends SparkSuite {
         r
       } finally spark.conf.unset("graft.dedup.broadcastMaxDocs")
     spark.catalog.clearCache()
-    val expected = Dedup.minhashLsh(spark, sfDir, checkpointResult = false)
-      .collect().toSet
+    val expected = Dedup.minhashLsh(spark, sfDir).collect().toSet
     spark.catalog.clearCache()
     assert(got == expected, "gated path changed the q34 result")
   }
@@ -184,10 +214,8 @@ class PlanQualitySpec extends SparkSuite {
     spark.conf.set("graft.ann.broadcastMaxBytes", "0")
     val got =
       try {
-        val df = Similarity.bitextMargin(spark, sfDir,
-          checkpointResult = false)
+        val (df, p) = pinnedPlans(Similarity.bitextMargin(spark, sfDir))
         val r = df.collect().toSeq
-        val p = df.queryExecution.executedPlan.toString
         assert(p.contains("ShuffledHashJoin"),
           s"gated bitext probe did not shuffle-hash-join:\n$p")
         assert(!p.contains("CartesianProduct") &&
@@ -196,8 +224,7 @@ class PlanQualitySpec extends SparkSuite {
         r
       } finally spark.conf.unset("graft.ann.broadcastMaxBytes")
     spark.catalog.clearCache()
-    val expected = Similarity.bitextMargin(spark, sfDir,
-      checkpointResult = false).collect().toSeq
+    val expected = Similarity.bitextMargin(spark, sfDir).collect().toSeq
     spark.catalog.clearCache()
     assert(got == expected, "gated path changed the q162 result")
   }
@@ -282,9 +309,7 @@ class PlanQualitySpec extends SparkSuite {
   }
 
   test("q121: assignment computed once (cached); pair join blocked on cluster") {
-    val df = operators.Similarity.semanticDedup(spark, sfDir,
-      checkpointResult = false)
-    val p = plan(df)
+    val p = pinnedPlans(operators.Similarity.semanticDedup(spark, sfDir))._2
     // the assignment stage feeds three consumers — it must come from the
     // cache, not three recomputations of the centroid agg + argmin window
     assert(p.contains("InMemoryTableScan"),
@@ -444,8 +469,7 @@ class PlanQualitySpec extends SparkSuite {
       s"PQ small sides not broadcast:\n$p132")
     // q135: candidate generation must be an equi-join on the cell id —
     // the probed-lists join shows up as a hash join with cent_id keys
-    val p135 = plan(operators.Similarity.ivfAdc(spark, sfDir,
-      checkpointResult = false))
+    val p135 = pinnedPlans(operators.Similarity.ivfAdc(spark, sfDir))._2
     assert(p135.contains("cent_id"),
       s"IVFADC lost its cell equi-join:\n$p135")
     // the only cartesian-shaped joins are the bounded broadcast ones
@@ -616,8 +640,8 @@ class PlanQualitySpec extends SparkSuite {
     // q195: the audio band self-join must be key-based over the shared
     // cached fingerprint frame — never a cartesian; the only nested-loop
     // join allowed is none (no single-row broadcasts in this one)
-    val p195 = plan(graft.multimodal.Audio.nearDupQuery(spark, sfDir,
-      checkpointResult = false))
+    val p195 = pinnedPlans(
+      graft.multimodal.Audio.nearDupQuery(spark, sfDir))._2
     assert(!p195.contains("CartesianProduct"),
       s"q195: band pairing fell to a cartesian:\n$p195")
     assert(p195.contains("ShuffledHashJoin"),
@@ -627,8 +651,7 @@ class PlanQualitySpec extends SparkSuite {
     // q196: inverted-index pair expansion is an equi-join on the shingle
     // key; the df-cap totals ride a single-row broadcast (the only
     // nested-loop join); slim frames come from cache
-    val p196 = plan(Dedup.containmentDup(spark, sfDir,
-      checkpointResult = false))
+    val p196 = pinnedPlans(Dedup.containmentDup(spark, sfDir))._2
     // (the single-row n_docs broadcast shows as BroadcastNestedLoopJoin,
     // which is fine; an unkeyed CartesianProduct is not)
     assert(!p196.contains("CartesianProduct"),
@@ -642,7 +665,7 @@ class PlanQualitySpec extends SparkSuite {
 
   test("q210: fuzzy-decontam candidates come from the band equi-join, " +
       "never all-pairs") {
-    val p = plan(Dedup.fuzzyDecontam(spark, sfDir, checkpointResult = false))
+    val p = pinnedPlans(Dedup.fuzzyDecontam(spark, sfDir))._2
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"q210: candidate generation fell to an all-pairs join:\n$p")
@@ -668,8 +691,8 @@ class PlanQualitySpec extends SparkSuite {
 
   test("q225: incremental dedup joins batch bands against the index on " +
       "band_key; nothing degenerates to all-pairs") {
-    val p = plan(graft.operators.Dedup
-      .incrementalDedup(spark, sf0001, checkpointResult = false))
+    val p = pinnedPlans(
+      graft.operators.Dedup.incrementalDedup(spark, sf0001))._2
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"q225: candidate generation fell to an all-pairs join:\n$p")
