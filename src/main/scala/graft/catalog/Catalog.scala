@@ -111,12 +111,12 @@ class Catalog(spark: SparkSession, warehouse: String,
     * Gold_Customers.py:65-68). */
   def create(df: DataFrame, layer: String, table: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    // constraints/identity recorded before first load (or surviving a
-    // DROP + recreate) apply to the initial data too
-    val dfId = Catalog.fillIdentityColumns(spark, df, path(layer, table), fs)
-    val cons = Catalog.readConstraintsPath(spark, path(layer, table))
-    if (cons.nonEmpty) Catalog.enforce(dfId, cons, path(layer, table))
-    val w = dfId.write.mode(SaveMode.ErrorIfExists)
+    // rules recorded before first load (or surviving a DROP + recreate)
+    // apply to the initial data too; there is no stage to validate, so
+    // the frame is checked before the write
+    val g = TableRules.prepare(spark, path(layer, table), df)
+    TableRules.enforce(g.frame, g.checks, path(layer, table))
+    val w = g.frame.write.mode(SaveMode.ErrorIfExists)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path(layer, table))
   }
@@ -316,7 +316,7 @@ class Catalog(spark: SparkSession, warehouse: String,
 
   /** The table's recorded CHECK constraints, as (name, expression SQL). */
   def constraints(layer: String, table: String): Seq[(String, String)] =
-    Catalog.readConstraintsPath(spark, path(layer, table))
+    TableRules.constraints(spark, path(layer, table))
 
   /** Delta `GENERATED ALWAYS AS` for this layout: record the column,
     * materialize it over the existing data as a new version, and have
@@ -335,7 +335,7 @@ class Catalog(spark: SparkSession, warehouse: String,
   }
 
   def generatedColumns(layer: String, table: String): Seq[(String, String)] =
-    Catalog.readGeneratedPath(spark, path(layer, table))
+    TableRules.generated(spark, path(layer, table))
 
   /** Stop generating/validating the column; the DATA column stays (it is
     * real data in every snapshot) — it just becomes an ordinary column. */
@@ -360,7 +360,7 @@ class Catalog(spark: SparkSession, warehouse: String,
   }
 
   def identityColumns(layer: String, table: String): Seq[(String, Long, Long)] =
-    Catalog.readIdentityPath(spark, path(layer, table))
+    TableRules.identity(spark, path(layer, table))
 
   /** Stop assigning; the column becomes ordinary data. */
   def dropIdentityColumn(layer: String, table: String, name: String): Unit =
@@ -783,8 +783,7 @@ object Catalog {
         .repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partCols: _*).parquet(stage.toString)
-      mergeStagedTree(f, stage, tmp)
-      f.delete(stage, true)
+      TableRules.moveStaged(f, stage, tmp)
       // linked files keep valid skipping stats; rewritten files are
       // unprofiled until the next analyze (appendPath's rule)
       val skipDir = new Path(dst, "_skipping")
@@ -871,8 +870,7 @@ object Catalog {
       df.repartition(partCols.map(col): _*)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partCols: _*).parquet(stage.toString)
-      mergeStagedTree(f, stage, tmp)
-      f.delete(stage, true)
+      TableRules.moveStaged(f, stage, tmp)
     }
     // linked files keep valid skipping stats; replaced partitions are
     // unprofiled until the next analyze (appendPath's rule)
@@ -1136,9 +1134,7 @@ object Catalog {
     if (parent != null && f.exists(parent))
       f.listStatus(parent).map(_.getPath)
         .filter(_.getName.startsWith(base + ".tmp")).foreach(rm)
-    rm(new Path(dir + ".constraints.tmp"))
-    rm(new Path(dir + ".generated.tmp"))
-    rm(new Path(dir + ".identity.tmp"))
+    TableRules.ManifestKinds.foreach(k => rm(new Path(s"$dir.$k.tmp")))
     rm(new Path(dir + ".buckets.tmp"))
     val tableDir = new Path(dir)
     if (f.exists(tableDir))
@@ -1271,11 +1267,12 @@ object Catalog {
             (ua.nameParts.last.toLowerCase, s"$kind $n")
         }
       }
-    refs("constraint", readConstraintsPath(spark, dir)) ++
-      refs("generated column", readGeneratedPath(spark, dir)) ++
-      readGeneratedPath(spark, dir).map { case (n, _) =>
+    val gens = TableRules.generated(spark, dir)
+    refs("constraint", TableRules.constraints(spark, dir)) ++
+      refs("generated column", gens) ++
+      gens.map { case (n, _) =>
         (n.toLowerCase, s"generated column $n (is generated)") } ++
-      readIdentityPath(spark, dir).map { case (n, _, _) =>
+      TableRules.identity(spark, dir).map { case (n, _, _) =>
         (n.toLowerCase, s"identity column $n (is identity)") }
   }
 
@@ -1286,6 +1283,26 @@ object Catalog {
     require(uses.isEmpty,
       s"$op $col on $dir refused: referenced by ${uses.mkString(", ")} — " +
         "drop the dependent constraint/generated column first")
+  }
+
+  /** The column-DDL commit (ADD generated/identity column, RENAME, DROP):
+    * one rewrite of the live rows through the ordinary snapshot swap, in
+    * the table's OWN layout. A bucketed table stays bucketed and a
+    * hive-partitioned one keeps its partition columns (renamed or dropped
+    * along with the data) — a flat rewrite would hide every existing row
+    * from the next bucket-pruned merge. */
+  private def rewriteColumns(spark: SparkSession, dir: String,
+      keepVersions: Int, operation: String,
+      renamed: String => String = identity)(
+      change: DataFrame => DataFrame): Unit = {
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = change(graft.layout.DeletionVectors.readPath(spark, dir))
+    val layout =
+      if (isBucketedLayout(f, dir)) Seq(graft.merge.PartitionedMerge.BucketCol)
+      else partitionColsOf(f, dir).map(renamed)
+    overwritePath(spark, out, dir,
+      layout.filter(c => out.columns.exists(_.equalsIgnoreCase(c))),
+      keepVersions, allowSchemaChange = true, operation = operation)
   }
 
   /** [[Catalog!.renameColumn]] on a raw table directory — the seam the SQL
@@ -1299,25 +1316,23 @@ object Catalog {
     require(f.exists(new Path(dir)), s"table $dir does not exist")
     require(newName.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"column name must be an identifier, got '$newName'")
-    val bucketed = isBucketedLayout(f, dir)
     require(!oldName.equalsIgnoreCase(graft.merge.PartitionedMerge.BucketCol),
       "the bucket column is the table's physical layout; it cannot be renamed")
-    val cur = graft.layout.DeletionVectors.readPath(spark, dir)
-    val real = cur.columns.find(_.equalsIgnoreCase(oldName)).getOrElse(
-      throw new IllegalArgumentException(s"no column $oldName in $dir " +
-        s"(have: ${cur.columns.mkString(", ")})"))
-    require(!cur.columns.exists(_.equalsIgnoreCase(newName)),
-      s"column $newName already exists in $dir")
     requireUnreferenced(spark, dir, oldName, "RENAME COLUMN")
     // the `_skipping` manifest retires with the old snapshot dir — capture
     // the recipe BEFORE the swap (compactPath's pattern) and re-derive the
     // stats under the new name, so ANALYZE investments survive the rename
     val statsRecipe = graft.layout.DataSkipping.analyzedColumns(spark, dir)
-    overwritePath(spark, cur.withColumnRenamed(real, newName), dir,
-      if (bucketed) Seq(graft.merge.PartitionedMerge.BucketCol) else Nil,
-      keepVersions, allowSchemaChange = true, operation = "RENAME COLUMN")
+    def m(c: String) = if (c.equalsIgnoreCase(oldName)) newName else c
+    rewriteColumns(spark, dir, keepVersions, "RENAME COLUMN", m) { cur =>
+      val real = cur.columns.find(_.equalsIgnoreCase(oldName)).getOrElse(
+        throw new IllegalArgumentException(s"no column $oldName in $dir " +
+          s"(have: ${cur.columns.mkString(", ")})"))
+      require(!cur.columns.exists(_.equalsIgnoreCase(newName)),
+        s"column $newName already exists in $dir")
+      cur.withColumnRenamed(real, newName)
+    }
     statsRecipe.foreach { case (cols, blooms, bits, hashes) =>
-      def m(c: String) = if (c.equalsIgnoreCase(real)) newName else c
       graft.layout.DataSkipping.analyze(spark, dir, cols.map(m),
         blooms.map(m), bits, hashes)
     }
@@ -1335,29 +1350,27 @@ object Catalog {
     require(names.nonEmpty, "no columns to drop")
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(new Path(dir)), s"table $dir does not exist")
-    val bucketed = isBucketedLayout(f, dir)
     names.foreach(n => require(
       !n.equalsIgnoreCase(graft.merge.PartitionedMerge.BucketCol),
       "the bucket column is the table's physical layout; it cannot be dropped"))
-    val cur = graft.layout.DeletionVectors.readPath(spark, dir)
-    val real = names.map(n =>
-      cur.columns.find(_.equalsIgnoreCase(n)).getOrElse(
-        throw new IllegalArgumentException(s"no column $n in $dir " +
-          s"(have: ${cur.columns.mkString(", ")})")))
-    val dataCols = cur.columns.filterNot(_.equalsIgnoreCase(
-      graft.merge.PartitionedMerge.BucketCol))
-    require(dataCols.length > real.distinct.length,
-      s"cannot drop ${real.mkString(", ")}: no data columns would remain " +
-        s"in $dir")
     names.foreach(n => requireUnreferenced(spark, dir, n, "DROP COLUMN"))
     val statsRecipe = graft.layout.DataSkipping.analyzedColumns(spark, dir)
-    overwritePath(spark, cur.drop(real: _*), dir,
-      if (bucketed) Seq(graft.merge.PartitionedMerge.BucketCol) else Nil,
-      keepVersions, allowSchemaChange = true, operation = "DROP COLUMNS")
+    rewriteColumns(spark, dir, keepVersions, "DROP COLUMNS") { cur =>
+      val real = names.map(n =>
+        cur.columns.find(_.equalsIgnoreCase(n)).getOrElse(
+          throw new IllegalArgumentException(s"no column $n in $dir " +
+            s"(have: ${cur.columns.mkString(", ")})")))
+      val dataCols = cur.columns.filterNot(_.equalsIgnoreCase(
+        graft.merge.PartitionedMerge.BucketCol))
+      require(dataCols.length > real.distinct.length,
+        s"cannot drop ${real.mkString(", ")}: no data columns would remain " +
+          s"in $dir")
+      cur.drop(real: _*)
+    }
     // re-derive skipping stats minus the dropped columns; a recipe that
     // covered only dropped columns simply lapses (manifest retired with
     // the old snapshot — pruned reads degrade to full filters)
-    val dropped = real.map(_.toLowerCase).toSet
+    val dropped = names.map(_.toLowerCase).toSet
     statsRecipe.foreach { case (cols, blooms, bits, hashes) =>
       val keep = cols.filterNot(c => dropped(c.toLowerCase))
       if (keep.nonEmpty)
@@ -1366,264 +1379,94 @@ object Catalog {
     }
   }
 
-  // ------------------------------------------------- CHECK constraints
+  // ------------------------------------------------- table rules DDL
 
-  /** Table-level CHECK constraints (Delta `ALTER TABLE … ADD CONSTRAINT`,
-    * the DQ layer the reference gets from Delta next to DLT expectations —
-    * [[graft.quality.Expectations]] gates ROWS, constraints gate WRITES).
-    * Stored as a sibling `<dir>.constraints` manifest (name TAB expr per
-    * line, tmp+rename commit) so they are a property of the TABLE and
-    * survive snapshot swaps. SQL-standard violation semantics: a row
-    * violates only when the expression evaluates to FALSE — NULL passes
-    * (use `x IS NOT NULL` for nullability). */
-  private def constraintsFile(dir: String) = new Path(dir + ".constraints")
-
-  def readConstraintsPath(spark: SparkSession, dir: String)
-      : Seq[(String, String)] = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = constraintsFile(dir)
-    if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
-      }.toList
-    finally in.close()
-  }
-
-  private def writeConstraints(spark: SparkSession, dir: String,
-      entries: Seq[(String, String)]): Unit = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = constraintsFile(dir)
-    if (entries.isEmpty) { if (f.exists(dst)) f.delete(dst, false); return }
-    val tmp = new Path(dir + ".constraints.tmp")
-    val out = f.create(tmp, true)
-    try out.write(entries.map { case (n, e) => s"$n\t$e" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(dst)) f.delete(dst, false)
-    require(f.rename(tmp, dst), s"constraints commit failed: $dst")
-  }
-
-  /** Per-constraint violation counts over `df` in ONE aggregation pass
-    * (`sum(expr IS FALSE)` per constraint — no per-constraint scans). */
-  private def violations(df: DataFrame,
-      cons: Seq[(String, String)]): Seq[(String, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val aggs = cons.map { case (n, e) =>
-      sum(when(coalesce(expr(e), lit(true)) === false, 1L).otherwise(0L))
-        .as(n)
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cons.indices.map(i => (cons(i)._1,
-      if (row.isNullAt(i)) 0L else row.getLong(i))) // empty df → null sums
-  }
-
-  private[graft] def enforce(df: DataFrame, cons: Seq[(String, String)],
-      dir: String): Unit = {
-    val bad = violations(df, cons).filter(_._2 > 0)
-    if (bad.nonEmpty) throw new IllegalStateException(
-      s"CHECK constraint violation writing $dir: " + bad.map {
-        case (n, c) => s"$n ($c rows)"
-      }.mkString(", "))
-  }
-
-  // ------------------------------------------------- generated columns
-
-  /** `GENERATED ALWAYS AS` metadata: sibling `<dir>.generated` manifest,
-    * same commit protocol as constraints. */
-  private def generatedFile(dir: String) = new Path(dir + ".generated")
-
-  def readGeneratedPath(spark: SparkSession, dir: String)
-      : Seq[(String, String)] = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = generatedFile(dir)
-    if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
-      }.toList
-    finally in.close()
-  }
-
+  /** Delta `ALTER TABLE … ADD COLUMN … GENERATED ALWAYS AS`: record the
+    * column in [[TableRules]]' manifest, materializing it over existing
+    * rows first as a NEW version, so readers and time travel see a
+    * consistent table from this point on. Recorded before the first load,
+    * it applies to that load too. */
   def addGeneratedColumnPath(spark: SparkSession, dir: String, name: String,
       expr: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"generated column name must be an identifier, got '$name'")
-    val existing = readGeneratedPath(spark, dir)
+    val existing = TableRules.generated(spark, dir)
     require(!existing.exists(_._1.equalsIgnoreCase(name)),
       s"generated column $name already exists on $dir")
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = f.exists(new Path(dir))
-    if (hasData) {
-      val cur = graft.layout.DeletionVectors.readPath(spark, dir)
-      require(!cur.columns.exists(_.equalsIgnoreCase(name)),
-        s"column $name already exists in $dir's data")
-      // materialize over existing rows as a NEW version, so readers and
-      // time travel see a consistent table from this point on
-      overwritePath(spark,
-        cur.withColumn(name, org.apache.spark.sql.functions.expr(expr)), dir,
-        allowSchemaChange = true, operation = "ADD COLUMN")
-    }
-    val tmp = new Path(dir + ".generated.tmp")
-    val out = f.create(tmp, true)
-    try out.write((existing :+ (name -> expr))
-      .map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = generatedFile(dir)
-    if (f.exists(dst)) f.delete(dst, false)
-    require(f.rename(tmp, dst), s"generated-columns commit failed: $dst")
+    if (f.exists(new Path(dir)))
+      rewriteColumns(spark, dir, keepVersions = 10, "ADD COLUMN") { cur =>
+        require(!cur.columns.exists(_.equalsIgnoreCase(name)),
+          s"column $name already exists in $dir's data")
+        cur.withColumn(name, org.apache.spark.sql.functions.expr(expr))
+      }
+    TableRules.writeGenerated(spark, dir, existing :+ (name -> expr))
   }
 
   def dropGeneratedColumnPath(spark: SparkSession, dir: String,
       name: String): Unit = {
-    val existing = readGeneratedPath(spark, dir)
+    val existing = TableRules.generated(spark, dir)
     require(existing.exists(_._1.equalsIgnoreCase(name)),
       s"no generated column $name on $dir")
-    val remaining = existing.filterNot(_._1.equalsIgnoreCase(name))
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = generatedFile(dir)
-    if (remaining.isEmpty) { if (f.exists(dst)) f.delete(dst, false); return }
-    val tmp = new Path(dir + ".generated.tmp")
-    val out = f.create(tmp, true)
-    try out.write(remaining.map { case (n, e) => s"$n\t$e" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(dst)) f.delete(dst, false)
-    require(f.rename(tmp, dst), s"generated-columns commit failed: $dst")
+    TableRules.writeGenerated(spark, dir,
+      existing.filterNot(_._1.equalsIgnoreCase(name)))
   }
 
-  // ------------------------------------------------- identity columns
-
-  /** `GENERATED ALWAYS AS IDENTITY` metadata: sibling `<dir>.identity`
-    * manifest (name TAB start TAB step), same commit protocol. The high
-    * watermark is NOT cached here — it derives from a column-pruned
-    * max() over the live data at assignment time, so a crash can never
-    * strand a stale counter that would hand out duplicate ids (Delta
-    * caches it in the txn log, whose atomicity we don't have for a
-    * sibling file). The scan reads ONE column; the documented upgrade
-    * path at extreme commit rates is a watermark in the version log. */
-  private def identityFile(dir: String) = new Path(dir + ".identity")
-
-  def readIdentityPath(spark: SparkSession, dir: String)
-      : Seq[(String, Long, Long)] = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = identityFile(dir)
-    if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val parts = l.split('\t')
-        (parts(0), parts(1).toLong, parts(2).toLong)
-      }.toList
-    finally in.close()
-  }
-
-  private def writeIdentity(spark: SparkSession, dir: String,
-      entries: Seq[(String, Long, Long)]): Unit = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = identityFile(dir)
-    if (entries.isEmpty) { if (f.exists(dst)) f.delete(dst, false); return }
-    val tmp = new Path(dir + ".identity.tmp")
-    val out = f.create(tmp, true)
-    try out.write(entries.map { case (n, s, k) => s"$n\t$s\t$k" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(dst)) f.delete(dst, false)
-    require(f.rename(tmp, dst), s"identity commit failed: $dst")
-  }
-
+  /** Delta `GENERATED ALWAYS AS IDENTITY`: record the column, numbering
+    * existing rows first as a new version (the same layout-preserving
+    * rewrite as [[addGeneratedColumnPath]]). */
   def addIdentityColumnPath(spark: SparkSession, dir: String, name: String,
       start: Long = 1L, step: Long = 1L): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"identity column name must be an identifier, got '$name'")
     require(step >= 1, s"IDENTITY INCREMENT BY must be >= 1, got $step")
-    val existing = readIdentityPath(spark, dir)
+    val existing = TableRules.identity(spark, dir)
     require(!existing.exists(_._1.equalsIgnoreCase(name)),
       s"identity column $name already exists on $dir")
-    require(!readGeneratedPath(spark, dir)
+    require(!TableRules.generated(spark, dir)
         .exists(_._1.equalsIgnoreCase(name)),
       s"$name is already a generated column on $dir")
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(new Path(dir))) {
-      val cur = graft.layout.DeletionVectors.readPath(spark, dir)
-      require(!cur.columns.exists(_.equalsIgnoreCase(name)),
-        s"column $name already exists in $dir's data")
-      // materialize over existing rows as a new version
-      overwritePath(spark,
-        fillIdentity(cur, name, start - step, step), dir,
-        allowSchemaChange = true, operation = "ADD COLUMN")
-    }
-    writeIdentity(spark, dir, existing :+ ((name, start, step)))
+    if (f.exists(new Path(dir)))
+      rewriteColumns(spark, dir, keepVersions = 10, "ADD COLUMN") { cur =>
+        require(!cur.columns.exists(_.equalsIgnoreCase(name)),
+          s"column $name already exists in $dir's data")
+        TableRules.assignIdentity(cur, name, start - step, step)
+      }
+    TableRules.writeIdentity(spark, dir, existing :+ ((name, start, step)))
   }
 
   def dropIdentityColumnPath(spark: SparkSession, dir: String,
       name: String): Unit = {
-    val existing = readIdentityPath(spark, dir)
+    val existing = TableRules.identity(spark, dir)
     require(existing.exists(_._1.equalsIgnoreCase(name)),
       s"no identity column $name on $dir")
-    writeIdentity(spark, dir,
+    TableRules.writeIdentity(spark, dir,
       existing.filterNot(_._1.equalsIgnoreCase(name)))
   }
-
-  /** Append `base + step·(i+1)` ids: per-partition sequences with
-    * partition-size offsets (zipWithIndex — two narrow passes, no
-    * single-partition window), the SurrogateKeys.assign shape without the
-    * sort: identity promises uniqueness + monotonicity vs the watermark,
-    * not any row order. */
-  private def fillIdentity(df: DataFrame, name: String, base: Long,
-      step: Long): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val withIdx = df.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + step * (i + 1)))
-    }
-    df.sparkSession.createDataFrame(withIdx,
-      StructType(df.schema.fields :+ StructField(name, LongType, false)))
-  }
-
-  /** Fill every recorded-but-absent identity column, continuing above the
-    * live data's watermark (column-pruned max scan; `start - step` when
-    * the table is new/empty so the first id is exactly `start`). */
-  private[graft] def fillIdentityColumns(spark: SparkSession, df: DataFrame,
-      dir: String, f: FileSystem): DataFrame =
-    readIdentityPath(spark, dir).foldLeft(df) { case (d, (n, start, step)) =>
-      if (d.columns.exists(_.equalsIgnoreCase(n))) d
-      else {
-        val base =
-          if (!f.exists(new Path(dir))) start - step
-          else {
-            val row = spark.read.parquet(dir).select(n).agg(
-              org.apache.spark.sql.functions.max(
-                org.apache.spark.sql.functions.col(n))).collect()(0)
-            if (row.isNullAt(0)) start - step else row.getLong(0)
-          }
-        fillIdentity(d, n, math.max(base, start - step), step)
-      }
-    }
 
   def addConstraintPath(spark: SparkSession, dir: String, name: String,
       check: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name must be an identifier, got '$name'")
-    val existing = readConstraintsPath(spark, dir)
+    val existing = TableRules.constraints(spark, dir)
     require(!existing.exists(_._1.equalsIgnoreCase(name)),
       s"constraint $name already exists on $dir")
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Delta's rule: existing data must already satisfy the new constraint
     // (LIVE rows — a DV-deleted violation is already gone)
     if (f.exists(new Path(dir)))
-      enforce(graft.layout.DeletionVectors.readPath(spark, dir),
+      TableRules.enforce(graft.layout.DeletionVectors.readPath(spark, dir),
         Seq(name -> check), dir)
-    writeConstraints(spark, dir, existing :+ (name -> check))
+    TableRules.writeConstraints(spark, dir, existing :+ (name -> check))
   }
 
   def dropConstraintPath(spark: SparkSession, dir: String,
       name: String): Unit = {
-    val existing = readConstraintsPath(spark, dir)
+    val existing = TableRules.constraints(spark, dir)
     require(existing.exists(_._1.equalsIgnoreCase(name)),
       s"no constraint $name on $dir")
-    writeConstraints(spark, dir,
+    TableRules.writeConstraints(spark, dir,
       existing.filterNot(_._1.equalsIgnoreCase(name)))
   }
 
@@ -1757,26 +1600,6 @@ object Catalog {
     }
   }
 
-  /** Move every staged data file of `stage` into `tmp` under its
-    * relative path (partition dirs created as needed), collision-checked
-    * so a staged name can never overwrite a linked one. */
-  private[graft] def mergeStagedTree(f: FileSystem, stage: Path,
-      tmp: Path): Unit = {
-    f.listStatus(stage).foreach { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        val d = new Path(tmp, n)
-        if (st.isDirectory) {
-          f.mkdirs(d)
-          mergeStagedTree(f, st.getPath, d)
-        } else {
-          require(!f.exists(d), s"append staging name collision: $n")
-          require(f.rename(st.getPath, d), s"append stage move failed: $n")
-        }
-      }
-    }
-  }
-
   def overwritePath(spark: SparkSession, df: DataFrame, dir: String,
       partitionBy: Seq[String] = Nil, keepVersions: Int = 10,
       allowSchemaChange: Boolean = false,
@@ -1787,51 +1610,16 @@ object Catalog {
     val dst = new Path(dir)
     val tmp = stagingPath(dir, "")
     val f = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // GENERATED ALWAYS AS: compute absent generated columns into the
-    // written frame; columns the writer DID provide are validated against
-    // their expression below (Delta's consistency rule) — a generated
-    // column can never silently diverge from its definition.
-    val gens = readGeneratedPath(spark, dir)
-    val provided = gens.filter { case (n, _) =>
-      df.columns.exists(_.equalsIgnoreCase(n)) }
-    val dfGen = fillIdentityColumns(spark,
-      gens.foldLeft(df) { case (d, (n, e)) =>
-        if (d.columns.exists(_.equalsIgnoreCase(n))) d
-        else d.withColumn(n, org.apache.spark.sql.functions.expr(e))
-      }, dir, f)
-    // Delta's schema-on-write: an overwrite must match the live snapshot's
-    // columns and types (order-insensitive, case-insensitive, nullability
-    // ignored) unless the caller explicitly evolves — a typo'd column or
-    // upstream type drift fails HERE, not in a downstream reader weeks
-    // later. Driver-side schema compare (after generated-column fill); no
-    // data cost.
-    if (!allowSchemaChange && f.exists(dst)) {
-      def shape(s: org.apache.spark.sql.types.StructType) =
-        s.fields.map(x => x.name.toLowerCase -> x.dataType).toMap
-      // flat snapshots record their schema in an in-dir sidecar at every
-      // overwrite (below) — the check reads THAT (one small file) instead
-      // of re-inferring from footers (a listing + a one-task Spark job
-      // per commit, VERDICT r7 #1). Hive-partitioned trees keep the
-      // inference path: partition-column types there come from directory
-      // names, which the writer-side schema can't be trusted to mirror.
-      val curSchema = (if (partitionBy.isEmpty)
-          graft.merge.PartitionedMerge.schemaOf(spark, dir) else None)
-        .getOrElse(spark.read.parquet(dir).schema)
-      val (cur, nw) = (shape(curSchema), shape(dfGen.schema))
-      if (cur != nw) {
-        val added = (nw.keySet -- cur.keySet).toSeq.sorted
-        val removed = (cur.keySet -- nw.keySet).toSeq.sorted
-        val retyped = cur.keySet.intersect(nw.keySet)
-          .filter(k => cur(k) != nw(k)).toSeq.sorted
-          .map(k => s"$k: ${cur(k).simpleString} -> ${nw(k).simpleString}")
-        throw new IllegalStateException(
-          s"schema change writing $dir (pass allowSchemaChange to evolve): " +
-            (Seq("added" -> added, "removed" -> removed,
-              "retyped" -> retyped).collect {
-              case (t, xs) if xs.nonEmpty => s"$t [${xs.mkString(", ")}]"
-            }).mkString("; "))
-      }
-    }
+    // the write gate: absent generated/identity columns filled, provided
+    // generated columns checked against their definition with the CHECK
+    // constraints, and the shape checked against the live snapshot unless
+    // the caller explicitly evolves (driver-side; no data cost)
+    val g = TableRules.prepare(spark, dir, df)
+    val dfGen = g.frame
+    if (!allowSchemaChange && f.exists(dst)) TableRules.shapeDiff(
+        TableRules.liveSchema(spark, dir, partitionBy.isEmpty), dfGen.schema)
+      .foreach { d => throw new IllegalStateException(
+        s"schema change writing $dir (pass allowSchemaChange to evolve): $d") }
     val w = dfGen.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmp.toString)
@@ -1842,17 +1630,7 @@ object Catalog {
     if (partitionBy.isEmpty)
       graft.merge.PartitionedMerge.writeSchemaSidecar(spark, tmp.toString,
         dfGen.schema)
-    // CHECK enforcement: validate the STAGED files (no upstream recompute)
-    // and abort before the swap — the live snapshot is never replaced by
-    // violating data, and a failed write leaves no trace but the tmp dir
-    // vacuum reclaims. Provided generated columns join the same one-pass
-    // check as null-safe equality with their definition.
-    val cons = readConstraintsPath(spark, dir) ++
-      provided.map { case (n, e) => (s"__generated_$n", s"`$n` <=> ($e)") }
-    if (cons.nonEmpty) {
-      try enforce(spark.read.parquet(tmp.toString), cons, dir)
-      catch { case e: Throwable => f.delete(tmp, true); throw e }
-    }
+    TableRules.enforceStaged(spark, dir, g.checks, tmp)
     commitSwap(spark, f, dir, tmp, keepVersions, expectedVersion, commitTag,
       operation, carryTags)
   }
@@ -2010,31 +1788,17 @@ object Catalog {
     // merge into the linked tree below (new partition VALUES create new
     // dirs); flat snapshots are the partCols = Nil special case
     val partCols = partitionColsOf(f, dir)
-    // generated columns: compute absent ones, validate provided ones (the
-    // overwrite path's rule, applied to the appended rows)
-    val gens = readGeneratedPath(spark, dir)
-    val provided = gens.filter { case (n, _) =>
-      df.columns.exists(_.equalsIgnoreCase(n)) }
-    val dfGen = fillIdentityColumns(spark,
-      gens.foldLeft(df) { case (d, (n, e)) =>
-        if (d.columns.exists(_.equalsIgnoreCase(n))) d
-        else d.withColumn(n, org.apache.spark.sql.functions.expr(e))
-      }, dir, f)
-    // strict schema-on-append: INSERT can never evolve the table (the
-    // partitioned read's schema includes the partition columns, so the
-    // insert must carry them, matching the inferred partition types)
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(x => x.name.toLowerCase -> x.dataType).toMap
-    // same sidecar fast path as overwritePath: flat snapshots answer the
-    // schema check from one small file instead of a footer-inference job
-    val curSchema = (if (partCols.isEmpty)
-        graft.merge.PartitionedMerge.schemaOf(spark, dir) else None)
-      .getOrElse(spark.read.parquet(dir).schema)
-    val (curShape, nwShape) = (shape(curSchema), shape(dfGen.schema))
-    require(curShape == nwShape,
-      s"INSERT INTO $dir schema mismatch: table has " +
-        curShape.keys.toSeq.sorted.mkString(", ") + "; insert carries " +
-        nwShape.keys.toSeq.sorted.mkString(", "))
+    // the write gate, applied to the appended rows. Strict schema-on-
+    // append: INSERT can never evolve the table (the partitioned read's
+    // schema includes the partition columns, so the insert must carry
+    // them, matching the inferred partition types)
+    val g = TableRules.prepare(spark, dir, df)
+    val dfGen = g.frame
+    val curSchema = TableRules.liveSchema(spark, dir, partCols.isEmpty)
+    TableRules.shapeDiff(curSchema, dfGen.schema).foreach { d =>
+      throw new IllegalArgumentException(
+        s"INSERT INTO $dir schema mismatch: $d")
+    }
     // normalize to the TABLE's column order and case before writing: the
     // shape check above is order/case-insensitive, so without this a
     // reordered or differently-cased insert would land parquet files
@@ -2048,12 +1812,7 @@ object Catalog {
     val sw = dfNorm.write.mode(SaveMode.Overwrite)
     (if (partCols.nonEmpty) sw.partitionBy(partCols: _*) else sw)
       .parquet(stage.toString)
-    val cons = readConstraintsPath(spark, dir) ++
-      provided.map { case (n, e) => (s"__generated_$n", s"`$n` <=> ($e)") }
-    if (cons.nonEmpty) {
-      try enforce(spark.read.parquet(stage.toString), cons, dir)
-      catch { case e: Throwable => f.delete(stage, true); throw e }
-    }
+    TableRules.enforceStaged(spark, dir, g.checks, stage)
     // build the next snapshot: links to every current data file + the new
     // files moved in (staged part-file names carry task UUIDs; a collision
     // with a linked name aborts rather than overwrites)
@@ -2067,8 +1826,7 @@ object Catalog {
       org.apache.hadoop.fs.FileUtil.copy(f, dvDir,
         f, new Path(tmp, graft.layout.DeletionVectors.DvDirName),
         false, false, conf)
-    mergeStagedTree(f, stage, tmp)
-    f.delete(stage, true)
+    TableRules.moveStaged(f, stage, tmp)
     // carry the skipping manifest forward: the linked files keep their
     // names so their stats stay valid; the appended files are simply
     // unprofiled (always read — stats can only cost IO, never rows) until

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, TableRules}
 import graft.merge.PartitionedMerge
 
 /** Row-level DML on BUCKET-PARTITIONED tables — the Delta-parity piece
@@ -96,13 +96,6 @@ object BucketedDml {
         PartitionedMerge.bucketExpr(keys, n))
       case None => rows // legacy layout: original bucket (column present)
     }
-
-  /** Append-shaped constraint set: CHECK constraints plus null-safe
-    * validation of any writer-provided generated column. */
-  private def writeConstraints(spark: SparkSession, dir: String,
-      providedGenerated: Seq[(String, String)]): Seq[(String, String)] =
-    Catalog.readConstraintsPath(spark, dir) ++
-      providedGenerated.map { case (n, e) => (s"__generated_$n", s"`$n` <=> ($e)") }
 
   // ------------------------------------------------ merge-on-read
 
@@ -209,32 +202,11 @@ object BucketedDml {
             // UPDATE's new row images (staged above): append-shaped, so
             // constraints and generated-column definitions validate on
             // the NEW files only, then the part files move into their
-            // destination buckets' staged dirs
+            // destination buckets' staged dirs (brand-new buckets too)
             rowStage.foreach { stage =>
-              val cons = writeConstraints(spark, dir,
-                Catalog.readGeneratedPath(spark, dir))
-              if (cons.nonEmpty) {
-                try Catalog.enforce(
-                  spark.read.parquet(stage.toString), cons, dir)
-                catch { case e: Throwable =>
-                  fs.delete(stage, true); throw e }
-              }
-              fs.listStatus(stage).map(_.getPath)
-                .filter(_.getName.startsWith(s"$BucketCol=")).foreach { e =>
-                  val stagedB = new Path(tmp, e.getName)
-                  fs.mkdirs(stagedB) // destination bucket may be brand new
-                  fs.listStatus(e).foreach { st =>
-                    val n = st.getPath.getName
-                    if (!n.startsWith("_") && !n.startsWith(".")) {
-                      val d = new Path(stagedB, n)
-                      require(!fs.exists(d),
-                        s"bucketed DV staging collision: $n")
-                      require(fs.rename(st.getPath, d),
-                        s"bucketed DV stage move failed: $n")
-                    }
-                  }
-                }
-              fs.delete(stage, true)
+              TableRules.enforceStaged(spark, dir,
+                TableRules.rewriteChecks(spark, dir), stage)
+              TableRules.moveStaged(fs, stage, new Path(tmp))
             }
             PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
               keepVersions, Some(stagedAgainst))
@@ -329,12 +301,10 @@ object BucketedDml {
               .partitionBy(BucketCol).parquet(tmp)
             // UPDATE re-validates the rewritten buckets (prunedMerge's
             // scope); DELETE only removes rows, so CHECKs cannot break
-            if (project.nonEmpty) {
-              val cons = writeConstraints(spark, dir,
-                Catalog.readGeneratedPath(spark, dir))
-              if (cons.nonEmpty) Catalog.enforce(
-                spark.read.schema(staged.schema).parquet(tmp), cons, dir)
-            }
+            if (project.nonEmpty)
+              TableRules.enforceStaged(spark, dir,
+                TableRules.rewriteChecks(spark, dir), new Path(tmp),
+                Some(staged.schema))
             PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
               keepVersions, Some(stagedAgainst))
             affected
@@ -366,40 +336,24 @@ object BucketedDml {
         s"INSERT INTO bucketed table $dir requires its bucket-layout " +
           "manifest (<path>.buckets); run one PartitionedMerge.prunedMerge " +
           "or rewrite via PartitionedMerge.write to record it"))
-    // generated/identity handling: compute absent, validate provided
-    val gens = Catalog.readGeneratedPath(spark, dir)
-    val provided = gens.filter { case (gn, _) =>
-      df.columns.exists(_.equalsIgnoreCase(gn)) }
-    val dfGen = Catalog.fillIdentityColumns(spark,
-      gens.foldLeft(df) { case (d, (gn, e)) =>
-        if (d.columns.exists(_.equalsIgnoreCase(gn))) d
-        else d.withColumn(gn, expr(e))
-      }, dir, fs)
-    // strict schema-on-append against the LOGICAL table (bucket column is
-    // layout, not data — an insert never carries it)
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.filterNot(_.name.equalsIgnoreCase(BucketCol))
-        .map(x => x.name.toLowerCase -> x.dataType).toMap
-    // bucketed tables always carry a schema sidecar — the check is one
-    // small-file read, no footer-inference job (VERDICT r7 #1)
-    val curShape = shape(PartitionedMerge.schemaOf(spark, dir)
-      .getOrElse(PartitionedMerge.readRaw(spark, dir).schema))
-    val nwShape = shape(dfGen.schema)
-    require(!dfGen.columns.exists(_.equalsIgnoreCase(BucketCol)),
+    // the write gate: generated/identity filled, strict schema-on-append
+    // against the LOGICAL table (bucket column is layout, not data — an
+    // insert never carries it)
+    val g = TableRules.prepare(spark, dir, df)
+    require(!g.frame.columns.exists(_.equalsIgnoreCase(BucketCol)),
       s"INSERT INTO $dir must not carry the bucket column $BucketCol")
-    require(curShape == nwShape,
-      s"INSERT INTO $dir schema mismatch: table has " +
-        curShape.keys.toSeq.sorted.mkString(", ") + "; insert carries " +
-        nwShape.keys.toSeq.sorted.mkString(", "))
-    val routed = dfGen.withColumn(BucketCol,
+    TableRules.shapeDiff(TableRules.liveSchema(spark, dir, sidecar = true),
+      g.frame.schema, bucketed = true).foreach { d =>
+      throw new IllegalArgumentException(
+        s"INSERT INTO $dir schema mismatch: $d")
+    }
+    val routed = g.frame.withColumn(BucketCol,
       PartitionedMerge.bucketExpr(keys, n))
     val rowStage = Catalog.stagingPathShim(dir, "-insert")
     routed.write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(rowStage.toString)
     try {
-      val cons = writeConstraints(spark, dir, provided)
-      if (cons.nonEmpty)
-        Catalog.enforce(spark.read.parquet(rowStage.toString), cons, dir)
+      TableRules.enforceStaged(spark, dir, g.checks, rowStage)
       val stagedBuckets = fs.listStatus(rowStage).map(_.getPath)
         .filter(_.getName.startsWith(s"$BucketCol=")).toSeq
       // plain if/else (not an early return): a non-local return through
@@ -412,10 +366,9 @@ object BucketedDml {
           java.util.UUID.randomUUID().toString.take(8)
         try {
           stagedBuckets.foreach { sb =>
-            val b = sb.getName
-            val stagedB = new Path(tmp, b)
+            val stagedB = new Path(tmp, sb.getName)
             fs.mkdirs(stagedB)
-            val liveB = new Path(dir, b)
+            val liveB = new Path(dir, sb.getName)
             if (fs.exists(liveB)) {
               Catalog.linkDataFiles(fs, conf, liveB, stagedB)
               // an existing per-bucket DV sidecar rides along unchanged:
@@ -426,17 +379,8 @@ object BucketedDml {
                   fs, new Path(stagedB, DeletionVectors.DvDirName),
                   false, false, conf)
             }
-            fs.listStatus(sb).foreach { st =>
-              val fn = st.getPath.getName
-              if (!fn.startsWith("_") && !fn.startsWith(".")) {
-                val d = new Path(stagedB, fn)
-                require(!fs.exists(d),
-                  s"bucketed insert staging collision: $fn")
-                require(fs.rename(st.getPath, d),
-                  s"bucketed insert stage move failed: $fn")
-              }
-            }
           }
+          TableRules.moveStaged(fs, rowStage, new Path(tmp))
           PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
             keepVersions, Some(stagedAgainst))
         } catch { case e: Throwable =>
@@ -465,7 +409,7 @@ object BucketedDml {
     * predicate is NULL do not match and are KEPT (3VL). Returns the
     * number of removed rows. */
   def replaceWhere(spark: SparkSession, dir: String, condSql: String,
-      insert: DataFrame, providedGenerated: Seq[(String, String)] = Nil,
+      insert: DataFrame,
       keepVersions: Int = 10): Long = Catalog.raceToConflictShim(dir) {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
@@ -478,17 +422,16 @@ object BucketedDml {
         "to record it")
     require(!insert.columns.exists(_.equalsIgnoreCase(BucketCol)),
       s"REPLACE WHERE insert must not carry the bucket column $BucketCol")
-    // strict schema-on-write against the LOGICAL table (insertInto's rule)
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.filterNot(_.name.equalsIgnoreCase(BucketCol))
-        .map(x => x.name.toLowerCase -> x.dataType).toMap
-    require(shape(PartitionedMerge.schemaOf(spark, dir)
-        .getOrElse(PartitionedMerge.readRaw(spark, dir).schema)) ==
-        shape(insert.schema),
-      s"REPLACE WHERE on $dir schema mismatch: insert carries " +
-        insert.columns.sorted.mkString(", "))
+    // the write gate, insertInto's rules (strict shape against the LOGICAL
+    // table; generated columns computed when absent, validated when given)
+    val g = TableRules.prepare(spark, dir, insert)
+    TableRules.shapeDiff(TableRules.liveSchema(spark, dir, sidecar = true),
+      g.frame.schema, bucketed = true).foreach { d =>
+      throw new IllegalArgumentException(
+        s"REPLACE WHERE on $dir schema mismatch: $d")
+    }
     val cond = coalesce(expr(condSql), lit(false))
-    val routed = routeBuckets(spark, dir, insert)
+    val routed = routeBuckets(spark, dir, g.frame)
     val rowStage = Catalog.stagingPathShim(dir, "-replace")
     routed.write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(rowStage.toString)
@@ -499,8 +442,8 @@ object BucketedDml {
       require(outside == 0,
         s"REPLACE WHERE: $outside inserted row(s) violate the predicate " +
           s"($condSql) — the statement replaces ONLY that region")
-      val cons = writeConstraints(spark, dir, providedGenerated)
-      if (cons.nonEmpty) Catalog.enforce(staged, cons, dir)
+      TableRules.enforceStaged(spark, dir, g.checks, rowStage,
+        Some(staged.schema))
       val live = taggedLive(spark, dir, None)
       // one job: touched buckets + removed count together
       val bucketCounts = live.filter(cond).groupBy(BucketCol).count()
@@ -524,22 +467,9 @@ object BucketedDml {
           slice.select(dataColumns(slice).map(col) :+ col(BucketCol): _*)
             .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
             .parquet(tmp)
-          // staged insert part files move into their buckets' staged dirs
-          fs.listStatus(rowStage).map(_.getPath)
-            .filter(_.getName.startsWith(s"$BucketCol=")).foreach { sb =>
-              val stagedB = new Path(tmp, sb.getName)
-              fs.mkdirs(stagedB) // destination bucket may be brand new
-              fs.listStatus(sb).foreach { st =>
-                val fn = st.getPath.getName
-                if (!fn.startsWith("_") && !fn.startsWith(".")) {
-                  val d = new Path(stagedB, fn)
-                  require(!fs.exists(d),
-                    s"bucketed replace staging collision: $fn")
-                  require(fs.rename(st.getPath, d),
-                    s"bucketed replace stage move failed: $fn")
-                }
-              }
-            }
+          // staged insert part files move into their buckets' staged
+          // dirs (a destination bucket may be brand new)
+          TableRules.moveStaged(fs, rowStage, new Path(tmp))
           PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
             keepVersions, Some(stagedAgainst))
           affected

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, TableRules}
 
 /** Merge-on-read row-level deletes — the deletion-vector half of Delta's
   * DML story (the reference platform's `DELETE`/`UPDATE` got this in
@@ -351,24 +351,9 @@ object DeletionVectors {
             project(matched).write.parquet(stage.toString)
             // UPDATE's new rows are append-shaped: constraints + generated
             // definitions validate on the NEW files only
-            val cons = Catalog.readConstraintsPath(spark, dir) ++
-              Catalog.readGeneratedPath(spark, dir).map { case (n, e) =>
-                (s"__generated_$n", s"`$n` <=> ($e)") }
-            if (cons.nonEmpty) {
-              try Catalog.enforce(
-                spark.read.parquet(stage.toString), cons, dir)
-              catch { case e: Throwable =>
-                f.delete(stage, true); throw e }
-            }
-            f.listStatus(stage).foreach { st =>
-              val n = st.getPath.getName
-              if (!n.startsWith("_") && !n.startsWith(".")) {
-                val d = new Path(tmp, n)
-                require(!f.exists(d), s"DV update staging collision: $n")
-                require(f.rename(st.getPath, d), s"DV update move failed: $n")
-              }
-            }
-            f.delete(stage, true)
+            TableRules.enforceStaged(spark, dir,
+              TableRules.rewriteChecks(spark, dir), stage)
+            TableRules.moveStaged(f, stage, tmp)
           }
 
           // linked files keep their names, so per-file skipping stats stay

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, TableRules}
 
 /** FILE-GRANULAR copy-on-write DELETE/UPDATE on flat snapshots — the
   * upgrade path the full-rewrite lowering in `graft.sql.DmlRunner`
@@ -169,27 +169,10 @@ object FileGranularDml {
           staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
           // UPDATE re-validates the rewritten files (linked files passed
           // at their own write time; a DELETE can only remove rows)
-          if (assign.nonEmpty) {
-            val cons = Catalog.readConstraintsPath(spark, dir) ++
-              Catalog.readGeneratedPath(spark, dir).map { case (n, e) =>
-                (s"__generated_$n", s"`$n` <=> ($e)") }
-            if (cons.nonEmpty) {
-              try Catalog.enforce(
-                spark.read.parquet(stage.toString), cons, dir)
-              catch { case e: Throwable =>
-                fs.delete(stage, true); throw e }
-            }
-          }
-          fs.listStatus(stage).foreach { st =>
-            val n = st.getPath.getName
-            if (!n.startsWith("_") && !n.startsWith(".")) {
-              val d = new Path(tmp, n)
-              require(!fs.exists(d), s"rewrite staging collision: $n")
-              require(fs.rename(st.getPath, d),
-                s"rewrite stage move failed: $n")
-            }
-          }
-          fs.delete(stage, true)
+          if (assign.nonEmpty)
+            TableRules.enforceStaged(spark, dir,
+              TableRules.rewriteChecks(spark, dir), stage)
+          TableRules.moveStaged(fs, stage, tmp)
           // DV sidecar: positions on linked files carry; positions on
           // rewritten files folded by the DV-applied slice above
           val dvDir = new Path(root, DeletionVectors.DvDirName)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.TableRules
+
 /** Bucket-partitioned managed table with partition-pruned merge — the
   * vanilla-Spark equivalent of Delta MERGE's file pruning (the 100 TB-scale
   * follow-up called out in SURVEY.md §4.3 / §7.3).
@@ -43,11 +45,11 @@ object PartitionedMerge {
 
   /** Initial (or full) write of the bucket-partitioned table. */
   def write(df: DataFrame, path: String, keys: Seq[String], nBuckets: Int): Unit = {
-    // a constraint recorded before first load gates the initial data too
-    // (the Catalog.create parity)
-    val cons = graft.catalog.Catalog.readConstraintsPath(df.sparkSession, path)
-    if (cons.nonEmpty) graft.catalog.Catalog.enforce(df, cons, path)
-    val bucketed = df.withColumn(BucketCol, bucketExpr(keys, nBuckets))
+    // rules recorded before first load apply to the initial data too (the
+    // Catalog.create parity: no stage, so the frame is checked)
+    val g = TableRules.prepare(df.sparkSession, path, df)
+    TableRules.enforce(g.frame, g.checks, path)
+    val bucketed = g.frame.withColumn(BucketCol, bucketExpr(keys, nBuckets))
     bucketed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
     writeSchemaSidecar(df.sparkSession, path, bucketed.schema)
     writeBucketMeta(df.sparkSession, path, keys, nBuckets)
@@ -289,7 +291,9 @@ object PartitionedMerge {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
       } else spark.read.option("basePath", path).parquet(touchedDirs: _*)
     val pruned = applyBucketDvs(spark, path, prunedRaw).drop(BucketCol)
-    val merged = mergeFn(pruned, source)
+    // the write gate: generated columns the merge output lacks are
+    // computed, the ones it carries are checked with the constraints
+    val merged = TableRules.generate(spark, path, mergeFn(pruned, source))
 
     // unique per-attempt staging (vacuum's `.tmp` prefix sweep reclaims
     // abandoned attempts). Concurrent bucketed merges are EXCLUSIVE but
@@ -300,22 +304,14 @@ object PartitionedMerge {
       java.util.UUID.randomUUID().toString.take(8)
     // staging write runs BEFORE any rename, so the (lazy) pruned scan and
     // skeyBase scan still read the original files
-    val staged = merged.withColumn(BucketCol, bucketExpr(keys, nBuckets))
+    val staged = merged.frame.withColumn(BucketCol, bucketExpr(keys, nBuckets))
     staged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmp)
 
-    // CHECK constraints gate bucketed writes too: validate the staged
-    // buckets (the only rows this merge changes) before any rename —
-    // same one-pass check as Catalog.overwritePath, scoped O(touched).
-    // Explicit schema: a merge that deleted every touched row stages a
-    // file-less tree.
-    val cons = graft.catalog.Catalog.readConstraintsPath(spark, path)
-    if (cons.nonEmpty) {
-      try graft.catalog.Catalog.enforce(
-        spark.read.schema(staged.schema).parquet(tmp).drop(BucketCol),
-        cons, path)
-      catch { case e: Throwable =>
-        fs.delete(new Path(tmp), true); throw e }
-    }
+    // validate the staged buckets (the only rows this merge changes)
+    // before any rename, scoped O(touched). Explicit schema: a merge that
+    // deleted every touched row stages a file-less tree.
+    TableRules.enforceStaged(spark, path, merged.checks, new Path(tmp),
+      Some(staged.schema))
 
     swapBuckets(spark, fs, path, tmp, touched, keepVersions,
       Some(stagedAgainst))

@@ -56,16 +56,11 @@ object PipelineEpoch {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readSmall(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val b = new Array[Byte](4096)
-      var n = in.read(b)
-      while (n > 0) { buf.write(b, 0, n); n = in.read(b) }
-      new String(buf.toByteArray, "UTF-8").trim
-    } finally in.close()
-  }
+  /** A published manifest's `table TAB version` lines. */
+  private def parseManifest(f: FileSystem, p: Path): Map[String, Int] =
+    SwapProtocol.readSmallFile(f, p).split('\n').filter(_.nonEmpty).map { l =>
+      val Array(t, v) = l.split('\t'); t -> v.toInt
+    }.toMap
 
   private def listManifests(f: FileSystem, dir: String): Seq[Int] =
     if (!f.exists(new Path(dir))) Nil
@@ -229,10 +224,7 @@ object PipelineEpoch {
     require(f.exists(p),
       s"epoch $epoch of pipeline '$pipeline' not found (published epochs: " +
         s"${listManifests(f, dir).sorted.mkString(", ")})")
-    readSmall(f, p).split('\n').filter(_.nonEmpty).map { line =>
-      val Array(t, v) = line.split('\t')
-      t -> v.toInt
-    }.toMap
+    parseManifest(f, p)
   }
 
   /** Epoch-resolved read: `layer.table` AT the version the NEWEST epoch
@@ -299,9 +291,7 @@ object PipelineEpoch {
     require(f.exists(p),
       s"epoch $epoch of pipeline '$pipeline' not found (published epochs: " +
         s"${listManifests(f, dir).sorted.mkString(", ")})")
-    val versions = readSmall(f, p).split('\n').filter(_.nonEmpty).map { l =>
-      val Array(t, v) = l.split('\t'); t -> v.toInt
-    }.toMap
+    val versions = parseManifest(f, p)
     val v = versions.getOrElse(name, throw new IllegalArgumentException(
       s"table '$name' is not part of pipeline '$pipeline' " +
         s"(epoch $epoch records: ${versions.keys.toSeq.sorted.mkString(", ")})"))
@@ -320,7 +310,7 @@ object PipelineEpoch {
       : Option[String] = {
     var attempt = 0
     while (true) {
-      try return Some(readSmall(f, p))
+      try return Some(SwapProtocol.readSmallFile(f, p))
       catch {
         case e: java.io.IOException =>
           if (!f.exists(p)) return None

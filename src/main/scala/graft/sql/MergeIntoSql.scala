@@ -361,11 +361,11 @@ case class GraftDescribeDetailCommand(nameParts: Seq[String])
       }
     }
     val hist = graft.catalog.Catalog.historyRows(spark, dir)
-    val cons = graft.catalog.Catalog.readConstraintsPath(spark, dir)
+    val cons = graft.catalog.TableRules.constraints(spark, dir)
       .map { case (n, e) => s"$n CHECK ($e)" }.mkString("; ")
-    val gens = graft.catalog.Catalog.readGeneratedPath(spark, dir)
+    val gens = graft.catalog.TableRules.generated(spark, dir)
       .map { case (n, e) => s"$n AS ($e)" }.mkString("; ")
-    val idents = graft.catalog.Catalog.readIdentityPath(spark, dir)
+    val idents = graft.catalog.TableRules.identity(spark, dir)
       .map { case (n, s, k) => s"$n IDENTITY (START WITH $s INCREMENT BY $k)" }
       .mkString("; ")
     val skip = graft.layout.DataSkipping.analyzedColumns(spark, dir)
@@ -550,9 +550,9 @@ case class GraftInsertCommand(nameParts: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = GraftSql.resolveDir(spark, nameParts, "INSERT")
     val target = spark.read.parquet(dir).schema
-    val gens = graft.catalog.Catalog.readGeneratedPath(spark, dir)
+    val gens = graft.catalog.TableRules.generated(spark, dir)
       .map(_._1.toLowerCase).toSet
-    val idents = graft.catalog.Catalog.readIdentityPath(spark, dir)
+    val idents = graft.catalog.TableRules.identity(spark, dir)
       .map(_._1.toLowerCase).toSet
     // project onto the target schema: provided columns cast to the target
     // type, absent plain columns go NULL, absent GENERATED/IDENTITY
@@ -637,8 +637,8 @@ case class GraftReplaceWhereCommand(nameParts: Seq[String], cond: String,
     val bucketCol = graft.merge.PartitionedMerge.BucketCol
     val targetFields = cur.schema.fields.filterNot(f =>
       bucketed && f.name.equalsIgnoreCase(bucketCol))
-    val gens = graft.catalog.Catalog.readGeneratedPath(spark, dir)
-    val idents = graft.catalog.Catalog.readIdentityPath(spark, dir)
+    val gens = graft.catalog.TableRules.generated(spark, dir)
+    val idents = graft.catalog.TableRules.identity(spark, dir)
     // positional alignment (INSERT's rule), generated columns computed so
     // the union below is schema-complete; identity columns cannot be
     // synthesized for a PARTIAL rewrite deterministically mid-plan, so
@@ -658,10 +658,7 @@ case class GraftReplaceWhereCommand(nameParts: Seq[String], cond: String,
     require(idents.forall(i => named.columns.exists(_.equalsIgnoreCase(i._1))),
       "REPLACE WHERE on a table with identity columns requires the query " +
         "to carry them (identity assignment needs the table-wide watermark)")
-    val filled = gens.foldLeft(named) { case (d, (n, e)) =>
-      if (d.columns.exists(_.equalsIgnoreCase(n))) d
-      else d.withColumn(n, expr(e))
-    }
+    val filled = graft.catalog.TableRules.generate(spark, dir, named).frame
     val aligned = filled.select(targetFields.map(f =>
       filled(filled.columns.find(_.equalsIgnoreCase(f.name)).get)
         .cast(f.dataType).as(f.name)).toSeq: _*)
@@ -669,10 +666,7 @@ case class GraftReplaceWhereCommand(nameParts: Seq[String], cond: String,
       // per-bucket region swap: CoW-delete the predicate region from its
       // buckets + hash-route the (staged, validated) insert rows, one
       // swapBuckets version — untouched buckets keep their inodes
-      val provided = gens.filter { case (n, _) =>
-        named.columns.exists(_.equalsIgnoreCase(n)) }
-      graft.layout.BucketedDml.replaceWhere(spark, dir, cond, aligned,
-        provided)
+      graft.layout.BucketedDml.replaceWhere(spark, dir, cond, aligned)
       GraftSql.refreshTarget(spark, nameParts, dir)
       return Seq.empty
     }

@@ -83,6 +83,53 @@ class GeneratedSpec extends SparkSuite {
     assert(cat.read("silver", "s1").columns.toSeq == Seq("id", "PRICE"))
   }
 
+  test("a generated column recorded before the first load applies to it") {
+    val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen-first"))
+    graft.catalog.Catalog.addGeneratedColumnPath(spark,
+      cat.path("silver", "f1"), "v2", "v * 2")
+    cat.create(Seq((1L, 3L)).toDF("k", "v"), "silver", "f1")
+    assert(rowsOf(cat.read("silver", "f1")) == Seq(Seq(1L, 3L, 6L)))
+    // the next overwrite omits the column too and is computed, not
+    // refused as a schema change
+    cat.overwriteSnapshot(Seq((2L, 4L)).toDF("k", "v"), "silver", "f1")
+    assert(rowsOf(cat.read("silver", "f1")) == Seq(Seq(2L, 4L, 8L)))
+  }
+
+  test("a generated column recorded before PartitionedMerge.write applies to it") {
+    import graft.merge.PartitionedMerge
+    val dir = tmpDir("graft-gen-pmw") + "/t"
+    graft.catalog.Catalog.addGeneratedColumnPath(spark, dir, "v2", "v * 2")
+    PartitionedMerge.write(Seq((1L, 3L), (2L, 4L)).toDF("k", "v"), dir,
+      Seq("k"), 4)
+    assert(rowsOf(PartitionedMerge.read(spark, dir), "k") ==
+      Seq(Seq(1L, 3L, 6L), Seq(2L, 4L, 8L)))
+  }
+
+  test("bucketed merges validate provided generated values, compute absent ones") {
+    import graft.merge.PartitionedMerge
+    val dir = tmpDir("graft-gen-pm") + "/t"
+    graft.catalog.Catalog.addGeneratedColumnPath(spark, dir, "v2", "v * 2")
+    PartitionedMerge.write(Seq((1L, 1L, 2L), (2L, 2L, 4L)).toDF("k", "v", "v2"),
+      dir, Seq("k"), 4)
+    // the merge output carries the source's columns (MergeEngine's shape)
+    def upsert(src: org.apache.spark.sql.DataFrame) =
+      PartitionedMerge.prunedMerge(spark, dir, src, Seq("k"), 4) { (t, s) =>
+        t.select(s.columns.map(col).toSeq: _*)
+          .join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
+      }
+    // the flat overwrite's rule: a contradicting value aborts the merge
+    val e = intercept[IllegalStateException] {
+      upsert(Seq((1L, 5L, 999L)).toDF("k", "v", "v2"))
+    }
+    assert(e.getMessage.contains("__generated_v2 (1 rows)"))
+    assert(rowsOf(PartitionedMerge.read(spark, dir), "k") ==
+      Seq(Seq(1L, 1L, 2L), Seq(2L, 2L, 4L)))
+    upsert(Seq((1L, 5L, 10L)).toDF("k", "v", "v2")) // consistent: accepted
+    upsert(Seq((3L, 7L)).toDF("k", "v")) // absent: computed
+    assert(rowsOf(PartitionedMerge.read(spark, dir), "k") ==
+      Seq(Seq(1L, 5L, 10L), Seq(2L, 2L, 4L), Seq(3L, 7L, 14L)))
+  }
+
   test("DESCRIBE DETAIL reports generated columns") {
     val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen3"))
     cat.create(Seq((1L, 2.0)).toDF("id", "price"), "silver", "g3")

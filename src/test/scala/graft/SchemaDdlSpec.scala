@@ -73,6 +73,30 @@ class SchemaDdlSpec extends SparkSuite {
     assert(cat.read("silver", "g1").columns.contains("points"))
   }
 
+  test("adding a generated or identity column keeps a bucketed table bucketed") {
+    import graft.merge.PartitionedMerge
+    val dir = tmpDir("graft-ddl-bkt") + "/t"
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PartitionedMerge.write((1L to 8L).map(k => (k, k)).toDF("k", "v"), dir,
+      Seq("k"), 4)
+    Catalog.addGeneratedColumnPath(spark, dir, "v2", "v * 2")
+    assert(Catalog.partitionColsOf(f, dir) == Seq(PartitionedMerge.BucketCol))
+    // a one-key merge must still see the other seven rows
+    PartitionedMerge.prunedMerge(spark, dir, Seq((1L, 100L)).toDF("k", "v"),
+      Seq("k"), 4) { (t, s) =>
+      t.select(s.columns.map(col).toSeq: _*)
+        .join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
+    }
+    val rows = rowsOf(PartitionedMerge.read(spark, dir), "k")
+    assert(rows.length == 8)
+    assert(rows.head == Seq(1L, 100L, 200L))
+    Catalog.addIdentityColumnPath(spark, dir, "id")
+    assert(Catalog.partitionColsOf(f, dir) == Seq(PartitionedMerge.BucketCol))
+    assert(PartitionedMerge.read(spark, dir).select("id").as[Long].collect()
+      .sorted.toSeq == (1L to 8L))
+  }
+
   test("dropColumn rewrites without the column; multi-drop is one version") {
     val cat = new Catalog(spark, tmpDir("graft-dropcol"))
     cat.overwriteSnapshot(
