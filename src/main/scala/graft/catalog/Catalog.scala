@@ -400,80 +400,21 @@ class Catalog(spark: SparkSession, warehouse: String,
   def disableDeletionVectors(layer: String, table: String): Unit =
     graft.layout.DeletionVectors.disable(spark, path(layer, table))
 
-  /** Row-level DELETE; merge-on-read when the table's DV mode is on,
-    * copy-on-write otherwise. Returns num_affected_rows. */
+  /** Row-level DELETE through [[Catalog.deleteWherePath]] (routing table
+    * at [[Catalog.updateWherePath]]). Returns num_affected_rows. */
   def deleteWhere(layer: String, table: String,
-      cond: org.apache.spark.sql.Column): Long = {
-    val dir = path(layer, table)
-    val n =
-      if (graft.layout.DeletionVectors.isEnabled(spark, dir))
-        graft.layout.DeletionVectors.deleteWhere(spark, dir, cond,
-          keepVersions)
-      else if (Catalog.isBucketedLayout(fs, dir))
-        // copy-on-write scoped to the touched buckets — never O(table)
-        graft.layout.BucketedDml.deleteWhereCow(spark, dir, cond,
-          keepVersions)
-      else if (Catalog.partitionColsOf(fs, dir).isEmpty)
-        // flat snapshot: rewrite only the FILES holding matches, link
-        // the rest — never O(table)
-        graft.layout.FileGranularDml.deleteWhere(spark, dir, cond,
-          keepVersions)
-      else {
-        val t = graft.layout.DeletionVectors.readPath(spark, dir)
-        val c = org.apache.spark.sql.functions.coalesce(cond,
-          org.apache.spark.sql.functions.lit(false))
-        val matched = t.filter(c).count()
-        // partition-dir trees keep the full rewrite, preserving their
-        // layout (partitionBy read off the dir — the DmlSql parity)
-        if (matched > 0)
-          Catalog.overwritePath(spark, t.filter(!c), dir,
-            Catalog.partitionColsOf(fs, dir), keepVersions,
-            operation = "DELETE")
-        matched
-      }
-    if (n > 0 && tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
-    n
-  }
+      cond: org.apache.spark.sql.Column): Long =
+    refreshed(layer, table,
+      Catalog.deleteWherePath(spark, path(layer, table), cond, keepVersions))
 
-  /** Row-level UPDATE; merge-on-read when the table's DV mode is on. */
+  /** Row-level UPDATE through [[Catalog.updateWherePath]]. */
   def updateWhere(layer: String, table: String,
       cond: org.apache.spark.sql.Column,
-      assign: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    val dir = path(layer, table)
-    val n =
-      if (graft.layout.DeletionVectors.isEnabled(spark, dir))
-        graft.layout.DeletionVectors.updateWhere(spark, dir, cond, assign,
-          keepVersions)
-      else if (Catalog.isBucketedLayout(fs, dir))
-        graft.layout.BucketedDml.updateWhereCow(spark, dir, cond, assign,
-          keepVersions)
-      else if (Catalog.partitionColsOf(fs, dir).isEmpty)
-        graft.layout.FileGranularDml.updateWhere(spark, dir, cond, assign,
-          keepVersions)
-      else {
-        val t = graft.layout.DeletionVectors.readPath(spark, dir)
-        val c = org.apache.spark.sql.functions.coalesce(cond,
-          org.apache.spark.sql.functions.lit(false))
-        def assigned(x: String) = assign.collectFirst {
-          case (an, v) if an.equalsIgnoreCase(x) => v }
-        val projected = t.select(t.schema.fields.toSeq.map { fld =>
-          assigned(fld.name) match {
-            case Some(v) => org.apache.spark.sql.functions.when(c,
-                v.cast(fld.dataType))
-              .otherwise(org.apache.spark.sql.functions.col(fld.name))
-              .as(fld.name)
-            case None => org.apache.spark.sql.functions.col(fld.name)
-          }
-        }: _*)
-        val matched = t.filter(c).count()
-        // same partition-layout threading as deleteWhere
-        if (matched > 0)
-          Catalog.overwritePath(spark, projected, dir,
-            Catalog.partitionColsOf(fs, dir), keepVersions,
-            operation = "UPDATE")
-        matched
-      }
+      assign: Seq[(String, org.apache.spark.sql.Column)]): Long =
+    refreshed(layer, table, Catalog.updateWherePath(spark, path(layer, table),
+      cond, assign, keepVersions))
+
+  private def refreshed(layer: String, table: String, n: Long): Long = {
     if (n > 0 && tableExists(layer, table))
       spark.catalog.refreshTable(s"$layer.$table")
     n
@@ -1623,13 +1564,20 @@ object Catalog {
     val w = dfGen.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmp.toString)
-    // stage the schema sidecar for flat snapshots — it becomes visible
-    // atomically with the swap and serves the NEXT commit's schema check
-    // driver-side. Underscore-prefixed, so scans ignore it and appends
-    // don't link it forward (appendPath re-stamps its own).
-    if (partitionBy.isEmpty)
+    // stage the schema sidecar for flat snapshots and the bucketed layout
+    // (RESTORE, column DDL) — it becomes visible atomically with the swap
+    // and serves the NEXT commit's schema check driver-side. Underscore-
+    // prefixed, so scans ignore it and appends don't link it forward
+    // (appendPath re-stamps its own). The bucket column goes last, where
+    // the partitioned write puts it (PartitionedMerge.write's shape).
+    val bucketCol = graft.merge.PartitionedMerge.BucketCol
+    val bucketed = partitionBy.map(_.toLowerCase) == Seq(bucketCol.toLowerCase)
+    if (partitionBy.isEmpty || bucketed) {
+      val (b, data) = dfGen.schema.fields.partition(f =>
+        bucketed && f.name.equalsIgnoreCase(bucketCol))
       graft.merge.PartitionedMerge.writeSchemaSidecar(spark, tmp.toString,
-        dfGen.schema)
+        org.apache.spark.sql.types.StructType(data ++ b))
+    }
     TableRules.enforceStaged(spark, dir, g.checks, tmp)
     commitSwap(spark, f, dir, tmp, keepVersions, expectedVersion, commitTag,
       operation, carryTags)
@@ -1846,6 +1794,89 @@ object Catalog {
         curSchema)
     commitSwap(spark, f, dir, tmp, keepVersions, Some(stagedAgainst),
       commitTag, operation)
+    }
+  }
+
+  /** Row-level `DELETE FROM … WHERE cond` on the table at `dir`: rows where
+    * `cond` is TRUE are removed (NULL keeps, Delta's 3VL). Routed by
+    * layout as [[updateWherePath]] tabulates. Returns num_affected_rows;
+    * no match commits no version. */
+  def deleteWherePath(spark: SparkSession, dir: String,
+      cond: org.apache.spark.sql.Column, keepVersions: Int = 10,
+      alias: Option[String] = None): Long =
+    rowLevel(spark, dir, cond, None, keepVersions, alias)
+
+  /** Row-level `UPDATE … SET … WHERE cond` on the table at `dir`, the row
+    * image [[TableRules.updateImage]] writes on every layout. This pair is
+    * the ONE place a row-level statement picks its layout's path (the
+    * catalog API and SQL `DELETE`/`UPDATE` both call it):
+    *
+    *   layout            DV mode off               DV mode on
+    *   flat snapshot     FileGranularDml           DeletionVectors
+    *   bucketed          BucketedDml.*Cow          BucketedDml.*Mor
+    *   hive-partitioned  full rewrite              refused
+    *
+    *   - [[graft.layout.FileGranularDml]]: one probe finds the files
+    *     holding matches, untouched files hard-link into the new version,
+    *     only touched files rewrite (Delta's narrowed-rewrite shape);
+    *   - [[graft.layout.DeletionVectors]]: a position sidecar (UPDATE
+    *     appends the new images), zero data movement;
+    *   - [[graft.layout.BucketedDml]]: touched buckets rewrite (`*Cow`) or
+    *     grow per-bucket sidecars (`*Mor`); untouched buckets never open;
+    *   - partition-dir trees: the full rewrite through [[overwritePath]],
+    *     partition layout kept (the one O(table) case); they carry no
+    *     sidecars, so DV mode there raises.
+    *
+    * `alias` lets a statement's qualified references (`t.x`) resolve.
+    * The affected-row count rides the layout's probe job. */
+  def updateWherePath(spark: SparkSession, dir: String,
+      cond: org.apache.spark.sql.Column,
+      assign: Seq[(String, org.apache.spark.sql.Column)],
+      keepVersions: Int = 10, alias: Option[String] = None): Long =
+    rowLevel(spark, dir, cond, Some(assign), keepVersions, alias)
+
+  private def rowLevel(spark: SparkSession, dir: String,
+      cond: org.apache.spark.sql.Column,
+      assign: Option[Seq[(String, org.apache.spark.sql.Column)]],
+      keepVersions: Int, alias: Option[String]): Long = {
+    import graft.layout.{BucketedDml, DeletionVectors, FileGranularDml}
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dv = DeletionVectors.isEnabled(spark, dir)
+    if (isBucketedLayout(f, dir)) assign match {
+      case None if dv =>
+        BucketedDml.deleteWhereMor(spark, dir, cond, keepVersions, alias)
+      case None =>
+        BucketedDml.deleteWhereCow(spark, dir, cond, keepVersions, alias)
+      case Some(a) if dv =>
+        BucketedDml.updateWhereMor(spark, dir, cond, a, keepVersions, alias)
+      case Some(a) =>
+        BucketedDml.updateWhereCow(spark, dir, cond, a, keepVersions, alias)
+    } else if (dv) assign match {
+      case None =>
+        DeletionVectors.deleteWhere(spark, dir, cond, keepVersions, alias)
+      case Some(a) =>
+        DeletionVectors.updateWhere(spark, dir, cond, a, keepVersions, alias)
+    } else {
+      val partCols = partitionColsOf(f, dir)
+      if (partCols.isEmpty) assign match {
+        case None =>
+          FileGranularDml.deleteWhere(spark, dir, cond, keepVersions, alias)
+        case Some(a) =>
+          FileGranularDml.updateWhere(spark, dir, cond, a, keepVersions, alias)
+      } else {
+        // partition-dir tree: the full rewrite, its partition layout kept
+        val live = DeletionVectors.readPath(spark, dir)
+        val t = alias.fold(live)(live.alias)
+        val c = org.apache.spark.sql.functions.coalesce(cond,
+          org.apache.spark.sql.functions.lit(false))
+        val out = assign.fold(t.filter(!c))(a =>
+          TableRules.updateImage(spark, dir, t, a, Some(c)).frame)
+        val matched = t.filter(c).count()
+        if (matched > 0)
+          overwritePath(spark, out, dir, partCols, keepVersions,
+            operation = if (assign.isEmpty) "DELETE" else "UPDATE")
+        matched
+      }
     }
   }
 }

@@ -1,10 +1,11 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max, sum, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.layout.DeletionVectors
 import graft.merge.PartitionedMerge
 
 /** The write gate: every rule a commit must pass before its staged files
@@ -23,6 +24,7 @@ import graft.merge.PartitionedMerge
   *     the checks the written rows must pass: the CHECK constraints plus
   *     null-safe equality of every generated column the writer provided
   *     with its definition;
+  *   - [[updateImage]] is the row image every layout's UPDATE stages;
   *   - [[shapeDiff]] is schema-on-write, [[liveSchema]] its sidecar fast
   *     path;
   *   - [[enforceStaged]] runs the checks over the STAGED files and drops
@@ -137,8 +139,11 @@ object TableRules {
     * as consistency checks. Identity columns are left alone — a merge's
     * output carries them through from the target. */
   private[graft] def generate(spark: SparkSession, dir: String,
-      df: DataFrame): Gated = {
-    val gens = generated(spark, dir)
+      df: DataFrame): Gated =
+    fill(spark, dir, generated(spark, dir), df)
+
+  private def fill(spark: SparkSession, dir: String,
+      gens: Seq[(String, String)], df: DataFrame): Gated = {
     val filled = gens.foldLeft(df) { case (d, (n, e)) =>
       if (has(d, n)) d else d.withColumn(n, expr(e)) }
     Gated(filled, constraints(spark, dir) ++
@@ -154,11 +159,42 @@ object TableRules {
     g.copy(frame = fillIdentity(spark, dir, g.frame))
   }
 
-  /** The checks for a row-level UPDATE's rewritten rows: they carry every
-    * column, so every generated column is writer-provided. */
-  private[graft] def rewriteChecks(spark: SparkSession,
-      dir: String): Seq[(String, String)] =
-    constraints(spark, dir) ++ consistency(generated(spark, dir))
+  /** The row image a row-level UPDATE stages, on every layout. Each
+    * assignment must name a column of `rows` other than the bucket column;
+    * its value is cast to that column's type and applies where `matched`
+    * holds (on every row when None — `rows` is then the matched rows).
+    * Generated columns the statement leaves unassigned are recomputed from
+    * the updated values (Delta's rule); an assigned one is writer-provided
+    * and checked against its definition. The image has `rows`' columns in
+    * `rows`' order, minus the deletion-vector position tags, so a bucketed
+    * frame keeps its bucket column. */
+  private[graft] def updateImage(spark: SparkSession, dir: String,
+      rows: DataFrame, assign: Seq[(String, Column)],
+      matched: Option[Column] = None): Gated = {
+    val fields = rows.schema.fields.toSeq.filterNot(f =>
+      f.name == DeletionVectors.FileCol || f.name == DeletionVectors.PosCol)
+    assign.foreach { case (n, _) =>
+      require(!n.equalsIgnoreCase(PartitionedMerge.BucketCol),
+        "the bucket column is the table's physical layout; it cannot be " +
+          "assigned")
+      require(fields.exists(_.name.equalsIgnoreCase(n)),
+        s"UPDATE assigns unknown column $n on $dir")
+    }
+    val gens = generated(spark, dir)
+    val image = rows.select(fields.flatMap { f =>
+      assign.collectFirst {
+        case (n, v) if n.equalsIgnoreCase(f.name) => v.cast(f.dataType)
+      } match {
+        case Some(v) => Some(matched.fold(v)(m =>
+          when(m, v).otherwise(col(f.name))).as(f.name))
+        case None if gens.exists(_._1.equalsIgnoreCase(f.name)) => None
+        case None => Some(col(f.name))
+      }
+    }: _*)
+    val g = fill(spark, dir, gens, image)
+    g.copy(frame = g.frame.select(fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*))
+  }
 
   /** Append `base + step·(i+1)` ids: per-partition sequences with
     * partition-size offsets (zipWithIndex — two narrow passes, no

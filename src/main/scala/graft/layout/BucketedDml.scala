@@ -75,18 +75,6 @@ object BucketedDml {
     df.columns.toSeq.filterNot(c => c.equalsIgnoreCase(BucketCol) ||
       c == FileCol || c == PosCol)
 
-  private def requireAssignable(df: DataFrame,
-      assign: Seq[(String, Column)], dir: String): Unit = {
-    val cols = dataColumns(df)
-    assign.foreach { case (n, _) =>
-      require(!n.equalsIgnoreCase(BucketCol),
-        "the bucket column is the table's physical layout; it cannot be " +
-          "assigned")
-      require(cols.exists(_.equalsIgnoreCase(n)),
-        s"UPDATE assigns unknown column $n on $dir")
-    }
-  }
-
   /** Routed destination bucket for written rows: recomputed from the
     * bucket manifest when present, the row's original bucket otherwise. */
   private def routeBuckets(spark: SparkSession, dir: String,
@@ -96,6 +84,15 @@ object BucketedDml {
         PartitionedMerge.bucketExpr(keys, n))
       case None => rows // legacy layout: original bucket (column present)
     }
+
+  /** UPDATE's row image of `rows` ([[TableRules.updateImage]]; the bucket
+    * column rides through), routed to its destination buckets. */
+  private def routedImage(spark: SparkSession, dir: String, rows: DataFrame,
+      assign: Seq[(String, Column)],
+      matched: Option[Column] = None): TableRules.Gated = {
+    val g = TableRules.updateImage(spark, dir, rows, assign, matched)
+    g.copy(frame = routeBuckets(spark, dir, g.frame))
+  }
 
   // ------------------------------------------------ merge-on-read
 
@@ -111,26 +108,13 @@ object BucketedDml {
     * (possibly different) destination buckets — one commit. */
   def updateWhereMor(spark: SparkSession, dir: String, cond: Column,
       assign: Seq[(String, Column)], keepVersions: Int = 10,
-      alias: Option[String] = None): Long = {
-    def assigned(c: String) = assign.collectFirst {
-      case (n, v) if n.equalsIgnoreCase(c) => v }
+      alias: Option[String] = None): Long =
     commitBucketed(spark, dir, keepVersions,
-      newRows = Some { matched =>
-        requireAssignable(matched, assign, dir)
-        val schema = matched.schema
-        val projected = dataColumns(matched).map { c =>
-          assigned(c) match {
-            case Some(v) => v.cast(schema(c).dataType).as(c)
-            case None => col(c)
-          }
-        } :+ col(BucketCol) // original bucket; routeBuckets may overwrite
-        routeBuckets(spark, dir, matched.select(projected: _*))
-      }, alias)(cond)
-  }
+      newRows = Some(routedImage(spark, dir, _, assign)), alias)(cond)
 
   /** Shared merge-on-read commit for the bucketed layout. */
   private def commitBucketed(spark: SparkSession, dir: String,
-      keepVersions: Int, newRows: Option[DataFrame => DataFrame],
+      keepVersions: Int, newRows: Option[DataFrame => TableRules.Gated],
       alias: Option[String])(cond: Column): Long =
     Catalog.raceToConflictShim(dir) {
       val conf = spark.sparkContext.hadoopConfiguration
@@ -142,6 +126,8 @@ object BucketedDml {
       val matched = taggedLive(spark, dir, alias)
         .filter(coalesce(cond, lit(false))).cache()
       try {
+        // UPDATE's image: assignments are checked here, before any job
+        val routed = newRows.map(_(matched))
         // ONE job learns both the touched buckets and the affected count
         // (driver-side payload ≤ nBuckets rows)
         val bucketCounts = matched.groupBy(BucketCol).count().collect()
@@ -150,23 +136,22 @@ object BucketedDml {
         if (oldBuckets.isEmpty) 0L
         else {
           val affected = bucketCounts.map(_._2).sum
-          val routed = newRows.map(_(matched))
           val tmp = dir + ".tmp-merge-" +
             java.util.UUID.randomUUID().toString.take(8)
           try {
             // UPDATE: stage the new row images FIRST — the staged
             // partition dirs ARE the destination-bucket list, no extra
             // distinct-collect job
-            val rowStage = routed.map { r =>
+            val rowStage = routed.map { g =>
               val stage = Catalog.stagingPathShim(dir, "-dvupd")
-              r.write.mode(SaveMode.Overwrite)
+              g.frame.write.mode(SaveMode.Overwrite)
                 .partitionBy(BucketCol).parquet(stage.toString)
-              stage
+              (stage, g.checks)
             }
-            val newBuckets = rowStage.toSeq.flatMap(s =>
+            val newBuckets = rowStage.toSeq.flatMap { case (s, _) =>
               fs.listStatus(s).map(_.getPath.getName)
                 .filter(_.startsWith(s"$BucketCol="))
-                .map(_.stripPrefix(s"$BucketCol=").toInt))
+                .map(_.stripPrefix(s"$BucketCol=").toInt) }
             val touched = (oldBuckets ++ newBuckets).distinct.sorted
             // staged replacement per touched bucket: links of its current
             // data files (names preserved — sidecar positions key on them)
@@ -203,9 +188,8 @@ object BucketedDml {
             // constraints and generated-column definitions validate on
             // the NEW files only, then the part files move into their
             // destination buckets' staged dirs (brand-new buckets too)
-            rowStage.foreach { stage =>
-              TableRules.enforceStaged(spark, dir,
-                TableRules.rewriteChecks(spark, dir), stage)
+            rowStage.foreach { case (stage, checks) =>
+              TableRules.enforceStaged(spark, dir, checks, stage)
               TableRules.moveStaged(fs, stage, new Path(tmp))
             }
             PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
@@ -250,6 +234,9 @@ object BucketedDml {
       val c = coalesce(cond, lit(false))
       val matched = live.filter(c).cache()
       try {
+        // UPDATE: the matched rows' routed images (assignments checked
+        // here, before any job) name the destination buckets
+        val moved = project.map(routedImage(spark, dir, matched, _))
         // one job: touched buckets + affected count together
         val bucketCounts = matched.groupBy(BucketCol).count().collect()
           .map(r => r.getInt(0) -> r.getLong(1)).toSeq
@@ -257,42 +244,19 @@ object BucketedDml {
         if (oldBuckets.isEmpty) 0L
         else {
           val affected = bucketCounts.map(_._2).sum
-          def assignedOf(assign: Seq[(String, Column)])(col0: String) =
-            assign.collectFirst {
-              case (n, v) if n.equalsIgnoreCase(col0) => v }
-          // UPDATE: destination buckets of the projected matched rows
-          val newBuckets = project.toSeq.flatMap { assign =>
-            requireAssignable(live, assign, dir)
-            val schema = matched.schema
-            val projected = dataColumns(matched).map { cn =>
-              assignedOf(assign)(cn) match {
-                case Some(v) => v.cast(schema(cn).dataType).as(cn)
-                case None => col(cn)
-              }
-            } :+ col(BucketCol)
-            routeBuckets(spark, dir, matched.select(projected: _*))
-              .select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-          }
+          val newBuckets = moved.toSeq.flatMap(_.frame.select(BucketCol)
+            .distinct().collect().map(_.getInt(0)).toSeq)
           val touched = (oldBuckets ++ newBuckets).distinct.sorted
           // staged contents: every row of the touched buckets, with the
           // statement applied — non-matching rows pass through, matching
           // rows are dropped (DELETE) or reassigned + re-routed (UPDATE)
           val slice = live.filter(
             col(BucketCol).isin(touched.map(Int.box): _*))
-          val staged = project match {
+          val image = project.map(routedImage(spark, dir, slice, _, Some(c)))
+          val staged = image match {
+            case Some(g) => g.frame
             case None => slice.filter(!c)
               .select(dataColumns(slice).map(col) :+ col(BucketCol): _*)
-            case Some(assign) =>
-              val schema = slice.schema
-              val projected = dataColumns(slice).map { cn =>
-                assignedOf(assign)(cn) match {
-                  case Some(v) =>
-                    when(c, v.cast(schema(cn).dataType))
-                      .otherwise(col(cn)).as(cn)
-                  case None => col(cn)
-                }
-              } :+ col(BucketCol)
-              routeBuckets(spark, dir, slice.select(projected: _*))
           }
           val tmp = dir + ".tmp-merge-" +
             java.util.UUID.randomUUID().toString.take(8)
@@ -301,10 +265,8 @@ object BucketedDml {
               .partitionBy(BucketCol).parquet(tmp)
             // UPDATE re-validates the rewritten buckets (prunedMerge's
             // scope); DELETE only removes rows, so CHECKs cannot break
-            if (project.nonEmpty)
-              TableRules.enforceStaged(spark, dir,
-                TableRules.rewriteChecks(spark, dir), new Path(tmp),
-                Some(staged.schema))
+            image.foreach(g => TableRules.enforceStaged(spark, dir,
+              g.checks, new Path(tmp), Some(staged.schema)))
             PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
               keepVersions, Some(stagedAgainst))
             affected

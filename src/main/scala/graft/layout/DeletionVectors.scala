@@ -14,11 +14,11 @@ import graft.catalog.{Catalog, TableRules}
   * Databricks' "deletion vectors" feature; before it, every row-level
   * change was a copy-on-write rewrite of whole files).
   *
-  * The copy-on-write lowering in [[graft.sql.DmlRunner]] rewrites the FULL
-  * snapshot — correct, but O(table) per statement. At 100 TB a DELETE that
-  * touches 0.1% of rows must not rewrite 100 TB. Merge-on-read flips the
-  * cost: the statement records only the POSITIONS of deleted rows and the
-  * read applies them, so
+  * Copy-on-write DML ([[FileGranularDml]]) rewrites every file holding a
+  * match — O(touched files) per statement, so a DELETE of 0.1% of rows
+  * spread over a 100 TB table still rewrites most of it. Merge-on-read
+  * flips the cost: the statement records only the POSITIONS of deleted
+  * rows and the read applies them, so
   *
   *   - DELETE writes a position sidecar (`_dv/` parquet: `file_name`,
   *     `row_index`) + hard-links of every data file → a real version
@@ -50,7 +50,9 @@ import graft.catalog.{Catalog, TableRules}
   * Mode selection is per table (`enable`/`disable`, persisted as a sidecar
   * next to the constraints file; SQL surface `ALTER TABLE t SET
   * TBLPROPERTIES ('graft.enableDeletionVectors'='true')`). With the mode
-  * on, SQL `DELETE FROM` / `UPDATE` route here; with it off they stay
+  * on, `graft.catalog.Catalog.deleteWherePath`/`updateWherePath` (the
+  * catalog API and SQL `DELETE FROM` / `UPDATE`) route flat snapshots
+  * here and bucketed ones to [[BucketedDml]]; with it off they stay
   * copy-on-write — and every reader (catalog API, DML bases, OPTIMIZE,
   * RESTORE, CDF diffs, plus ordinary `spark.sql` on extension sessions via
   * [[DvApplyRule]]) applies whatever sidecar exists, so flipping the mode
@@ -213,12 +215,13 @@ object DeletionVectors {
       .drop(FileCol, PosCol)
   }
 
-  /** Live rows tagged with their physical positions (the delete/update
-    * planning frame). `alias` lets a SQL statement's qualified column
-    * references (`DELETE FROM t AS x WHERE x.a …`) resolve. */
-  private def taggedLive(spark: SparkSession, dir: String,
-      alias: Option[String]): DataFrame = {
-    val base = spark.read.parquet(dir)
+  /** `base` (a read of the flat table at `dir`, or of some of its files)
+    * tagged with physical positions, the table's sidecar subtracted — the
+    * delete/update planning frame. `alias` lets a SQL statement's
+    * qualified column references (`DELETE FROM t AS x WHERE x.a …`)
+    * resolve. */
+  private[layout] def taggedLive(spark: SparkSession, dir: String,
+      alias: Option[String], base: DataFrame): DataFrame = {
     val data = alias.fold(base)(base.alias)
       .withColumn(FileCol, col("_metadata.file_name"))
       .withColumn(PosCol, col("_metadata.row_index"))
@@ -237,9 +240,7 @@ object DeletionVectors {
   def deleteWhere(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column, keepVersions: Int = 10,
       alias: Option[String] = None): Long =
-    if (Catalog.isBucketedLayout(fsOf(spark, dir), dir))
-      BucketedDml.deleteWhereMor(spark, dir, cond, keepVersions, alias)
-    else commitPositions(spark, dir, keepVersions, "DELETE",
+    commitPositions(spark, dir, keepVersions, "DELETE",
       matched => matched.select(
         col(FileCol).as("file_name"), col(PosCol).as("row_index")),
       newRows = None, alias)(_.filter(coalesce(cond, lit(false))))
@@ -268,27 +269,12 @@ object DeletionVectors {
   def updateWhere(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
       assign: Seq[(String, org.apache.spark.sql.Column)],
-      keepVersions: Int = 10, alias: Option[String] = None): Long = {
-    if (Catalog.isBucketedLayout(fsOf(spark, dir), dir))
-      return BucketedDml.updateWhereMor(spark, dir, cond, assign,
-        keepVersions, alias)
-    val schema = spark.read.parquet(dir).schema
-    assign.foreach { case (n, _) =>
-      require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
-        s"UPDATE assigns unknown column $n on $dir")
-    }
-    def assigned(c: String) = assign.collectFirst {
-      case (n, v) if n.equalsIgnoreCase(c) => v }
+      keepVersions: Int = 10, alias: Option[String] = None): Long =
     commitPositions(spark, dir, keepVersions, "UPDATE",
       matched => matched.select(
         col(FileCol).as("file_name"), col(PosCol).as("row_index")),
-      newRows = Some(matched => matched.select(schema.fields.toSeq.map { f =>
-        assigned(f.name) match {
-          case Some(v) => v.cast(f.dataType).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)), alias)(_.filter(coalesce(cond, lit(false))))
-  }
+      newRows = Some(TableRules.updateImage(spark, dir, _, assign)),
+      alias)(_.filter(coalesce(cond, lit(false))))
 
   /** Shared merge-on-read commit: links + sidecar (+ UPDATE's new files),
     * one optimistic swap. */
@@ -299,7 +285,7 @@ object DeletionVectors {
   private def commitPositions(spark: SparkSession, dir: String,
       keepVersions: Int, operation: String,
       positions: DataFrame => DataFrame,
-      newRows: Option[DataFrame => DataFrame],
+      newRows: Option[DataFrame => TableRules.Gated],
       alias: Option[String] = None)(
       matcher: DataFrame => DataFrame): Long =
     Catalog.raceToConflictShim(dir) {
@@ -308,8 +294,9 @@ object DeletionVectors {
       val f = dst.getFileSystem(conf)
       require(f.exists(dst), s"no table at $dir")
       require(!Catalog.isBucketedLayout(f, dir),
-        s"deletion vectors on bucket-partitioned $dir are unsupported: " +
-          "route row-level changes through PartitionedMerge")
+        s"flat deletion vectors on bucket-partitioned $dir are " +
+          "unsupported: route row-level changes through " +
+          "Catalog.deleteWherePath/updateWherePath (per-bucket sidecars)")
       require(!f.listStatus(dst).exists(s => s.isDirectory &&
           !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith(".")),
@@ -320,7 +307,9 @@ object DeletionVectors {
       val hadDv = f.exists(dvPath)
       val existingCount =
         if (hadDv) spark.read.parquet(dvPath.toString).count() else 0L
-      val matched = matcher(taggedLive(spark, dir, alias))
+      val matched = matcher(
+        taggedLive(spark, dir, alias, spark.read.parquet(dir)))
+      val image = newRows.map(_(matched))
 
       val tmp = Catalog.stagingPathShim(dir, "")
       f.mkdirs(tmp)
@@ -346,13 +335,12 @@ object DeletionVectors {
         // "0 rows affected" into an error or a retry loop
         if (affected == 0) { f.delete(tmp, true); 0L }
         else {
-          newRows.foreach { project =>
+          image.foreach { g =>
             val stage = Catalog.stagingPathShim(dir, "-dvupd")
-            project(matched).write.parquet(stage.toString)
+            g.frame.write.parquet(stage.toString)
             // UPDATE's new rows are append-shaped: constraints + generated
             // definitions validate on the NEW files only
-            TableRules.enforceStaged(spark, dir,
-              TableRules.rewriteChecks(spark, dir), stage)
+            TableRules.enforceStaged(spark, dir, g.checks, stage)
             TableRules.moveStaged(f, stage, tmp)
           }
 
@@ -362,6 +350,8 @@ object DeletionVectors {
           if (f.exists(skipDir))
             org.apache.hadoop.fs.FileUtil.copy(f, skipDir,
               f, new Path(tmp, "_skipping"), false, false, conf)
+          // the schema is unchanged: its sidecar carries forward too
+          graft.merge.PartitionedMerge.carrySchemaSidecar(spark, dir, tmp)
           // carryTags: a streaming sink's exactly-once batch marker on the
           // live version must survive a row-level delete/update commit —
           // the marker dedupes batches, which later DML doesn't un-land

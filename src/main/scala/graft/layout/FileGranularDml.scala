@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{Catalog, TableRules}
 
-/** FILE-GRANULAR copy-on-write DELETE/UPDATE on flat snapshots — the
-  * upgrade path the full-rewrite lowering in `graft.sql.DmlRunner`
-  * documented since round 5 (Delta's DML likewise narrows the rewrite to
+/** FILE-GRANULAR copy-on-write DELETE/UPDATE on flat snapshots, the path
+  * `Catalog.deleteWherePath`/`updateWherePath` route them to while the
+  * table's DV mode is off (Delta's DML likewise narrows the rewrite to
   * files that contain matches; everything else is carried by reference).
   *
   * The statement becomes:
@@ -36,13 +36,10 @@ import graft.catalog.{Catalog, TableRules}
   *     ([[DataSkipping.carryManifest]]) — a stale entry would chase a
   *     vanished file; rewritten files read unprofiled until the next
   *     incremental ANALYZE, like appends.
-  *   - UPDATE validates CHECK constraints and provided generated-column
-  *     definitions on the REWRITTEN files only (they hold every row that
-  *     changed; linked files passed at their own write time). */
+  *   - UPDATE stages `TableRules.updateImage` and validates its checks
+  *     on the REWRITTEN files only (they hold every row that changed;
+  *     linked files passed at their own write time). */
 object FileGranularDml {
-
-  private val FileCol = DeletionVectors.FileCol
-  private val PosCol = DeletionVectors.PosCol
 
   def deleteWhere(spark: SparkSession, dir: String, cond: Column,
       keepVersions: Int = 10, alias: Option[String] = None): Long =
@@ -100,29 +97,18 @@ object FileGranularDml {
         s"file-granular DML expects a flat snapshot at $dir " +
           "(bucketed layouts route through BucketedDml)")
       val stagedAgainst = Catalog.readPointer(fs, dir)
-
-      def dvApplied(df: DataFrame): DataFrame = {
-        val tagged = df
-          .withColumn(FileCol, col("_metadata.file_name"))
-          .withColumn(PosCol, col("_metadata.row_index"))
-        val dvDir = new Path(dir, DeletionVectors.DvDirName)
-        if (!fs.exists(dvDir)) tagged
-        else {
-          val dv = spark.read.parquet(dvDir.toString)
-          tagged.join(dv, tagged(FileCol) === dv("file_name") &&
-            tagged(PosCol) === dv("row_index"), "left_anti")
-        }
-      }
-      val schema = spark.read.parquet(dir).schema
-      assign.toSeq.flatten.foreach { case (n, _) =>
-        require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
-          s"UPDATE assigns unknown column $n on $dir")
-      }
       val base = spark.read.parquet(dir)
+      val schema = base.schema
       val c = coalesce(cond, lit(false))
+      def image(rows: DataFrame) = assign.map(
+        TableRules.updateImage(spark, dir, rows, _, Some(c)))
+      val live = DeletionVectors.taggedLive(spark, dir, alias, base)
+      // UPDATE's checks come from the image over the whole live table, so
+      // a bad assignment raises before the probe job
+      val checks = image(live).map(_.checks)
       // ONE probe job: touched files + affected count together
-      val fileCounts = dvApplied(alias.fold(base)(base.alias)).filter(c)
-        .groupBy(FileCol).count().collect()
+      val fileCounts = live.filter(c)
+        .groupBy(DeletionVectors.FileCol).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toSeq
       if (fileCounts.isEmpty) 0L
       else {
@@ -148,30 +134,18 @@ object FileGranularDml {
               fs, d, false, false, conf), s"link/copy failed: $n")
           }
           // rewrite ONLY the touched files, statement applied
-          val sliceBase = spark.read
-            .schema(schema).parquet(touched.toSeq.map(dir + "/" + _): _*)
-          val slice = dvApplied(alias.fold(sliceBase)(sliceBase.alias))
-          def assignedOf(col0: String) = assign.toSeq.flatten.collectFirst {
-            case (n, v) if n.equalsIgnoreCase(col0) => v }
-          val outCols = schema.fields.toSeq.map { f =>
-            assignedOf(f.name) match {
-              case Some(v) =>
-                when(c, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }
-          val staged = assign match {
-            case None => slice.filter(!c)
-              .select(schema.fieldNames.map(col).toSeq: _*)
-            case Some(_) => slice.select(outCols: _*)
+          val slice = DeletionVectors.taggedLive(spark, dir, alias, spark.read
+            .schema(schema).parquet(touched.toSeq.map(dir + "/" + _): _*))
+          val staged = image(slice) match {
+            case Some(g) => g.frame
+            case None =>
+              slice.filter(!c).select(schema.fieldNames.map(col).toSeq: _*)
           }
           val stage = Catalog.stagingPathShim(dir, "-rewrite")
           staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
           // UPDATE re-validates the rewritten files (linked files passed
           // at their own write time; a DELETE can only remove rows)
-          if (assign.nonEmpty)
-            TableRules.enforceStaged(spark, dir,
-              TableRules.rewriteChecks(spark, dir), stage)
+          checks.foreach(TableRules.enforceStaged(spark, dir, _, stage))
           TableRules.moveStaged(fs, stage, tmp)
           // DV sidecar: positions on linked files carry; positions on
           // rewritten files folded by the DV-applied slice above
@@ -183,8 +157,10 @@ object FileGranularDml {
               keep.write.parquet(
                 new Path(tmp, DeletionVectors.DvDirName).toString)
           }
-          // skipping stats: surviving files' entries only
+          // skipping stats: surviving files' entries only; the schema is
+          // unchanged, so its sidecar carries whole
           DataSkipping.carryManifest(spark, dir, tmp, linked)
+          graft.merge.PartitionedMerge.carrySchemaSidecar(spark, dir, tmp)
           Catalog.commitSwap(spark, fs, dir, tmp, keepVersions,
             Some(stagedAgainst), None, operation, carryTags = true)
           affected

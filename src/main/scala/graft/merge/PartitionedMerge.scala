@@ -206,6 +206,20 @@ object PartitionedMerge {
     require(fs.rename(tmp, p), s"schema sidecar commit failed: $p")
   }
 
+  /** Copy `path`'s schema sidecar, if any, into the staged snapshot
+    * `tmp`: the row-level DML commits link only data files forward, and a
+    * snapshot without its sidecar sends the next append or overwrite back
+    * to footer inference. */
+  private[graft] def carrySchemaSidecar(spark: SparkSession, path: String,
+      tmp: Path): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    val p = schemaSidecar(path)
+    if (fs.exists(p))
+      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName),
+        false, false, conf)
+  }
+
   /** The sidecar-recorded schema of the table at `path`, if one was ever
     * written — ONE small-file read, no listing, no footer job. The
     * driver-side answer to "what columns does this table have" for every

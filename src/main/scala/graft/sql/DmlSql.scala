@@ -1,11 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.{GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.LongType
 
 /** Row-level `DELETE FROM` / `UPDATE` SQL over graft snapshot tables —
@@ -23,135 +23,54 @@ import org.apache.spark.sql.types.LongType
   *     removed; NULL/false rows stay. Returns num_affected_rows.
   *   - `UPDATE t SET x = e, ... [WHERE c]`: assignments apply to matching
   *     rows (every row when no WHERE), cast to the column's existing type;
-  *     all other columns and rows pass through. Returns num_affected_rows.
+  *     unassigned generated columns recompute from the updated values; all
+  *     other columns and rows pass through. Returns num_affected_rows.
   *
-  * Scale: the lowering is layout-routed, never O(table) —
-  *   - flat snapshots: FILE-GRANULAR rewrite
-  *     ([[graft.layout.FileGranularDml]]) — one probe finds the files
-  *     holding matches, untouched files hard-link into the new version,
-  *     only matched files rewrite (Delta's narrowed-rewrite shape);
-  *   - bucketed layouts: per-bucket rewrite or per-bucket DV sidecars
-  *     ([[graft.layout.BucketedDml]]);
-  *   - merge-on-read mode: position sidecars, zero data movement
-  *     ([[graft.layout.DeletionVectors]]);
-  *   - partition-dir trees: full rewrite preserving the partition layout
-  *     (the remaining O(table) case; partition-wise narrowing is the
-  *     upgrade path).
-  * The affected-row count rides the probe (one column-pruned job). */
+  * Both lower to [[graft.catalog.Catalog.deleteWherePath]] /
+  * [[graft.catalog.Catalog.updateWherePath]], the catalog API's own route:
+  * its scaladoc tabulates the per-layout paths. */
 object DmlRunner {
 
+  /** The statement's target table: its name, the alias its condition and
+    * values may qualify with, and its storage dir. */
   private def resolveTarget(spark: SparkSession, table
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       stmt: String) = {
     val (nameParts, alias) = MergeIntoRunner.targetNameAndAlias(table)
-    val tableName = nameParts.map(p => s"`$p`").mkString(".")
-    val (uri, partCols) = GraftShims.tableStorage(spark, nameParts)
+    val (uri, _) = GraftShims.tableStorage(spark, nameParts)
       .getOrElse(throw new IllegalArgumentException(
-        s"$stmt target $tableName must be a catalog table with a storage " +
-          "location (temp views cannot be rewritten)"))
-    val dir = new org.apache.hadoop.fs.Path(uri).toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (nameParts, alias.getOrElse(nameParts.last), tableName, dir, partCols,
-      graft.catalog.Catalog.isBucketedLayout(fs, dir))
+        s"$stmt target ${nameParts.map(p => s"`$p`").mkString(".")} must " +
+          "be a catalog table with a storage location (temp views cannot " +
+          "be rewritten)"))
+    (nameParts, alias.getOrElse(nameParts.last),
+      new org.apache.hadoop.fs.Path(uri).toString)
   }
 
-  /** `DELETE FROM t [AS a] WHERE cond` → rows where cond is not TRUE.
-    * Copy-on-write by default; tables with deletion vectors enabled
-    * (`graft.layout.DeletionVectors.enable` / the TBLPROPERTIES SQL)
-    * record positions instead of rewriting — O(matched rows), not
-    * O(table). Either way the base read applies any existing sidecar, so
-    * flipping the mode never resurrects deleted rows. */
-  def delete(spark: SparkSession, d: DeleteFromTable): Long = {
-    val (nameParts, aliasName, tableName, dir, partCols, bucketed) =
-      resolveTarget(spark, d.table, "DELETE FROM")
-    val affected =
-      if (graft.layout.DeletionVectors.isEnabled(spark, dir))
-        // deleteWhere routes bucketed layouts to the per-bucket sidecar
-        // commit (BucketedDml) itself
-        graft.layout.DeletionVectors.deleteWhere(spark, dir,
-          GraftShims.column(d.condition), alias = Some(aliasName))
-      else if (bucketed)
-        graft.layout.BucketedDml.deleteWhereCow(spark, dir,
-          GraftShims.column(d.condition), alias = Some(aliasName))
-      else if (partCols.isEmpty)
-        // flat snapshot: file-granular rewrite (touched files only)
-        graft.layout.FileGranularDml.deleteWhere(spark, dir,
-          GraftShims.column(d.condition), alias = Some(aliasName))
-      else {
-        val t = graft.layout.DeletionVectors.readPath(spark, dir)
-          .alias(aliasName)
-        val cond = coalesce(GraftShims.column(d.condition), lit(false))
-        val n = t.filter(cond).count()
-        if (n > 0)
-          graft.catalog.Catalog.overwritePath(spark, t.filter(!cond), dir,
-            partCols, operation = "DELETE")
-        n
-      }
+  private def refreshed(spark: SparkSession, nameParts: Seq[String],
+      dir: String, affected: Long): Long = {
     if (affected > 0) GraftSql.refreshTarget(spark, nameParts, dir)
     affected
   }
 
+  /** `DELETE FROM t [AS a] WHERE cond` → rows where cond is not TRUE. */
+  def delete(spark: SparkSession, d: DeleteFromTable): Long = {
+    val (nameParts, alias, dir) = resolveTarget(spark, d.table, "DELETE FROM")
+    refreshed(spark, nameParts, dir, graft.catalog.Catalog.deleteWherePath(
+      spark, dir, GraftShims.column(d.condition), alias = Some(alias)))
+  }
+
   /** `UPDATE t [AS a] SET x = e, ... [WHERE cond]`. */
   def update(spark: SparkSession, u: UpdateTable): Long = {
-    val (nameParts, aliasName, tableName, dir, partCols, bucketed) =
-      resolveTarget(spark, u.table, "UPDATE")
-    val cond = u.condition
-      .map(e => coalesce(GraftShims.column(e), lit(false)))
-      .getOrElse(lit(true))
+    val (nameParts, alias, dir) = resolveTarget(spark, u.table, "UPDATE")
     def keyName(e: Expression): String = e match {
       case ua: UnresolvedAttribute => ua.nameParts.last
       case a: Attribute => a.name
       case other => other.sql
     }
-    val t = graft.layout.DeletionVectors.readPath(spark, dir)
-      .alias(aliasName)
-    val schema = t.schema
-    u.assignments.foreach { a =>
-      val n = keyName(a.key)
-      require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
-        s"UPDATE assigns unknown column $n on $tableName")
-    }
-    def assignedValue(c: String): Option[Column] =
-      u.assignments.collectFirst {
-        case a if keyName(a.key).equalsIgnoreCase(c) =>
-          GraftShims.column(a.value)
-      }
-    val affected =
-      if (graft.layout.DeletionVectors.isEnabled(spark, dir))
-        // merge-on-read: old images into the sidecar + updated rows
-        // appended, one commit — O(matched data), never O(table);
-        // updateWhere routes bucketed layouts to BucketedDml itself
-        graft.layout.DeletionVectors.updateWhere(spark, dir, cond,
-          u.assignments.map(a =>
-            keyName(a.key) -> GraftShims.column(a.value)),
-          alias = Some(aliasName))
-      else if (bucketed)
-        graft.layout.BucketedDml.updateWhereCow(spark, dir, cond,
-          u.assignments.map(a =>
-            keyName(a.key) -> GraftShims.column(a.value)),
-          alias = Some(aliasName))
-      else if (partCols.isEmpty)
-        graft.layout.FileGranularDml.updateWhere(spark, dir, cond,
-          u.assignments.map(a =>
-            keyName(a.key) -> GraftShims.column(a.value)),
-          alias = Some(aliasName))
-      else {
-        val projected = t.select(schema.fields.toSeq.map { f =>
-          assignedValue(f.name) match {
-            case Some(v) =>
-              when(cond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-        val n = t.filter(cond).count()
-        if (n > 0)
-          graft.catalog.Catalog.overwritePath(spark, projected, dir, partCols,
-            operation = "UPDATE")
-        n
-      }
-    if (affected > 0) GraftSql.refreshTarget(spark, nameParts, dir)
-    affected
+    refreshed(spark, nameParts, dir, graft.catalog.Catalog.updateWherePath(
+      spark, dir, u.condition.map(GraftShims.column).getOrElse(lit(true)),
+      u.assignments.map(a => keyName(a.key) -> GraftShims.column(a.value)),
+      alias = Some(alias)))
   }
 }
 

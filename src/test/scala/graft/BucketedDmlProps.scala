@@ -54,11 +54,11 @@ class BucketedDmlProps extends SparkSuite {
         op match {
           case 0 => // merge-on-read DELETE
             val m = 2 + (i % 3)
-            DeletionVectors.deleteWhere(spark, dir, col("id") % m === 0)
+            BucketedDml.deleteWhereMor(spark, dir, col("id") % m === 0)
             state = state.filterNot { case (k, _) => k % m == 0 }
           case 1 => // merge-on-read UPDATE (attribute only)
             val m = 2 + ((i + 1) % 3)
-            DeletionVectors.updateWhere(spark, dir, col("id") % m === 0,
+            BucketedDml.updateWhereMor(spark, dir, col("id") % m === 0,
               Seq("v" -> (col("v") + 100L)))
             state = state.map { case (k, v) =>
               if (k % m == 0) k -> (v + 100L) else k -> v }
@@ -93,7 +93,7 @@ class BucketedDmlProps extends SparkSuite {
             // keys land in [500000, ...), disjoint from inserts)
             if (!movedOnce && state.keys.exists(_ % 5 == 2)) {
               movedOnce = true
-              DeletionVectors.updateWhere(spark, dir,
+              BucketedDml.updateWhereMor(spark, dir,
                 col("id") % 5 === 2 && col("id") < 500000L,
                 Seq("id" -> (col("id") + 500000L)))
               state = state.map { case (k, v) =>

@@ -130,6 +130,62 @@ class DmlSqlSpec extends SparkSuite {
     spark.sql("DROP TABLE IF EXISTS gold.bdim")
   }
 
+  test("Catalog API and SQL DELETE/UPDATE agree on every layout") {
+    DmlLayouts.all.foreach { layout =>
+      val cat = new graft.catalog.Catalog(spark, tmpDir("graft-dml-parity"))
+      val (api, sql) = (DmlLayouts.tableName(layout) + "_api",
+        DmlLayouts.tableName(layout) + "_sql")
+      Seq(api, sql).foreach { t =>
+        DmlLayouts.write(spark, layout,
+          (1L to 12L).map(k => (k, k % 3, k * 10)).toDF("k", "g", "v"),
+          cat.path("silver", t), if (layout == "hive-partitioned") "g" else "k")
+        graft.catalog.Catalog.addGeneratedColumnPath(spark,
+          cat.path("silver", t), "v2", "v * 2")
+      }
+      cat.register("silver", sql)
+      def version(t: String) = DmlLayouts.version(spark, cat.path("silver", t))
+      def rows(t: String) = rowsOf(DmlLayouts.read(spark,
+        cat.path("silver", t), "k", "g", "v", "v2"), "k")
+      val before = (version(api), version(sql))
+      val viaApi = Seq(
+        cat.deleteWhere("silver", api, col("k") % 4 === 0),
+        cat.updateWhere("silver", api, col("k") % 3 === 1,
+          Seq("v" -> (col("v") + 100))))
+      val viaSql = Seq(
+        s"DELETE FROM silver.$sql WHERE k % 4 = 0",
+        s"UPDATE silver.$sql AS x SET v = x.v + 100 WHERE x.k % 3 = 1")
+        .map(q => graft.sql.GraftSql.sql(spark, q).collect().head.getLong(0))
+      assert(viaApi == Seq(3L, 3L) && viaSql == viaApi, layout)
+      assert(rows(api) == rows(sql), layout)
+      assert(rows(api).filter(_.head == 7L) == Seq(Seq(7L, 1L, 170L, 340L)),
+        layout)
+      assert((version(api) - before._1, version(sql) - before._2) == (2, 2),
+        layout)
+      spark.sql(s"DROP TABLE IF EXISTS silver.$sql")
+    }
+  }
+
+  test("UPDATE of an unknown column raises on every layout and commits nothing") {
+    DmlLayouts.all.foreach { layout =>
+      val cat = new graft.catalog.Catalog(spark, tmpDir("graft-dml-unknown"))
+      val t = DmlLayouts.tableName(layout)
+      val dir = cat.path("silver", t)
+      DmlLayouts.write(spark, layout, Seq((1L, 1L), (2L, 2L)).toDF("k", "v"),
+        dir, "k")
+      val v0 = DmlLayouts.version(spark, dir)
+      Seq(col("k") === 1L, col("k") === -1L).foreach { cond =>
+        val e = intercept[IllegalArgumentException] {
+          cat.updateWhere("silver", t, cond, Seq("nope" -> lit(1)))
+        }
+        assert(e.getMessage.contains("UPDATE assigns unknown column nope"),
+          layout)
+      }
+      assert(DmlLayouts.version(spark, dir) == v0, layout)
+      assert(rowsOf(DmlLayouts.read(spark, dir, "k", "v"), "k") ==
+        Seq(Seq(1L, 1L), Seq(2L, 2L)), layout)
+    }
+  }
+
   test("extension-parser session runs DELETE/UPDATE through spark.sql") {
     val base = spark
     SparkSession.clearActiveSession()

@@ -130,6 +130,27 @@ class GeneratedSpec extends SparkSuite {
       Seq(Seq(1L, 5L, 10L), Seq(2L, 2L, 4L), Seq(3L, 7L, 14L)))
   }
 
+  test("UPDATE recomputes an unassigned generated column on every layout") {
+    DmlLayouts.all.foreach { layout =>
+      val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen-upd"))
+      val t = DmlLayouts.tableName(layout)
+      val dir = cat.path("silver", t)
+      DmlLayouts.write(spark, layout, Seq((1L, 1L), (2L, 2L)).toDF("k", "v"),
+        dir, "k")
+      graft.catalog.Catalog.addGeneratedColumnPath(spark, dir, "v2", "v * 2")
+      def rows() = rowsOf(DmlLayouts.read(spark, dir, "k", "v", "v2"), "k")
+      assert(cat.updateWhere("silver", t, col("k") === 1L,
+        Seq("v" -> lit(10))) == 1, layout)
+      assert(rows() == Seq(Seq(1L, 10L, 20L), Seq(2L, 2L, 4L)), layout)
+      // an explicit assignment is writer-provided: checked, not overridden
+      val e = intercept[IllegalStateException] {
+        cat.updateWhere("silver", t, col("k") === 2L, Seq("v2" -> lit(99)))
+      }
+      assert(e.getMessage.contains("__generated_v2"), layout)
+      assert(rows() == Seq(Seq(1L, 10L, 20L), Seq(2L, 2L, 4L)), layout)
+    }
+  }
+
   test("DESCRIBE DETAIL reports generated columns") {
     val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen3"))
     cat.create(Seq((1L, 2.0)).toDF("id", "price"), "silver", "g3")

@@ -224,4 +224,28 @@ class SchemaDdlSpec extends SparkSuite {
     assert(pruned.count() ==
       cat.read("silver", "sk1").filter(col("points") >= 100.0).count())
   }
+
+  test("the schema sidecar survives bucketed column DDL and flat row-level DML") {
+    import graft.merge.PartitionedMerge
+    val bdir = tmpDir("graft-sidecar-b") + "/t"
+    PartitionedMerge.write(Seq((1L, 1L), (2L, 2L)).toDF("k", "v"), bdir,
+      Seq("k"), 4)
+    Catalog.addGeneratedColumnPath(spark, bdir, "v2", "v * 2")
+    assert(PartitionedMerge.schemaOf(spark, bdir).map(_.fieldNames.toSeq) ==
+      Some(Seq("k", "v", "v2", PartitionedMerge.BucketCol)))
+    val fdir = tmpDir("graft-sidecar-f") + "/t"
+    Catalog.overwritePath(spark, Seq((1L, 1L), (2L, 2L), (3L, 3L))
+      .toDF("k", "v"), fdir)
+    def flatSchema() =
+      PartitionedMerge.schemaOf(spark, fdir).map(_.fieldNames.toSeq)
+    assert(flatSchema() == Some(Seq("k", "v")))
+    graft.layout.DeletionVectors.deleteWhere(spark, fdir, col("k") === 1L)
+    assert(flatSchema() == Some(Seq("k", "v")), "lost by the DV delete")
+    graft.layout.FileGranularDml.updateWhere(spark, fdir, col("k") === 2L,
+      Seq("v" -> lit(20L)))
+    assert(flatSchema() == Some(Seq("k", "v")),
+      "lost by the file-granular update")
+    assert(rowsOf(graft.layout.DeletionVectors.readPath(spark, fdir), "k") ==
+      Seq(Seq(2L, 20L), Seq(3L, 3L)))
+  }
 }

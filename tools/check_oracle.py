@@ -1,17 +1,21 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB-oracle compare (BASELINE.md).
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [q1,q2,...]
 
 For each query dir under verifyOutDir: read Spark's parquet result, run the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir tables,
 sort columns by name, and compare row count, column names, and exact values
 (with a tiny float tolerance fallback reported separately).
+
+The optional third argument is the comma-separated query list `graft.Verify`
+takes: only those queries are compared, and a listed query without a dump
+counts as MISSING SPARK DUMP.
 """
 import sys, json, glob, os
 import duckdb
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in glob.glob(f"{sf_dir}/*.parquet"):
         name = os.path.basename(t).replace(".parquet", "")
@@ -20,6 +24,8 @@ def main(sf_dir: str, out_dir: str) -> int:
     failures = 0
     for qdir in sorted(glob.glob(f"{out_dir}/*/")):
         qname = os.path.basename(qdir.rstrip("/"))
+        if only is not None and qname not in only:
+            continue
         spark_rel = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
         cols = sorted(spark_rel.columns)
         collist = ", ".join(f'"{c}"' for c in cols)
@@ -79,11 +85,13 @@ def main(sf_dir: str, out_dir: str) -> int:
     # check it would silently vanish from the compare (and read as green)
     dumped = {os.path.basename(d.rstrip("/"))
               for d in glob.glob(f"{out_dir}/*/")}
-    for qname in sorted(set(oracle) - dumped):
+    expected = set(oracle) if only is None else only
+    for qname in sorted(expected - dumped):
         print(f"  {qname}: MISSING SPARK DUMP (Verify failed?)")
         failures += 1
     print("FAILURES:", failures)
     return 1 if failures else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
