@@ -119,6 +119,11 @@ class Catalog(spark: SparkSession, warehouse: String,
     val w = g.frame.write.mode(SaveMode.ErrorIfExists)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path(layer, table))
+    // a flat first load records its schema like every later commit, so
+    // reads and the next commit's shape check skip footer inference
+    if (partitionBy.isEmpty)
+      graft.merge.PartitionedMerge.writeSchemaSidecar(spark,
+        path(layer, table), g.frame.schema)
   }
 
   /** Snapshot overwrite with atomic swap (replaces Delta's transactional
@@ -644,21 +649,12 @@ object Catalog {
     * Plain snapshots read the resolved snapshot dir; bucket-partitioned
     * tables reconstruct the version from the per-bucket retire log (bucket
     * column retained, matching the registered live relation's shape). */
-  def versionRead(spark: SparkSession, dir: String, v: Int): DataFrame =
-    versionRead(spark, dir, v, None)
-
-  /** As [[versionRead]], with a caller-known schema forwarded to the
-    * snapshot read — skips the per-call footer-inference job when a
-    * caller resolves many versions of one table (the q250 epoch
-    * audit's shape). Bucketed reconstruction ignores the hint. */
-  def versionRead(spark: SparkSession, dir: String, v: Int,
-      schemaHint: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
+  def versionRead(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (isBucketedLayout(f, dir))
       graft.merge.PartitionedMerge.reconstructVersion(spark, dir, v)
     else graft.layout.DeletionVectors.readPath(spark,
-      resolveVersionPath(spark, dir, v), schemaHint)
+      resolveVersionPath(spark, dir, v))
   }
 
   /** [[Catalog!.compact]] on a raw table directory — the seam SQL

@@ -116,10 +116,12 @@ object CopyInto {
         options.getOrElse("header", "true")).csv(fresh: _*)
       case "json" => reader.json(fresh: _*)
     }
+    val firstLoad = !fs.exists(new Path(tableDir))
     val df =
-      if (!fs.exists(new Path(tableDir))) raw
+      if (firstLoad) raw
       else {
-        val target = spark.read.parquet(tableDir).schema
+        val target = graft.catalog.TableRules.liveSchema(spark, tableDir,
+          sidecar = true)
         val names = raw.schema.fieldNames.map(_.toLowerCase).toSet
         require(target.forall(f => names(f.name.toLowerCase)),
           s"source is missing target columns: " +
@@ -149,6 +151,11 @@ object CopyInto {
         new Path(tableDir, s"copy-$prefix-$i.parquet")), s"install failed: $p")
     }
     fs.delete(staging, true)
+    // a first load records the table's schema as every catalog commit
+    // does; later loads cast to that schema, so it stays true
+    if (firstLoad)
+      graft.merge.PartitionedMerge.writeSchemaSidecar(spark, tableDir,
+        df.schema)
     writeManifest(fs, tableDir,
       manifest ++ fresh.map(f => (prefix, f)))
     // keep data skipping live across appends: if the table carries a stats

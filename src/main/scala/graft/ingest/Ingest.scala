@@ -2,8 +2,10 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.merge.PartitionedMerge
 
 /** Bronze-layer incremental ingest (SURVEY.md §2.1 S1/S2, §2.9 T1-T4):
   * the vanilla-Spark replacement for Databricks Auto Loader
@@ -24,7 +26,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Scale posture: file listing is driver-side but incremental (the
   * checkpoint's file log bounds re-listing); `maxFilesPerTrigger` caps
   * per-batch work so a backlogged source cannot produce an unboundedly
-  * large micro-batch.
+  * large micro-batch. A drain's cost does not grow with the bronze
+  * table's age: the appended row count comes from the run's streaming
+  * progress and the bronze schema from the sidecar stamped before the
+  * drain, so no job counts or footer-merges the whole table.
   */
 object Ingest {
 
@@ -169,7 +174,21 @@ object Ingest {
   }
 
   /** One checkpointed drain of available files into the bronze layer
-    * (Bronze_Layer.py:20-37). Returns rows appended this run. */
+    * (Bronze_Layer.py:20-37). Returns rows appended this run.
+    *
+    * Order: the evolved schema is pinned, then the stream's output schema
+    * (data columns, `_rescued_data`, provenance) is stamped as the bronze
+    * dir's schema sidecar, and only then does the drain start. The bronze
+    * schema only widens, so stamping first keeps the sidecar a superset of
+    * every committed file and [[readBronze]] never needs a footer merge.
+    *
+    * The count comes from the run's own streaming progress: the sum of
+    * `numInputRows` over the progress events of this run, collected by a
+    * listener keyed to the run's id. The run's terminated event follows
+    * its last progress event on the listener bus, so the count is read
+    * only after that event arrives (bounded by `TerminationWaitMs`; a
+    * missing event raises rather than return a short count). No job
+    * reads the bronze table. */
   def runOnce(spark: SparkSession, spec: IngestSpec,
       maxFilesPerTrigger: Int = 1000): Long = {
     val schema = evolvedSchema(spark, spec)
@@ -200,28 +219,82 @@ object Ingest {
       case Some(c) => stream.withColumn(c, col("_metadata.file_path"))
       case None => stream
     }
-    val before = countIfExists(spark, spec.dstDir)
-    val q = withProv.writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("path", spec.dstDir)
-      .option("checkpointLocation", spec.checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    countIfExists(spark, spec.dstDir) - before
+    stampBronzeSchema(spark, spec.dstDir, withProv.schema)
+    val progress = new RunProgress
+    spark.streams.addListener(progress)
+    try {
+      val q = withProv.writeStream
+        .format("parquet")
+        .outputMode("append")
+        .option("path", spec.dstDir)
+        .option("checkpointLocation", spec.checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      progress.rowsOf(q.runId, TerminationWaitMs)
+    } finally spark.streams.removeListener(progress)
   }
+
+  /** How long [[runOnce]] waits, after its query terminated, for the
+    * run's terminated event to reach its listener. */
+  private val TerminationWaitMs = 60000L
+
+  /** Rows read per streaming run, from the progress events on the
+    * listener bus. A run's total is final once its terminated event has
+    * arrived: the stream thread posts that event after its last progress
+    * event, and the bus delivers one query's events in order. */
+  private final class RunProgress extends StreamingQueryListener {
+    private val rows = new java.util.concurrent.ConcurrentHashMap[
+      java.util.UUID, java.util.concurrent.atomic.LongAdder]()
+    private val ended = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.util.UUID]()
+
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent)
+        : Unit = ()
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      rows.computeIfAbsent(e.progress.runId,
+        _ => new java.util.concurrent.atomic.LongAdder)
+        .add(e.progress.numInputRows)
+    }
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+      ended.add(e.runId); ()
+    }
+
+    def rowsOf(runId: java.util.UUID, waitMs: Long): Long = {
+      val deadline = System.nanoTime() + waitMs * 1000000L
+      while (!ended.contains(runId)) {
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException(s"streaming run $runId ended " +
+            s"but its terminated event did not arrive within $waitMs ms; " +
+            "its appended row count is unknown")
+        Thread.sleep(5)
+      }
+      Option(rows.get(runId)).fold(0L)(_.sum)
+    }
+  }
+
+  /** Stamp `schema` as the bronze dir's schema sidecar unless the sidecar
+    * already says exactly that. */
+  private def stampBronzeSchema(spark: SparkSession, dstDir: String,
+      schema: StructType): Unit =
+    if (!PartitionedMerge.schemaOf(spark, dstDir).contains(schema))
+      PartitionedMerge.writeSchemaSidecar(spark, dstDir, schema)
 
   /** Job fan-out over dataset specs (parameters.py:2-19's task-value loop,
     * as a plain Scala sequence). */
   def runAll(spark: SparkSession, specs: Seq[IngestSpec]): Map[String, Long] =
     specs.map(s => s.name -> runOnce(spark, s)).toMap
 
-  private def countIfExists(spark: SparkSession, dir: String): Long =
-    try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
-
-  /** mergeSchema: files appended before a schema evolution lack the newer
-    * columns; merging unions the file schemas and backfills nulls. */
+  /** The bronze table under the schema sidecar [[runOnce]] stamps: files
+    * appended before a schema evolution lack the newer columns and read
+    * them as null, with no footer read. A bronze dir without a sidecar
+    * (written by an older engine) falls back to `mergeSchema`, which
+    * unions the file schemas with one footer-merge job. */
   def readBronze(spark: SparkSession, dstDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dstDir)
+    PartitionedMerge.schemaOf(spark, dstDir) match {
+      case Some(s) => spark.read.schema(s).parquet(dstDir)
+      case None => spark.read.option("mergeSchema", "true").parquet(dstDir)
+    }
 }

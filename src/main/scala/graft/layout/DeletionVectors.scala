@@ -101,20 +101,17 @@ object DeletionVectors {
     * exactly as before. Bucketed tables keep their `gbucket` partition
     * column (the raw read's shape) and subtract per-bucket positions
     * keyed by (bucket, file, row) — see [[bucketDvFrame]] for why the
-    * bucket is part of the key. */
-  def readPath(spark: SparkSession, dir: String): DataFrame =
-    readPath(spark, dir, None)
-
-  /** As [[readPath]], with an optional caller-known schema. Passing
-    * `schemaHint` skips the per-call parquet footer-inference job —
-    * one driver-latency job per `spark.read.parquet`, which dominates
-    * when a caller resolves MANY snapshots of the same table (q250's
-    * epoch audit reads keepEpochs versions whose schema is identical;
-    * EpochAuditJobsSpec pins the job count). Bucketed layouts read
-    * through their own reconstruction and ignore the hint. */
-  def readPath(spark: SparkSession, dir: String,
-      schemaHint: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
+    * bucket is part of the key.
+    *
+    * A flat snapshot reads under its schema sidecar
+    * (`PartitionedMerge.schemaOf`, one small-file read), so planning the
+    * read runs no footer-inference job; every flat commit path stamps or
+    * carries that sidecar. Hive trees and snapshots written without one
+    * (older engines, raw writers) infer from footers. The sidecar is
+    * read on every call, not kept in [[ReadProbeCache]]: that cache's
+    * (path, version, epoch) key repeats when a table is dropped and
+    * recreated at the same path with another schema. */
+  def readPath(spark: SparkSession, dir: String): DataFrame = {
     val pr = ReadProbeCache.probe(spark, dir)
     if (pr.isBucketed)
       // schema-safe for fully-emptied bucket trees (readRaw's sidecar
@@ -122,8 +119,8 @@ object DeletionVectors {
       graft.merge.PartitionedMerge.applyBucketDvs(spark, dir,
         graft.merge.PartitionedMerge.readRaw(spark, dir))
     else {
-      val data = schemaHint.fold(spark.read)(spark.read.schema(_))
-        .parquet(dir)
+      val data = graft.merge.PartitionedMerge.schemaOf(spark, dir)
+        .fold(spark.read)(spark.read.schema(_)).parquet(dir)
       if (pr.dvDirs.isEmpty) data
       else subtractPositions(data,
         spark.read.parquet(pr.dvDirs.map(_.toString): _*))

@@ -221,7 +221,7 @@ object PartitionedMerge {
   }
 
   /** The sidecar-recorded schema of the table at `path`, if one was ever
-    * written — ONE small-file read, no listing, no footer job. The
+    * written — ONE small-file open, no listing, no footer job. The
     * driver-side answer to "what columns does this table have" for every
     * caller that doesn't need the data (schema-on-write checks, fk-type
     * resolution); `None` falls back to ordinary inference. */
@@ -229,16 +229,15 @@ object PartitionedMerge {
       : Option[org.apache.spark.sql.types.StructType] = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sc = schemaSidecar(path)
-    if (!fs.exists(sc)) None
-    else {
-      val in = fs.open(sc)
-      val json =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+    // one open, no existence probe first: every flat read asks this
+    val in =
+      try fs.open(schemaSidecar(path))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val json =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    Some(org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
   /** The raw bucketed frame (bucket column included), schema-safe for

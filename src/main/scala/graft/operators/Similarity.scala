@@ -1241,31 +1241,21 @@ object Similarity {
     import graft.pipeline.PipelineEpoch
     val pipe = "decontam_docs"
     val top = PipelineEpoch.currentEpoch(spark, cat, pipe)
-    // one footer-inference job per TABLE (the live read), reused as the
-    // schema hint for every epoch-resolved snapshot — epoch versions of
-    // one table share a schema, so keepEpochs×tables inference jobs
-    // collapse to two
-    def liveSchema(t: String) = {
-      val Array(l, tb) = t.split('.')
-      spark.read.parquet(cat.path(l, tb)).schema
-    }
-    lazy val docsSchema = Some(liveSchema("bronze.docs"))
-    lazy val quarSchema = Some(liveSchema("bronze.docs_quarantine"))
     // a table version of 0 in the manifest = the table did not exist at
-    // that generation (no quarantined rows yet) — contribute no rows
+    // that generation (no quarantined rows yet) — contribute no rows.
+    // Each slice reads under its snapshot's schema sidecar, so resolving
+    // keepEpochs×tables snapshots runs no inference job.
     val slices = (1 to top).flatMap { ep =>
       val vs = PipelineEpoch.tableVersions(spark, cat, pipe, ep)
       val clean =
         if (vs.getOrElse("bronze.docs", 0) <= 0) None
-        else Some(PipelineEpoch.readAt(spark, cat, pipe, "bronze.docs", ep,
-          docsSchema)
+        else Some(PipelineEpoch.readAt(spark, cat, pipe, "bronze.docs", ep)
           .select(lit(ep).as("epoch"), lit(true).as("is_clean"),
             lit(null).cast("long").as("bench_id")))
       val quar =
         if (vs.getOrElse("bronze.docs_quarantine", 0) <= 0) None
         else Some(PipelineEpoch
-          .readAt(spark, cat, pipe, "bronze.docs_quarantine", ep,
-            quarSchema)
+          .readAt(spark, cat, pipe, "bronze.docs_quarantine", ep)
           .select(lit(ep).as("epoch"), lit(false).as("is_clean"),
             col("matched_bench_id").cast("long").as("bench_id")))
       clean.toSeq ++ quar.toSeq

@@ -241,9 +241,7 @@ object PipelineEpoch {
     * consistent generation across many reads even while new epochs
     * publish underneath it. */
   def readAt(spark: SparkSession, cat: Catalog, pipeline: String,
-      name: String, epoch: Int,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      name: String, epoch: Int): DataFrame = {
     require(epoch > 0, s"pipeline '$pipeline' has no committed epoch")
     val versions = tableVersions(spark, cat, pipeline, epoch)
     val v = versions.getOrElse(name, throw new IllegalArgumentException(
@@ -251,7 +249,7 @@ object PipelineEpoch {
         s"(epoch $epoch records: ${versions.keys.toSeq.sorted.mkString(", ")})"))
     require(v > 0, s"table '$name' did not exist at epoch $epoch")
     val Array(layer, tbl) = name.split('.')
-    Catalog.versionRead(spark, cat.path(layer, tbl), v, schemaHint)
+    Catalog.versionRead(spark, cat.path(layer, tbl), v)
   }
 
   // ---- path-addressed seam (the SQL surface's entry, mirroring

@@ -124,12 +124,11 @@ object MergeIntoRunner {
     // sessions without the transparent DvApplyRule — rewriting from the
     // raw files would resurrect deleted rows (the merge write-back stages
     // fresh files, so the sidecar retires with the old version)
-    val targetDF = {
-      val d = new org.apache.hadoop.fs.Path(locationUri).toString
-      if (graft.layout.DeletionVectors.hasDv(spark, d))
-        graft.layout.DeletionVectors.readPath(spark, d)
+    val dir = new org.apache.hadoop.fs.Path(locationUri).toString
+    val targetDF =
+      if (graft.layout.DeletionVectors.hasDv(spark, dir))
+        graft.layout.DeletionVectors.readPath(spark, dir)
       else spark.table(tableName)
-    }
     // WITH SCHEMA EVOLUTION (Delta's merge extension): widen the target with
     // source columns it lacks, appended as nullable — the same add-only rule
     // ingest's evolvedSchema applies (types come from the source; existing
@@ -205,6 +204,32 @@ object MergeIntoRunner {
           GraftShims.column(a.value)
       }
 
+    // A generated column the firing UPDATE or INSERT leaves unassigned is
+    // recomputed from the row's new values (Delta's rule, and
+    // TableRules.updateImage's): the projection flags those rows, and a
+    // second projection evaluates the definition over the merged columns.
+    // Carrying the target's old value instead would hand the write gate a
+    // stale "provided" value that fails its consistency check.
+    val gens = graft.catalog.TableRules.generated(spark, dir).filter {
+      case (n, _) => targetSchema.fieldNames.exists(_.equalsIgnoreCase(n)) }
+    def genFlag(n: String) = s"__graft_regen_$n"
+    val regen = gens.map { case (n, _) =>
+      def unassigned(assigns: Seq[Assignment]) = lit(assigned(assigns, n).isEmpty)
+      when(tm && sm, chain(m.matchedActions, {
+        case u: UpdateAction => unassigned(u.assignments)
+        case _ => lit(false)
+      }, lit(false)))
+        .when(!tm && sm, chain(m.notMatchedActions, {
+          case i: InsertAction => unassigned(i.assignments)
+          case _ => lit(false)
+        }, lit(false)))
+        .otherwise(chain(m.notMatchedBySourceActions, {
+          case u: UpdateAction => unassigned(u.assignments)
+          case _ => lit(false)
+        }, lit(false)))
+        .as(genFlag(n))
+    }
+
     val outCols = targetSchema.fields.map { f =>
       val c = f.name
       // an evolved column has no target-side value: pre-existing rows read NULL
@@ -262,12 +287,16 @@ object MergeIntoRunner {
         .cast("boolean"))
       .otherwise(keepRaw)
 
-    val merged = joined
-      .select(outCols.toSeq :+ keep.as(KEEP): _*)
+    val kept = joined
+      .select(outCols.toSeq ++ regen :+ keep.as(KEEP): _*)
       .filter(col(KEEP)).drop(KEEP)
+    val merged = gens.foldLeft(kept) { case (df, (n, e)) =>
+      val f = targetSchema.fields.find(_.name.equalsIgnoreCase(n)).get
+      df.withColumn(f.name, when(col(genFlag(n)), expr(e).cast(f.dataType))
+        .otherwise(col(f.name))).drop(genFlag(n))
+    }
 
-    (merged, new org.apache.hadoop.fs.Path(locationUri).toString,
-      partCols, tableName, evolvedCols)
+    (merged, dir, partCols, tableName, evolvedCols)
   }
 
   private def unsupported(a: MergeAction): Nothing =

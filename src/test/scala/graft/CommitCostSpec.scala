@@ -141,4 +141,35 @@ class CommitCostSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
       "runToMemory must restore the session's shuffle partitions")
   }
+
+  test("a flat table with a schema sidecar reads with 0 planning jobs") {
+    val cat = new Catalog(spark, tmpDir("graft-commit-read") + "/wh")
+    cat.create((1L to 20L).map(i => (i, s"r$i")).toDF("id", "tag"),
+      "silver", "t")
+    cat.append(Seq((21L, "r21")).toDF("id", "tag"), "silver", "t")
+    var schema: org.apache.spark.sql.types.StructType = null
+    val n = countJobs { schema = cat.read("silver", "t").schema; () }
+    assert(schema.fieldNames.toSeq == Seq("id", "tag"))
+    assert(n == 0, s"planning a sidecar-backed read ran $n jobs — a " +
+      "footer-inference job crept back into Catalog.read")
+  }
+
+  test("one Ingest.runOnce of a one-file delta stays within its job budget") {
+    import graft.ingest.Ingest
+    val root = tmpDir("graft-commit-ingest")
+    val spec = Ingest.IngestSpec("events", s"$root/landing",
+      s"$root/bronze/events", s"$root/_cp/events", s"$root/_cp/events.ddl",
+      sourceFileCol = Some("_src_file"))
+    def land(ids: Seq[Long]): Unit =
+      ids.map(i => (i, s"e$i")).toDF("id", "etype").coalesce(1)
+        .write.mode("append").parquet(spec.srcDir)
+    land(1L to 5L)
+    assert(Ingest.runOnce(spark, spec) == 5L) // first load and warm-up
+    land(6L to 8L)
+    val n = countJobs { assert(Ingest.runOnce(spark, spec) == 3L); () }
+    // measured: 2 jobs (the new file's schema inference for evolution
+    // and the micro-batch). Counting the bronze table before and after
+    // the drain added two more jobs that grow with the table's age.
+    assert(n <= 4, s"one one-file ingest delta cost $n jobs (budget 4)")
+  }
 }

@@ -151,6 +151,29 @@ class GeneratedSpec extends SparkSuite {
     }
   }
 
+  test("MERGE recomputes an unassigned generated column") {
+    val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen-merge"))
+    cat.create(Seq((1L, 1L), (2L, 2L)).toDF("k", "v"), "silver", "gm")
+    cat.register("silver", "gm")
+    cat.addGeneratedColumn("silver", "gm", "v2", "v * 2")
+    def merge(set: String, src: Seq[(Long, Long)]): Unit = {
+      src.toDF("k", "v").createOrReplaceTempView("gm_src")
+      graft.sql.GraftSql.sql(spark, "MERGE INTO silver.gm t USING gm_src s " +
+        s"ON t.k = s.k WHEN MATCHED THEN UPDATE SET $set " +
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)")
+    }
+    try {
+      merge("v = s.v", Seq((1L, 10L), (3L, 3L)))
+      assert(rowsOf(cat.read("silver", "gm"), "k") ==
+        Seq(Seq(1L, 10L, 20L), Seq(2L, 2L, 4L), Seq(3L, 3L, 6L)))
+      // an explicit assignment is writer-provided: checked, not overridden
+      val e = intercept[IllegalStateException](merge("v2 = 99", Seq((2L, 2L))))
+      assert(e.getMessage.contains("__generated_v2"))
+      assert(rowsOf(cat.read("silver", "gm"), "k") ==
+        Seq(Seq(1L, 10L, 20L), Seq(2L, 2L, 4L), Seq(3L, 3L, 6L)))
+    } finally spark.sql("DROP TABLE IF EXISTS silver.gm")
+  }
+
   test("DESCRIBE DETAIL reports generated columns") {
     val cat = new graft.catalog.Catalog(spark, tmpDir("graft-gen3"))
     cat.create(Seq((1L, 2.0)).toDF("id", "price"), "silver", "g3")

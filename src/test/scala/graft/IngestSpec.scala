@@ -200,4 +200,68 @@ class IngestSpecSuite extends SparkSuite {
     }
     assert(Ingest.runAll(spark, specs) == Map("a" -> 1L, "b" -> 1L))
   }
+
+  /** The bronze table's row count the way runOnce used to take it: a full
+    * count of the table (0 before it exists). */
+  private def bronzeRows(spec: IngestSpec): Long =
+    try spark.read.option("mergeSchema", "true").parquet(spec.dstDir).count()
+    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+
+  /** runOnce's returned count, and the bronze table's growth around it. */
+  private def drained(spec: IngestSpec, maxFilesPerTrigger: Int = 1000)
+      : (Long, Long) = {
+    val before = bronzeRows(spec)
+    val n = Ingest.runOnce(spark, spec, maxFilesPerTrigger)
+    (n, bronzeRows(spec) - before)
+  }
+
+  test("the returned count equals the bronze table's growth: empty, " +
+      "multi-batch, evolving and rescuing drains") {
+    val root = tmpDir("graft-ingest-count")
+    // multi-batch: three files, one per micro-batch
+    val spec = IngestSpec("events", s"$root/landing", s"$root/bronze/events",
+      s"$root/_cp/events", s"$root/_schemas/events.ddl")
+    Seq(2, 3, 4).zipWithIndex.foreach { case (k, f) =>
+      (1 to k).map(i => (f * 10L + i, "click")).toDF("id", "etype")
+        .coalesce(1).write.mode("append").parquet(spec.srcDir)
+    }
+    assert(drained(spec, maxFilesPerTrigger = 1) == ((9L, 9L)))
+    val sinkBatches = new java.io.File(s"${spec.dstDir}/_spark_metadata")
+      .list().count(_.forall(_.isDigit))
+    assert(sinkBatches == 3, s"expected 3 micro-batches, sink log has $sinkBatches")
+    // empty: nothing new landed
+    assert(drained(spec) == ((0L, 0L)))
+    // across a schema evolution: the new column widens the bronze schema
+    Seq((40L, "view", "web")).toDF("id", "etype", "channel").coalesce(1)
+      .write.mode("append").parquet(spec.srcDir)
+    assert(drained(spec) == ((1L, 1L)))
+    // the sidecar read equals a footer-merged read: same columns by name
+    // and type, same rows
+    val bronze = Ingest.readBronze(spark, spec.dstDir)
+    val merged = spark.read.option("mergeSchema", "true").parquet(spec.dstDir)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSet
+    assert(shape(bronze) == shape(merged))
+    assert(bronze.columns.contains("channel"))
+    val cols = merged.columns.sorted.map(col)
+    assert(rowsOf(bronze.select(cols: _*), "id") ==
+      rowsOf(merged.select(cols: _*), "id"))
+    assert(rowsOf(bronze, "id").size == 10)
+
+    // a csv drain with a rescued row counts the rescued row too
+    val csvRoot = s"$root/csv"
+    new java.io.File(s"$csvRoot/landing").mkdirs()
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$csvRoot/landing/part1.csv"),
+      "id,amount\n1,10.5\n2,20.0\nnot-a-number,oops\n")
+    val csv = IngestSpec("pays", s"$csvRoot/landing", s"$csvRoot/bronze/pays",
+      s"$csvRoot/_cp/pays", s"$csvRoot/_schemas/pays.ddl",
+      format = "csv", options = Map("header" -> "true"))
+    new java.io.File(s"$csvRoot/_schemas").mkdirs()
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(csv.schemaFile), "id BIGINT,amount DOUBLE")
+    assert(drained(csv) == ((3L, 3L)))
+    assert(Ingest.readBronze(spark, csv.dstDir)
+      .filter(col(Ingest.RescueCol).isNotNull).count() == 1L)
+  }
 }
