@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.layout.SwapProtocol
+
 /** Lakehouse namespace: `layer.table` → path, with snapshot-semantics
   * overwrite (SURVEY.md §1.1).
   *
@@ -13,19 +15,23 @@ import org.apache.spark.sql.functions.col
   * names. Here the same shape is `<warehouse>/{bronze,silver,gold}/<table>`
   * over any Hadoop filesystem.
   *
-  * Snapshot swap (SURVEY §7.3): an overwrite writes to `<table>.tmp`, then
-  * retires current into the version log `<table>.history/v{N}` and renames
-  * tmp → current. On HDFS/local FS rename is atomic per directory move, so
-  * a reader resolving the path either sees the old or the new snapshot,
-  * never a half-written one. (On S3-like stores a manifest-pointer commit
-  * would replace the rename pair — same protocol, different primitive.)
+  * Snapshot swap (SURVEY §7.3): every write — the first load included —
+  * stages a complete snapshot under a unique `<table>.tmp-<id>` and
+  * commits it through [[graft.layout.SwapProtocol.commit]]: claim the
+  * version transition, retire the live dir into `<table>.history/v{N}`,
+  * rename the stage live, advance `<table>.history/_current`. On HDFS/
+  * local FS rename is atomic per directory move, so a reader resolving
+  * the path sees the old or the new snapshot, never a half-written one.
+  * (On S3-like stores a manifest-pointer commit would replace the rename
+  * pair — same protocol, different primitive.)
   *
   * Time travel (Delta `VERSION AS OF`, Gold_Customers.py:105 context): the
-  * version log keeps the last `keepVersions` retired snapshots; the live
-  * snapshot's version number is recorded in `<table>.history/_current`
-  * AFTER the swap completes, so a crash mid-swap leaves the pointer on the
-  * old version — whose data is intact in the log — and never names a
-  * half-committed state.
+  * version log keeps the last `keepVersions` retired snapshots; the pointer
+  * advances only AFTER the swap completes, so a crash mid-swap leaves it on
+  * the old version — whose data is intact in the log. Before the next
+  * write the protocol settles it: a snapshot already staged in (readers
+  * may have seen it) is rolled forward to the next version; a retire with
+  * nothing staged in is rolled back.
   */
 class Catalog(spark: SparkSession, warehouse: String,
     val keepVersions: Int = 10) {
@@ -37,14 +43,14 @@ class Catalog(spark: SparkSession, warehouse: String,
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(layer: String, table: String): Boolean =
-    fs.exists(new Path(path(layer, table)))
+    Catalog.existsPath(spark, path(layer, table))
 
   def read(layer: String, table: String): DataFrame =
     graft.layout.DeletionVectors.readPath(spark, path(layer, table))
 
   /** The live snapshot's version number (1-based; 0 = table absent). */
   def currentVersion(layer: String, table: String): Int =
-    Catalog.readPointer(fs, path(layer, table))
+    SwapProtocol.readPointer(fs, path(layer, table))
 
   /** Version-addressed read (Delta `VERSION AS OF`): the live version reads
     * the current dir, older versions read the retained log entry. */
@@ -66,7 +72,7 @@ class Catalog(spark: SparkSession, warehouse: String,
     val cur = currentVersion(layer, table)
     if (cur == 0) Nil
     else {
-      val hist = Catalog.historyDir(path(layer, table))
+      val hist = SwapProtocol.historyDir(path(layer, table))
       val logged =
         if (!fs.exists(hist)) Nil
         else fs.listStatus(hist).map(_.getPath.getName)
@@ -95,7 +101,7 @@ class Catalog(spark: SparkSession, warehouse: String,
     * an older engine stay readable. */
   def readPrevious(layer: String, table: String): DataFrame = {
     val cur = currentVersion(layer, table)
-    if (cur > 1 && fs.exists(Catalog.versionDir(path(layer, table), cur - 1)))
+    if (cur > 1 && fs.exists(SwapProtocol.versionDir(path(layer, table), cur - 1)))
       readVersion(layer, table, cur - 1)
     else graft.layout.DeletionVectors.readPath(spark,
       path(layer, table) + ".prev")
@@ -103,28 +109,18 @@ class Catalog(spark: SparkSession, warehouse: String,
 
   def hasPrevious(layer: String, table: String): Boolean = {
     val cur = currentVersion(layer, table)
-    (cur > 1 && fs.exists(Catalog.versionDir(path(layer, table), cur - 1))) ||
+    (cur > 1 && fs.exists(SwapProtocol.versionDir(path(layer, table), cur - 1))) ||
       fs.exists(new Path(path(layer, table) + ".prev")) // legacy layout
   }
 
   /** First-load create (the reference's `saveAsTable` path,
-    * Gold_Customers.py:65-68). */
+    * Gold_Customers.py:65-68): staged and committed as version 1 like
+    * every other write, so rules recorded before the first load apply and
+    * a crash mid-load leaves no half-table. Refuses an existing table. */
   def create(df: DataFrame, layer: String, table: String,
-      partitionBy: Seq[String] = Nil): Unit = {
-    // rules recorded before first load (or surviving a DROP + recreate)
-    // apply to the initial data too; there is no stage to validate, so
-    // the frame is checked before the write
-    val g = TableRules.prepare(spark, path(layer, table), df)
-    TableRules.enforce(g.frame, g.checks, path(layer, table))
-    val w = g.frame.write.mode(SaveMode.ErrorIfExists)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path(layer, table))
-    // a flat first load records its schema like every later commit, so
-    // reads and the next commit's shape check skip footer inference
-    if (partitionBy.isEmpty)
-      graft.merge.PartitionedMerge.writeSchemaSidecar(spark,
-        path(layer, table), g.frame.schema)
-  }
+      partitionBy: Seq[String] = Nil): Unit =
+    Catalog.overwritePath(spark, df, path(layer, table), partitionBy,
+      keepVersions, expectedVersion = Some(0))
 
   /** Snapshot overwrite with atomic swap (replaces Delta's transactional
     * overwrite, Silver_Customers.py:41). Schema-on-write is STRICT like
@@ -438,24 +434,21 @@ class Catalog(spark: SparkSession, warehouse: String,
 object Catalog {
   import org.apache.hadoop.fs.FileSystem
 
-  // The snapshot-swap / crash-recovery PRIMITIVES (version-log layout,
-  // pointer commit, recovery epoch) live in [[graft.layout.SwapProtocol]]
-  // as their own reviewable unit (VERDICT r9 #8); these forwarders keep
-  // the historical Catalog.* call sites stable.
-  import graft.layout.SwapProtocol
-  private[graft] def historyDir(dir: String) = SwapProtocol.historyDir(dir)
-  private[graft] def versionDir(dir: String, v: Int) =
-    SwapProtocol.versionDir(dir, v)
-  private[catalog] def readSmallFile(f: FileSystem, p: Path): String =
-    SwapProtocol.readSmallFile(f, p)
-  private[graft] def readPointer(f: FileSystem, dir: String): Int =
-    SwapProtocol.readPointer(f, dir)
-  private[graft] def writePointer(f: FileSystem, dir: String, v: Int): Unit =
-    SwapProtocol.writePointer(f, dir, v)
-  private[graft] def readRecoveryEpoch(f: FileSystem, dir: String): String =
-    SwapProtocol.readRecoveryEpoch(f, dir)
-  private[graft] def bumpRecoveryEpoch(f: FileSystem, dir: String): Unit =
-    SwapProtocol.bumpRecoveryEpoch(f, dir)
+  // The commit protocol (version-log layout, pointer, recovery epoch)
+  // lives in [[graft.layout.SwapProtocol]].
+  import SwapProtocol.{historyDir, versionDir, readSmallFile, readPointer}
+
+  /** Whether a table lives at `dir` — the question every first-load
+    * decision asks. The live dir answers it; a missing one is still a
+    * table when its pointer is past 0: a commit's retire window, or a
+    * crashed commit's, which is rolled back here first. Trusting the bare
+    * dir would send a crashed table down the create path, which refuses
+    * it (expected version 0) on every run. */
+  def existsPath(spark: SparkSession, dir: String): Boolean = {
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    f.exists(new Path(dir)) ||
+      SwapProtocol.recoverAbortedSwap(spark, f, dir) > 0
+  }
 
   /** The latest commit-tag value for `key` across the live snapshot and
     * the logged versions (newest first). A commit tag is a tiny
@@ -467,9 +460,7 @@ object Catalog {
     * already committed?" — closing the swap-to-marker duplicate window.
     * Tags are per-version (appends do not link `_`-prefixed files
     * forward), hence the newest-first history probe. */
-  /** Tag key every commit stamps with the operation that produced the
-    * version (Delta's `operation` column in `DESCRIBE HISTORY`). */
-  private[catalog] val OperationTagKey = "operation"
+  private val OperationTagKey = SwapProtocol.OperationTag
 
   def lastCommitTag(spark: SparkSession, dir: String,
       key: String): Option[String] = {
@@ -495,7 +486,7 @@ object Catalog {
     * order) — the material the SQL `SHOW TBLPROPERTIES` surface lists:
     * operator-stamped bounds (`ivf.maxList`), materialized-view refresh
     * watermarks, streaming batch markers, and the `operation` stamp.
-    * Tags carry forward across commits (the [[commitSwap]] rule), so
+    * Tags carry forward across commits (the [[SwapProtocol.commit]] rule), so
     * the live dir alone answers — one bounded `listStatus`, no history
     * walk. */
   def listCommitTags(spark: SparkSession, dir: String)
@@ -727,8 +718,9 @@ object Catalog {
       if (f.exists(skipDir))
         org.apache.hadoop.fs.FileUtil.copy(f, skipDir,
           f, new Path(tmp, "_skipping"), false, false, conf)
-      commitSwap(spark, f, dir, tmp, keepVersions, Some(stagedAgainst),
-        None, "OPTIMIZE WHERE")
+      SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
+        keepVersions, Some(stagedAgainst),
+        Seq(OperationTagKey -> "OPTIMIZE WHERE"))
     }
   }
 
@@ -815,8 +807,9 @@ object Catalog {
     if (f.exists(skipDir))
       org.apache.hadoop.fs.FileUtil.copy(f, skipDir,
         f, new Path(tmp, "_skipping"), false, false, conf)
-    commitSwap(spark, f, dir, tmp, keepVersions, Some(stagedAgainst),
-      commitTag, "REPLACE WHERE")
+    SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
+      keepVersions, Some(stagedAgainst),
+      commitTag.toSeq :+ (OperationTagKey -> "REPLACE WHERE"))
     }
   }
 
@@ -874,8 +867,7 @@ object Catalog {
         else df.repartition(n)
       overwritePath(spark, packed, dir, partitionBy, keepVersions,
         operation =
-          if (zorderBy.nonEmpty) "OPTIMIZE ZORDER BY" else "OPTIMIZE",
-        carryTags = true) // content-identical: stream markers survive
+          if (zorderBy.nonEmpty) "OPTIMIZE ZORDER BY" else "OPTIMIZE")
       statsRecipe.foreach { case (cols, bloomCols, bits, hashes) =>
         graft.layout.DataSkipping.analyze(spark, dir, cols, bloomCols,
           bits, hashes)
@@ -1065,14 +1057,16 @@ object Catalog {
     // staging leftovers: every data-staging sibling carries a `.tmp`
     // name prefix — fixed legacy names (.tmp, .tmp-merge, .tmp-insert,
     // .tmp-replace) and the unique per-attempt `.tmp-<uuid>` dirs a
-    // crashed or race-losing writer abandons
+    // crashed or race-losing writer abandons — and a crashed small-file
+    // write leaves `<dir>.<kind>.tmp[-<id>]` beside its manifest
     val parent = new Path(dir).getParent
     val base = new Path(dir).getName
     if (parent != null && f.exists(parent))
-      f.listStatus(parent).map(_.getPath)
-        .filter(_.getName.startsWith(base + ".tmp")).foreach(rm)
-    TableRules.ManifestKinds.foreach(k => rm(new Path(s"$dir.$k.tmp")))
-    rm(new Path(dir + ".buckets.tmp"))
+      f.listStatus(parent).map(_.getPath).filter { p =>
+        val n = p.getName
+        n.startsWith(base + ".tmp") ||
+          (n.startsWith(base + ".") && n.contains(".tmp"))
+      }.foreach(rm)
     val tableDir = new Path(dir)
     if (f.exists(tableDir))
       f.listStatus(tableDir).map(_.getPath)
@@ -1097,9 +1091,13 @@ object Catalog {
               e < pinFloor && !pinned.contains(e)
             }
         }.foreach(rm)
-      // pointer-write tmp files abandoned by a crashed commit
-      f.listStatus(hist).map(_.getPath)
-        .filter(_.getName.startsWith("_current.tmp")).foreach(rm)
+      // small-file tmps and staged claims abandoned by a crashed commit,
+      // and claims of completed transitions (a crash before the release)
+      f.listStatus(hist).map(_.getPath).filter { p =>
+        val n = p.getName
+        n.contains(".tmp") || n.startsWith(".claim-") ||
+          n.stripPrefix("_swap_claim_v").toIntOption.exists(_ < cur)
+      }.foreach(rm)
       // a version log supersedes the legacy single-depth `.prev` dir —
       // reclaim it (kept while no log exists: it is still the only
       // previous-snapshot copy for old-layout warehouses)
@@ -1108,16 +1106,6 @@ object Catalog {
     deleted.toSeq
   }
 
-  /** The swap protocol on a raw table directory (shared by the layer.table
-    * API above and SQL surfaces that resolve a table to its location, e.g.
-    * `graft.sql.MergeIntoSql`): write to `<dir>.tmp`, retire current into
-    * the version log `<dir>.history/v{N}`, rename tmp → current, THEN
-    * advance the `_current` pointer — so a crash at any step leaves the
-    * pointer naming a version whose data is intact (the old one). Aborts on
-    * a failed retire rename — Hadoop rename INTO a still-existing directory
-    * nests the new snapshot inside the old one, silently corrupting the
-    * table — and never overwrites an existing log entry. Log entries older
-    * than `keepVersions` behind the new head are pruned. */
   /** [[Catalog!.clone]] on raw directories — the seam the SQL statement
     * shares. Refuses to overwrite an existing destination. */
   def clonePath(spark: SparkSession, srcDir: String, dstDir: String,
@@ -1542,8 +1530,7 @@ object Catalog {
       allowSchemaChange: Boolean = false,
       expectedVersion: Option[Int] = None,
       commitTag: Option[(String, String)] = None,
-      operation: String = "WRITE",
-      carryTags: Boolean = true): Unit = raceToConflict(dir) {
+      operation: String = "WRITE"): Unit = raceToConflict(dir) {
     val dst = new Path(dir)
     val tmp = stagingPath(dir, "")
     val f = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1553,7 +1540,15 @@ object Catalog {
     // the caller explicitly evolves (driver-side; no data cost)
     val g = TableRules.prepare(spark, dir, df)
     val dfGen = g.frame
-    if (!allowSchemaChange && f.exists(dst)) TableRules.shapeDiff(
+    // a first load (expected version 0) refuses an existing table up
+    // front; any other write finding no live dir may be looking at a
+    // crashed commit's retire — rolled back first, so the shape check
+    // and the commit see the restored snapshot
+    val firstLoad = expectedVersion.contains(0)
+    val live = f.exists(dst) || (!firstLoad &&
+      SwapProtocol.recoverAbortedSwap(spark, f, dir) > 0 && f.exists(dst))
+    require(!(live && firstLoad), s"table $dir already exists")
+    if (!allowSchemaChange && live) TableRules.shapeDiff(
         TableRules.liveSchema(spark, dir, partitionBy.isEmpty), dfGen.schema)
       .foreach { d => throw new IllegalStateException(
         s"schema change writing $dir (pass allowSchemaChange to evolve): $d") }
@@ -1575,113 +1570,9 @@ object Catalog {
         org.apache.spark.sql.types.StructType(data ++ b))
     }
     TableRules.enforceStaged(spark, dir, g.checks, tmp)
-    commitSwap(spark, f, dir, tmp, keepVersions, expectedVersion, commitTag,
-      operation, carryTags)
-  }
-
-  /** The swap tail shared by overwrite and append: retire current into the
-    * version log, rename the staged dir live, advance the pointer, prune
-    * the one entry that aged out. Crash at any step leaves the pointer
-    * naming a version whose data is intact (the old one).
-    *
-    * Optimistic concurrency (`expectedVersion`): a read-modify-write
-    * caller records the version it staged against; if the pointer moved,
-    * the staged dir is discarded and [[ConcurrentCommitException]] raised —
-    * committing would silently drop the interleaved writer's rows. Two
-    * racers that BOTH pass the check still cannot double-commit: they
-    * share the same retire target `v{cur}`, and the second rename into an
-    * existing log entry aborts (rename is the put-if-absent primitive
-    * here, the same role Delta's transaction-log put plays). */
-  private[graft] def commitSwap(spark: SparkSession, f: FileSystem, dir: String,
-      tmp: Path, keepVersions: Int,
-      expectedVersion: Option[Int] = None,
-      commitTag: Option[(String, String)] = None,
-      operation: String = "WRITE",
-      carryTags: Boolean = true): Unit = {
-    val dst = new Path(dir)
-    // Caller tags carry forward BY DEFAULT (Delta likewise persists txn
-    // app versions across every commit): a streaming sink's exactly-once
-    // batch marker must survive whatever lands after it — an OPTIMIZE, a
-    // row-level delete, a plain append — or a commit inside the
-    // append→marker-record crash window reopens it and a replay
-    // double-appends. Tag keys are per-checkpoint, so carried keys can
-    // never collide with a different stream's; a commit's OWN tag key
-    // still wins, and the operation tag is always re-stamped below.
-    if (carryTags && f.exists(dst)) f.listStatus(dst).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_graft_commit_tag_") &&
-          n != s"_graft_commit_tag_$OperationTagKey" &&
-          commitTag.forall(t => n != s"_graft_commit_tag_${t._1}"))
-        org.apache.hadoop.fs.FileUtil.copy(f, st.getPath,
-          f, new Path(tmp, n), false, false,
-          spark.sparkContext.hadoopConfiguration)
-    }
-    // stamp the tags into the STAGED dir — they become visible atomically
-    // with the swap rename below, never before, never after. Every commit
-    // records the operation that produced it (Delta's operation column in
-    // DESCRIBE HISTORY); callers add their own tags (e.g. a streaming
-    // sink's batch marker) on top.
-    (commitTag.toSeq :+ (OperationTagKey, operation)).foreach { case (k, v) =>
-      val out = f.create(new Path(tmp, s"_graft_commit_tag_$k"), true)
-      try out.write(v.getBytes("UTF-8")) finally out.close()
-    }
-    val cur = readPointer(f, dir)
-    expectedVersion.filter(_ != cur).foreach { exp =>
-      f.delete(tmp, true)
-      throw new ConcurrentCommitException(dir, exp, cur)
-    }
-    if (f.exists(dst)) {
-      f.mkdirs(historyDir(dir))
-      val retired = versionDir(dir, cur)
-      if (f.exists(retired) || !f.rename(dst, retired)) {
-        // the retire rename is the put-if-absent that serializes racers:
-        // losing it means another commit owns v{cur} — clean up our
-        // staging and surface it as the concurrency conflict it is
-        f.delete(tmp, true)
-        throw new ConcurrentCommitException(dir, cur, readPointer(f, dir))
-      }
-    }
-    if (!f.rename(tmp, dst)) {
-      // dst reappeared: another writer won the dst-absent window (the
-      // first-load race, or a racer slipping between our retire and
-      // rename) — their commit is intact, ours loses cleanly
-      f.delete(tmp, true)
-      throw new ConcurrentCommitException(dir, cur, readPointer(f, dir))
-    }
-    // Hadoop rename(src, dst) with dst an EXISTING directory moves src
-    // INSIDE it and still returns true — a racer that lost the dst-absent
-    // window would silently nest its snapshot into the winner's live dir
-    // and double-commit. Unique staging names make the nesting detectable:
-    // our own tmp basename under dst means the other writer owns dst.
-    val nested = new Path(dst, tmp.getName)
-    if (f.exists(nested)) {
-      f.delete(nested, true)
-      throw new ConcurrentCommitException(dir, cur, readPointer(f, dir))
-    }
-    writePointer(f, dir, cur + 1)
-    // bucketed layouts date every version with an explicit marker
-    // (TIMESTAMP AS OF cannot use their retire-dir mtimes); a bucketed
-    // table committed through THIS protocol (RESTORE, column DDL,
-    // overwriteSnapshot) must stamp too, or those versions become
-    // invisible to timestamp resolution
-    if (isBucketedLayout(f, dir))
-      graft.merge.PartitionedMerge.stampCommitTime(spark, dir, cur + 1)
-    // Prune the ONE entry that just fell out of the retention window —
-    // every earlier commit pruned its own, so probing all version numbers
-    // from 1 would add FS round-trips that grow with table age (a
-    // per-micro-batch table reaches tens of thousands of commits). Entries
-    // orphaned by a lowered keepVersions — or left behind by an epoch pin
-    // that has since been released — are vacuum's job.
-    if (cur - keepVersions >= 1 &&
-        !epochPinProtects(spark, f, dir, cur - keepVersions)) {
-      val old = versionDir(dir, cur - keepVersions)
-      if (f.exists(old)) f.delete(old, true)
-      f.delete(graft.merge.PartitionedMerge.commitTimeMarker(
-        dir, cur - keepVersions), false)
-    }
-    // Cached relations (file lists) outlive the swap; without a refresh,
-    // readers keep resolving the retired snapshot's deleted files.
-    spark.catalog.refreshByPath(dst.toString)
+    SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
+      keepVersions, expectedVersion,
+      commitTag.toSeq :+ (OperationTagKey -> operation))
   }
 
   /** Versioned APPEND (the lowering for `INSERT INTO` over a graft table —
@@ -1705,7 +1596,11 @@ object Catalog {
     val dst = new Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val f = dst.getFileSystem(conf)
-    if (!f.exists(dst)) { // first insert = first load, one uniform path
+    // a missing live dir may be a crashed commit's retire: roll it back
+    // before the append takes the first-load path over it
+    val live = f.exists(dst) ||
+      { SwapProtocol.recoverAbortedSwap(spark, f, dir); f.exists(dst) }
+    if (!live) { // first insert = first load, one uniform path
       overwritePath(spark, df, dir, Nil, keepVersions,
         commitTag = commitTag, operation = operation)
       return
@@ -1788,8 +1683,9 @@ object Catalog {
     if (partCols.isEmpty)
       graft.merge.PartitionedMerge.writeSchemaSidecar(spark, tmp.toString,
         curSchema)
-    commitSwap(spark, f, dir, tmp, keepVersions, Some(stagedAgainst),
-      commitTag, operation)
+    SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
+      keepVersions, Some(stagedAgainst),
+      commitTag.toSeq :+ (OperationTagKey -> operation))
     }
   }
 

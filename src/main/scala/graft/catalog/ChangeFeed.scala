@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.merge.PartitionedMerge
+import graft.layout.SwapProtocol
 
 /** Change Data Feed over the snapshot/version log — Delta's
   * `table_changes` for this layout. Delta logs row-level change files at
@@ -37,7 +38,7 @@ object ChangeFeed {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!Catalog.isBucketedLayout(fs, dir)) return None
     val names = (fromV until toV).flatMap { w =>
-      val vdir = Catalog.versionDir(dir, w)
+      val vdir = SwapProtocol.versionDir(dir, w)
       if (!fs.exists(vdir)) Seq.empty
       else fs.listStatus(vdir).map(_.getPath.getName)
         .filter(_.startsWith(s"${PartitionedMerge.BucketCol}="))
@@ -63,7 +64,7 @@ object ChangeFeed {
       keys: Seq[String] = Nil): Option[(DataFrame, Int, Int)] = {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = Catalog.readPointer(f, dir)
+    val cur = SwapProtocol.readPointer(f, dir)
     require(cur >= 1, s"$dir does not exist")
     val from = readCursor(spark, cursorFile) match {
       case Some(v) => v
@@ -96,7 +97,7 @@ object ChangeFeed {
       // bootstrap: copy the live snapshot, THEN pin the cursor at the
       // version the copy came from (single-writer: no commit can land
       // between the pointer read and the copy)
-      val cur = Catalog.readPointer(f, srcDir)
+      val cur = SwapProtocol.readPointer(f, srcDir)
       require(cur >= 1, s"$srcDir does not exist")
       require(!f.exists(new Path(dstDir)),
         s"mirror bootstrap: destination exists: $dstDir")
@@ -132,21 +133,15 @@ object ChangeFeed {
   def readCursor(spark: SparkSession, cursorFile: String): Option[Int] = {
     val p = new org.apache.hadoop.fs.Path(cursorFile)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-    finally in.close()
+    if (!f.exists(p)) None
+    else Some(graft.layout.SwapProtocol.readSmallFile(f, p).toInt)
   }
 
-  /** Advance the cursor AFTER the batch is durably applied (tmp+rename). */
+  /** Advance the cursor AFTER the batch is durably applied, whole. */
   def commitCursor(spark: SparkSession, cursorFile: String, v: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(cursorFile)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(cursorFile + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    require(f.rename(tmp, p), s"cursor commit failed: $p")
+    graft.layout.SwapProtocol.writeSmallFile(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, v.toString)
   }
 
   /** Append-only fast path: when `fromV`'s data files are a SUBSET of

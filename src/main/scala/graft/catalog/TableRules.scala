@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max, sum, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.layout.DeletionVectors
+import graft.layout.{DeletionVectors, SwapProtocol}
 import graft.merge.PartitionedMerge
 
 /** The write gate: every rule a commit must pass before its staged files
@@ -41,36 +41,21 @@ object TableRules {
 
   // ------------------------------------------------------- manifests
 
-  /** The rule manifests' kinds — `<dir>.<kind>` is the manifest,
-    * `<dir>.<kind>.tmp` its abandoned-commit leftover (vacuum's). */
-  private[graft] val ManifestKinds = Seq("constraints", "generated", "identity")
-
   private def readManifest(spark: SparkSession, dir: String,
       kind: String): List[String] = {
     val f = fsOf(spark, dir)
     val p = new Path(s"$dir.$kind")
     if (!f.exists(p)) Nil
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toList
-      finally in.close()
-    }
+    else SwapProtocol.readSmallFile(f, p).split('\n').filter(_.nonEmpty).toList
   }
 
-  /** Commit a manifest: tmp + rename; an empty entry list removes it. */
+  /** Commit a manifest whole; an empty entry list removes it. */
   private def writeManifest(spark: SparkSession, dir: String, kind: String,
       lines: Seq[String]): Unit = {
     val f = fsOf(spark, dir)
     val dst = new Path(s"$dir.$kind")
     if (lines.isEmpty) { if (f.exists(dst)) f.delete(dst, false) }
-    else {
-      val tmp = new Path(s"$dir.$kind.tmp")
-      val out = f.create(tmp, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-      if (f.exists(dst)) f.delete(dst, false)
-      require(f.rename(tmp, dst), s"$kind commit failed: $dst")
-    }
+    else SwapProtocol.writeSmallFile(f, dst, lines.mkString("\n"))
   }
 
   private def namedExprs(lines: List[String]): Seq[(String, String)] =
@@ -318,7 +303,8 @@ object TableRules {
         if (st.isDirectory) { f.mkdirs(d); move(st.getPath, d) }
         else {
           require(!f.exists(d), s"staging name collision: $n")
-          require(f.rename(st.getPath, d), s"stage move failed: $n")
+          require(SwapProtocol.move("stage-move", f, st.getPath, d),
+            s"stage move failed: $n")
         }
       }
     }

@@ -41,25 +41,17 @@ object CopyInto {
       tableDir: String): Seq[(String, String)] = {
     val p = new Path(manifestPath(tableDir))
     if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+    graft.layout.SwapProtocol.readSmallFile(fs, p).split('\n').toList
       .filter(_.nonEmpty).map { l =>
         val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
-      }.toList
-    finally in.close()
+      }
   }
 
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: String, entries: Seq[(String, String)]): Unit = {
-    val tmp = new Path(manifestPath(tableDir) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.map { case (h, f) => s"$h\t$f" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(manifestPath(tableDir))
-    if (fs.exists(dst)) fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"manifest commit failed: $dst")
-  }
+      tableDir: String, entries: Seq[(String, String)]): Unit =
+    graft.layout.SwapProtocol.writeSmallFile(fs,
+      new Path(manifestPath(tableDir)),
+      entries.map { case (h, f) => s"$h\t$f" }.mkString("\n"))
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -147,7 +139,7 @@ object CopyInto {
     val parts = fs.listStatus(staging)
       .filter(st => !st.getPath.getName.startsWith("_")).map(_.getPath)
     parts.zipWithIndex.foreach { case (p, i) =>
-      require(fs.rename(p,
+      require(graft.layout.SwapProtocol.move("install", fs, p,
         new Path(tableDir, s"copy-$prefix-$i.parquet")), s"install failed: $p")
     }
     fs.delete(staging, true)

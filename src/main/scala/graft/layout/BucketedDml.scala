@@ -13,12 +13,11 @@ import graft.merge.PartitionedMerge
   * partitioned tables; the gold dims here are exactly the bucketed
   * tables, and GDPR-style `DELETE FROM` lands on dims).
   *
-  * Every statement follows the bucketed layout's own commit protocol
-  * ([[PartitionedMerge.swapBuckets]]): stage replacement `gbucket=N`
-  * dirs, retire the touched live dirs into `<path>.history/v{N}`,
-  * advance the pointer — so each statement is a real table version with
-  * O(touched-bucket) history cost, and UNTOUCHED buckets are never
-  * opened, listed, or rewritten.
+  * Every statement commits through [[SwapProtocol.commit]] as a bucket
+  * swap: stage replacement `gbucket=N` dirs, retire the touched live
+  * dirs into `<path>.history/v{N}`, advance the pointer — so each
+  * statement is a real table version with O(touched-bucket) history
+  * cost, and UNTOUCHED buckets are never opened, listed, or rewritten.
   *
   * Two modes, matching the flat paths:
   *   - merge-on-read (`deleteWhereMor`/`updateWhereMor`, used when the
@@ -121,8 +120,7 @@ object BucketedDml {
       val root = new Path(dir)
       val fs = root.getFileSystem(conf)
       require(fs.exists(root), s"no table at $dir")
-      PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-      val stagedAgainst = Catalog.readPointer(fs, dir)
+      val stagedAgainst = SwapProtocol.recoverAbortedSwap(spark, fs, dir)
       val matched = taggedLive(spark, dir, alias)
         .filter(coalesce(cond, lit(false))).cache()
       try {
@@ -180,7 +178,8 @@ object BucketedDml {
               .filter(_.getName.startsWith(s"$BucketCol=")).foreach { e =>
                 val d = new Path(new Path(tmp, e.getName),
                   DeletionVectors.DvDirName)
-                require(fs.rename(e, d), s"DV sidecar stage failed: $e")
+                require(SwapProtocol.move("stage-move", fs, e, d),
+                  s"DV sidecar stage failed: $e")
               }
             fs.delete(dvStage, true)
 
@@ -192,8 +191,9 @@ object BucketedDml {
               TableRules.enforceStaged(spark, dir, checks, stage)
               TableRules.moveStaged(fs, stage, new Path(tmp))
             }
-            PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
-              keepVersions, Some(stagedAgainst))
+            SwapProtocol.commit(spark, fs, dir, new Path(tmp),
+              PartitionedMerge.bucketRetire(touched), keepVersions,
+              Some(stagedAgainst))
             affected
           } catch { case e: Throwable =>
             if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
@@ -228,8 +228,7 @@ object BucketedDml {
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(dir).getFileSystem(conf)
       require(fs.exists(new Path(dir)), s"no table at $dir")
-      PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-      val stagedAgainst = Catalog.readPointer(fs, dir)
+      val stagedAgainst = SwapProtocol.recoverAbortedSwap(spark, fs, dir)
       val live = taggedLive(spark, dir, alias)
       val c = coalesce(cond, lit(false))
       val matched = live.filter(c).cache()
@@ -267,8 +266,9 @@ object BucketedDml {
             // scope); DELETE only removes rows, so CHECKs cannot break
             image.foreach(g => TableRules.enforceStaged(spark, dir,
               g.checks, new Path(tmp), Some(staged.schema)))
-            PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
-              keepVersions, Some(stagedAgainst))
+            SwapProtocol.commit(spark, fs, dir, new Path(tmp),
+              PartitionedMerge.bucketRetire(touched), keepVersions,
+              Some(stagedAgainst))
             affected
           } catch { case e: Throwable =>
             if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
@@ -291,8 +291,7 @@ object BucketedDml {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
     require(fs.exists(new Path(dir)), s"no table at $dir")
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    val stagedAgainst = Catalog.readPointer(fs, dir)
+    val stagedAgainst = SwapProtocol.recoverAbortedSwap(spark, fs, dir)
     val (keys, n) = PartitionedMerge.readBucketMeta(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"INSERT INTO bucketed table $dir requires its bucket-layout " +
@@ -343,8 +342,9 @@ object BucketedDml {
             }
           }
           TableRules.moveStaged(fs, rowStage, new Path(tmp))
-          PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
-            keepVersions, Some(stagedAgainst))
+          SwapProtocol.commit(spark, fs, dir, new Path(tmp),
+            PartitionedMerge.bucketRetire(touched), keepVersions,
+            Some(stagedAgainst))
         } catch { case e: Throwable =>
           if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
           throw e
@@ -376,8 +376,7 @@ object BucketedDml {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
     require(fs.exists(new Path(dir)), s"no table at $dir")
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    val stagedAgainst = Catalog.readPointer(fs, dir)
+    val stagedAgainst = SwapProtocol.recoverAbortedSwap(spark, fs, dir)
     require(PartitionedMerge.readBucketMeta(spark, dir).nonEmpty,
       s"REPLACE WHERE on bucketed table $dir requires its bucket-layout " +
         "manifest (<path>.buckets); rewrite via PartitionedMerge.write " +
@@ -432,8 +431,9 @@ object BucketedDml {
           // staged insert part files move into their buckets' staged
           // dirs (a destination bucket may be brand new)
           TableRules.moveStaged(fs, rowStage, new Path(tmp))
-          PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
-            keepVersions, Some(stagedAgainst))
+          SwapProtocol.commit(spark, fs, dir, new Path(tmp),
+            PartitionedMerge.bucketRetire(touched), keepVersions,
+            Some(stagedAgainst))
           affected
         } catch { case e: Throwable =>
           if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
@@ -539,8 +539,7 @@ object BucketedDml {
       keepVersions: Int = 10): Unit = Catalog.raceToConflictShim(dir) {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    val stagedAgainst = Catalog.readPointer(fs, dir)
+    val stagedAgainst = SwapProtocol.recoverAbortedSwap(spark, fs, dir)
     val touched = PartitionedMerge.liveBucketDirs(fs, dir)
       .filter(p => fs.exists(new Path(p, DeletionVectors.DvDirName)))
       .map(_.getName.stripPrefix(s"$BucketCol=").toInt).sorted
@@ -555,8 +554,9 @@ object BucketedDml {
       try {
         staged.write.mode(SaveMode.Overwrite)
           .partitionBy(BucketCol).parquet(tmp)
-        PartitionedMerge.swapBuckets(spark, fs, dir, tmp, touched,
-          keepVersions, Some(stagedAgainst))
+        SwapProtocol.commit(spark, fs, dir, new Path(tmp),
+          PartitionedMerge.bucketRetire(touched), keepVersions,
+          Some(stagedAgainst))
       } catch { case e: Throwable =>
         if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
         throw e

@@ -194,26 +194,20 @@ object DataSkipping {
     }(org.apache.spark.sql.Encoders.STRING)
   }
 
-  /** Stream `lines` into the manifest (tmp + rename); returns the line
+  /** Stream `lines` into the manifest, published whole; returns the line
     * count. Iterator-shaped on purpose — callers feed it
     * `statLines(...).toLocalIterator` so the whole payload never sits on
     * the driver at once. */
   private def writeManifest(spark: SparkSession, dir: String,
       numBits: Int, numHashes: Int, lines: Iterator[String]): Long = {
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = manifestPath(dir)
-    val tmp = new Path(dst.getParent, "stats.tsv.tmp")
-    f.mkdirs(dst.getParent)
-    val out = f.create(tmp, true)
     var n = 0L
-    try {
+    SwapProtocol.writeSmallFile(f, manifestPath(dir)) { out =>
       out.write(s"#graft-skipping\t1\t$numBits\t$numHashes".getBytes("UTF-8"))
       lines.foreach { l =>
         out.write('\n'); out.write(l.getBytes("UTF-8")); n += 1
       }
-    } finally out.close()
-    if (f.exists(dst)) f.delete(dst, false)
-    require(f.rename(tmp, dst), s"stats manifest commit failed: $dst")
+    }
     n
   }
 
@@ -229,10 +223,7 @@ object DataSkipping {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = manifestPath(srcDir)
     if (!f.exists(p)) return
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
+    val lines = SwapProtocol.readSmallFile(f, p).split("\n").filter(_.nonEmpty)
     val kept = lines.tail.filter(l =>
       surviving.contains(unb64(l.split("\t", -1)(0))))
     if (kept.isEmpty) return
@@ -304,10 +295,7 @@ object DataSkipping {
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = manifestPath(dir)
     if (!f.exists(p)) return None
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
+    val lines = SwapProtocol.readSmallFile(f, p).split("\n").filter(_.nonEmpty)
     val header = lines.head.split("\t")
     require(header(0) == "#graft-skipping", s"bad skipping manifest at $p")
     val (numBits, numHashes) = (header(2).toInt, header(3).toInt)

@@ -70,9 +70,8 @@ object DeletionVectors {
 
   /** Turn merge-on-read DML on for the table at `dir`. */
   def enable(spark: SparkSession, dir: String): Unit = {
-    val f = fsOf(spark, dir)
-    val out = f.create(modeFile(dir), true)
-    try out.write("merge-on-read".getBytes("UTF-8")) finally out.close()
+    SwapProtocol.writeSmallFile(fsOf(spark, dir), modeFile(dir),
+      "merge-on-read")
   }
 
   /** Back to copy-on-write for future statements. Existing sidecars stay
@@ -299,7 +298,7 @@ object DeletionVectors {
           !s.getPath.getName.startsWith(".")),
         s"deletion vectors on a partition-dir tree are unsupported " +
           s"($dir): rewrite via copy-on-write DELETE/UPDATE")
-      val stagedAgainst = Catalog.readPointer(f, dir)
+      val stagedAgainst = SwapProtocol.readPointer(f, dir)
       val dvPath = new Path(dst, DvDirName)
       val hadDv = f.exists(dvPath)
       val existingCount =
@@ -349,11 +348,12 @@ object DeletionVectors {
               f, new Path(tmp, "_skipping"), false, false, conf)
           // the schema is unchanged: its sidecar carries forward too
           graft.merge.PartitionedMerge.carrySchemaSidecar(spark, dir, tmp)
-          // carryTags: a streaming sink's exactly-once batch marker on the
-          // live version must survive a row-level delete/update commit —
-          // the marker dedupes batches, which later DML doesn't un-land
-          Catalog.commitSwap(spark, f, dir, tmp, keepVersions,
-            Some(stagedAgainst), None, operation, carryTags = true)
+          // tags carry: a streaming sink's exactly-once batch marker on
+          // the live version must survive a row-level delete/update
+          // commit — the marker dedupes batches, which DML doesn't un-land
+          SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
+            keepVersions, Some(stagedAgainst),
+            Seq(SwapProtocol.OperationTag -> operation))
           affected
         }
       } catch {
@@ -374,11 +374,10 @@ object DeletionVectors {
     if (Catalog.isBucketedLayout(fsOf(spark, dir), dir)) {
       BucketedDml.materialize(spark, dir, keepVersions); return
     }
-    val cur = Catalog.readPointer(fsOf(spark, dir), dir)
+    val cur = SwapProtocol.readPointer(fsOf(spark, dir), dir)
     Catalog.overwritePath(spark, readPath(spark, dir), dir, Nil,
       keepVersions, expectedVersion = Some(cur),
-      operation = "MATERIALIZE DV",
-      carryTags = true) // content-identical: stream markers survive
+      operation = "MATERIALIZE DV") // stream markers carry forward
   }
 
   /** Live sidecar position count (DESCRIBE DETAIL's DV profile; 0 = none).

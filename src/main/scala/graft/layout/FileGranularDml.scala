@@ -96,7 +96,7 @@ object FileGranularDml {
       require(Catalog.partitionColsOf(fs, dir).isEmpty,
         s"file-granular DML expects a flat snapshot at $dir " +
           "(bucketed layouts route through BucketedDml)")
-      val stagedAgainst = Catalog.readPointer(fs, dir)
+      val stagedAgainst = SwapProtocol.readPointer(fs, dir)
       val base = spark.read.parquet(dir)
       val schema = base.schema
       val c = coalesce(cond, lit(false))
@@ -161,8 +161,9 @@ object FileGranularDml {
           // unchanged, so its sidecar carries whole
           DataSkipping.carryManifest(spark, dir, tmp, linked)
           graft.merge.PartitionedMerge.carrySchemaSidecar(spark, dir, tmp)
-          Catalog.commitSwap(spark, fs, dir, tmp, keepVersions,
-            Some(stagedAgainst), None, operation, carryTags = true)
+          SwapProtocol.commit(spark, fs, dir, tmp, SwapProtocol.WholeDir,
+            keepVersions, Some(stagedAgainst),
+            Seq(SwapProtocol.OperationTag -> operation))
           affected
         } catch { case e: Throwable =>
           if (fs.exists(tmp)) fs.delete(tmp, true)

@@ -13,18 +13,19 @@ import org.apache.spark.sql.SparkSession
   *
   * Soundness: both answers are IMMUTABLE for a given pointer version —
   * every operation that creates, grows, or folds a sidecar, or changes
-  * the layout, commits through `writePointer` (flat: `commitSwap`;
-  * bucketed: `swapBuckets`), so the (path, version) key can never serve a
-  * stale answer to a reader that observes the new version. The one
-  * same-version mutation in the protocol — `recoverAbortedSwap` rolling
-  * half-retired buckets back after a writer crash — invalidates
+  * the layout, commits through `SwapProtocol.commit` on every layout,
+  * which advances the pointer, so the (path, version) key can never serve
+  * a stale answer to a reader that observes the new version. The one
+  * same-version mutation in the protocol — `SwapProtocol`'s rollback of a
+  * crashed transition, whole-dir or bucket swap (a roll-forward moves the
+  * pointer like any commit) — invalidates
   * explicitly for this JVM's readers AND bumps the table's
   * `_recovery_epoch` file, which this cache folds into the key: a probe
   * cached by process A before process B ran recovery misses on A's next
   * lookup (the epoch changed), so cross-process recovery staleness is
   * bounded to probes already in flight, not indefinite. Ordinary
   * cross-process writers are caught by the version key: their commit
-  * moves the pointer this probe reads. `writePointer` also invalidates
+  * moves the pointer this probe reads. The commit also invalidates
   * in-JVM (belt and braces for writers racing their own readers).
   *
   * Cost model: one `readPointer` (a small-file read, up to 3 metadata ops
@@ -59,14 +60,14 @@ private[graft] object ReadProbeCache {
     // its retire renames and its pointer write leaves a bucket with no
     // live dir at an UNCHANGED (version, epoch) — the one state the key
     // cannot see — and a scan would silently drop its rows. One `exists`
-    // answers the steady state; see PartitionedMerge.healCrashedSwap for
+    // answers the steady state; see SwapProtocol.healCrashedSwap for
     // the live-writer grace protocol.
-    graft.merge.PartitionedMerge.healCrashedSwap(spark, fs, path)
-    val v = graft.catalog.Catalog.readPointer(fs, path)
+    SwapProtocol.healCrashedSwap(spark, fs, path)
+    val v = graft.layout.SwapProtocol.readPointer(fs, path)
     // epoch read BEFORE deriving: a recovery racing this probe lands the
     // derived answer under the PRE-recovery epoch, so the next lookup
     // (which reads the new epoch) misses and re-derives fresh state
-    val epoch = graft.catalog.Catalog.readRecoveryEpoch(fs, path)
+    val epoch = graft.layout.SwapProtocol.readRecoveryEpoch(fs, path)
     val key = keyOf(path, v, epoch)
     val hit = cache.get(key)
     if (hit != null) hit
@@ -89,7 +90,7 @@ private[graft] object ReadProbeCache {
   }
 
   /** Drop every cached version of `path` — called by the same-JVM writers
-    * (`writePointer`, `recoverAbortedSwap`) so a reader thread can never
+    * (`SwapProtocol`'s commit and rollback) so a reader thread can never
     * see this process's own commit through a stale probe. */
   def invalidate(path: String): Unit = {
     val p = path + "\u0000"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.TableRules
+import graft.layout.SwapProtocol
 
 /** Bucket-partitioned managed table with partition-pruned merge — the
   * vanilla-Spark equivalent of Delta MERGE's file pruning (the 100 TB-scale
@@ -27,11 +28,13 @@ import graft.catalog.TableRules
   *      CHANGED buckets per version, so bucketed dims are time-travelable
   *      at O(touched) history cost per merge.
   *
-  * Crash consistency matches Catalog.overwriteSnapshot's documented
-  * posture: per-directory rename is atomic on HDFS/local FS; the version
-  * pointer advances only after every touched bucket is swapped, and a
-  * crashed swap's half-retired buckets are rolled back by the next merge
-  * (an object store would use a manifest-pointer commit instead).
+  * Crash consistency: first loads and every later version commit through
+  * [[graft.layout.SwapProtocol.commit]] — full writes as one whole-dir
+  * transition, merges and compactions as a swap of the touched bucket
+  * dirs only — so a crash at any step leaves the pointer on a version
+  * whose buckets are intact, and the protocol's recovery restores them
+  * (a bucket swap) or rolls the staged-in snapshot forward (a whole-dir
+  * write) before the next read or write.
   */
 object PartitionedMerge {
 
@@ -43,27 +46,13 @@ object PartitionedMerge {
   def bucketExpr(keys: Seq[String], nBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(nBuckets))
 
-  /** Initial (or full) write of the bucket-partitioned table. */
+  /** First load of the bucket-partitioned table: staged and committed as
+    * version 1 like every other write (the table must not exist yet). */
   def write(df: DataFrame, path: String, keys: Seq[String], nBuckets: Int): Unit = {
-    // rules recorded before first load apply to the initial data too (the
-    // Catalog.create parity: no stage, so the frame is checked)
-    val g = TableRules.prepare(df.sparkSession, path, df)
-    TableRules.enforce(g.frame, g.checks, path)
-    val bucketed = g.frame.withColumn(BucketCol, bucketExpr(keys, nBuckets))
-    bucketed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
-    writeSchemaSidecar(df.sparkSession, path, bucketed.schema)
+    graft.catalog.Catalog.overwritePath(df.sparkSession,
+      df.withColumn(BucketCol, bucketExpr(keys, nBuckets)), path,
+      Seq(BucketCol), expectedVersion = Some(0))
     writeBucketMeta(df.sparkSession, path, keys, nBuckets)
-    stampCommitTime(df.sparkSession, path, 1)
-    // stamp the pointer at creation. A pointer-less bucketed table (the
-    // history dir exists for the commit-time marker, the `_current` file
-    // doesn't) costs every pre-first-merge readPointer the full
-    // pointer-absent retry loop — and makes the FIRST swap's crash window
-    // unrecoverable: readPointer would derive live = logged.max + 1 = 2
-    // from the in-flight v00001 retire entries, so recoverAbortedSwap
-    // would look at v00002 and never roll the half-retired buckets back.
-    val fsw = new Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    graft.catalog.Catalog.writePointer(fsw, path, 1)
   }
 
   /** Read the logical table (bucket column dropped, deletion vectors
@@ -75,7 +64,7 @@ object PartitionedMerge {
     // into THIS read's plan
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healCrashedSwap(spark, fs, path)
+    graft.layout.SwapProtocol.healCrashedSwap(spark, fs, path)
     applyBucketDvs(spark, path, readRaw(spark, path)).drop(BucketCol)
   }
 
@@ -114,17 +103,10 @@ object PartitionedMerge {
   private def bucketMetaFile(path: String) = new Path(path + ".buckets")
 
   private[graft] def writeBucketMeta(spark: SparkSession, path: String,
-      keys: Seq[String], nBuckets: Int): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = bucketMetaFile(path)
-    val tmp = new Path(path + ".buckets.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"${keys.mkString(",")}\t$nBuckets".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"bucket meta commit failed: $dst")
-  }
+      keys: Seq[String], nBuckets: Int): Unit =
+    graft.layout.SwapProtocol.writeSmallFile(new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      bucketMetaFile(path), s"${keys.mkString(",")}\t$nBuckets")
 
   private[graft] def readBucketMeta(spark: SparkSession, path: String)
       : Option[(Seq[String], Int)] = {
@@ -132,33 +114,10 @@ object PartitionedMerge {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = bucketMetaFile(path)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val line =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
+    val line = graft.layout.SwapProtocol.readSmallFile(fs, p)
     val i = line.indexOf('\t')
     Some((line.substring(0, i).split(",").toSeq.map(_.trim),
       line.substring(i + 1).trim.toInt))
-  }
-
-  /** Per-version commit times for bucketed tables. A flat snapshot's
-    * version dir is written once and only ever renamed, so its mtime IS
-    * the commit time; a bucketed retire entry is created when the NEXT
-    * version commits, so directory times date the wrong version. Instead
-    * every pointer advance stamps `historyDir/_commit_time_v{N}` — the
-    * record `TIMESTAMP AS OF` resolution reads. */
-  private[graft] def commitTimeMarker(path: String, v: Int): Path =
-    new Path(graft.catalog.Catalog.historyDir(path), s"_commit_time_v$v")
-
-  private[graft] def stampCommitTime(spark: SparkSession, path: String,
-      v: Int): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(graft.catalog.Catalog.historyDir(path))
-    val out = fs.create(commitTimeMarker(path, v), true)
-    try out.write(String.valueOf(System.currentTimeMillis())
-      .getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** (version, commit millis) for every stamped version of a bucketed
@@ -168,19 +127,16 @@ object PartitionedMerge {
       : Seq[(Int, Long)] = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist = graft.catalog.Catalog.historyDir(path)
+    val hist = graft.layout.SwapProtocol.historyDir(path)
     if (!fs.exists(hist)) return Nil
     fs.listStatus(hist).map(_.getPath)
       .filter(_.getName.startsWith("_commit_time_v"))
       .flatMap { p =>
         val v = p.getName.stripPrefix("_commit_time_v")
-        if (v.nonEmpty && v.forall(_.isDigit)) {
-          val in = fs.open(p)
-          val t =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          Some((v.toInt, t.toLong))
-        } else None
+        if (v.nonEmpty && v.forall(_.isDigit))
+          Some((v.toInt,
+            graft.layout.SwapProtocol.readSmallFile(fs, p).toLong))
+        else None
       }.sortBy(_._1).toSeq
   }
 
@@ -195,16 +151,10 @@ object PartitionedMerge {
   private def schemaSidecar(path: String) = new Path(path, "_graft_pm_schema.json")
 
   private[graft] def writeSchemaSidecar(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = schemaSidecar(path)
-    val tmp = new Path(path, "_graft_pm_schema.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"schema sidecar commit failed: $p")
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    graft.layout.SwapProtocol.writeSmallFile(new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      schemaSidecar(path), schema.json)
 
   /** Copy `path`'s schema sidecar, if any, into the staged snapshot
     * `tmp`: the row-level DML commits link only data files forward, and a
@@ -230,12 +180,9 @@ object PartitionedMerge {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one open, no existence probe first: every flat read asks this
-    val in =
-      try fs.open(schemaSidecar(path))
-      catch { case _: java.io.FileNotFoundException => return None }
     val json =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+      try graft.layout.SwapProtocol.readSmallFile(fs, schemaSidecar(path))
+      catch { case _: java.io.FileNotFoundException => return None }
     Some(org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
@@ -267,10 +214,10 @@ object PartitionedMerge {
       mergeFn: (DataFrame, DataFrame) => DataFrame): Seq[Int] = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAbortedSwap(spark, fs, path)
     // optimistic concurrency: everything from here reads live state the
     // staged merge derives from — record the version staged against
-    val stagedAgainst = graft.catalog.Catalog.readPointer(fs, path)
+    val stagedAgainst =
+      graft.layout.SwapProtocol.recoverAbortedSwap(spark, fs, path)
     val touched = source
       .select(bucketExpr(keys, nBuckets).as(BucketCol)).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
@@ -326,8 +273,8 @@ object PartitionedMerge {
     TableRules.enforceStaged(spark, path, merged.checks, new Path(tmp),
       Some(staged.schema))
 
-    swapBuckets(spark, fs, path, tmp, touched, keepVersions,
-      Some(stagedAgainst))
+    graft.layout.SwapProtocol.commit(spark, fs, path, new Path(tmp),
+      bucketRetire(touched), keepVersions, Some(stagedAgainst))
     writeSchemaSidecar(spark, path, staged.schema)
     // legacy upgrade: a merge knows the layout, so tables written before
     // the bucket-meta manifest existed gain it on their next merge
@@ -336,258 +283,10 @@ object PartitionedMerge {
     touched
   }
 
-  /** The versioned bucket rotation shared by merge and compaction: retire
-    * each touched live bucket dir into `<path>.history/v{cur}` (an empty
-    * marker dir when the bucket did not exist — reconstruction reads that
-    * as "absent at this version"), rename the staged dir in, THEN advance
-    * the pointer. A crash before the pointer write leaves the table
-    * addressable at the old version; [[recoverAbortedSwap]] rolls the
-    * half-moved buckets back on the next merge.
-    *
-    * Optimistic concurrency (round 11 — closes the documented
-    * single-writer corruption): `expectedVersion` is the pointer the
-    * caller read BEFORE its first live-state read — if the table moved,
-    * the staged work was derived from a superseded version and
-    * committing would silently drop the interleaved writer's changes,
-    * so the staging is discarded and the typed conflict raised (the
-    * flat protocol's `commitSwap` rule). Two racers that both pass the
-    * check still cannot interleave their retires into the same
-    * `v{cur}`: the transition is CLAIMED first via a rename-to-claim
-    * put-if-absent (the same primitive the flat retire rename plays) —
-    * the loser gets the typed conflict with its staging deleted and
-    * live state untouched. A crashed claimant's marker is swept by
-    * [[recoverAbortedSwap]] (unconditionally for completed transitions,
-    * age-gated by [[HealGraceMs]] for the in-flight one — the same
-    * liveness trade the heal path documents). With
-    * [[graft.catalog.Catalog.commitWithRetry]] around the caller,
-    * concurrent bucketed writers SERIALIZE safely instead of
-    * corrupting history. */
-  private[graft] def swapBuckets(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, tmp: String,
-      touched: Seq[Int], keepVersions: Int,
-      expectedVersion: Option[Int] = None): Unit = {
-    import graft.catalog.Catalog
-    val cur = Catalog.readPointer(fs, path)
-    expectedVersion.filter(_ != cur).foreach { exp =>
-      fs.delete(new Path(tmp), true)
-      throw new Catalog.ConcurrentCommitException(path, exp, cur)
-    }
-    val hist = Catalog.historyDir(path)
-    fs.mkdirs(hist)
-    val claim = new Path(hist, s"_swap_claim_v$cur")
-    val uniq = new Path(hist,
-      s".claim-${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.create(uniq, true).close()
-    // link-based put-if-absent (SwapProtocol.publishIfAbsent): the old
-    // rename-to-claim relied on ChecksumFileSystem's exists-check +
-    // POSIX rename, which two racers can interleave (both "win") —
-    // link(2) is kernel-atomic
-    if (!graft.layout.SwapProtocol.publishIfAbsent(fs, uniq, claim)) {
-      fs.delete(new Path(tmp), true)
-      throw new Catalog.ConcurrentCommitException(path)
-    }
-    // Close the claim-release TOCTOU: a winner at this same version may
-    // have advanced the pointer and released its claim BETWEEN our
-    // pointer read above and the rename-to-claim — the rename then
-    // succeeds onto the now-absent name even though `cur` is stale.
-    // The claim makes this check race-free: nobody else can advance the
-    // v{cur}→v{cur+1} transition while we hold it, so a re-read that
-    // still equals `cur` proves the read was not superseded.
-    val recheck = Catalog.readPointer(fs, path)
-    if (recheck != cur) {
-      fs.delete(claim, false)
-      fs.delete(new Path(tmp), true)
-      throw new Catalog.ConcurrentCommitException(path, cur, recheck)
-    }
-    val retireRoot = Catalog.versionDir(path, cur)
-    fs.mkdirs(retireRoot)
-    touched.foreach { b =>
-      // heartbeat: a live claimant refreshes its claim's mtime on every
-      // bucket it processes, so recoverAbortedSwap's age-gated sweep only
-      // ever evicts a genuinely stalled writer, not a slow-but-alive one
-      // working through many buckets (the sweep's grace is per-bucket,
-      // not per-swap)
-      try fs.setTimes(claim, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () } // swept ⇒ stage-in fails loudly
-      val dst = new Path(s"$path/$BucketCol=$b")
-      val src = new Path(s"$tmp/$BucketCol=$b")
-      val retired = new Path(retireRoot, s"$BucketCol=$b")
-      // an entry under v{cur} can only be an aborted attempt at THIS
-      // transition (a completed one advances the pointer) — clear it
-      if (fs.exists(retired)) fs.delete(retired, true)
-      if (fs.exists(dst)) {
-        if (!fs.rename(dst, retired))
-          throw new IllegalStateException(s"bucket retire failed for $dst")
-      } else fs.mkdirs(retired) // bucket absent before this version
-      if (fs.exists(src)) {
-        // Reader-side heal can roll this swap back if the writer stalls
-        // past HealGraceMs between the retire above and this stage-in:
-        // the live dir REAPPEARS, and RawLocalFileSystem.rename onto an
-        // existing non-empty dir falls back to copy-INTO-child
-        // (bucket=b/bucket=b nesting) and returns true — the one path
-        // that could advance the pointer over a corrupted bucket. Fail
-        // loudly instead; the caller retries the merge, which starts from
-        // recoverAbortedSwap and finds a consistent tree.
-        if (fs.exists(dst))
-          throw new IllegalStateException(
-            s"bucket swap pre-empted for $dst: live dir reappeared " +
-              s"(reader-side heal rolled back a swap stalled past " +
-              s"${HealGraceMs}ms; raise -Dgraft.heal.graceMs on stall-prone " +
-              "hosts) — retry the merge")
-        if (!fs.rename(src, dst))
-          throw new IllegalStateException(s"bucket swap failed for $dst")
-        // heal racing BETWEEN the check and the rename leaves the staged
-        // dir NESTED under the restored live dir — detect, remove, fail
-        val nested = new Path(dst, src.getName)
-        if (fs.exists(nested)) {
-          fs.delete(nested, true)
-          throw new IllegalStateException(
-            s"bucket swap for $dst nested under a heal-restored live dir " +
-              "— removed the nested copy; retry the merge")
-        }
-      }
-    }
-    fs.delete(new Path(tmp), true)
-    Catalog.writePointer(fs, path, cur + 1)
-    // transition complete — release the claim (a crash before this
-    // leaves a claim for a version < the new pointer, which the next
-    // recoverAbortedSwap sweeps unconditionally)
-    fs.delete(claim, false)
-    // date the new version for TIMESTAMP AS OF (retire-entry mtimes date
-    // the NEXT commit, not the version they hold — see commitTimeMarker)
-    stampCommitTime(spark, path, cur + 1)
-    // prune the one entry that just left the retention window (reads at
-    // versions <= it are no longer reconstructible; orphans from a lowered
-    // keepVersions or a released epoch pin are vacuum's job — same
-    // contract as Catalog snapshots)
-    if (cur - keepVersions >= 1 &&
-        !Catalog.epochPinProtects(spark, fs, path, cur - keepVersions)) {
-      val old = Catalog.versionDir(path, cur - keepVersions)
-      if (fs.exists(old)) fs.delete(old, true)
-      val marker = commitTimeMarker(path, cur - keepVersions)
-      if (fs.exists(marker)) fs.delete(marker, false)
-    }
-    // cached file lists outlive the bucket swap, same as a snapshot swap
-    spark.catalog.refreshByPath(path)
-  }
-
-  /** READ-side self-healing for the crash window writers recover lazily:
-    * between a crashed writer's retire renames and the next write's
-    * [[recoverAbortedSwap]], a bucket sits in `v{current}` with NO live
-    * dir — and a scan of the live tree would SILENTLY drop its rows (the
-    * one partial-data window in the protocol; flat tables fail loudly
-    * instead because their whole snapshot dir is gone). Every read path
-    * calls this first: one `exists` on the in-flight version dir answers
-    * the steady state; when missing-live entries are found, a HEALTHY
-    * writer mid-swap is identified by FRESHNESS (each retire rename
-    * touches the in-flight dir's mtime) and left alone; a state stale
-    * past [[HealGraceMs]] is a crashed writer — recovered inline, epoch
-    * bumped, so every process re-probes. Trade-off, documented: a live
-    * writer stalled longer than the grace inside its rename window can
-    * have its swap rolled back under it; it then fails its stage-in
-    * rename LOUDLY and retries — reader correctness is bought with a
-    * writer retry, never silence (swapBuckets checks for a reappeared
-    * live dir before AND after the stage-in rename, because a plain
-    * rename onto a restored dir would silently nest instead of failing).
-    * Hosts with multi-second IO stalls can widen the window with
-    * `-Dgraft.heal.graceMs=<millis>`. */
-  private[graft] def HealGraceMs: Long =
-    sys.props.get("graft.heal.graceMs").flatMap(s =>
-      scala.util.Try(s.toLong).toOption).getOrElse(3000L)
-
-  private[graft] def healCrashedSwap(spark: SparkSession,
-      path: String): Unit =
-    healCrashedSwap(spark, new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-
-  private[graft] def healCrashedSwap(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    import graft.catalog.Catalog
-    val inFlight = Catalog.versionDir(path, Catalog.readPointer(fs, path))
-    val st =
-      try { if (!fs.exists(inFlight)) return else fs.getFileStatus(inFlight) }
-      catch { case _: java.io.FileNotFoundException => return }
-    // freshness gates the verdict, not a wait loop: every retire rename
-    // updates the in-flight dir's mtime, so a FRESH entry is a live
-    // writer mid-swap — reads give it grace and proceed (racing a
-    // healthy swap is the rename-layout's known listing window, closed
-    // by the writer within ms); an entry stale past HealGraceMs with a
-    // missing live dir is a crashed writer, recovered inline.
-    if (System.currentTimeMillis() - st.getModificationTime < HealGraceMs)
-      return
-    val missing = fs.listStatus(inFlight).map(_.getPath)
-      .exists(p => p.getName.startsWith(s"$BucketCol=") &&
-        !fs.exists(new Path(path, p.getName)))
-    if (missing) recoverAbortedSwap(spark, fs, path)
-  }
-
-  /** Roll back a swap that crashed before its pointer write: entries under
-    * `v{current}` whose live bucket dir is MISSING were retired but never
-    * replaced — restore them so the pruned scan reads pre-merge data.
-    * Entries whose live dir exists are aborted-attempt leftovers handled at
-    * the next retire. */
-  private[graft] def recoverAbortedSwap(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    import graft.catalog.Catalog
-    val cur = Catalog.readPointer(fs, path)
-    // sweep stranded swap claims: one for a COMPLETED transition
-    // (version < pointer — the claimant crashed between its pointer
-    // write and the release) is garbage unconditionally; one for the
-    // in-flight transition is a crashed mid-swap claimant only once it
-    // ages past the heal grace — younger claims belong to a LIVE
-    // concurrent writer and must be left to win or fail on their own
-    val hist = Catalog.historyDir(path)
-    if (fs.exists(hist)) fs.listStatus(hist).map(_.getPath)
-      .filter(_.getName.startsWith("_swap_claim_v")).foreach { c =>
-        val v = c.getName.stripPrefix("_swap_claim_v").toIntOption
-        val now = System.currentTimeMillis()
-        // the in-flight claim is swept only when BOTH heartbeats are
-        // stale: the claim file (refreshed per retire rename) AND the
-        // in-flight version dir (touched by each retire landing in it)
-        // — a live writer keeps at least one fresh; a claimant that
-        // crashed before its first retire has no version dir and the
-        // claim's own age decides
-        def dirStale: Boolean = {
-          val d = Catalog.versionDir(path, cur)
-          try now - fs.getFileStatus(d).getModificationTime > HealGraceMs
-          catch { case _: java.io.IOException => true } // no dir yet
-        }
-        val stale = v.exists(_ < cur) ||
-          (now - fs.getFileStatus(c).getModificationTime > HealGraceMs &&
-            dirStale)
-        if (stale) fs.delete(c, false)
-      }
-    val inFlight = Catalog.versionDir(path, cur)
-    if (!fs.exists(inFlight)) return
-    // the one same-version mutation in the protocol: bucket dirs (and
-    // their _dv sidecars) move without a pointer advance — the cached
-    // probe for this version may describe the crashed writer's
-    // half-swapped state. Bump + invalidate whenever a missing live
-    // entry was DETECTED (not only when a restore rename succeeded: a
-    // failed restore leaves the tree half-swapped, and serving the
-    // pre-recovery probe for it would hide exactly that). The in-JVM
-    // invalidate handles our own readers; the epoch bump makes the
-    // mutation observable to OTHER processes, whose probe caches key on
-    // (path, version, epoch).
-    var missingSeen = false
-    try {
-      fs.listStatus(inFlight).map(_.getPath)
-        .filter(_.getName.startsWith(s"$BucketCol=")).foreach { retired =>
-          val dst = new Path(path, retired.getName)
-          if (!fs.exists(dst)) {
-            missingSeen = true
-            // a failed restore rename must surface, not be dropped: the
-            // table would keep serving with the bucket's rows missing
-            if (!fs.rename(retired, dst))
-              throw new IllegalStateException(
-                s"crash recovery could not restore $dst from $retired")
-          }
-        }
-    } finally if (missingSeen) {
-      Catalog.bumpRecoveryEpoch(fs, path)
-      graft.layout.ReadProbeCache.invalidate(path)
-    }
-  }
+  /** The retire set of a bucket swap: the touched `gbucket=` dirs. */
+  private[graft] def bucketRetire(touched: Seq[Int])
+      : graft.layout.SwapProtocol.Children =
+    graft.layout.SwapProtocol.Children(touched.map(b => s"$BucketCol=$b"))
 
   /** Reconstruct table version `v` (bucket column retained). Version v of
     * bucket b is the EARLIEST retire entry `>= v` that holds b — that copy
@@ -608,7 +307,7 @@ object PartitionedMerge {
     import graft.catalog.Catalog
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = Catalog.readPointer(fs, path)
+    val cur = SwapProtocol.readPointer(fs, path)
     require(v >= 1 && v <= cur,
       s"version $v out of range for $path (current = $cur)")
     def hasData(p: Path) =
@@ -617,7 +316,7 @@ object PartitionedMerge {
     // window read() heals; historical versions are immune (a crashed
     // v{cur} retire entry holds the bucket's state AT cur, which is
     // exactly what reconstruction of any v <= cur should use)
-    if (v == cur) healCrashedSwap(spark, path)
+    if (v == cur) graft.layout.SwapProtocol.healCrashedSwap(spark, path)
     if (v == cur)
       return fs.listStatus(new Path(path)).map(_.getPath)
         .filter(p => p.getName.startsWith(s"$BucketCol=") &&
@@ -625,7 +324,7 @@ object PartitionedMerge {
         .filter(hasData)
         .map(p => (p.getName, path, p)).toSeq
     val missing = (v until cur).filterNot(w =>
-      fs.exists(Catalog.versionDir(path, w)))
+      fs.exists(SwapProtocol.versionDir(path, w)))
     require(missing.isEmpty,
       s"version $v of $path was pruned from the log (missing transitions: " +
         missing.mkString(", ") + ")")
@@ -633,7 +332,7 @@ object PartitionedMerge {
     def admitted(name: String) = only.forall(_.contains(name))
     val chosen = scala.collection.mutable.LinkedHashMap.empty[String, (String, Path)]
     (v until cur).foreach { w =>
-      val vdir = Catalog.versionDir(path, w)
+      val vdir = SwapProtocol.versionDir(path, w)
       fs.listStatus(vdir).map(_.getPath)
         .filter(p => p.getName.startsWith(s"$BucketCol=") &&
           admitted(p.getName)).foreach { p =>
@@ -706,8 +405,8 @@ object PartitionedMerge {
     require(targetFileSize > 0, "targetFileSize must be positive")
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAbortedSwap(spark, fs, path)
-    val stagedAgainst = graft.catalog.Catalog.readPointer(fs, path)
+    val stagedAgainst =
+      graft.layout.SwapProtocol.recoverAbortedSwap(spark, fs, path)
     val perBucket = fs.listStatus(new Path(path)).map(_.getPath)
       .filter(_.getName.startsWith(s"$BucketCol="))
       .map { p =>
@@ -738,8 +437,8 @@ object PartitionedMerge {
     salted.repartition(col(BucketCol), col("__graft_salt"))
       .drop("__graft_salt")
       .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmp)
-    swapBuckets(spark, fs, path, tmp, touched, keepVersions,
-      Some(stagedAgainst))
+    graft.layout.SwapProtocol.commit(spark, fs, path, new Path(tmp),
+      bucketRetire(touched), keepVersions, Some(stagedAgainst))
     touched
   }
 
@@ -759,8 +458,8 @@ object PartitionedMerge {
     require(targetFileSize > 0, "targetFileSize must be positive")
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAbortedSwap(spark, fs, path)
-    val stagedAgainst = graft.catalog.Catalog.readPointer(fs, path)
+    val stagedAgainst =
+      graft.layout.SwapProtocol.recoverAbortedSwap(spark, fs, path)
     val buckets = liveBucketDirs(fs, path)
     if (buckets.isEmpty) return Nil
     val touched = buckets
@@ -778,8 +477,8 @@ object PartitionedMerge {
     val tmp = s"$path.tmp-merge-" +
       java.util.UUID.randomUUID().toString.take(8)
     staged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmp)
-    swapBuckets(spark, fs, path, tmp, touched, keepVersions,
-      Some(stagedAgainst))
+    graft.layout.SwapProtocol.commit(spark, fs, path, new Path(tmp),
+      bucketRetire(touched), keepVersions, Some(stagedAgainst))
     touched
   }
 }

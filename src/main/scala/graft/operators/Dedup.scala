@@ -921,7 +921,7 @@ object Dedup {
     val nAll = idx.count()
     if (nKept < nAll)
       graft.catalog.Catalog.overwritePath(spark, kept, idxDir,
-        operation = "OPTIMIZE", carryTags = true) // recipe tag survives
+        operation = "OPTIMIZE") // the recipe tag carries forward
     kept.unpersist(blocking = false)
     Seq((nAll - nKept, nKept)).toDF("n_removed", "n_kept")
   }

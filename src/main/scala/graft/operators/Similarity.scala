@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{Pin, Tables}
+import graft.layout.SwapProtocol
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline, and a sign-LSH-bucketed
@@ -481,7 +482,7 @@ object Similarity {
     val srcV = {
       val f = new org.apache.hadoop.fs.Path(postDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.catalog.Catalog.readPointer(f, postDir)
+      graft.layout.SwapProtocol.readPointer(f, postDir)
     }
     val postings =
       graft.catalog.Catalog.versionRead(spark, postDir, srcV)
@@ -544,7 +545,7 @@ object Similarity {
     val postDir = ivfPostDir(indexDir)
     val f = new org.apache.hadoop.fs.Path(postDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val curV = Catalog.readPointer(f, postDir)
+    val curV = SwapProtocol.readPointer(f, postDir)
     val cursor = Catalog
       .lastCommitTag(spark, s"$servingDir/centroids", IvfSourceVersionTag)
       .flatMap(_.toIntOption)

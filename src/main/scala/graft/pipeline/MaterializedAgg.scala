@@ -70,10 +70,7 @@ class MaterializedAgg(spark: SparkSession, cat: Catalog,
         .map(_.toLong).getOrElse(-1L)
     }
 
-  private def exists: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def exists: Boolean = Catalog.existsPath(spark, path)
 
   private def stateRead(): DataFrame =
     if (nBuckets.isDefined) PartitionedMerge.read(spark, path)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{Catalog, ChangeFeed}
 import graft.merge.PartitionedMerge
+import graft.layout.SwapProtocol
 
 /** Incrementally maintained materialized JOIN view — the denormalization
   * half of the materialized-view story ([[MaterializedAgg]] is the rollup
@@ -91,8 +92,8 @@ class MaterializedJoin(spark: SparkSession,
     * paths absorb idempotently. */
   def build(): Unit = {
     require(!exists, s"view already exists: $viewPath (use refresh)")
-    val fv = Catalog.readPointer(fs, factDir)
-    val dv = Catalog.readPointer(fs, dimDir)
+    val fv = SwapProtocol.readPointer(fs, factDir)
+    val dv = SwapProtocol.readPointer(fs, dimDir)
     require(fv >= 1 && dv >= 1, "both sources must exist before build")
     ChangeFeed.commitCursor(spark, factCursor, fv)
     ChangeFeed.commitCursor(spark, dimCursor, dv)

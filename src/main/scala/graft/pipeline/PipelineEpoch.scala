@@ -190,22 +190,20 @@ object PipelineEpoch {
         ".epoch-" + java.util.UUID.randomUUID().toString.take(8))
       val out = f.create(tmp, true)
       try out.write(manifest.getBytes("UTF-8")) finally out.close()
-      if (SwapProtocol.publishIfAbsent(f, tmp, new Path(dir, s"epoch_v$next"))) {
+      val root = new Path(dir)
+      if (SwapProtocol.step("epoch-publish", root)(SwapProtocol
+          .publishIfAbsent(f, tmp, new Path(dir, s"epoch_v$next")))) {
         // informational hint only (a crash or a racing lower write here
         // costs nothing — readers list manifests, never trust this)
-        try {
-          val hint = new Path(dir, "_current")
-          val htmp = new Path(dir, ".hint-" +
-            java.util.UUID.randomUUID().toString.take(8))
-          val ho = f.create(htmp, true)
-          try ho.write(next.toString.getBytes("UTF-8")) finally ho.close()
-          if (f.exists(hint)) f.delete(hint, false)
-          f.rename(htmp, hint)
-        } catch { case _: java.io.IOException => () }
+        try SwapProtocol.step("epoch-hint", root)(SwapProtocol
+          .writeSmallFile(f, new Path(dir, "_current"), next.toString))
+        catch { case _: java.io.IOException | _: IllegalStateException => () }
         // retention: bound the listing currentEpoch pays (same contract
         // as per-table keepVersions — old epochs age out)
-        listManifests(f, dir).filter(_ <= next - keepEpochs)
-          .foreach(v => f.delete(new Path(dir, s"epoch_v$v"), false))
+        SwapProtocol.step("epoch-prune", root) {
+          listManifests(f, dir).filter(_ <= next - keepEpochs)
+            .foreach(v => f.delete(new Path(dir, s"epoch_v$v"), false))
+        }
         return next
       }
       // lost the number race — renumber and retry

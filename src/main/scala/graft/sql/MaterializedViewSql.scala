@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{Catalog, ChangeFeed}
 import graft.pipeline.{MaterializedAgg, MaterializedJoin}
 import graft.pipeline.MaterializedAgg._
+import graft.layout.SwapProtocol
 
 /** SQL surface for incrementally maintained materialized views —
   * Databricks' `CREATE MATERIALIZED VIEW` / `REFRESH MATERIALIZED VIEW` /
@@ -236,7 +237,7 @@ object MaterializedViewSql {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(new org.apache.hadoop.fs.Path(viewDir)),
       s"materialized view target exists: $viewDir")
-    val srcVersion = Catalog.readPointer(fs, d.srcDir)
+    val srcVersion = SwapProtocol.readPointer(fs, d.srcDir)
     require(srcVersion >= 1, s"source does not exist: ${d.srcDir}")
     val ma = new MaterializedAgg(spark, cat, nameParts.head, nameParts(1),
       d.groupBy, d.measures)
@@ -262,7 +263,7 @@ object MaterializedViewSql {
     if (full) {
       // recompute from the live source and re-pin — the escape hatch for
       // non-retractable measures over non-append history
-      val cur = Catalog.readPointer(fs, d.srcDir)
+      val cur = SwapProtocol.readPointer(fs, d.srcDir)
       val state = d.filtered(spark.read.parquet(d.srcDir))
         .groupBy(d.groupBy.map(col): _*)
         .agg(d.measures.head.partialExpr,
@@ -442,10 +443,9 @@ object MaterializedViewSql {
         s"dimCols\t${j.dimCols.map(b64).mkString(",")}")
     }
     val p = new org.apache.hadoop.fs.Path(defFile(viewDir))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    graft.layout.SwapProtocol.writeSmallFile(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      lines.mkString("\n"))
   }
 
   private[sql] def readDefinition(spark: SparkSession,
@@ -454,15 +454,8 @@ object MaterializedViewSql {
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),
       s"$viewDir is not a materialized view (no definition sidecar)")
-    val in = f.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val b = new Array[Byte](4096)
-      var n = in.read(b)
-      while (n > 0) { buf.write(b, 0, n); n = in.read(b) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    val lines = text.split('\n').toSeq
+    val lines = graft.layout.SwapProtocol.readSmallFile(f, p)
+      .split('\n').toSeq
     def field(k: String) = lines.find(_.startsWith(s"$k\t")).get
       .split('\t')(1)
     field("kind") match {

@@ -694,7 +694,7 @@ case class GraftReplaceWhereCommand(nameParts: Seq[String], cond: String,
     if (bucketed) {
       // per-bucket region swap: CoW-delete the predicate region from its
       // buckets + hash-route the (staged, validated) insert rows, one
-      // swapBuckets version — untouched buckets keep their inodes
+      // bucket-swap version — untouched buckets keep their inodes
       graft.layout.BucketedDml.replaceWhere(spark, dir, cond, aligned)
       GraftSql.refreshTarget(spark, nameParts, dir)
       return Seq.empty

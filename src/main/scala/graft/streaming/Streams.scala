@@ -284,30 +284,16 @@ object Streams {
     val p = appliedMarker(checkpoint)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) -1L
-    else {
-      val in = f.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](32)
-        var n = in.read(b)
-        while (n > 0) { buf.write(b, 0, n); n = in.read(b) }
-        new String(buf.toByteArray, "UTF-8").trim.toLong
-      } finally in.close()
-    }
+    else graft.layout.SwapProtocol.readSmallFile(f, p).toLong
   }
 
   private[graft] def recordAppliedBatch(
       spark: org.apache.spark.sql.SparkSession, checkpoint: String,
       batchId: Long): Unit = {
     val p = appliedMarker(checkpoint)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(checkpoint,
-      "__graft_last_applied.tmp")
-    val out = f.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"could not commit batch marker $p")
+    graft.layout.SwapProtocol.writeSmallFile(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      batchId.toString)
   }
 
   /** Streaming exact dedup (at-least-once source → effectively-once

@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.catalog.{Catalog, ChangeFeed}
+import graft.layout.SwapProtocol
 
 /** Streaming SOURCE over a graft-versioned table — Delta's
   * `spark.readStream.format("delta")` parity (the reference platform
@@ -127,7 +128,7 @@ class GraftTableSourceProvider extends StreamSourceProvider
     val startingVersion = parameters.get("startingVersion").map { v =>
       val t = v.trim
       if (t.equalsIgnoreCase("latest"))
-        Catalog.readPointer(new Path(dir).getFileSystem(
+        SwapProtocol.readPointer(new Path(dir).getFileSystem(
           sqlContext.sparkSession.sparkContext.hadoopConfiguration),
           dir).toLong
       else {
@@ -184,20 +185,17 @@ class GraftTableSource(sqlContext: SQLContext, dir: String,
   private var lastEmitted: Option[Long] = admissionFile.flatMap { p =>
     val mfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!mfs.exists(p)) None
-    else {
-      val in = mfs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
+    else Some(graft.layout.SwapProtocol.readSmallFile(mfs, p).toLong)
   }.orElse(startingVersion) // with startingVersion there is no initial
   // snapshot to protect, so admission control may cap the FIRST batch too
 
   private def advanceCursor(v: Long): Unit = {
     lastEmitted = Some(v)
+    // whole or not at all: a torn cursor would fail `toLong` on restart
     admissionFile.foreach { p =>
-      val mfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = mfs.create(p, true)
-      try out.write(String.valueOf(v).getBytes("UTF-8")) finally out.close()
+      graft.layout.SwapProtocol.writeSmallFile(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+        String.valueOf(v))
     }
   }
 
@@ -231,7 +229,7 @@ class GraftTableSource(sqlContext: SQLContext, dir: String,
   }
 
   override def getOffset: Option[Offset] = {
-    val v = Catalog.readPointer(fs, dir)
+    val v = SwapProtocol.readPointer(fs, dir)
     if (v < 1) None
     else {
       val capped = lastEmitted match {

@@ -7,6 +7,7 @@ import org.scalacheck.rng.Seed
 import graft.catalog.Catalog
 import graft.layout.{BucketedDml, DeletionVectors}
 import graft.merge.PartitionedMerge
+import graft.layout.SwapProtocol
 
 /** [[DvProps]]' model-based lifecycle fuzz for the BUCKETED layout:
   * random sequences of merge-on-read DELETE/UPDATE, copy-on-write
@@ -46,7 +47,7 @@ class BucketedDmlProps extends SparkSuite {
       PartitionedMerge.write(df(state), dir, keys, nBuckets)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var recorded = Map(Catalog.readPointer(fs, dir) -> state)
+      var recorded = Map(SwapProtocol.readPointer(fs, dir) -> state)
       var movedOnce = false
 
       val ops = sample(Gen.listOfN(12, Gen.chooseNum(0, 9)), c * 99L)
@@ -114,10 +115,10 @@ class BucketedDmlProps extends SparkSuite {
         assert(live() == state,
           s"case $c op $i (#$op): live state diverged from the model " +
             s"(hasDv=${DeletionVectors.hasDv(spark, dir)})")
-        recorded += Catalog.readPointer(fs, dir) -> state
+        recorded += SwapProtocol.readPointer(fs, dir) -> state
       }
       // every retained version reconstructs, DV-applied per version
-      val cur = Catalog.readPointer(fs, dir)
+      val cur = SwapProtocol.readPointer(fs, dir)
       recorded.filter(_._1 > cur - 10).foreach { case (v, expect) =>
         val got = PartitionedMerge.readVersion(spark, dir, v).collect()
           .map(r => r.getAs[Long]("id") -> r.getAs[Long]("v")).toMap

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.layout.{BucketedDml, DeletionVectors}
 import graft.merge.PartitionedMerge
+import graft.layout.SwapProtocol
 
 /** Row-level DML on bucket-partitioned tables: merge-on-read deletion
   * vectors and copy-on-write rewrites must (a) agree with the logical
@@ -73,9 +74,9 @@ class BucketedDmlSpec extends SparkSuite {
     assert(PartitionedMerge.readVersion(spark, path, 1).count() == 100)
     assert(PartitionedMerge.readVersion(spark, path, 2).count() == 80)
     // re-deleting the same predicate is a no-op (no version minted)
-    val cur = graft.catalog.Catalog.readPointer(fs, path)
+    val cur = graft.layout.SwapProtocol.readPointer(fs, path)
     assert(BucketedDml.deleteWhereMor(spark, path, col("g") === 2) == 0)
-    assert(graft.catalog.Catalog.readPointer(fs, path) == cur)
+    assert(graft.layout.SwapProtocol.readPointer(fs, path) == cur)
   }
 
   test("MoR update: one commit, old files linked, moved keys re-route buckets") {
@@ -233,7 +234,7 @@ class BucketedDmlSpec extends SparkSuite {
       "insert must carry the DV sidecar forward")
     assert(got.filter(col("k").isin(101L, 102L)).count() == 2)
     // versioned: pre-insert state reconstructs
-    val cur = graft.catalog.Catalog.readPointer(fs, path)
+    val cur = graft.layout.SwapProtocol.readPointer(fs, path)
     assert(PartitionedMerge.readVersion(spark, path, cur - 1).count() == 39)
     // constraints gate bucketed inserts
     graft.catalog.Catalog.addConstraintPath(spark, path, "k_pos", "k > 0")
@@ -275,7 +276,7 @@ class BucketedDmlSpec extends SparkSuite {
     // RESTORE to the pre-delete version resurrects; commit stamped too
     Catalog.restorePath(spark, path, 2)
     assert(PartitionedMerge.read(spark, path).count() == 20)
-    val curV = Catalog.readPointer(new org.apache.hadoop.fs.Path(path)
+    val curV = SwapProtocol.readPointer(new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
     assert(Catalog.resolveTimestampVersion(spark, path, now()) == curV,
       "RESTORE's own commit must be timestamp-addressable")

@@ -76,7 +76,7 @@ class BucketedOptimizeGuardSpec extends SparkSuite {
     // contents unchanged; compaction is pure layout
     assert(rowsOf(PartitionedMerge.read(spark, dir), "k") == contentBefore)
     // and it is a real version: history gained an entry
-    val v = graft.catalog.Catalog.readPointer(fs, dir)
+    val v = graft.layout.SwapProtocol.readPointer(fs, dir)
     assert(v == 2, s"per-bucket OPTIMIZE must commit one version, at $v")
   }
 }

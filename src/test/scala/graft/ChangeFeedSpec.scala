@@ -97,7 +97,7 @@ class ChangeFeedSpec extends SparkSuite {
       .contains((2, 4)))
     srcEquals()
     // the mirror versions independently: bootstrap v1 + two applied syncs
-    assert(graft.catalog.Catalog.readPointer(
+    assert(graft.layout.SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dst).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dst) == 3)
   }

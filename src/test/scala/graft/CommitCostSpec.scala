@@ -172,4 +172,92 @@ class CommitCostSpec extends SparkSuite {
     // the drain added two more jobs that grow with the table's age.
     assert(n <= 4, s"one one-file ingest delta cost $n jobs (budget 4)")
   }
+
+  test("the transition claim's own filesystem operations in a flat commit") {
+    import org.apache.hadoop.fs.Path
+    import graft.layout.SwapProtocol
+    val dir = tmpDir("graft-commit-claim") + "/t"
+    Catalog.overwritePath(spark, (1L to 3L).toDF("id"), dir)
+    Catalog.overwritePath(spark, (1L to 4L).toDF("id"), dir)
+    val stage = new Path(dir + ".tmp-ops")
+    (1L to 5L).toDF("id").write.parquet(stage.toString)
+    val f = new CommitCostSpec.CountingFs
+    f.initialize(new java.net.URI("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    // (reads, writes) at the start of each step, then at the end
+    val marks =
+      scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
+    val key = new Path(dir).toUri.getPath
+    SwapProtocol.stepHooks.put(key, s => { marks.getOrElseUpdate(s,
+      (f.reads.get, f.writes.get)); () })
+    try SwapProtocol.commit(spark, f, dir, stage, SwapProtocol.WholeDir, 10,
+      Some(2), Seq(SwapProtocol.OperationTag -> "WRITE"))
+    finally { SwapProtocol.stepHooks.remove(key); () }
+    assert(marks.keys.toSeq == Seq("claim", "retire", "stage-in", "pointer",
+      "release"))
+    val claim = (marks("retire")._1 - marks("claim")._1,
+      marks("retire")._2 - marks("claim")._2)
+    // the claim: create the staged claim (+ the parent mkdirs the
+    // checksummed create makes), delete it after the link (`link(2)`
+    // itself is outside Hadoop's counters), then re-read the pointer
+    // (exists, open, and the checksummed open's status lookup) = 3 reads,
+    // 3 writes; the segment also holds the retire's own `exists` of the
+    // live dir. The release after the pointer write is one more delete,
+    // and the claim's create subsumes the `mkdirs(history)` the retire
+    // made before: net +3 reads, +3 writes per flat commit, and +2 reads
+    // for the token check below.
+    assert(claim == ((4L, 3L)), s"claim (reads, writes) = $claim")
+    // the pointer step: the holder check reads the claim's token (open
+    // and the checksummed open's status lookup; its heartbeat, a
+    // `setTimes`, is not an operation these counters see) = 2 reads, then
+    // the pointer write's exists, tmp create, delete and rename
+    val pointer = (marks("release")._1 - marks("pointer")._1,
+      marks("release")._2 - marks("pointer")._2)
+    assert(pointer == ((3L, 4L)), s"pointer (reads, writes) = $pointer")
+    val total = (f.reads.get, f.writes.get)
+    info(s"one flat commit: $total (reads, writes); steps at $marks")
+    // the whole commit: 12 reads and 9 writes before the claim existed
+    assert(total == ((17L, 12L)),
+      s"one flat commit's (reads, writes) = $total")
+    assert(SwapProtocol.readPointer(f, dir) == 3)
+  }
+}
+
+object CommitCostSpec {
+  /** The local filesystem counting operations as perfbench's traced runs
+    * do: creates, renames, deletes and mkdirs write; opens, listings and
+    * status lookups read. */
+  final class CountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+    import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream,
+      FileStatus, Path}
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val writes = new java.util.concurrent.atomic.AtomicLong()
+    override def create(f: Path,
+        permission: org.apache.hadoop.fs.permission.FsPermission,
+        overwrite: Boolean, bufferSize: Int, replication: Short,
+        blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+        : FSDataOutputStream = {
+      writes.incrementAndGet()
+      super.create(f, permission, overwrite, bufferSize, replication,
+        blockSize, progress)
+    }
+    override def rename(src: Path, dst: Path): Boolean = {
+      writes.incrementAndGet(); super.rename(src, dst)
+    }
+    override def delete(f: Path, recursive: Boolean): Boolean = {
+      writes.incrementAndGet(); super.delete(f, recursive)
+    }
+    override def mkdirs(f: Path): Boolean = {
+      writes.incrementAndGet(); super.mkdirs(f)
+    }
+    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+      reads.incrementAndGet(); super.open(f, bufferSize)
+    }
+    override def listStatus(f: Path): Array[FileStatus] = {
+      reads.incrementAndGet(); super.listStatus(f)
+    }
+    override def getFileStatus(f: Path): FileStatus = {
+      reads.incrementAndGet(); super.getFileStatus(f)
+    }
+  }
 }

@@ -6,6 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Chaos races over the version log (fixed-seed scalacheck): RANDOM pairs
   * of commit operations — overwrite, append, RESTORE, OPTIMIZE — fired
@@ -64,7 +65,7 @@ class ConcurrencyProps extends SparkSuite {
           s"append$tag"
         }
       case 2 => () => {
-        val v = math.max(1, Catalog.readPointer(
+        val v = math.max(1, SwapProtocol.readPointer(
           new org.apache.hadoop.fs.Path(dir).getFileSystem(
             spark.sparkContext.hadoopConfiguration), dir) - 1)
         Catalog.restorePath(spark, dir, v, 10)

@@ -5,15 +5,18 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.functions.col
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Concurrent-writer races on the version log. The protocol's claims:
   * optimistic `expectedVersion` turns a lost race into
-  * [[Catalog.ConcurrentCommitException]], the retire rename is the
-  * put-if-absent that serializes racers who both pass the check, staging
-  * dirs are unique per attempt (a loser can never clobber a winner's
-  * half-written files), and whatever happens the table is always EXACTLY
-  * one writer's dataset at every version — never a mix, never a loss
-  * that went unreported.
+  * [[Catalog.ConcurrentCommitException]], the `_swap_claim_v{N}`
+  * put-if-absent (a hard link, then a pointer re-read) serializes racers
+  * who both pass the check — a retire rename cannot: it returns true onto
+  * an existing log entry by nesting into it (CommitCrashSpec's D1 pins
+  * that race deterministically) — staging dirs are unique per attempt
+  * (a loser can never clobber a winner's half-written files), and
+  * whatever happens the table is always EXACTLY one writer's dataset at
+  * every version — never a mix, never a loss that went unreported.
   */
 class ConcurrencySpec extends SparkSuite {
   import spark.implicits._
@@ -188,7 +191,7 @@ class ConcurrencySpec extends SparkSuite {
       path, keys, nBuckets)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = Catalog.readPointer(fs, path)
+    val before = SwapProtocol.readPointer(fs, path)
     def upsert(src: org.apache.spark.sql.DataFrame): Unit = {
       PartitionedMerge.prunedMerge(spark, path, src, keys, nBuckets) {
         (pruned, s) =>
@@ -214,7 +217,7 @@ class ConcurrencySpec extends SparkSuite {
     assert(state(9L) == "v9" && state.size == 16)
     // two REAL versions landed and history is intact: the intermediate
     // version reconstructs to exactly one writer's merge applied
-    assert(Catalog.readPointer(fs, path) == before + 2)
+    assert(SwapProtocol.readPointer(fs, path) == before + 2)
     val mid = PartitionedMerge.readVersion(spark, path, before + 1)
       .drop(PartitionedMerge.BucketCol)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -223,7 +226,7 @@ class ConcurrencySpec extends SparkSuite {
     assert(aFirst || bFirst,
       s"intermediate version must be exactly one merge applied: $mid")
     // no stranded claim markers after both commits
-    val claims = fs.listStatus(Catalog.historyDir(path))
+    val claims = fs.listStatus(SwapProtocol.historyDir(path))
       .map(_.getPath.getName).filter(_.startsWith("_swap_claim_v"))
     assert(claims.isEmpty, s"stranded claims: ${claims.toSeq}")
   }

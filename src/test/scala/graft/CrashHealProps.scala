@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 import graft.merge.PartitionedMerge
 
 /** Crash-point fuzz for the bucket-swap recovery protocol: a writer can
@@ -40,8 +41,8 @@ class CrashHealProps extends SparkSuite {
         dir, Seq("k"), nBuckets)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cur = Catalog.readPointer(fs, dir)
-      val vdir = Catalog.versionDir(dir, cur)
+      val cur = SwapProtocol.readPointer(fs, dir)
+      val vdir = SwapProtocol.versionDir(dir, cur)
       fs.mkdirs(vdir)
       // simulate the crash: retire the masked buckets (those that exist —
       // sparse tables may not populate every bucket)
@@ -52,18 +53,18 @@ class CrashHealProps extends SparkSuite {
         live.foreach { b =>
           assert(fs.rename(b, new org.apache.hadoop.fs.Path(vdir, b.getName)))
         }
-        val epochBefore = Catalog.readRecoveryEpoch(fs, dir)
+        val epochBefore = SwapProtocol.readRecoveryEpoch(fs, dir)
         // age past the grace so reads classify it as crashed, not live
         fs.setTimes(vdir,
-          System.currentTimeMillis() - PartitionedMerge.HealGraceMs - 1000,
+          System.currentTimeMillis() - SwapProtocol.HealGraceMs - 1000,
           -1)
         // read-side heal: the very next read sees every row
         assert(PartitionedMerge.read(spark, dir).count() == rows,
           s"round $round: read lost rows after crash of ${live.size}/" +
             s"$nBuckets buckets")
-        assert(Catalog.readRecoveryEpoch(fs, dir) != epochBefore,
+        assert(SwapProtocol.readRecoveryEpoch(fs, dir) != epochBefore,
           s"round $round: a restoring heal must move the epoch")
-        assert(Catalog.readPointer(fs, dir) == cur,
+        assert(SwapProtocol.readPointer(fs, dir) == cur,
           s"round $round: healing must not advance the version")
         // and the table still writes normally afterwards (the writer-side
         // recovery path tolerates the healed state)

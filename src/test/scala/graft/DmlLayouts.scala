@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import graft.catalog.Catalog
 import graft.layout.DeletionVectors
 import graft.merge.PartitionedMerge
+import graft.layout.SwapProtocol
 
 /** The five table layouts row-level DML routes differently
   * (`Catalog.updateWherePath`'s routing table), built over the same rows
@@ -32,7 +33,7 @@ object DmlLayouts {
     DeletionVectors.readPath(spark, dir).select(cols.map(col): _*)
 
   def version(spark: SparkSession, dir: String): Int =
-    Catalog.readPointer(new org.apache.hadoop.fs.Path(dir)
+    SwapProtocol.readPointer(new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
 
   /** A table name for `layout` (letters and underscores only). */

@@ -6,6 +6,7 @@ import org.scalacheck.rng.Seed
 
 import graft.catalog.Catalog
 import graft.layout.DeletionVectors
+import graft.layout.SwapProtocol
 
 /** Model-based fuzz of the deletion-vector lifecycle composed with every
   * other table op — [[VersionLogProps]]' harness with merge-on-read DML
@@ -47,7 +48,7 @@ class DvProps extends SparkSuite {
       if (c % 2 == 1) cat.enableDeletionVectors("gold", tbl)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var recorded = Map(Catalog.readPointer(fs, dir) -> state)
+      var recorded = Map(SwapProtocol.readPointer(fs, dir) -> state)
 
       val ops = sample(Gen.listOfN(10, Gen.chooseNum(0, 7)), c * 77L)
       ops.zipWithIndex.foreach { case (op, i) =>
@@ -90,11 +91,11 @@ class DvProps extends SparkSuite {
           s"case $c op $i (#$op): live state diverged from the model " +
             s"(dvMode=${DeletionVectors.isEnabled(spark, dir)}, " +
             s"hasDv=${DeletionVectors.hasDv(spark, dir)})")
-        recorded += Catalog.readPointer(fs, dir) -> state
+        recorded += SwapProtocol.readPointer(fs, dir) -> state
       }
       // every retained version reconstructs (DV-applied where a retired
       // version carries its own sidecar)
-      val cur = Catalog.readPointer(fs, dir)
+      val cur = SwapProtocol.readPointer(fs, dir)
       recorded.filter(_._1 > cur - 10).foreach { case (v, expect) =>
         val got = cat.readVersion("gold", tbl, v).collect()
           .map(r => r.getAs[Long]("id") -> r.getAs[Long]("v")).toMap

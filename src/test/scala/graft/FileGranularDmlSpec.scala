@@ -49,12 +49,12 @@ class FileGranularDmlSpec extends SparkSuite {
     // a real version: pre-delete state reconstructs
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(graft.catalog.Catalog.readPointer(fs, dir) == 2)
+    assert(graft.layout.SwapProtocol.readPointer(fs, dir) == 2)
     assert(spark.read.parquet(
       graft.catalog.Catalog.resolveVersionPath(spark, dir, 1)).count() == 400)
     // no-match delete commits nothing
     assert(FileGranularDml.deleteWhere(spark, dir, col("id") === -1L) == 0)
-    assert(graft.catalog.Catalog.readPointer(fs, dir) == 2)
+    assert(graft.layout.SwapProtocol.readPointer(fs, dir) == 2)
   }
 
   test("UPDATE rewrites matched files only; non-matching rows in them pass through") {
@@ -145,6 +145,6 @@ class FileGranularDmlSpec extends SparkSuite {
     assert(rowsOf(spark.read.parquet(dir), "id") == before)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(graft.catalog.Catalog.readPointer(fs, dir) == 1)
+    assert(graft.layout.SwapProtocol.readPointer(fs, dir) == 1)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Versioned INSERT: `Catalog.append` (link-based append commit) and the
   * `INSERT INTO / OVERWRITE` SQL lowering — version semantics, column
@@ -216,7 +217,7 @@ class InsertSpec extends SparkSuite {
     // it is a real version: the pre-append state reconstructs
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Catalog.readPointer(fs, dir) == 2)
+    assert(SwapProtocol.readPointer(fs, dir) == 2)
     assert(spark.read.parquet(
       Catalog.resolveVersionPath(spark, dir, 1)).count() == 3)
     // a missing partition column is schema drift, rejected loudly

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
-import graft.layout.{DeletionVectors, ReadProbeCache}
+import graft.layout.{DeletionVectors, ReadProbeCache, SwapProtocol}
 import graft.merge.PartitionedMerge
 
 /** The per-version read-probe cache (round 8): correctness of the
@@ -63,10 +63,10 @@ class ReadProbeCacheSpec extends SparkSuite {
     // re-prime the stale answer for the CURRENT version, then move the
     // pointer the way a foreign commit would
     ReadProbeCache.invalidate(dir)
-    val vBefore = Catalog.readPointer(fs, dir)
-    fs.mkdirs(Catalog.historyDir(dir))
+    val vBefore = SwapProtocol.readPointer(fs, dir)
+    fs.mkdirs(SwapProtocol.historyDir(dir))
     val out = fs.create(new org.apache.hadoop.fs.Path(
-      Catalog.historyDir(dir), "_current"), true)
+      SwapProtocol.historyDir(dir), "_current"), true)
     try out.write(String.valueOf(vBefore + 1).getBytes("UTF-8"))
     finally out.close()
     val pr = ReadProbeCache.probe(spark, dir)
@@ -93,8 +93,8 @@ class ReadProbeCacheSpec extends SparkSuite {
     assert(ReadProbeCache.probe(spark, dir).dvDirs.isEmpty,
       "sanity: version unchanged + epoch unchanged = cached answer")
     // the foreign recovery's epoch bump makes the mutation observable
-    fs.mkdirs(Catalog.historyDir(dir))
-    Catalog.bumpRecoveryEpoch(fs, dir)
+    fs.mkdirs(SwapProtocol.historyDir(dir))
+    SwapProtocol.bumpRecoveryEpoch(fs, dir)
     assert(ReadProbeCache.probe(spark, dir).dvDirs.nonEmpty,
       "an epoch bump by another process must force a re-probe at the " +
         "same pointer version")
@@ -111,8 +111,8 @@ class ReadProbeCacheSpec extends SparkSuite {
     assert(PartitionedMerge.read(spark, dir).count() == 40)
     // simulate the crash: one bucket retired into v{cur}, pointer never
     // advanced — version AND epoch are unchanged, so no cache key moves
-    val cur = Catalog.readPointer(fs, dir)
-    val vdir = Catalog.versionDir(dir, cur)
+    val cur = SwapProtocol.readPointer(fs, dir)
+    val vdir = SwapProtocol.versionDir(dir, cur)
     fs.mkdirs(vdir)
     val bucket = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath).filter(_.getName.startsWith("gbucket=")).head
@@ -129,11 +129,11 @@ class ReadProbeCacheSpec extends SparkSuite {
     // age the state past the grace: now it reads as a CRASHED writer and
     // the very next read self-heals, seeing every row again
     fs.setTimes(vdir,
-      System.currentTimeMillis() - PartitionedMerge.HealGraceMs - 1000, -1)
+      System.currentTimeMillis() - SwapProtocol.HealGraceMs - 1000, -1)
     assert(PartitionedMerge.read(spark, dir).count() == 40,
       "a read past the crashed-swap grace returned partial data")
     assert(fs.exists(bucket), "healing must restore the live bucket dir")
-    assert(Catalog.readRecoveryEpoch(fs, dir).nonEmpty,
+    assert(SwapProtocol.readRecoveryEpoch(fs, dir).nonEmpty,
       "read-side healing must bump the epoch for other processes")
   }
 
@@ -144,28 +144,28 @@ class ReadProbeCacheSpec extends SparkSuite {
       dir, Seq("k"), 4)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Catalog.readRecoveryEpoch(fs, dir) == "",
+    assert(SwapProtocol.readRecoveryEpoch(fs, dir) == "",
       "a never-recovered table has no epoch")
     // nothing to restore: no in-flight retire entries → no epoch bump
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    assert(Catalog.readRecoveryEpoch(fs, dir) == "")
+    SwapProtocol.recoverAbortedSwap(spark, fs, dir)
+    assert(SwapProtocol.readRecoveryEpoch(fs, dir) == "")
     // simulate a crash after retire, before stage-in: one live bucket dir
     // moved under v{cur} and never replaced
-    val cur = Catalog.readPointer(fs, dir)
-    val vdir = Catalog.versionDir(dir, cur)
+    val cur = SwapProtocol.readPointer(fs, dir)
+    val vdir = SwapProtocol.versionDir(dir, cur)
     fs.mkdirs(vdir)
     val bucket = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath).filter(_.getName.startsWith("gbucket=")).head
     assert(fs.rename(bucket,
       new org.apache.hadoop.fs.Path(vdir, bucket.getName)))
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    val epoch1 = Catalog.readRecoveryEpoch(fs, dir)
+    SwapProtocol.recoverAbortedSwap(spark, fs, dir)
+    val epoch1 = SwapProtocol.readRecoveryEpoch(fs, dir)
     assert(epoch1.nonEmpty, "a restoring recovery must bump the epoch")
     assert(fs.exists(bucket), "the retired bucket must be rolled back")
     assert(PartitionedMerge.read(spark, dir).count() == 40)
     // idempotent re-run restores nothing → epoch unchanged
-    PartitionedMerge.recoverAbortedSwap(spark, fs, dir)
-    assert(Catalog.readRecoveryEpoch(fs, dir) == epoch1)
+    SwapProtocol.recoverAbortedSwap(spark, fs, dir)
+    assert(SwapProtocol.readRecoveryEpoch(fs, dir) == epoch1)
   }
 
   test("a stale crashed-bump tmp neither wedges the epoch read nor " +
@@ -176,7 +176,7 @@ class ReadProbeCacheSpec extends SparkSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a bump that crashed between create(tmp) and rename: the
     // tmp file exists, aged past the reader's staleness gate
-    val hist = Catalog.historyDir(dir)
+    val hist = SwapProtocol.historyDir(dir)
     fs.mkdirs(hist)
     val tmp = new org.apache.hadoop.fs.Path(hist,
       "_recovery_epoch.tmp-dead0000")
@@ -187,13 +187,13 @@ class ReadProbeCacheSpec extends SparkSuite {
     // recovered), NOT an uncacheable "unreadable-" sentinel after the
     // full retry budget
     val t0 = System.nanoTime()
-    val epoch = Catalog.readRecoveryEpoch(fs, dir)
+    val epoch = SwapProtocol.readRecoveryEpoch(fs, dir)
     val ms = (System.nanoTime() - t0) / 1e6
     assert(epoch == "", s"stale tmp wedged the epoch read: got '$epoch'")
     assert(ms < 150, f"epoch read spun the retry budget ($ms%.0f ms)")
     // a real bump succeeds and sweeps the orphan
-    Catalog.bumpRecoveryEpoch(fs, dir)
-    assert(Catalog.readRecoveryEpoch(fs, dir).nonEmpty)
+    SwapProtocol.bumpRecoveryEpoch(fs, dir)
+    assert(SwapProtocol.readRecoveryEpoch(fs, dir).nonEmpty)
     assert(!fs.exists(tmp), "crashed-bump orphan must be reclaimed")
   }
 }

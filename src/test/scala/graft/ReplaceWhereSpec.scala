@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Partition-scoped overwrite ([[Catalog.replacePartitionValuesPath]] —
   * Delta `replaceWhere`'s safe core): listed partitions are replaced or
@@ -41,7 +42,7 @@ class ReplaceWhereSpec extends SparkSuite {
     // one versioned commit: version advanced once, old state readable
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = Catalog.readPointer(f, dir)
+    val v = SwapProtocol.readPointer(f, dir)
     val before = Catalog.versionRead(spark, dir, v - 1)
     assert(before.count() == 4)
   }
@@ -78,10 +79,10 @@ class ReplaceWhereSpec extends SparkSuite {
     mkTable(dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = Catalog.readPointer(f, dir)
+    val v0 = SwapProtocol.readPointer(f, dir)
     Catalog.replacePartitionValuesPath(spark,
       Seq.empty[(Long, String)].toDF("id", "p"), dir, "p", Nil)
-    assert(Catalog.readPointer(f, dir) == v0) // no empty version
+    assert(SwapProtocol.readPointer(f, dir) == v0) // no empty version
     intercept[IllegalArgumentException] {
       Catalog.replacePartitionValuesPath(spark,
         Seq((1L, "a")).toDF("id", "p"), dir, "id", Seq("1"))

@@ -7,7 +7,9 @@ import graft.layout.SwapProtocol
 /** The put-if-absent publish primitive in isolation: kernel-atomic on
   * the local FS (hard link), exactly-one-winner under a thread race,
   * and OBSERVABLE when it ever degrades to the non-atomic rename path
-  * (the degradation counter must stay zero on a healthy local FS). */
+  * (the degradation counter must stay zero on a healthy local FS). And
+  * the protocol's ownership: no code outside it renames or reads a small
+  * file by hand. */
 class SwapProtocolSpec extends SparkSuite {
 
   private def fs(dir: String) = new Path(dir)
@@ -60,5 +62,24 @@ class SwapProtocolSpec extends SparkSuite {
     assert(SwapProtocol.publishIfAbsent(f, stage(dir, "first"), target))
     assert(!SwapProtocol.publishIfAbsent(f, stage(dir, "second"), target))
     assert(SwapProtocol.readSmallFile(f, target) == "first")
+  }
+
+  test("the protocol owns every rename and small-file read in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "SwapProtocol.scala").toSeq
+    assert(files.size > 50, s"scanned only ${files.size} files under $root")
+    val offenders = files.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i)
+            if l.contains(".rename(") || l.contains("fromInputStream") =>
+          s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "renames and small-file reads go through " +
+      "SwapProtocol (move, writeSmallFile, readSmallFile):\n" +
+      offenders.mkString("\n"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Streaming INTO a graft table (`writeStream.format("graft-table")`):
   * per-epoch versioned commits, epoch-replay idempotence, complete-mode
@@ -37,7 +38,7 @@ class TableSinkSpec extends SparkSuite {
     drainOnce(stream, dstDir, ckpt)
     assert(rowsOf(graft.layout.DeletionVectors.readPath(spark, dstDir), "id").map(_.head) ==
       Seq(1L, 2L), "first drain must land the initial snapshot")
-    val v1 = Catalog.readPointer(
+    val v1 = SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dstDir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dstDir)
 
@@ -48,11 +49,11 @@ class TableSinkSpec extends SparkSuite {
 
     // an idle drain commits nothing: no empty versions pile up
     // (AvailableNow with no new offset runs zero batches)
-    val v2 = Catalog.readPointer(
+    val v2 = SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dstDir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dstDir)
     drainOnce(stream, dstDir, ckpt)
-    val v3 = Catalog.readPointer(
+    val v3 = SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dstDir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dstDir)
     assert(v2 > v1, "second drain must commit a new version")

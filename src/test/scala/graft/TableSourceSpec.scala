@@ -176,12 +176,12 @@ class TableSourceSpec extends SparkSuite {
     assert(rowsOf(cat.read("gold", "s4_out"), "id").map(_.last) ==
       Seq(20L, 40L, 60L))
     // no new upstream data: replay adds nothing, commits nothing
-    val v = graft.catalog.Catalog.readPointer(
+    val v = graft.layout.SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dstDir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dstDir)
     pump()
     assert(cat.read("gold", "s4_out").count() == 3)
-    assert(graft.catalog.Catalog.readPointer(
+    assert(graft.layout.SwapProtocol.readPointer(
       new org.apache.hadoop.fs.Path(dstDir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dstDir) == v,
       "empty replay must not mint a version")

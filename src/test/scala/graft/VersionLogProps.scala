@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.catalog.Catalog
+import graft.layout.SwapProtocol
 
 /** Model-based fuzz of the snapshot/version-log lifecycle — the layer
   * every other component (MERGE, MVs, CDF, time travel) rides on. A
@@ -42,7 +43,7 @@ class VersionLogProps extends SparkSuite {
       var state = sample(rowsGen(1, 20), c * 10L)
       cat.overwriteSnapshot(df(state), "gold", tbl)
       cat.register("gold", tbl)
-      var recorded = Map(Catalog.readPointer(
+      var recorded = Map(SwapProtocol.readPointer(
         new org.apache.hadoop.fs.Path(cat.path("gold", tbl))
           .getFileSystem(spark.sparkContext.hadoopConfiguration),
         cat.path("gold", tbl)) -> state)
@@ -77,11 +78,11 @@ class VersionLogProps extends SparkSuite {
         }
         assert(live() == state,
           s"case $c op $i (#$op): live state diverged from the model")
-        recorded += Catalog.readPointer(fs, cat.path("gold", tbl)) -> state
+        recorded += SwapProtocol.readPointer(fs, cat.path("gold", tbl)) -> state
       }
       // every recorded version still inside the retention window must
       // reconstruct exactly what the model says it contained
-      val cur = Catalog.readPointer(fs, cat.path("gold", tbl))
+      val cur = SwapProtocol.readPointer(fs, cat.path("gold", tbl))
       recorded.filter(_._1 > cur - 10).foreach { case (v, expect) =>
         val got = cat.readVersion("gold", tbl, v).collect()
           .map(r => r.getAs[Long]("id") -> r.getAs[Long]("v")).toMap
