@@ -132,8 +132,7 @@ class Catalog(spark: SparkSession, warehouse: String,
       commitTag: Option[(String, String)] = None): Unit = {
     Catalog.overwritePath(spark, df, path(layer, table), partitionBy,
       keepVersions, allowSchemaChange, commitTag = commitTag)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
     if (partitionBy.isEmpty) maybeAutoCompact(layer, table)
   }
 
@@ -175,8 +174,7 @@ class Catalog(spark: SparkSession, warehouse: String,
     * O(new data + file-count metadata), never O(table). */
   def append(df: DataFrame, layer: String, table: String): Unit = {
     Catalog.appendPath(spark, df, path(layer, table), keepVersions)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
     maybeAutoCompact(layer, table)
   }
 
@@ -211,8 +209,7 @@ class Catalog(spark: SparkSession, warehouse: String,
       partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): Unit = {
     Catalog.compactPath(spark, path(layer, table), targetFileSize,
       keepVersions, partitionBy, zorderBy)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
   }
 
   /** Partition-scoped OPTIMIZE (Delta `OPTIMIZE t WHERE <pred>`):
@@ -222,8 +219,7 @@ class Catalog(spark: SparkSession, warehouse: String,
   def compactWhere(layer: String, table: String, predicate: String): Unit = {
     Catalog.compactWherePath(spark, path(layer, table), predicate,
       keepVersions)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
   }
 
   /** Delta RESTORE's job: make version `v`'s contents the LIVE snapshot, as
@@ -232,8 +228,7 @@ class Catalog(spark: SparkSession, warehouse: String,
     * a full bucket-partitioned snapshot. */
   def restore(layer: String, table: String, v: Int): Unit = {
     Catalog.restorePath(spark, path(layer, table), v, keepVersions)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
   }
 
   /** Delta `DEEP CLONE`: an independent physical copy of the LIVE
@@ -415,19 +410,32 @@ class Catalog(spark: SparkSession, warehouse: String,
     refreshed(layer, table, Catalog.updateWherePath(spark, path(layer, table),
       cond, assign, keepVersions))
 
+  /** MERGE through [[Catalog.mergePath]], then [[overwriteSnapshot]]'s
+    * registration refresh and auto-compaction. */
+  def merge(layer: String, table: String, source: DataFrame,
+      keys: Seq[String], commitTag: Option[(String, String)] = None)(
+      fn: (DataFrame, DataFrame) => DataFrame): Unit = {
+    Catalog.mergePath(spark, path(layer, table), source, keys,
+      keepVersions = keepVersions, commitTag = commitTag)(fn)
+    refresh(layer, table)
+    maybeAutoCompact(layer, table)
+  }
+
   private def refreshed(layer: String, table: String, n: Long): Long = {
-    if (n > 0 && tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    if (n > 0) refresh(layer, table)
     n
   }
+
+  /** A registered table's cached file listing outlives the commit. */
+  private def refresh(layer: String, table: String): Unit =
+    if (tableExists(layer, table)) spark.catalog.refreshTable(s"$layer.$table")
 
   /** Fold the table's deletion-vector sidecar into rewritten files
     * (Delta `REORG … APPLY (PURGE)`). */
   def materializeDeletes(layer: String, table: String): Unit = {
     graft.layout.DeletionVectors.materialize(spark, path(layer, table),
       keepVersions)
-    if (tableExists(layer, table))
-      spark.catalog.refreshTable(s"$layer.$table")
+    refresh(layer, table)
   }
 }
 
@@ -1113,6 +1121,14 @@ object Catalog {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(srcDir).getFileSystem(conf)
     val kind = if (shallow) "SHALLOW CLONE" else "DEEP CLONE"
+    val dp = new Path(dstDir)
+    require(!fs.exists(dp), s"$kind destination exists: $dstDir")
+    // the bucket-layout manifest is a property of the table, not of one
+    // version: without it the clone could route no INSERT and no merge
+    graft.merge.PartitionedMerge.readBucketMeta(spark, srcDir).foreach {
+      case (keys, n) =>
+        graft.merge.PartitionedMerge.writeBucketMeta(spark, dstDir, keys, n)
+    }
     // `VERSION AS OF` clone of a BUCKETED table: a historical version is
     // not one directory but a per-bucket selection across the live dir
     // and retire entries — link/copy exactly those bucket dirs (each with
@@ -1120,8 +1136,6 @@ object Catalog {
     // state). O(table file count) metadata for a shallow clone, like the
     // live-dir case.
     if (version.nonEmpty && isBucketedLayout(fs, srcDir)) {
-      val dp = new Path(dstDir)
-      require(!fs.exists(dp), s"$kind destination exists: $dstDir")
       val entries = graft.merge.PartitionedMerge.versionBucketDirs(
         spark, srcDir, version.get)
       fs.mkdirs(dp)
@@ -1143,9 +1157,8 @@ object Catalog {
       case None => srcDir
       case Some(v) => resolveVersionPath(spark, srcDir, v)
     }
-    val sp = new Path(resolvedSrc); val dp = new Path(dstDir)
+    val sp = new Path(resolvedSrc)
     require(fs.exists(sp), s"$kind source missing: $resolvedSrc")
-    require(!fs.exists(dp), s"$kind destination exists: $dstDir")
     if (shallow) linkTree(fs, conf, sp, dp)
     else require(org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp,
       false, false, conf), s"clone copy failed: $resolvedSrc -> $dstDir")
@@ -1769,6 +1782,64 @@ object Catalog {
             operation = if (assign.isEmpty) "DELETE" else "UPDATE")
         matched
       }
+    }
+  }
+
+  /** MERGE into the table at `dir`: `fn(target, source)` returns its new
+    * rows from the LOGICAL target (deletion vectors applied, no bucket
+    * column). The ONE place a merge picks its path, like
+    * [[updateWherePath]] for DML, from the layout the table records (read
+    * probe, `<dir>.buckets` manifest, [[partitionColsOf]]):
+    *
+    *   bucketed, key-local on the      PartitionedMerge.prunedMerge:
+    *     manifest's keys                 only the touched buckets
+    *   bucketed, any other merge       full rewrite, bucket column
+    *                                     recomputed from the manifest
+    *   hive-partitioned / flat         full rewrite in the same layout
+    *
+    * `keys`: the target columns of a key-local merge (a key's new rows
+    * depend only on its target and source rows); Nil when it is not (WHEN
+    * NOT MATCHED BY SOURCE). `sourceKeys`: the source's expressions for
+    * them (default: same-named columns). A pruned merge that moves a row
+    * into an untouched bucket is rewritten whole instead. `commitTag`
+    * rides whole-dir commits; a bucket swap has no tag store and refuses
+    * one. Returns the buckets a pruned merge rewrote (none for an empty
+    * source: no commit); Nil after a full rewrite. */
+  def mergePath(spark: SparkSession, dir: String, source: DataFrame,
+      keys: Seq[String], sourceKeys: Seq[org.apache.spark.sql.Column] = Nil,
+      keepVersions: Int = 10, allowSchemaChange: Boolean = false,
+      commitTag: Option[(String, String)] = None,
+      operation: String = "MERGE")(
+      fn: (DataFrame, DataFrame) => DataFrame): Seq[Int] = {
+    import graft.merge.PartitionedMerge.{BucketCol, RowsLeftTouchedBuckets,
+      bucketExpr, prunedMerge, readBucketMeta}
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pr = graft.layout.ReadProbeCache.probe(spark, f, dir)
+    val meta = if (!pr.isBucketed) None else Some(readBucketMeta(spark, dir)
+      .getOrElse(throw new IllegalArgumentException(s"MERGE into bucketed " +
+        s"table $dir requires its bucket-layout manifest (<path>.buckets)")))
+    // where each manifest key sits in `keys`: all of them, once each, prunes
+    val at = meta.toSeq.flatMap(_._1).map(k =>
+      keys.indexWhere(_.equalsIgnoreCase(k)))
+    val pruned = meta.nonEmpty && at.size == keys.size &&
+      !at.contains(-1) && at.distinct.size == at.size
+    require(!pruned || commitTag.isEmpty,
+      s"a bucket swap of $dir has no tag store for $commitTag")
+    val src = if (sourceKeys.isEmpty) keys.map(col) else sourceKeys
+    val touched =
+      if (!pruned) None
+      else try Some(prunedMerge(spark, dir, source, at.map(src),
+          keepVersions)(fn))
+        catch { case _: RowsLeftTouchedBuckets => None }
+    touched.getOrElse {
+      val out = fn(graft.layout.DeletionVectors.read(spark, dir, pr,
+        logical = true), source)
+      overwritePath(spark, meta.fold(out) { case (k, n) =>
+          out.withColumn(BucketCol, bucketExpr(k, n)) }, dir,
+        if (meta.nonEmpty) Seq(BucketCol) else partitionColsOf(f, dir),
+        keepVersions, allowSchemaChange, commitTag = commitTag,
+        operation = operation)
+      Nil
     }
   }
 }

@@ -80,8 +80,10 @@ object ChangeFeed {
     * bootstraps the mirror as a physical copy of the live snapshot and
     * pins the cursor; later calls apply ONLY the net changes since the
     * cursor (upsert the insert/update_postimage rows, anti-join out the
-    * deletes) and commit the mirror through its own snapshot swap — so the
-    * mirror is itself versioned and time-travelable. Returns the applied
+    * deletes) as a merge into the mirror ([[Catalog.mergePath]]: a
+    * snapshot swap, or a bucket swap of the touched buckets when the
+    * mirror was cloned from a bucketed source) — so the mirror is itself
+    * versioned and time-travelable. Returns the applied
     * (fromV, toV), or None when already in sync.
     *
     * Scale: per-sync cost is O(changes) for the feed (bucket-pruned on
@@ -99,8 +101,6 @@ object ChangeFeed {
       // between the pointer read and the copy)
       val cur = SwapProtocol.readPointer(f, srcDir)
       require(cur >= 1, s"$srcDir does not exist")
-      require(!f.exists(new Path(dstDir)),
-        s"mirror bootstrap: destination exists: $dstDir")
       Catalog.clonePath(spark, srcDir, dstDir)
       commitCursor(spark, cursorFile, cur)
       return Some((cur, cur))
@@ -109,21 +109,19 @@ object ChangeFeed {
       case (ch, from, to) =>
         val cached = ch.cache()
         try {
-          val upserts = cached
-            .filter(col(ChangeCol).isin("insert", "update_postimage"))
-            .drop(ChangeCol)
-          val deletes = cached.filter(col(ChangeCol) === "delete")
-            .select(keys.map(col): _*).distinct()
-          // DV-applied: a mirror bootstrapped by clonePath from a
-          // DV-bearing source carries the `_dv` sidecar; reading it raw
-          // would resurrect deleted rows into the first incremental sync
-          // (and the overwrite below drops the sidecar)
-          val dst = graft.layout.DeletionVectors.readPath(spark, dstDir)
-          val merged = dst
-            .join(deletes, keys, "left_anti")
-            .join(upserts.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(upserts.select(dst.columns.map(col): _*))
-          Catalog.overwritePath(spark, merged, dstDir, operation = "SYNC")
+          // key-local in the mirror's own layout; the target is the
+          // logical mirror (a cloned DV sidecar applied, never resurrected)
+          Catalog.mergePath(spark, dstDir, cached, keys,
+            operation = "SYNC") { (dst, changes) =>
+            val upserts = changes
+              .filter(col(ChangeCol).isin("insert", "update_postimage"))
+            val deletes = changes.filter(col(ChangeCol) === "delete")
+              .select(keys.map(col): _*).distinct()
+            dst
+              .join(deletes, keys, "left_anti")
+              .join(upserts.select(keys.map(col): _*), keys, "left_anti")
+              .unionByName(upserts.select(dst.columns.map(col): _*))
+          }
           commitCursor(spark, cursorFile, to)
           (from, to)
         } finally { cached.unpersist(); () }

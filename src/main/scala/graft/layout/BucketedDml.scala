@@ -36,7 +36,7 @@ import graft.merge.PartitionedMerge
   * from the table's `<path>.buckets` manifest
   * ([[PartitionedMerge.readBucketMeta]]); tables predating the manifest
   * keep rows in their original bucket (sound while key columns are not
-  * assigned — the manifest is backfilled by the next prunedMerge).
+  * assigned).
   *
   * Scale: the one driver-side collect per statement is the touched
   * bucket list (≤ nBuckets ints, bounded by construction). Positions
@@ -295,8 +295,8 @@ object BucketedDml {
     val (keys, n) = PartitionedMerge.readBucketMeta(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"INSERT INTO bucketed table $dir requires its bucket-layout " +
-          "manifest (<path>.buckets); run one PartitionedMerge.prunedMerge " +
-          "or rewrite via PartitionedMerge.write to record it"))
+          "manifest (<path>.buckets); rewrite via PartitionedMerge.write " +
+          "to record it"))
     // the write gate: generated/identity filled, strict schema-on-append
     // against the LOGICAL table (bucket column is layout, not data — an
     // insert never carries it)

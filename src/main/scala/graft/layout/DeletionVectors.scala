@@ -110,21 +110,31 @@ object DeletionVectors {
     * read on every call, not kept in [[ReadProbeCache]]: that cache's
     * (path, version, epoch) key repeats when a table is dropped and
     * recreated at the same path with another schema. */
-  def readPath(spark: SparkSession, dir: String): DataFrame = {
-    val pr = ReadProbeCache.probe(spark, dir)
-    if (pr.isBucketed)
+  def readPath(spark: SparkSession, dir: String): DataFrame =
+    read(spark, dir, ReadProbeCache.probe(spark, dir), logical = false)
+
+  /** [[readPath]] without the bucket column: the LOGICAL table, whatever
+    * its recorded layout — the frame `Catalog.mergePath` hands a merge. */
+  def readLogical(spark: SparkSession, dir: String): DataFrame =
+    read(spark, dir, ReadProbeCache.probe(spark, dir), logical = true)
+
+  private[graft] def read(spark: SparkSession, dir: String,
+      pr: ReadProbeCache.Probe, logical: Boolean): DataFrame =
+    if (pr.isBucketed) {
       // schema-safe for fully-emptied bucket trees (readRaw's sidecar
       // fallback) and keyed by (bucket, file, row)
-      graft.merge.PartitionedMerge.applyBucketDvs(spark, dir,
-        graft.merge.PartitionedMerge.readRaw(spark, dir))
-    else {
+      val raw = graft.merge.PartitionedMerge.readRaw(spark, dir)
+      val live =
+        if (pr.dvDirs.isEmpty) raw
+        else subtractBucketPositions(raw, bucketDvFrame(spark, pr.dvDirs))
+      if (logical) live.drop(graft.merge.PartitionedMerge.BucketCol) else live
+    } else {
       val data = graft.merge.PartitionedMerge.schemaOf(spark, dir)
         .fold(spark.read)(spark.read.schema(_)).parquet(dir)
       if (pr.dvDirs.isEmpty) data
       else subtractPositions(data,
         spark.read.parquet(pr.dvDirs.map(_.toString): _*))
     }
-  }
 
   /** LEFT ANTI join `data` against a position frame (`file_name`,
     * `row_index`) on the parquet `_metadata` columns — the read-side

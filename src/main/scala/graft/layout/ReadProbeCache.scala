@@ -53,21 +53,23 @@ private[graft] object ReadProbeCache {
   private def keyOf(path: String, v: Int, epoch: String) =
     path + "\u0000" + v + "\u0000" + epoch
 
-  def probe(spark: SparkSession, path: String): Probe = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def probe(spark: SparkSession, path: String): Probe =
+    probe(spark, new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+
+  private[graft] def probe(spark: SparkSession, fs: FileSystem,
+      path: String): Probe = {
     // crashed-swap self-heal BEFORE keying: a writer that died between
     // its retire renames and its pointer write leaves a bucket with no
     // live dir at an UNCHANGED (version, epoch) — the one state the key
     // cannot see — and a scan would silently drop its rows. One `exists`
     // answers the steady state; see SwapProtocol.healCrashedSwap for
-    // the live-writer grace protocol.
-    SwapProtocol.healCrashedSwap(spark, fs, path)
-    val v = graft.layout.SwapProtocol.readPointer(fs, path)
+    // the live-writer grace protocol. It returns the key's version.
+    val v = SwapProtocol.healCrashedSwap(spark, fs, path)
     // epoch read BEFORE deriving: a recovery racing this probe lands the
     // derived answer under the PRE-recovery epoch, so the next lookup
     // (which reads the new epoch) misses and re-derives fresh state
-    val epoch = graft.layout.SwapProtocol.readRecoveryEpoch(fs, path)
+    val epoch = SwapProtocol.readRecoveryEpoch(fs, path)
     val key = keyOf(path, v, epoch)
     val hit = cache.get(key)
     if (hit != null) hit

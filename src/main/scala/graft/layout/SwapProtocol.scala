@@ -549,10 +549,6 @@ object SwapProtocol {
     } else cur
   }
 
-  private[graft] def healCrashedSwap(spark: SparkSession, dir: String): Unit =
-    healCrashedSwap(spark,
-      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
-
   /** Read-side healing: a scan of a bucket tree mid-transition could mix
     * old and new buckets, or miss a retired one. One `exists` on the
     * in-flight `v{cur}` answers the steady state. An entry younger than
@@ -560,14 +556,17 @@ object SwapProtocol {
     * recovered inline when it is a bucket swap, or when the live dir is
     * missing altogether — a whole-dir transition with its new snapshot
     * live reads whole (the next writer rolls it forward), so flat reads
-    * never pay more. */
+    * never pay more. Returns the live version: the pointer read it made,
+    * re-read only after a recovery. */
   private[graft] def healCrashedSwap(spark: SparkSession, f: FileSystem,
-      dir: String): Unit = {
+      dir: String): Int = {
     val cur = readPointer(f, dir)
     val vdir = versionDir(dir, cur)
     if (cur > 0 && f.exists(vdir) && stale(f, vdir) &&
-        (!f.exists(new Path(dir)) || bucketSwap(f, vdir)))
+        (!f.exists(new Path(dir)) || bucketSwap(f, vdir))) {
       recover(spark, f, dir, cur)
+      readPointer(f, dir)
+    } else cur
   }
 
   private def bucketSwap(f: FileSystem, vdir: Path): Boolean =

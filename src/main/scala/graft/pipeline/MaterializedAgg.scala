@@ -25,9 +25,10 @@ import graft.merge.PartitionedMerge
   * older id) is a no-op, so a restarted driver can blindly re-send the
   * last batch — the Delta `txnAppId` idiom on this layout.
   *
-  * Layout: unbucketed tables snapshot-swap the whole (small) aggregate;
-  * with `nBuckets` the state is bucket-partitioned on the group keys and
-  * a refresh rewrites ONLY buckets containing batch groups
+  * Layout: `nBuckets` is the first load's; later refreshes merge through
+  * `Catalog.mergePath` in the layout the state recorded. Unbucketed tables
+  * snapshot-swap the whole (small) aggregate; a state bucketed on the
+  * group keys rewrites ONLY buckets containing batch groups
   * ([[PartitionedMerge.prunedMerge]]) — per-batch I/O is O(touched
   * buckets), the posture for group cardinalities that are themselves
   * large (e.g. per-document stats over 10^10 documents). */
@@ -60,7 +61,8 @@ class MaterializedAgg(spark: SparkSession, cat: Catalog,
     * crash-replayed delta as NEGATIVE ghost groups. Unbucketed writes
     * therefore also stamp the id as a commit tag (atomic with the same
     * swap — still no second commit point), read here exactly when the
-    * state carries no rows to ask. */
+    * state carries no rows to ask. A bucket swap has no tag store, so
+    * bucketed states rely on the in-state column alone. */
   def lastRefreshId: Long =
     if (!exists) -1L
     else {
@@ -73,8 +75,7 @@ class MaterializedAgg(spark: SparkSession, cat: Catalog,
   private def exists: Boolean = Catalog.existsPath(spark, path)
 
   private def stateRead(): DataFrame =
-    if (nBuckets.isDefined) PartitionedMerge.read(spark, path)
-    else cat.read(layer, table)
+    graft.layout.DeletionVectors.readLogical(spark, path)
 
   /** Apply one append batch. Returns true when applied, false when the
     * refreshId was already covered (replay — dropped whole). */
@@ -100,22 +101,15 @@ class MaterializedAgg(spark: SparkSession, cat: Catalog,
     def pruned(df: DataFrame): DataFrame =
       prune.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
     val wm = Some(WatermarkTagKey -> refreshId.toString)
-    (nBuckets, exists) match {
-      case (Some(n), false) =>
-        PartitionedMerge.write(pruned(p), path, groupBy, n)
-      case (Some(n), true) =>
-        PartitionedMerge.prunedMerge(spark, path, p, groupBy, n)(
-          (target, src) => pruned(combine(target.unionByName(src))))
-        ()
-      case (None, false) =>
+    if (!exists) nBuckets match {
+      case Some(n) => PartitionedMerge.write(pruned(p), path, groupBy, n)
+      case None =>
         cat.overwriteSnapshot(pruned(p), layer, table, commitTag = wm)
-      case (None, true) =>
-        // snapshot swap stages before renaming, so the lazy read of the
-        // live state during the staging write sees the original files
-        cat.overwriteSnapshot(
-          pruned(combine(stateRead().unionByName(p))), layer, table,
-          commitTag = wm)
-    }
+    } else
+      cat.merge(layer, table, p, groupBy,
+        commitTag = wm.filterNot(_ =>
+          graft.layout.ReadProbeCache.probe(spark, path).isBucketed))(
+        (target, src) => pruned(combine(target.unionByName(src))))
     true
   }
 

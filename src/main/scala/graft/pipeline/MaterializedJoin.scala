@@ -101,7 +101,8 @@ class MaterializedJoin(spark: SparkSession,
       viewPath, Seq(fkCol), nBuckets)
   }
 
-  def read(): DataFrame = PartitionedMerge.read(spark, viewPath)
+  def read(): DataFrame =
+    graft.layout.DeletionVectors.readLogical(spark, viewPath)
 
   /** Pull both feeds and apply what moved. Dim first (late-arriving dim
     * rows fill before new facts join the fresh dim — fewer NULL windows),
@@ -109,12 +110,6 @@ class MaterializedJoin(spark: SparkSession,
     * (Nil, Nil) when already in sync. */
   def refresh(): (Seq[Int], Seq[Int]) = {
     require(exists, s"view not built: $viewPath")
-    // fk type from the view's schema sidecar (one small-file read) — the
-    // full read() here cost a listing + footer inference per refresh just
-    // to learn one column's type
-    val fkType = PartitionedMerge.schemaOf(spark, viewPath)
-      .flatMap(_.fields.find(_.name.equalsIgnoreCase(fkCol)).map(_.dataType))
-      .getOrElse(read().schema(fkCol).dataType)
     // one dim read serves the whole refresh (both feeds' joins); lazy so
     // an in-sync poll (both feeds empty) stays FS-only — CommitCostSpec
     // pins that at literally zero Spark jobs
@@ -125,15 +120,12 @@ class MaterializedJoin(spark: SparkSession,
       case None => Nil
       case Some((ch, _, to)) =>
         // every change kind names the pk whose dependents must re-join —
-        // preimage/postimage share it, so one distinct over all rows. The
-        // keys are cast to the VIEW's fk type: the bucket hash is
-        // type-sensitive, and the dim pk may be narrower than the fk.
-        // (emptiness is prunedMerge's own touched-bucket probe — no
-        // separate isEmpty job)
-        val keys = ch.select(col(dimPk).cast(fkType).as(fkCol)).distinct()
+        // preimage/postimage share it, so one distinct over all rows
+        // (the merge hashes them in the VIEW's fk type; emptiness is
+        // prunedMerge's own touched-bucket probe — no separate isEmpty job)
+        val keys = ch.select(col(dimPk).as(fkCol)).distinct()
         val touched =
-          PartitionedMerge.prunedMerge(spark, viewPath, keys,
-            Seq(fkCol), nBuckets) { (cur, _) =>
+          Catalog.mergePath(spark, viewPath, keys, Seq(fkCol)) { (cur, _) =>
             // recompute the dim columns for the whole touched slice from
             // the CURRENT dim — covers insert/update/delete in one form,
             // and is idempotent under replay
@@ -161,8 +153,7 @@ class MaterializedJoin(spark: SparkSession,
         val src = joined(ups, dim).withColumn(OpCol, lit("u"))
           .unionByName(joined(dels, dim).withColumn(OpCol, lit("d")))
         val touched =
-          PartitionedMerge.prunedMerge(spark, viewPath, src,
-            Seq(fkCol), nBuckets) { (cur, s) =>
+          Catalog.mergePath(spark, viewPath, src, Seq(fkCol)) { (cur, s) =>
             val up = s.filter(col(OpCol) === "u").drop(OpCol)
             val gone = s.select(factKeys.map(col): _*).distinct()
             cur.join(gone, factKeys, "left_anti").unionByName(up)

@@ -31,9 +31,10 @@ class RankingWindows(partitionCol: String, orderCol: String) {
   * (Silver_Customers.py:41), gold tables are created on first load and
   * merged afterwards (Gold_Customers.py:55-97) via MergeEngine.
   *
-  * `dimBuckets`: when set, gold tables are stored bucket-partitioned by
-  * `pmod(hash(merge keys), n)` and every incremental load merges through
-  * [[graft.merge.PartitionedMerge.prunedMerge]] — only buckets containing
+  * `dimBuckets`: when set, gold tables are FIRST loaded bucket-partitioned
+  * by `pmod(hash(merge keys), n)`; every later load merges through
+  * [[graft.merge.PartitionedMerge.prunedMerge]] (`Catalog.mergePath` reads
+  * the layout and bucket count off the table) — only buckets containing
   * source keys are read and rewritten (Delta file pruning's analogue). At
   * 100 TB this is the difference between a load that touches gigabytes and
   * one that rewrites the whole dimension; results are identical to the
@@ -41,9 +42,6 @@ class RankingWindows(partitionCol: String, orderCol: String) {
   */
 class Medallion(spark: SparkSession, cat: Catalog,
     dimBuckets: Option[Int] = None) {
-
-  private def readGold(table: String): DataFrame =
-    GoldLoad.read(spark, cat, dimBuckets, table)
 
   // ---- Silver (cleanse/enrich) ------------------------------------------
 
@@ -129,8 +127,8 @@ class Medallion(spark: SparkSession, cat: Catalog,
   def goldOrderFact(silverOrders: DataFrame, now: Column = current_timestamp()): DataFrame = {
     val gated = Expectations.applyOrDrop(silverOrders, orderRules).kept
     GoldLoad.upsert(spark, cat, dimBuckets, "order_fact",
-      orderFactSource(gated, readGold("customer_dim"),
-        readGold("product_dim")),
+      orderFactSource(gated, GoldLoad.read(spark, cat, "customer_dim"),
+        GoldLoad.read(spark, cat, "product_dim")),
       Seq("order_id"), now)
   }
 

@@ -175,19 +175,16 @@ class PipelineGraph(spark: SparkSession, cat: Catalog,
     RunResult(order, violations.toMap, committedEpoch)
   }
 
-  /** Read a persisted node's committed table (bucketed gold dims read
-    * through the bucket layout, like the imperative path). */
+  /** Read a persisted node's committed table in the layout it recorded
+    * (the logical rows: an aggregate's bookkeeping column and a bucketed
+    * table's bucket column dropped). */
   private def readNode(name: String): DataFrame = {
     val (layer, tbl) = split(name)
     nodes(name).materialize match {
-      case Scd1(_, _, _) | Scd2(_, _, _) | Upsert(_)
-          if dimBuckets.isDefined =>
-        graft.merge.PartitionedMerge.read(spark, cat.path(layer, tbl))
       case IncrementalAgg(g, m, nB) =>
         new MaterializedAgg(spark, cat, layer, tbl, g, m, nB).read()
-      case IncrementalJoin(_, _, _, _, _, _, _) =>
-        graft.merge.PartitionedMerge.read(spark, cat.path(layer, tbl))
-      case _ => cat.read(layer, tbl)
+      case _ =>
+        graft.layout.DeletionVectors.readLogical(spark, cat.path(layer, tbl))
     }
   }
 

@@ -37,13 +37,8 @@ object DmlRunner {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       stmt: String) = {
     val (nameParts, alias) = MergeIntoRunner.targetNameAndAlias(table)
-    val (uri, _) = GraftShims.tableStorage(spark, nameParts)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$stmt target ${nameParts.map(p => s"`$p`").mkString(".")} must " +
-          "be a catalog table with a storage location (temp views cannot " +
-          "be rewritten)"))
     (nameParts, alias.getOrElse(nameParts.last),
-      new org.apache.hadoop.fs.Path(uri).toString)
+      GraftSql.resolveDir(spark, nameParts, stmt))
   }
 
   private def refreshed(spark: SparkSession, nameParts: Seq[String],

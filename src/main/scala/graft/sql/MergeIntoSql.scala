@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * executes it against v2 tables with a merge-capable catalog — a plain
   * parquet external table raises. This module closes that gap Spark-first:
   * the native parser's `MergeIntoTable` is lowered onto the same join-based
-  * relational program [[graft.merge.MergeEngine]] uses, and the result
-  * replaces the table via the catalog's atomic snapshot swap.
+  * relational program [[graft.merge.MergeEngine]] uses, over the LOGICAL
+  * target read off its files (the registration's metastore holds no
+  * partitions), and `Catalog.mergePath` commits it in the table's layout.
   *
   * Semantics (ANSI + the Delta extensions the reference relies on):
   *   - any number of WHEN MATCHED [AND cond] THEN UPDATE SET ... / DELETE
@@ -40,10 +41,11 @@ import org.apache.spark.sql.functions._
   *   - assignments are cast to the target column's type.
   *
   * Scale posture: one full-outer join shuffled on the merge condition's
-  * equi-keys (AQE broadcasts a small source batch) — no driver-side action
-  * anywhere; the whole statement is a single distributed plan followed by
-  * the snapshot swap. This is the same shape Delta's MergeIntoCommand
-  * plans internally after file pruning. The cardinality guard is free at
+  * equi-keys (AQE broadcasts a small source batch) — no driver-side
+  * action beyond a bucket-pruned merge's touched-bucket collect (one int
+  * per bucket); the whole statement is a single distributed plan followed
+  * by the commit. This is the same shape Delta's MergeIntoCommand plans
+  * internally after file pruning. The cardinality guard is free at
   * scale for the common pure-equi ON condition: a target row can only
   * match multiple source rows if the source duplicates its key tuple, so
   * the guard is a window count over the SOURCE keys (small side, and hash
@@ -59,14 +61,15 @@ object MergeIntoRunner {
   private val KEEP = "__graft_keep"
 
   /** When EVERY conjunct of the ON condition is `t.x = s.y` (both sides
-    * qualified, one per relation), return the source-side key columns; any
-    * residual filter, unqualified attribute, or non-equality disables the
-    * source-side guard (a source-key count would then over- or under-count
-    * actual matches). */
-  private def equiSourceKeys(cond: Expression, tAlias: String,
-      sAlias: Option[String]): Option[Seq[Column]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    * qualified, one per relation), return each conjunct's (target side,
+    * source side); any residual filter, unqualified attribute, or
+    * non-equality returns None — it disables the source-side guard (a
+    * source-key count would then over- or under-count actual matches) and
+    * the bucket-pruned path. */
+  private def equiKeys(m: MergeIntoTable)
+      : Option[Seq[(Expression, Column)]] = {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualTo}
+    val (tAlias, sAlias) = aliases(m)
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
@@ -80,10 +83,10 @@ object MergeIntoRunner {
       else if (sAlias.exists(a => quals.forall(_.equalsIgnoreCase(a)))) Some('s')
       else None
     }
-    val keys = conjuncts(cond).map {
+    val keys = conjuncts(m.mergeCondition).map {
       case EqualTo(l, r) => (sideOf(l), sideOf(r)) match {
-        case (Some('t'), Some('s')) => Some(GraftShims.column(r))
-        case (Some('s'), Some('t')) => Some(GraftShims.column(l))
+        case (Some('t'), Some('s')) => Some((l, GraftShims.column(r)))
+        case (Some('s'), Some('t')) => Some((r, GraftShims.column(l)))
         case _ => None
       }
       case _ => None
@@ -92,10 +95,38 @@ object MergeIntoRunner {
     else None
   }
 
+  /** The target's alias (else its table name) and the source's. */
+  private def aliases(m: MergeIntoTable): (String, Option[String]) = {
+    val (nameParts, tAlias) = targetNameAndAlias(m.targetTable)
+    (tAlias.getOrElse(nameParts.last), m.sourceTable match {
+      case SubqueryAlias(ident, _) => Some(ident.name)
+      case _ => None
+    })
+  }
+
+  /** `Catalog.mergePath` applies [[lowered]] in the target's recorded
+    * layout. A pure equi-join ON plain target columns, without WHEN NOT
+    * MATCHED BY SOURCE (it changes rows the source does not name) or
+    * schema evolution, is key-local: on the bucket keys it prunes. */
   def run(spark: SparkSession, m: MergeIntoTable): Unit = {
-    val (merged, dir, partCols, tableName, evolvedCols) = lowered(spark, m)
-    graft.catalog.Catalog.overwritePath(spark, merged, dir, partCols,
-      allowSchemaChange = evolvedCols.nonEmpty, operation = "MERGE")
+    val nameParts = targetNameAndAlias(m.targetTable)._1
+    val tableName = nameParts.map(p => s"`$p`").mkString(".")
+    val dir = GraftSql.resolveDir(spark, nameParts, "MERGE INTO")
+    val keys = (for {
+      ks <- equiKeys(m)
+      if m.notMatchedBySourceActions.isEmpty && !m.withSchemaEvolution
+      named = ks.collect { case (u: UnresolvedAttribute, c)
+        if u.nameParts.size == 2 => (u.nameParts.last, c) }
+      if named.size == ks.size
+    } yield named).getOrElse(Nil)
+    var evolvedCols = Array.empty[org.apache.spark.sql.types.StructField]
+    graft.catalog.Catalog.mergePath(spark, dir,
+      GraftShims.ofRows(spark, m.sourceTable), keys.map(_._1),
+      keys.map(_._2), allowSchemaChange = m.withSchemaEvolution) { (t, s) =>
+      val (merged, evolved) = lowered(spark, m, dir, t, s)
+      evolvedCols = evolved
+      merged
+    }
     // Schema evolution must reach the REGISTRATION, not just the files: a
     // v1 external table pins its metastore schema at CREATE time, so
     // without ALTER TABLE the next spark.table / MERGE would still see the
@@ -108,27 +139,13 @@ object MergeIntoRunner {
     spark.catalog.refreshTable(tableName)
   }
 
-  /** The lowering without the write-back — split out so plan-quality specs
-    * can assert the merged frame's physical shape. */
-  private[graft] def lowered(spark: SparkSession, m: MergeIntoTable)
-      : (org.apache.spark.sql.DataFrame, String, Seq[String], String,
-         Array[org.apache.spark.sql.types.StructField]) = {
-    val (nameParts, tAlias) = targetNameAndAlias(m.targetTable)
-    val tableName = nameParts.map(p => s"`$p`").mkString(".")
-    val (locationUri, partCols) = GraftShims.tableStorage(spark, nameParts)
-      .getOrElse(throw new IllegalArgumentException(
-        s"MERGE INTO target $tableName must be a catalog table with a " +
-          "storage location (temp views cannot be merged into)"))
-
-    // a deletion-vector sidecar must be applied to the merge base even on
-    // sessions without the transparent DvApplyRule — rewriting from the
-    // raw files would resurrect deleted rows (the merge write-back stages
-    // fresh files, so the sidecar retires with the old version)
-    val dir = new org.apache.hadoop.fs.Path(locationUri).toString
-    val targetDF =
-      if (graft.layout.DeletionVectors.hasDv(spark, dir))
-        graft.layout.DeletionVectors.readPath(spark, dir)
-      else spark.table(tableName)
+  /** The statement's merged rows over `targetDF` (the logical target:
+    * deletion vectors applied, no bucket column) and the source, with the
+    * columns schema evolution added — the write-back is [[run]]'s, so
+    * plan-quality specs can assert the merged frame's physical shape. */
+  private[graft] def lowered(spark: SparkSession, m: MergeIntoTable,
+      dir: String, targetDF: DataFrame, source: DataFrame)
+      : (DataFrame, Array[org.apache.spark.sql.types.StructField]) = {
     // WITH SCHEMA EVOLUTION (Delta's merge extension): widen the target with
     // source columns it lacks, appended as nullable — the same add-only rule
     // ingest's evolvedSchema applies (types come from the source; existing
@@ -144,30 +161,25 @@ object MergeIntoRunner {
       else baseSchema.fieldNames.exists(_.equalsIgnoreCase(n))
     val evolvedCols =
       if (!m.withSchemaEvolution) Array.empty[org.apache.spark.sql.types.StructField]
-      else GraftShims.ofRows(spark, m.sourceTable).schema.fields
+      else source.schema.fields
         .filterNot(f => inTarget(f.name)).map(_.copy(nullable = true))
     val targetSchema =
       org.apache.spark.sql.types.StructType(baseSchema.fields ++ evolvedCols)
-    val tAliasName = tAlias.getOrElse(nameParts.last)
-    val sAliasName = m.sourceTable match {
-      case SubqueryAlias(ident, _) => Some(ident.name)
-      case _ => None
-    }
+    val tAliasName = aliases(m)._1
 
     // Pure-equi ON (every conjunct `t.x = s.y`)? Then a target row matches
     // >1 source rows iff the source duplicates its key tuple — the guard
     // can count over the source keys BEFORE the join (small side, same
     // hash partitioning as the join) instead of windowing the full joined
     // output by target-row id.
-    val srcEquiKeys: Option[Seq[Column]] =
-      equiSourceKeys(m.mergeCondition, tAliasName, sAliasName)
+    val srcEquiKeys: Option[Seq[Column]] = equiKeys(m).map(_.map(_._2))
 
     // Marker columns tell the three MERGE branches apart after the
     // full-outer join; the per-row ids feed the non-equi guard fallback.
     val t0 = targetDF.alias(tAliasName).withColumn(TM, lit(true))
     val t = if (srcEquiKeys.isDefined) t0
             else t0.withColumn(TID, monotonically_increasing_id())
-    val s0 = GraftShims.ofRows(spark, m.sourceTable).withColumn(SM, lit(true))
+    val s0 = source.withColumn(SM, lit(true))
     val s = srcEquiKeys match {
       case Some(keys) =>
         s0.withColumn(SCNT, count(lit(1)).over(Window.partitionBy(keys: _*)))
@@ -296,7 +308,7 @@ object MergeIntoRunner {
         .otherwise(col(f.name))).drop(genFlag(n))
     }
 
-    (merged, dir, partCols, tableName, evolvedCols)
+    (merged, evolvedCols)
   }
 
   private def unsupported(a: MergeAction): Nothing =
@@ -341,12 +353,8 @@ case class GraftDescribeHistoryCommand(nameParts: Seq[String])
       AttributeReference("size_bytes", LongType, nullable = false)(),
       AttributeReference("operation", StringType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val (uri, _) = GraftShims.tableStorage(spark, nameParts).getOrElse(
-      throw new IllegalArgumentException(
-        s"DESCRIBE HISTORY target ${nameParts.mkString(".")} must be a " +
-          "catalog table with a storage location"))
     graft.catalog.Catalog.historyRows(spark,
-      new org.apache.hadoop.fs.Path(uri).toString)
+      GraftSql.resolveDir(spark, nameParts, "DESCRIBE HISTORY"))
       .sortBy(-_._1)
       .map { case (v, cur, ts, n, sz, op) => Row(v, cur, ts, n, sz, op) }
   }
@@ -1332,7 +1340,7 @@ object GraftSql {
     * tables without a location). */
   private[sql] def resolveDir(spark: SparkSession, nameParts: Seq[String],
       stmt: String): String = {
-    val (uri, _) = GraftShims.tableStorage(spark, nameParts).getOrElse(
+    val uri = GraftShims.tableStorage(spark, nameParts).getOrElse(
       throw new IllegalArgumentException(
         s"$stmt target ${nameParts.mkString(".")} must be a catalog table " +
           "with a storage location"))
@@ -1362,7 +1370,7 @@ object GraftSql {
     plan.transformDown {
       case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, ver) =>
         GraftShims.tableStorage(session, u.multipartIdentifier) match {
-          case Some((uri, _)) =>
+          case Some(uri) =>
             val tableDir = new org.apache.hadoop.fs.Path(uri).toString
             val v = (ver, ts) match {
               case (Some(verStr), _) =>

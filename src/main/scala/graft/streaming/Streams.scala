@@ -164,13 +164,13 @@ object Streams {
     * out-of-order guarantee). Requires the sequence columns to be part of
     * the change schema, which they are by construction of `sequence_by`.
     *
-    * `nBuckets`: when set, the dimension is stored bucket-partitioned by
-    * `pmod(hash(keys), n)` and each micro-batch merges through
-    * [[graft.merge.PartitionedMerge.prunedMerge]] — only bucket directories
-    * containing changed keys are read and rewritten, the Delta-file-pruning
-    * analogue that keeps per-batch I/O O(changed buckets) instead of
-    * O(table). This is the 100 TB default for large dims; the full-snapshot
-    * path remains for small unbucketed tables. */
+    * Each fresh batch is applied by `GoldLoad.scd2`, the batch loads' one
+    * implementation. `nBuckets` is the FIRST batch's layout: bucketed by
+    * `pmod(hash(keys), n)`, every later batch merges through
+    * [[graft.merge.PartitionedMerge.prunedMerge]] (chosen off the table by
+    * `Catalog.mergePath`) — only buckets holding changed keys are read
+    * and rewritten, per-batch I/O O(changed buckets), not O(table). This
+    * is the 100 TB default for large dims; small tables stay unbucketed. */
   def applyChangesScd2(
       changes: DataFrame,
       cat: graft.catalog.Catalog,
@@ -182,13 +182,7 @@ object Streams {
       now: org.apache.spark.sql.Column,
       sequenceBy: Seq[String] = Nil,
       nBuckets: Option[Int] = None): Unit = {
-    import graft.merge.PartitionedMerge
-    val tablePath = cat.path("gold", table)
-    def readTarget(spark: org.apache.spark.sql.SparkSession): DataFrame =
-      nBuckets match {
-        case Some(_) => PartitionedMerge.read(spark, tablePath)
-        case None => cat.read("gold", table)
-      }
+    import graft.pipeline.GoldLoad
     def latestPerKey(batch: DataFrame): DataFrame =
       if (sequenceBy.isEmpty) batch
       else {
@@ -230,42 +224,12 @@ object Streams {
         val batch = latestPerKey(batch0)
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          if (!cat.exists("gold", table)) {
-            val initial = graft.merge.SurrogateKeys.assign(batch, skeyCol, keys)
-              .withColumn("hash_value",
-                graft.merge.MergeEngine.nullSafeHash(tracked.map(col)))
-              .withColumn("effective_start_date", now)
-              .withColumn("effective_end_date",
-                lit(null).cast("timestamp"))
-              .withColumn("is_current", lit(true))
-              .withColumn("insert_date", now)
-              .withColumn("update_date", now)
-            nBuckets match {
-              case Some(n) => PartitionedMerge.write(initial, tablePath, keys, n)
-              case None => cat.create(initial, "gold", table)
-            }
-          } else {
-            val target = readTarget(spark)
-            val fresh = newerThanApplied(batch, target)
-            if (!fresh.isEmpty) {
-              nBuckets match {
-                case Some(n) =>
-                  // partition-pruned path: only buckets holding changed
-                  // keys are scanned and swapped; the skey high-water mark
-                  // still comes from the FULL table (column-pruned scan)
-                  PartitionedMerge.prunedMerge(spark, tablePath, fresh, keys, n) {
-                    (pruned, s) => graft.merge.MergeEngine.scd2(
-                      pruned, s, keys, tracked, skeyCol, now,
-                      skeyBase = Some(PartitionedMerge.read(spark, tablePath)))
-                  }
-                  ()
-                case None =>
-                  val merged = graft.merge.MergeEngine.scd2(
-                    target, fresh, keys, tracked, skeyCol, now)
-                  cat.overwriteSnapshot(merged, "gold", table)
-              }
-            }
-          }
+          val fresh =
+            if (!cat.exists("gold", table)) Some(batch)
+            else Some(newerThanApplied(batch, GoldLoad.read(spark, cat, table)))
+              .filterNot(_.isEmpty)
+          fresh.foreach(GoldLoad.scd2(spark, cat, nBuckets, table, _, keys,
+            tracked, skeyCol, now))
         }
         Streams.recordAppliedBatch(batch0.sparkSession, checkpoint, batchId)
         }

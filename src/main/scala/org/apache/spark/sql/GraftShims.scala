@@ -96,10 +96,10 @@ object GraftShims {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
-  /** The storage location + partition columns of a session-catalog table;
-    * None when the name is a temp view or not a catalog table. */
+  /** The storage location of a session-catalog table; None when the name
+    * is a temp view or not a catalog table. */
   def tableStorage(spark: SparkSession, nameParts: Seq[String])
-      : Option[(java.net.URI, Seq[String])] = {
+      : Option[java.net.URI] = {
     val catalog = spark.sessionState.catalog
     val ident = nameParts match {
       case Seq(t) => TableIdentifier(t)
@@ -109,7 +109,7 @@ object GraftShims {
     if (catalog.isTempView(nameParts) || !catalog.tableExists(ident)) None
     else {
       val meta = catalog.getTableMetadata(ident)
-      meta.storage.locationUri.map(u => (u, meta.partitionColumnNames))
+      meta.storage.locationUri
     }
   }
 }

@@ -104,8 +104,8 @@ class BucketedDmlProps extends SparkSuite {
           case 9 => // prunedMerge upsert (the layout's native writer)
             val src = sample(rowsGen(1, 40), c * 41L + i)
             if (src.nonEmpty) {
-              PartitionedMerge.prunedMerge(spark, dir, df(src), keys,
-                nBuckets) { (pruned, s) =>
+              PartitionedMerge.prunedMerge(spark, dir, df(src)) {
+                (pruned, s) =>
                 pruned.join(s.select("id"), Seq("id"), "left_anti")
                   .unionByName(s)
               }

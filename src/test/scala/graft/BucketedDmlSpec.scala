@@ -194,7 +194,7 @@ class BucketedDmlSpec extends SparkSuite {
     // NOT contain the deleted row, and the rewritten bucket folds its DV
     val source = Seq((5L, "resurrect?", 0), (61L, "new", 1))
       .toDF("k", "v", "g")
-    PartitionedMerge.prunedMerge(spark, path, source, keys, nBuckets) {
+    PartitionedMerge.prunedMerge(spark, path, source) {
       (pruned, src) =>
         assert(pruned.filter(col("k") === 5L).count() == 0,
           "pruned merge target must be DV-applied")
@@ -251,7 +251,7 @@ class BucketedDmlSpec extends SparkSuite {
     val afterV1 = now()
     Thread.sleep(15)
     PartitionedMerge.prunedMerge(spark, path,
-      Seq((1L, "v2", 9)).toDF("k", "v", "g"), keys, nBuckets) { (t, s) =>
+      Seq((1L, "v2", 9)).toDF("k", "v", "g")) { (t, s) =>
       t.join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
     }
     Thread.sleep(15)

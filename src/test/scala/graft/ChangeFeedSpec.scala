@@ -102,6 +102,31 @@ class ChangeFeedSpec extends SparkSuite {
         spark.sparkContext.hadoopConfiguration), dst) == 3)
   }
 
+  test("syncTable mirrors a bucketed source into its bucketed clone") {
+    val wh = tmpDir("graft-cdf-sync-b")
+    val cursor = s"$wh/mirror.cursor"
+    val src = s"$wh/gold/src"
+    val dst = s"$wh/mirror/t"
+    PartitionedMerge.write((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"),
+      src, Seq("id"), 4)
+    assert(ChangeFeed.syncTable(spark, src, dst, Seq("id"), cursor)
+      .contains((1, 1)))
+    assert(PartitionedMerge.readBucketMeta(spark, dst)
+      .contains((Seq("id"), 4)), "the bootstrap clone lost the manifest")
+    // insert, update and delete, one source version each
+    Catalog.appendPath(spark, Seq((30L, "c")).toDF("id", "v"), src)
+    Catalog.updateWherePath(spark, src, col("id") === 1L,
+      Seq("v" -> lit("A")))
+    Catalog.deleteWherePath(spark, src, col("id") === 5L)
+    assert(ChangeFeed.syncTable(spark, src, dst, Seq("id"), cursor)
+      .contains((1, 4)))
+    assert(rowsOf(PartitionedMerge.read(spark, dst), "id") ==
+      rowsOf(PartitionedMerge.read(spark, src), "id"))
+    assert(new java.io.File(dst).listFiles().map(_.getName)
+      .filter(_.startsWith("gbucket=")).toSet
+      .subsetOf((0 until 4).map(b => s"gbucket=$b").toSet))
+  }
+
   test("keyless changes: multiset row diff") {
     val cat = new Catalog(spark, tmpDir("graft-cdf-nokey"))
     cat.overwriteSnapshot(Seq(1L, 1L, 2L).toDF("x"), "gold", "m") // v1
@@ -162,7 +187,7 @@ class ChangeFeedSpec extends SparkSuite {
     PartitionedMerge.write(v1, dir, keys, n)
     // change exactly two keys (an update + an insert)
     val batch = Seq((5L, 999L), (100L, 1L)).toDF("id", "v")
-    PartitionedMerge.prunedMerge(spark, dir, batch, keys, n) { (t, s) =>
+    PartitionedMerge.prunedMerge(spark, dir, batch) { (t, s) =>
       t.join(s, keys, "left_anti").unionByName(s)
     }
     val expectBuckets = batch

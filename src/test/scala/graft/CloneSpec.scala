@@ -85,6 +85,45 @@ class CloneSpec extends SparkSuite {
       rowsOf(PartitionedMerge.read(spark, src), "id"))
   }
 
+  test("bucketed clones carry the bucket manifest: INSERT routes and a " +
+      "key-local merge prunes, live and VERSION AS OF, deep and shallow") {
+    val root = tmpDir("graft-clone-bmeta")
+    val src = s"$root/gold/src"
+    PartitionedMerge.write((1L to 32L).map(i => (i, i * 2)).toDF("id", "v"),
+      src, Seq("id"), 4)
+    Catalog.appendPath(spark, Seq((40L, 80L)).toDF("id", "v"), src) // v2
+    val srcRows = rowsOf(PartitionedMerge.read(spark, src), "id")
+    val upsert: (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
+      (t, s) => t.join(s, Seq("id"), "left_anti").unionByName(s)
+    for (version <- Seq(None, Some(1)); shallow <- Seq(false, true)) {
+      val dst = s"$root/gold/c_${version.getOrElse(0)}_$shallow"
+      Catalog.clonePath(spark, src, dst, version, shallow)
+      assert(PartitionedMerge.readBucketMeta(spark, dst)
+        .contains((Seq("id"), 4)), s"$dst lost its bucket manifest")
+      val before = rowsOf(PartitionedMerge.read(spark, dst), "id")
+      Catalog.appendPath(spark, Seq((100L, 1L)).toDF("id", "v"), dst)
+      val live = new java.io.File(dst).listFiles()
+        .map(_.getName).filter(_.startsWith("gbucket=")).toSet
+      val v = graft.layout.SwapProtocol.readPointer(
+        new org.apache.hadoop.fs.Path(dst).getFileSystem(
+          spark.sparkContext.hadoopConfiguration), dst)
+      Catalog.mergePath(spark, dst, Seq((2L, 7L)).toDF("id", "v"),
+        Seq("id"))(upsert)
+      val expected = (before.filterNot(_.head == 2L) ++
+        Seq(Seq(2L, 7L), Seq(100L, 1L))).sortBy(_.head.asInstanceOf[Long])
+      assert(rowsOf(PartitionedMerge.read(spark, dst), "id") == expected)
+      // the merge swapped only the one touched bucket
+      val retired = new java.io.File(graft.layout.SwapProtocol
+        .versionDir(dst, v).toUri.getPath).listFiles()
+        .map(_.getName).filter(_.startsWith("gbucket=")).toSet
+      assert(retired.size == 1 && live.contains(retired.head),
+        s"key-local merge into the clone retired $retired")
+    }
+    assert(rowsOf(PartitionedMerge.read(spark, src), "id") == srcRows,
+      "writes to a clone reached its source")
+  }
+
   test("SQL: CREATE TABLE dst DEEP CLONE src registers the copy") {
     val cat = new Catalog(spark, tmpDir("graft-clone-sql"))
     cat.overwriteSnapshot(Seq((1L, "a")).toDF("id", "v"), "gold", "csrc")

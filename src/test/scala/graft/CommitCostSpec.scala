@@ -221,6 +221,26 @@ class CommitCostSpec extends SparkSuite {
       s"one flat commit's (reads, writes) = $total")
     assert(SwapProtocol.readPointer(f, dir) == 3)
   }
+
+  test("a table read's probe reads the pointer once") {
+    import graft.layout.ReadProbeCache
+    val dir = tmpDir("graft-probe-reads") + "/t"
+    Catalog.overwritePath(spark, (1L to 3L).toDF("id"), dir)
+    Catalog.overwritePath(spark, (1L to 4L).toDF("id"), dir)
+    val f = new CommitCostSpec.CountingFs
+    f.initialize(new java.net.URI("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    ReadProbeCache.probe(spark, f, dir) // fills the cache for version 2
+    val before = f.reads.get
+    assert(!ReadProbeCache.probe(spark, f, dir).isBucketed)
+    // the crash heal's pointer read (exists, open and the checksummed
+    // open's status lookup = 3) and its `exists` of the in-flight version
+    // dir, which also keys the cache, then the recovery epoch (`exists`,
+    // the history listing, `exists` again) = 7; the probe read the
+    // pointer a second time before, 10 reads per table read
+    assert(f.reads.get - before == 7L,
+      s"one cached probe made ${f.reads.get - before} reads")
+  }
 }
 
 object CommitCostSpec {

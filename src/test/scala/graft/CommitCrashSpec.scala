@@ -250,7 +250,7 @@ class CommitCrashSpec extends SparkSuite {
       flatRows, pointer, flatNext, Seq(999L)),
     Kind("bucketed prunedMerge", bucketSetup(dv = false),
       dir => { PartitionedMerge.prunedMerge(spark, dir,
-        Seq((1L, 101L), (2L, 102L), (30L, 130L)).toDF("k", "v"), Seq("k"), 4,
+        Seq((1L, 101L), (2L, 102L), (30L, 130L)).toDF("k", "v"),
         keepVersions = 1) { (t, s) =>
         t.join(s.select("k"), Seq("k"), "left_anti").unionByName(s) }; () },
       bucketRows, pointer, bucketNext, Seq(999L, 999L)),

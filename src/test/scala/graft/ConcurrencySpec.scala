@@ -193,7 +193,7 @@ class ConcurrencySpec extends SparkSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = SwapProtocol.readPointer(fs, path)
     def upsert(src: org.apache.spark.sql.DataFrame): Unit = {
-      PartitionedMerge.prunedMerge(spark, path, src, keys, nBuckets) {
+      PartitionedMerge.prunedMerge(spark, path, src) {
         (pruned, s) =>
           pruned.join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
       }

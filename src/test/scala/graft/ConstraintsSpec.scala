@@ -108,7 +108,7 @@ class ConstraintsSpec extends SparkSuite {
       dir, Seq("id"), 4)
     graft.catalog.Catalog.addConstraintPath(spark, dir, "v_pos", "v > 0")
     def upsert(src: org.apache.spark.sql.DataFrame) =
-      PartitionedMerge.prunedMerge(spark, dir, src, Seq("id"), 4) {
+      PartitionedMerge.prunedMerge(spark, dir, src) {
         (t, s) => t.join(s, Seq("id"), "left_anti").unionByName(s)
       }
     upsert(Seq((1L, 11.0)).toDF("id", "v")) // clean merge passes

@@ -113,7 +113,7 @@ class GeneratedSpec extends SparkSuite {
       dir, Seq("k"), 4)
     // the merge output carries the source's columns (MergeEngine's shape)
     def upsert(src: org.apache.spark.sql.DataFrame) =
-      PartitionedMerge.prunedMerge(spark, dir, src, Seq("k"), 4) { (t, s) =>
+      PartitionedMerge.prunedMerge(spark, dir, src) { (t, s) =>
         t.select(s.columns.map(col).toSeq: _*)
           .join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
       }

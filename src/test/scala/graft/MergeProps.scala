@@ -96,7 +96,7 @@ class MergeProps extends SparkSuite {
       val path = tmpDir("mprop") + "/dim"
       graft.merge.PartitionedMerge.write(target, path, Seq("product_id"), 4)
       graft.merge.PartitionedMerge.prunedMerge(
-        spark, path, source, Seq("product_id"), 4) { (pt, src) =>
+        spark, path, source) { (pt, src) =>
         MergeEngine.scd2(pt, src, Seq("product_id"), Seq("brand"),
           "product_skey", t1,
           skeyBase = Some(graft.merge.PartitionedMerge.read(spark, path)))

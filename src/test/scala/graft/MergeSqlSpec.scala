@@ -601,4 +601,94 @@ class MergeSqlSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(viaEntry == one)
   }
+
+  /** The same 20 rows as the registered table `gold.<name>` in one
+    * layout: flat, hive-partitioned on `p`, or bucketed on `k`. */
+  private def layoutTable(s: SparkSession, cat: graft.catalog.Catalog,
+      name: String, layout: String): String = {
+    import s.implicits._
+    val rows = (1L to 20L).map(i => (i, s"v$i", (i % 3).toInt))
+      .toDF("k", "v", "p")
+    val dir = cat.path("gold", name)
+    layout match {
+      case "flat" => graft.catalog.Catalog.overwritePath(s, rows, dir)
+      case "hive" => graft.catalog.Catalog.overwritePath(s, rows, dir, Seq("p"))
+      case "bucketed" =>
+        graft.merge.PartitionedMerge.write(rows, dir, Seq("k"), 4)
+    }
+    cat.register("gold", name)
+    dir
+  }
+
+  /** The table's logical rows (bucket column dropped), every column. */
+  private def logicalRows(s: SparkSession, dir: String): Seq[Seq[Any]] = {
+    val df = graft.layout.DeletionVectors.readPath(s, dir).drop("gbucket")
+      .select("k", "v", "p")
+    df.orderBy("k", "v", "p").collect().toSeq.map(_.toSeq)
+  }
+
+  private def dirsOf(dir: String, prefix: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith(prefix)).toSet
+
+  /** Run `merge` (with `$t` for the target) on a fresh registered table
+    * per layout; returns (dir, logical rows after) per layout. */
+  private def mergeEachLayout(s: SparkSession, tag: String, merge: String)
+      : Map[String, (String, Seq[Seq[Any]])] = {
+    val cat = new graft.catalog.Catalog(s, tmpDir(s"graft-sql-lay-$tag"))
+    Seq("flat", "hive", "bucketed").map { layout =>
+      val name = s"lay_${tag}_$layout"
+      val dir = layoutTable(s, cat, name, layout)
+      try s.sql(merge.replace("$t", s"gold.$name"))
+      finally cat.dropRegistration("gold", name)
+      layout -> ((dir, logicalRows(s, dir)))
+    }.toMap
+  }
+
+  test("MERGE into registered bucketed and hive-partitioned tables keeps " +
+      "every untouched row (UPDATE with INSERT * or INSERT (k, v))") {
+    val s = sqlSpark
+    import s.implicits._
+    Seq((3L, "x3", 0), (25L, "x25", 1)).toDF("k", "v", "p")
+      .createOrReplaceTempView("lay_src")
+    for ((insert, i) <- Seq("INSERT *",
+        "INSERT (k, v) VALUES (s.k, s.v)").zipWithIndex) {
+      val got = mergeEachLayout(s, s"ins$i", s"""
+        MERGE INTO $$t t USING lay_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET t.v = s.v
+        WHEN NOT MATCHED THEN $insert""")
+      val (_, flat) = got("flat")
+      assert(flat.size == 21 && flat.exists(_.take(2) == Seq(3L, "x3")))
+      for (layout <- Seq("hive", "bucketed"))
+        assert(got(layout)._2 == flat, s"$layout with $insert: ${got(layout)._2}")
+      // the bucketed merge stays in its layout, and its equi-join ON the
+      // bucket key is key-local: only the touched buckets were retired
+      val bdir = got("bucketed")._1
+      assert(dirsOf(bdir, "gbucket=").subsetOf(
+        (0 until 4).map(b => s"gbucket=$b").toSet), dirsOf(bdir, "gbucket="))
+      val retired = dirsOf(graft.layout.SwapProtocol.versionDir(bdir, 1)
+        .toUri.getPath, "gbucket=")
+      assert(retired.nonEmpty && retired.size < 4,
+        "a key-local MERGE on the bucket key must rewrite only touched buckets")
+    }
+  }
+
+  test("bucketed MERGE with WHEN NOT MATCHED BY SOURCE equals the full " +
+      "rewrite") {
+    val s = sqlSpark
+    import s.implicits._
+    Seq((3L, "x3", 0), (25L, "x25", 1)).toDF("k", "v", "p")
+      .createOrReplaceTempView("lay_src_nmbs")
+    val got = mergeEachLayout(s, "nmbs", """
+      MERGE INTO $t t USING lay_src_nmbs s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET t.v = s.v
+      WHEN NOT MATCHED THEN INSERT *
+      WHEN NOT MATCHED BY SOURCE AND t.k > 15 THEN DELETE""")
+    val (_, flat) = got("flat")
+    assert(flat.size == 16)
+    val (bdir, bucketed) = got("bucketed")
+    assert(bucketed == flat, s"bucketed: $bucketed")
+    assert(dirsOf(bdir, "gbucket=").subsetOf(
+      (0 until 4).map(b => s"gbucket=$b").toSet), dirsOf(bdir, "gbucket="))
+  }
 }

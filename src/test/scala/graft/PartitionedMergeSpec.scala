@@ -55,7 +55,7 @@ class PartitionedMergeSpec extends SparkSuite {
     val before = fileState(path)
 
     val touched = PartitionedMerge.prunedMerge(
-      spark, path, source, keys, nBuckets) { (pruned, src) =>
+      spark, path, source) { (pruned, src) =>
       MergeEngine.scd1(pruned, src, keys, tracked, "customer_skey",
         fixedNow, skeyBase = Some(PartitionedMerge.read(spark, path)))
     }
@@ -104,7 +104,7 @@ class PartitionedMergeSpec extends SparkSuite {
     val s1 = Seq((3L, "v2", 31L)).toDF("k", "a", "b")
     val s2 = Seq((3L, "v3", 32L), (999L, "new", 1L)).toDF("k", "a", "b")
     def run(src: DataFrame) =
-      PartitionedMerge.prunedMerge(spark, path, src, keys, nBuckets) {
+      PartitionedMerge.prunedMerge(spark, path, src) {
         (t, s) => MergeEngine.scd1(t, s, keys, tracked, "customer_skey",
           fixedNow, skeyBase = Some(PartitionedMerge.read(spark, path)))
       }

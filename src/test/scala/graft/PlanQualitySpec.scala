@@ -241,7 +241,10 @@ class PlanQualitySpec extends SparkSuite {
         MERGE INTO gold.plan_eq t USING plan_eq_src s ON $on
         WHEN MATCHED THEN UPDATE SET t.val = s.val
       """).asInstanceOf[MergeIntoTable]
-      graft.sql.MergeIntoRunner.lowered(spark, m)._1
+      val dir = cat.path("gold", "plan_eq")
+      graft.sql.MergeIntoRunner.lowered(spark, m, dir,
+        graft.layout.DeletionVectors.readLogical(spark, dir),
+        org.apache.spark.sql.GraftShims.ofRows(spark, m.sourceTable))._1
         .queryExecution.executedPlan.toString
     }
     // equi ON: the guard is a pre-join source-key window — the merged plan

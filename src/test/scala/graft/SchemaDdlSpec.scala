@@ -83,8 +83,8 @@ class SchemaDdlSpec extends SparkSuite {
     Catalog.addGeneratedColumnPath(spark, dir, "v2", "v * 2")
     assert(Catalog.partitionColsOf(f, dir) == Seq(PartitionedMerge.BucketCol))
     // a one-key merge must still see the other seven rows
-    PartitionedMerge.prunedMerge(spark, dir, Seq((1L, 100L)).toDF("k", "v"),
-      Seq("k"), 4) { (t, s) =>
+    PartitionedMerge.prunedMerge(spark, dir,
+      Seq((1L, 100L)).toDF("k", "v")) { (t, s) =>
       t.select(s.columns.map(col).toSeq: _*)
         .join(s.select("k"), Seq("k"), "left_anti").unionByName(s)
     }
