@@ -3,14 +3,15 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Whole-query plan evidence: `runMain graft.PlanDump <q1[,q2,...]> [sfDir]
-  * [outDir]` runs each named SparkEntry query once and records the
-  * FORMATTED physical plan of EVERY SQL execution the query performs
-  * (actions, localCheckpoint materializations, broadcast subexecutions),
-  * chronologically, with per-execution wall time. Unlike a plain
-  * `explain` on the returned frame — which for eagerly-pinned results is
-  * just a `Scan ExistingRDD` stub — this shows the plans that actually
-  * executed: exchange counts, join strategies, PushedFilters/ReadSchema.
-  * Suffix from SPARK_GRAFT_PLAN_SUFFIX (default "plan"):
+  * [outDir]` runs each named SparkEntry query once and records, first,
+  * the FORMATTED physical plan of the returned frame, then that of EVERY
+  * SQL execution the query performs (actions, localCheckpoint
+  * materializations, broadcast subexecutions), chronologically, with
+  * per-execution wall time. The returned frame's plan shows pushdown
+  * (`PushedFilters`, `ReadSchema`) and join strategies of the final
+  * probe; for eagerly-pinned results it is just a `Scan ExistingRDD`
+  * stub, and the executions show the plans that actually ran. Suffix
+  * from SPARK_GRAFT_PLAN_SUFFIX (default "plan"):
   * `<outDir>/<name>_<suffix>.txt`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -40,7 +41,10 @@ object PlanDump {
     names.foreach { name =>
       recorded.clear()
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val n = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
       // drain pending async listener events before snapshotting
       Thread.sleep(500)
@@ -48,6 +52,7 @@ object PlanDump {
       val execs = recorded.asScala.toSeq.sortBy(_._1).map(_._2)
       val body = f"== $name: $n rows, $wall%.2f s, " +
         s"${execs.size} SQL executions ==\n\n" +
+        s"[returned frame]\n$plan\n" +
         execs.zipWithIndex.map { case (t, i) => s"[exec ${i + 1}]\n$t" }
           .mkString("\n")
       java.nio.file.Files.write(

@@ -4,9 +4,10 @@ package graft
 /** Job/FS-op profiler for a single named query — the instrument behind
   * the lifecycle-cost work (VERDICT r7 #1: q119/q81/q139 drifted in the
   * round that touched the commit protocol). Prints, for each run of the
-  * query: wall seconds, Spark job count, and the delta in Hadoop
-  * local-FS storage statistics (op counts) — so a commit-protocol change
-  * can be priced in FS round-trips, not just wall clock.
+  * query: wall seconds, Spark job count, every stage over 0.3 s as it
+  * completes, and the delta in Hadoop local-FS storage statistics (op
+  * counts) — so a commit-protocol change can be priced in FS
+  * round-trips, not just wall clock.
   *
   *   sbt "runMain graft.ProfileQ q119_incr_join [reps]"
   */
@@ -41,6 +42,14 @@ object ProfileQ {
             val ms = (System.nanoTime() - t0) / 1e6
             sites.add(f"$ms%8.1f ms  $site")
           }
+        }
+        override def onStageCompleted(s: org.apache.spark.scheduler
+            .SparkListenerStageCompleted): Unit = {
+          val si = s.stageInfo
+          val sec = (si.completionTime.getOrElse(0L) -
+            si.submissionTime.getOrElse(0L)) / 1000.0
+          if (sec > 0.3) println(f"[stage] id=${si.stageId} " +
+            f"tasks=${si.numTasks} $sec%.2f s  ${si.name.take(80)}")
         }
       })
     val fn = SparkEntry.queries(qname)

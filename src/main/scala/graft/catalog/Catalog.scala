@@ -732,95 +732,6 @@ object Catalog {
     }
   }
 
-  /** Partition-scoped OVERWRITE (Delta `replaceWhere` restricted to
-    * partition values, its safe core): atomically replace the listed
-    * `partCol=value` partitions with `df`'s rows. Every other
-    * partition's files hard-link into the new version unchanged, so the
-    * cost is O(replaced data + file-count metadata) — at 100 TB this is
-    * the difference between refreshing yesterday's partitions and
-    * rewriting the table. Semantics, all enforced:
-    *
-    *   - `df` may only carry rows for the listed values (Delta's
-    *     replaceWhere constraint) — anything else would silently widen
-    *     the replacement;
-    *   - a listed partition absent from `df` is DROPPED (replace means
-    *     replace); one not yet on the table is created;
-    *   - the swap is a single versioned commit (time travel, CDF,
-    *     RESTORE all see one transition), OCC-checked against the
-    *     version the staging linked. */
-  def replacePartitionValuesPath(spark: SparkSession, df: DataFrame,
-      dir: String, partCol: String, values: Seq[String],
-      keepVersions: Int = 10,
-      commitTag: Option[(String, String)] = None): Unit =
-      raceToConflict(dir) {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    // if/else, not an early return — non-local returns throw through
-    // the raceToConflict closure (DeletionVectors' rule)
-    if (values.isEmpty) ()
-    else {
-    val dst = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = dst.getFileSystem(conf)
-    require(f.exists(dst), s"no table at $dir")
-    require(!isBucketedLayout(f, dir),
-      "bucketed layouts replace per bucket through merge/DML, not " +
-        "partition values")
-    require(!graft.layout.DeletionVectors.hasDv(spark, dir),
-      s"$dir carries a deletion-vector sidecar; OPTIMIZE (which folds " +
-        "it) before partition-scoped replacement")
-    val partCols = partitionColsOf(f, dir)
-    require(partCols.map(_.toLowerCase).contains(partCol.toLowerCase),
-      s"'$partCol' is not a partition column of $dir " +
-        s"(${partCols.mkString(", ")})")
-    require(df.columns.exists(_.equalsIgnoreCase(partCol)),
-      s"replacement frame must carry the partition column '$partCol'")
-    // Delta's replaceWhere gate: the frame may not smuggle rows into
-    // partitions outside the declared set. NULL partition values must
-    // fail the gate too — `!isInCollection` is NULL for them, so a
-    // bare negation would silently pass rows bound for the
-    // __HIVE_DEFAULT_PARTITION__ dir (Delta's replaceWhere rejects
-    // them; so do we)
-    val stray = df.filter(col(partCol).isNull ||
-      !col(partCol).isInCollection(values)).isEmpty
-    require(stray, s"replacement frame carries rows outside the " +
-      s"listed $partCol values — widen `values` or filter the frame")
-    val stagedAgainst = readPointer(f, dir)
-    val all = spark.read.parquet(dir)
-    // which partition DIRS the listed values currently own: the pruned
-    // scan's own file list (no hand re-derivation of value escaping) —
-    // same technique as compactWherePath
-    val basePath = f.makeQualified(dst).toUri.getPath
-    val matchedRel = all.filter(col(partCol).isInCollection(values))
-      .select(input_file_name().as("p"))
-      .distinct().collect()
-      .map { r =>
-        val p = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-        val rel = p.stripPrefix(basePath).stripPrefix("/")
-        rel.substring(0, rel.lastIndexOf('/'))
-      }.toSet
-    val tmp = stagingPath(dir, "")
-    f.mkdirs(tmp)
-    linkDataTree(f, conf, dst, tmp)
-    matchedRel.foreach(rel => f.delete(new Path(tmp, rel), true))
-    if (!df.isEmpty) {
-      val stage = stagingPath(dir, "-replace")
-      df.repartition(partCols.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(partCols: _*).parquet(stage.toString)
-      TableRules.moveStaged(f, stage, tmp)
-    }
-    // linked files keep valid skipping stats; replaced partitions are
-    // unprofiled until the next analyze (appendPath's rule)
-    val skipDir = new Path(dst, "_skipping")
-    if (f.exists(skipDir))
-      org.apache.hadoop.fs.FileUtil.copy(f, skipDir,
-        f, new Path(tmp, "_skipping"), false, false, conf)
-    SwapProtocol.commit(spark, f, dir, tmp, SwapProtocol.WholeDir,
-      keepVersions, Some(stagedAgainst),
-      commitTag.toSeq :+ (OperationTagKey -> "REPLACE WHERE"))
-    }
-  }
-
   def compactPath(spark: SparkSession, dir: String, targetFileSize: Long,
       keepVersions: Int = 10, partitionBy: Seq[String] = Nil,
       zorderBy: Seq[String] = Nil): Unit = raceToConflict(dir) {
@@ -1496,47 +1407,49 @@ object Catalog {
   private[graft] def stagingPathShim(dir: String, kind: String): Path =
     stagingPath(dir, kind)
 
-  /** Hard-link (copy on link-less stores) every data file of `src` into
-    * `tmp` under its own name — the link-append staging step shared by
-    * [[appendPath]] and [[graft.layout.DeletionVectors]]. */
-  private[graft] def linkDataFiles(f: FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      src: Path, tmp: Path): Unit = {
-    val canLink = f.getScheme == "file"
-    f.listStatus(src).foreach { st =>
-      val n = st.getPath.getName
-      // files only: partition-dir levels are [[linkDataTree]]'s job
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-        val d = new Path(tmp, n)
-        if (canLink)
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(f.makeQualified(d).toUri.getPath),
-            java.nio.file.Paths.get(
-              f.makeQualified(st.getPath).toUri.getPath))
-        else require(org.apache.hadoop.fs.FileUtil.copy(f, st.getPath,
-          f, d, false, false, conf), s"append link/copy failed: $n")
+  /** Data files under `root`, as paths relative to it, through
+    * partition-dir levels. Underscore/dot entries (version logs,
+    * sidecars) are skipped at every level. */
+  private[graft] def dataFiles(f: FileSystem, root: Path): Seq[String] = {
+    def walk(d: Path, rel: String): Seq[String] =
+      f.listStatus(d).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, s"$rel$n/")
+        else Seq(rel + n)
       }
+    walk(root, "")
+  }
+
+  /** Hard-link (copy on link-less stores) the data files `rels` of `src`
+    * ([[dataFiles]] paths) into `tmp` under the same relative paths — the
+    * O(file count) link-staging step of appends, DV commits, bucket swaps
+    * and file-granular rewrites. Partition dirs are created as their
+    * files need them. */
+  private[graft] def linkDataFiles(f: FileSystem,
+      conf: org.apache.hadoop.conf.Configuration, src: Path, tmp: Path,
+      rels: Iterable[String]): Unit = {
+    rels.filter(_.contains('/')).map(r => r.substring(0, r.lastIndexOf('/')))
+      .toSet.foreach((d: String) => f.mkdirs(new Path(tmp, d)))
+    val canLink = f.getScheme == "file"
+    rels.foreach { rel =>
+      val (s, d) = (new Path(src, rel), new Path(tmp, rel))
+      if (canLink)
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(f.makeQualified(d).toUri.getPath),
+          java.nio.file.Paths.get(f.makeQualified(s).toUri.getPath))
+      else require(org.apache.hadoop.fs.FileUtil.copy(f, s, f, d, false,
+        false, conf), s"link/copy failed: $rel")
     }
   }
 
-  /** [[linkDataFiles]] extended through partition-dir levels: data files
-    * link under their original relative paths, so a hive-partitioned
-    * tree stages at O(file count) metadata like a flat snapshot.
-    * Underscore/dot entries (version logs, sidecars) are skipped at
-    * every level. Identical to [[linkDataFiles]] on a flat dir. */
+  /** [[linkDataFiles]] of every data file of `src`: a flat or
+    * hive-partitioned snapshot, or one bucket dir, stages at O(file
+    * count) metadata. */
   private[graft] def linkDataTree(f: FileSystem,
       conf: org.apache.hadoop.conf.Configuration,
-      src: Path, tmp: Path): Unit = {
-    linkDataFiles(f, conf, src, tmp) // the files at this level
-    f.listStatus(src).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
-        val d = new Path(tmp, n)
-        f.mkdirs(d)
-        linkDataTree(f, conf, st.getPath, d)
-      }
-    }
-  }
+      src: Path, tmp: Path): Unit =
+    linkDataFiles(f, conf, src, tmp, dataFiles(f, src))
 
   def overwritePath(spark: SparkSession, df: DataFrame, dir: String,
       partitionBy: Seq[String] = Nil, keepVersions: Int = 10,
@@ -1719,18 +1632,17 @@ object Catalog {
     *   layout            DV mode off               DV mode on
     *   flat snapshot     FileGranularDml           DeletionVectors
     *   bucketed          BucketedDml.*Cow          BucketedDml.*Mor
-    *   hive-partitioned  full rewrite              refused
+    *   hive-partitioned  FileGranularDml           refused
     *
     *   - [[graft.layout.FileGranularDml]]: one probe finds the files
     *     holding matches, untouched files hard-link into the new version,
-    *     only touched files rewrite (Delta's narrowed-rewrite shape);
+    *     only touched files rewrite (Delta's narrowed-rewrite shape), in
+    *     the table's partition layout;
     *   - [[graft.layout.DeletionVectors]]: a position sidecar (UPDATE
-    *     appends the new images), zero data movement;
+    *     appends the new images), zero data movement; partition-dir trees
+    *     carry no sidecars, so DV mode there raises;
     *   - [[graft.layout.BucketedDml]]: touched buckets rewrite (`*Cow`) or
-    *     grow per-bucket sidecars (`*Mor`); untouched buckets never open;
-    *   - partition-dir trees: the full rewrite through [[overwritePath]],
-    *     partition layout kept (the one O(table) case); they carry no
-    *     sidecars, so DV mode there raises.
+    *     grow per-bucket sidecars (`*Mor`); untouched buckets never open.
     *
     * `alias` lets a statement's qualified references (`t.x`) resolve.
     * The affected-row count rides the layout's probe job. */
@@ -1761,28 +1673,45 @@ object Catalog {
         DeletionVectors.deleteWhere(spark, dir, cond, keepVersions, alias)
       case Some(a) =>
         DeletionVectors.updateWhere(spark, dir, cond, a, keepVersions, alias)
-    } else {
-      val partCols = partitionColsOf(f, dir)
-      if (partCols.isEmpty) assign match {
-        case None =>
-          FileGranularDml.deleteWhere(spark, dir, cond, keepVersions, alias)
-        case Some(a) =>
-          FileGranularDml.updateWhere(spark, dir, cond, a, keepVersions, alias)
-      } else {
-        // partition-dir tree: the full rewrite, its partition layout kept
-        val live = DeletionVectors.readPath(spark, dir)
-        val t = alias.fold(live)(live.alias)
-        val c = org.apache.spark.sql.functions.coalesce(cond,
-          org.apache.spark.sql.functions.lit(false))
-        val out = assign.fold(t.filter(!c))(a =>
-          TableRules.updateImage(spark, dir, t, a, Some(c)).frame)
-        val matched = t.filter(c).count()
-        if (matched > 0)
-          overwritePath(spark, out, dir, partCols, keepVersions,
-            operation = if (assign.isEmpty) "DELETE" else "UPDATE")
-        matched
-      }
+    } else assign match {
+      case None =>
+        FileGranularDml.deleteWhere(spark, dir, cond, keepVersions, alias)
+      case Some(a) =>
+        FileGranularDml.updateWhere(spark, dir, cond, a, keepVersions, alias)
     }
+  }
+
+  /** `INSERT INTO … REPLACE WHERE cond`: rows where `cond` is TRUE are
+    * removed (NULL keeps, 3VL) and `rows` inserted, as ONE version. Every
+    * inserted row must match `cond` (a NULL counts as a violation); a
+    * violating insert aborts with no version, and an empty region with no
+    * rows commits nothing. The ONE place a REPLACE WHERE picks its path,
+    * from the table's recorded layout (the catalog API, SQL and q242's
+    * serving refresh all call it):
+    *
+    *   layout                  path
+    *   flat snapshot (± DVs)   FileGranularDml: files holding a matching
+    *   hive-partitioned          row rewrite with their other rows, the
+    *                             rest hard-link, the rows move in
+    *   bucketed                BucketedDml.replaceWhere: the touched and
+    *                             destination buckets swap
+    *
+    * `rows` carries the table's logical columns (generated and identity
+    * columns may be absent; the write gate fills them). `commitTag` rides
+    * whole-dir commits; a bucket swap has no tag store and refuses one.
+    * Returns the removed-row count. */
+  def replaceWherePath(spark: SparkSession, dir: String,
+      cond: org.apache.spark.sql.Column, rows: DataFrame,
+      keepVersions: Int = 10,
+      commitTag: Option[(String, String)] = None): Long = {
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (isBucketedLayout(f, dir)) {
+      require(commitTag.isEmpty,
+        s"a bucket swap of $dir has no tag store for $commitTag")
+      graft.layout.BucketedDml.replaceWhere(spark, dir, cond, rows,
+        keepVersions)
+    } else graft.layout.FileGranularDml.replaceWhere(spark, dir, cond, rows,
+      keepVersions, commitTag)
   }
 
   /** MERGE into the table at `dir`: `fn(target, source)` returns its new

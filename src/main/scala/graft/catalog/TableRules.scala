@@ -2,7 +2,8 @@ package graft.catalog
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max, sum, when}
+import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, max,
+  sum, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.layout.{DeletionVectors, SwapProtocol}
@@ -288,6 +289,21 @@ object TableRules {
       catch { case e: Throwable =>
         fsOf(spark, dir).delete(stage, true); throw e }
     }
+
+  /** REPLACE WHERE's rule (Delta's): every inserted row must match `cond`.
+    * Under three-valued logic a NULL result does not match, so it counts
+    * as a violation (`!cond` alone would let it through). Checked over the
+    * STAGED rows, in the job that counts them; returns that count. */
+  private[graft] def requireInRegion(staged: DataFrame, cond: Column,
+      dir: String): Long = {
+    val r = staged.agg(count(lit(1)),
+      sum(when(coalesce(cond, lit(false)), 0L).otherwise(1L))).collect()(0)
+    val outside = if (r.isNullAt(1)) 0L else r.getLong(1)
+    require(outside == 0, s"REPLACE WHERE on $dir: $outside inserted " +
+      s"row(s) violate the predicate ($cond) — the statement replaces ONLY " +
+      "that region")
+    r.getLong(0)
+  }
 
   // ------------------------------------------------- staged move
 

@@ -157,7 +157,7 @@ object BucketedDml {
               val liveB = new Path(dir, s"$BucketCol=$b")
               val stagedB = new Path(tmp, s"$BucketCol=$b")
               fs.mkdirs(stagedB)
-              if (fs.exists(liveB)) Catalog.linkDataFiles(fs, conf, liveB, stagedB)
+              if (fs.exists(liveB)) Catalog.linkDataTree(fs, conf, liveB, stagedB)
             }
             // merged sidecars: every touched bucket's existing positions
             // (they must ride into the replacement dir) + the new ones
@@ -331,7 +331,7 @@ object BucketedDml {
             fs.mkdirs(stagedB)
             val liveB = new Path(dir, sb.getName)
             if (fs.exists(liveB)) {
-              Catalog.linkDataFiles(fs, conf, liveB, stagedB)
+              Catalog.linkDataTree(fs, conf, liveB, stagedB)
               // an existing per-bucket DV sidecar rides along unchanged:
               // linked files keep their names, appended rows are new files
               val dvB = new Path(liveB, DeletionVectors.DvDirName)
@@ -364,13 +364,13 @@ object BucketedDml {
     * and their pending DV sidecars; touched buckets fold their sidecars
     * away in the rewrite (the flat eager path's rule).
     *
-    * Semantics follow the flat [[graft.sql.GraftReplaceWhereCommand]]:
-    * every inserted row must satisfy the predicate (validated against
-    * the STAGED files so a non-deterministic query cannot pass
-    * validation and then materialize different rows); rows where the
-    * predicate is NULL do not match and are KEPT (3VL). Returns the
-    * number of removed rows. */
-  def replaceWhere(spark: SparkSession, dir: String, condSql: String,
+    * Semantics are `Catalog.replaceWherePath`'s, which routes here:
+    * every inserted row must satisfy the predicate
+    * ([[TableRules.requireInRegion]] over the STAGED files, so a
+    * non-deterministic query cannot pass validation and then materialize
+    * different rows); rows where the predicate is NULL do not match and
+    * are KEPT (3VL). Returns the number of removed rows. */
+  def replaceWhere(spark: SparkSession, dir: String, condition: Column,
       insert: DataFrame,
       keepVersions: Int = 10): Long = Catalog.raceToConflictShim(dir) {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -391,18 +391,14 @@ object BucketedDml {
       throw new IllegalArgumentException(
         s"REPLACE WHERE on $dir schema mismatch: $d")
     }
-    val cond = coalesce(expr(condSql), lit(false))
+    val cond = coalesce(condition, lit(false))
     val routed = routeBuckets(spark, dir, g.frame)
     val rowStage = Catalog.stagingPathShim(dir, "-replace")
     routed.write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(rowStage.toString)
     try {
-      val staged = spark.read.parquet(rowStage.toString)
-      val outside = staged
-        .filter(!coalesce(expr(condSql), lit(false))).count()
-      require(outside == 0,
-        s"REPLACE WHERE: $outside inserted row(s) violate the predicate " +
-          s"($condSql) — the statement replaces ONLY that region")
+      val staged = spark.read.schema(routed.schema).parquet(rowStage.toString)
+      TableRules.requireInRegion(staged, condition, dir)
       TableRules.enforceStaged(spark, dir, g.checks, rowStage,
         Some(staged.schema))
       val live = taggedLive(spark, dir, None)

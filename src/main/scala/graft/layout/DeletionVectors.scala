@@ -322,7 +322,7 @@ object DeletionVectors {
       try {
         // hard-link every current data file (names preserved — the sidecar
         // and the skipping manifest key on basenames)
-        Catalog.linkDataFiles(f, conf, dst, tmp)
+        Catalog.linkDataTree(f, conf, dst, tmp)
         val stagedDv = new Path(tmp, DvDirName)
         val newDv = positions(matched)
         val allDv =

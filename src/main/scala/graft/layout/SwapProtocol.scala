@@ -316,7 +316,7 @@ object SwapProtocol {
 
   /** Rename `from` to `to` as the step `name`; false if refused. The
     * protocol's one rename: retire, stage-in, recovery, the staged-file
-    * moves of DML and COPY INTO. */
+    * moves of DML and appends. */
   private[graft] def move(name: String, f: FileSystem, from: Path,
       to: Path): Boolean =
     step(name, to) {
@@ -361,7 +361,12 @@ object SwapProtocol {
     def abandon(e: Exception): Nothing = { f.delete(stage, true); throw e }
     retire match {
       case WholeDir =>
-        if (f.exists(dst)) f.listStatus(dst).foreach { st =>
+        // unclaimed read: a concurrent commit may retire the live dir
+        // under it, and then the table has moved past this stage
+        val live = try if (f.exists(dst)) f.listStatus(dst).toSeq else Nil
+          catch { case _: java.io.IOException if !f.exists(dst) =>
+            abandon(new ConcurrentCommitException(dir)) }
+        live.foreach { st =>
           val n = st.getPath.getName
           if (n.startsWith(TagPrefix) &&
               !tags.exists(t => n == TagPrefix + t._1))

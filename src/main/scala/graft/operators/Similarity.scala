@@ -527,9 +527,10 @@ object Similarity {
     *   old serving partition rows (partition-pruned — O(changed cells))
     *   MINUS the feed's deletes PLUS its inserts,
     *
-    * and commits them through the partition-scoped replace
-    * ([[graft.catalog.Catalog.replacePartitionValuesPath]] — untouched
-    * partitions hard-link forward). Centroid stats update from the same
+    * and commits them through REPLACE WHERE on the changed cells
+    * ([[graft.catalog.Catalog.replaceWherePath]] — the pcell predicate
+    * prunes the probe to those partitions; untouched partitions
+    * hard-link forward). Centroid stats update from the same
     * rebuilt rows (O(#cells) metadata). The cursor advances LAST, so a
     * crash mid-refresh just re-runs the idempotent replacement.
     *
@@ -573,9 +574,10 @@ object Similarity {
               .map(col): _*))
             val tag = Catalog.lastCommitTag(spark, postDir, IvfMaxListTag)
               .map(IvfMaxListTag -> _)
-            Catalog.replacePartitionValuesPath(spark,
+            Catalog.replaceWherePath(spark, s"$servingDir/postings",
+              col("pcell").isInCollection(pcells),
               newRows.withColumn("pcell", concat(lit("c"), col("cent_id"))),
-              s"$servingDir/postings", "pcell", pcells, commitTag = tag)
+              commitTag = tag)
           }
           // stats patch: changed cells recount from their rebuilt
           // partitions (partition-pruned), unchanged cells keep their

@@ -650,95 +650,32 @@ case class GraftInsertCommand(nameParts: Seq[String],
 /** `INSERT INTO <t> REPLACE WHERE <cond> <query>` — Databricks/Delta's
   * predicate-scoped atomic replacement: rows matching the predicate are
   * deleted and the query's rows inserted, as ONE versioned commit
-  * (partition-overwrite generalized to any predicate). Delta's
-  * validation rule applies: every inserted row must satisfy the
-  * predicate — otherwise the statement aborts and the table is
-  * untouched. The commit carries the staged-against version, so an
-  * interleaved writer raises [[graft.catalog.Catalog.ConcurrentCommitException]]
-  * rather than being silently overwritten. */
+  * through [[graft.catalog.Catalog.replaceWherePath]] (which holds the
+  * rules and picks the layout's path). This command only aligns the
+  * query's columns to the table's, INSERT's positional rule: all of the
+  * logical columns, or all but the generated ones (the write gate
+  * computes those). */
 case class GraftReplaceWhereCommand(nameParts: Seq[String], cond: String,
     query: LogicalPlan) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = GraftSql.resolveDir(spark, nameParts, "REPLACE WHERE")
-    // DV-applied base (the mergeInto targetDF rule): on a deletion-vector
-    // table, a raw parquet read of `dir` would resurrect DV-deleted rows
-    // into the rewritten snapshot whenever the transparent DvApplyRule is
-    // not in play — and REPLACE WHERE's overwrite drops the sidecar.
-    val cur = graft.layout.DeletionVectors.readPath(spark, dir)
-    val fs0 = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketed = graft.catalog.Catalog.isBucketedLayout(fs0, dir)
-    // on a bucketed layout the bucket column is physical layout, not
-    // data — the insert query aligns against the LOGICAL fields and the
-    // per-bucket path re-routes rows itself
-    val bucketCol = graft.merge.PartitionedMerge.BucketCol
-    val targetFields = cur.schema.fields.filterNot(f =>
-      bucketed && f.name.equalsIgnoreCase(bucketCol))
+    val targetFields = graft.layout.DeletionVectors.readLogical(spark, dir)
+      .schema.fields.toSeq
     val gens = graft.catalog.TableRules.generated(spark, dir)
-    val idents = graft.catalog.TableRules.identity(spark, dir)
-    // positional alignment (INSERT's rule), generated columns computed so
-    // the union below is schema-complete; identity columns cannot be
-    // synthesized for a PARTIAL rewrite deterministically mid-plan, so
-    // they must come from the query (or not exist)
     val src = GraftShims.ofRows(spark, query)
     val writable = targetFields.filterNot(f =>
       gens.exists(_._1.equalsIgnoreCase(f.name)))
-    val named =
-      if (src.columns.length == targetFields.length)
-        src.toDF(targetFields.map(_.name).toSeq: _*)
-      else if (src.columns.length == writable.length)
-        src.toDF(writable.map(_.name).toSeq: _*)
+    val fields =
+      if (src.columns.length == targetFields.length) targetFields
+      else if (src.columns.length == writable.length) writable
       else throw new IllegalArgumentException(
         s"REPLACE WHERE insert needs ${targetFields.length} columns " +
           s"(or ${writable.length} skipping generated), got " +
           s"${src.columns.length}")
-    require(idents.forall(i => named.columns.exists(_.equalsIgnoreCase(i._1))),
-      "REPLACE WHERE on a table with identity columns requires the query " +
-        "to carry them (identity assignment needs the table-wide watermark)")
-    val filled = graft.catalog.TableRules.generate(spark, dir, named).frame
-    val aligned = filled.select(targetFields.map(f =>
-      filled(filled.columns.find(_.equalsIgnoreCase(f.name)).get)
-        .cast(f.dataType).as(f.name)).toSeq: _*)
-    if (bucketed) {
-      // per-bucket region swap: CoW-delete the predicate region from its
-      // buckets + hash-route the (staged, validated) insert rows, one
-      // bucket-swap version — untouched buckets keep their inodes
-      graft.layout.BucketedDml.replaceWhere(spark, dir, cond, aligned)
-      GraftSql.refreshTarget(spark, nameParts, dir)
-      return Seq.empty
-    }
-    val stagedAgainst = graft.catalog.Catalog
-      .historyRows(spark, dir).filter(_._2).map(_._1).headOption.getOrElse(1)
-    // Stage the insert query's rows ONCE, then validate and commit from
-    // the staged files — a non-deterministic query (rand(), a source
-    // mutating between actions) would otherwise pass the validation count
-    // and then materialize different, predicate-violating rows at write
-    // time; deterministic queries would pay double compute.
-    // unique per-attempt staging (racers must never share a staging
-    // path); vacuum's `.tmp` prefix sweep reclaims abandoned attempts
-    val stagePath = new org.apache.hadoop.fs.Path(dir + ".tmp-replace-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val fs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    aligned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(stagePath.toString)
-    try {
-      val staged = spark.read.parquet(stagePath.toString)
-      // Delta's rule: every inserted row must MATCH the predicate. Under
-      // SQL three-valued logic a NULL predicate result does NOT match, so
-      // it counts as a violation — `!cond` alone would let it slip (NULL
-      // filters out of both `cond` and `!cond`).
-      val outside = staged.filter(!coalesce(expr(cond), lit(false))).count()
-      require(outside == 0,
-        s"REPLACE WHERE: $outside inserted row(s) violate the predicate " +
-          s"($cond) — the statement replaces ONLY that region")
-      // Keep the rows the predicate does NOT match (cond not true). Rows
-      // where cond is NULL don't match, so they MUST be kept — plain
-      // `!cond` silently deletes them.
-      val kept = cur.filter(!coalesce(expr(cond), lit(false)))
-      graft.catalog.Catalog.overwritePath(spark, kept.unionByName(staged),
-        dir, expectedVersion = Some(stagedAgainst),
-        operation = "REPLACE WHERE")
-    } finally fs.delete(stagePath, true)
+    val named = src.toDF(fields.map(_.name): _*)
+    val aligned = named.select(fields.map(f =>
+      named(f.name).cast(f.dataType).as(f.name)): _*)
+    graft.catalog.Catalog.replaceWherePath(spark, dir, expr(cond), aligned)
     GraftSql.refreshTarget(spark, nameParts, dir)
     Seq.empty
   }

@@ -368,7 +368,7 @@ class BucketedDmlSpec extends SparkSuite {
     val (path, _) = mkTable(100)
     val before = dataFileKeys(path)
     val b5 = bucketOf(5)
-    val n = BucketedDml.replaceWhere(spark, path, "k = 5",
+    val n = BucketedDml.replaceWhere(spark, path, expr("k = 5"),
       Seq((5L, "V5", 99)).toDF("k", "v", "g"))
     assert(n == 1)
     val now = PartitionedMerge.read(spark, path)
@@ -385,7 +385,7 @@ class BucketedDmlSpec extends SparkSuite {
       .filter(col("k") === 5)) == Seq(Seq(5L, "v5", 0)))
     // an inserted row OUTSIDE the predicate aborts the whole statement
     intercept[IllegalArgumentException] {
-      BucketedDml.replaceWhere(spark, path, "k = 6",
+      BucketedDml.replaceWhere(spark, path, expr("k = 6"),
         Seq((7L, "x", 0)).toDF("k", "v", "g"))
     }
     assert(PartitionedMerge.read(spark, path).count() == 100)
@@ -404,7 +404,7 @@ class BucketedDmlSpec extends SparkSuite {
     // replace the k=2 region (g = 2, not DV-deleted): its bucket
     // rewrites DV-applied, every other sidecar rides on untouched
     val b2 = bucketOf(2)
-    assert(BucketedDml.replaceWhere(spark, path, "k = 2",
+    assert(BucketedDml.replaceWhere(spark, path, expr("k = 2"),
       Seq((2L, "NEW", 0)).toDF("k", "v", "g")) == 1)
     val dvAfter = PartitionedMerge.liveBucketDirs(fs, path).filter(p =>
       fs.exists(new org.apache.hadoop.fs.Path(p, "_dv"))).map(_.getName)
@@ -423,7 +423,7 @@ class BucketedDmlSpec extends SparkSuite {
     val df = Seq((1L, "a", Some(2)), (2L, "b", None))
       .toDF("k", "v", "g")
     PartitionedMerge.write(df, path, keys, 1)
-    val n = BucketedDml.replaceWhere(spark, path, "g = 2",
+    val n = BucketedDml.replaceWhere(spark, path, expr("g = 2"),
       Seq((9L, "c", Some(2))).toDF("k", "v", "g"))
     assert(n == 1)
     assert(rowsOf(PartitionedMerge.read(spark, path), "k") ==

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.ingest.CopyInto
 
 /** COPY INTO semantics: file-level idempotence, incremental pickup,
-  * crash-resume without duplication, target-schema authority, and the
-  * SQL statement surface. */
+  * crash-resume without duplication, target-schema authority, the SQL
+  * statement surface, and one versioned commit through the write gate
+  * per load. */
 class CopyIntoSpec extends SparkSuite {
   import spark.implicits._
 
@@ -97,5 +98,66 @@ class CopyIntoSpec extends SparkSuite {
       s"COPY INTO bronze.copy_t FROM '$src' FILEFORMAT = CSV").collect()(0)
     assert(res2.getLong(0) == 0L && spark.table("bronze.copy_t").count() == 3)
     cat.dropRegistration("bronze", "copy_t")
+  }
+
+  private def ids(dst: String): Seq[Long] =
+    spark.read.parquet(dst).select("id").as[Long].collect().sorted.toSeq
+
+  test("each non-empty load is one COPY INTO version in the history") {
+    val root = tmpDir("graft-copy-hist")
+    val src = s"$root/landing"; val dst = s"$root/table"
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f1")
+    CopyInto.run(spark, dst, src, "parquet")
+    CopyInto.run(spark, dst, src, "parquet") // no-op: no version
+    Seq((2L, "b")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f2")
+    CopyInto.run(spark, dst, src, "parquet")
+    val hist = graft.catalog.Catalog.historyRows(spark, dst)
+    assert(hist.map(h => (h._1, h._6)).sortBy(_._1) ==
+      Seq(1 -> "COPY INTO", 2 -> "COPY INTO"), s"history: $hist")
+    assert(ids(dst) == Seq(1L, 2L))
+  }
+
+  test("a CHECK violation leaves no version and no rows") {
+    val root = tmpDir("graft-copy-check")
+    val src = s"$root/landing"; val dst = s"$root/table"
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f1")
+    CopyInto.run(spark, dst, src, "parquet")
+    graft.catalog.Catalog.addConstraintPath(spark, dst, "pos", "id > 0")
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v0 = graft.layout.SwapProtocol.readPointer(fs, dst)
+    Seq((-1L, "x")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f2")
+    intercept[IllegalStateException](CopyInto.run(spark, dst, src, "parquet"))
+    assert(graft.layout.SwapProtocol.readPointer(fs, dst) == v0)
+    assert(ids(dst) == Seq(1L))
+  }
+
+  test("a crash at the commit's pointer step, then a re-run, loads each row once") {
+    import graft.layout.SwapProtocol
+    val root = tmpDir("graft-copy-ptr")
+    val src = s"$root/landing"; val dst = s"$root/table"
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f1")
+    CopyInto.run(spark, dst, src, "parquet")
+    Seq((2L, "b")).toDF("id", "v").coalesce(1).write.parquet(s"$src/f2")
+    val key = new org.apache.hadoop.fs.Path(dst).toUri.getPath
+    SwapProtocol.stepHooks.put(key, step =>
+      if (step == "pointer") throw new RuntimeException("crash at pointer"))
+    try intercept[RuntimeException](CopyInto.run(spark, dst, src, "parquet"))
+    finally SwapProtocol.stepHooks.remove(key)
+    // the restart finds the in-flight claim and retired version aged past
+    // the grace
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = SwapProtocol.readPointer(fs, dst)
+    val old = System.currentTimeMillis() - SwapProtocol.HealGraceMs - 1000
+    Seq(new org.apache.hadoop.fs.Path(SwapProtocol.historyDir(dst),
+        s"_swap_claim_v$cur"), SwapProtocol.versionDir(dst, cur))
+      .filter(fs.exists).foreach(fs.setTimes(_, old, -1))
+    val r = CopyInto.run(spark, dst, src, "parquet")
+    assert(r.filesLoaded == 1L, s"re-run: $r")
+    assert(rowsOf(graft.layout.DeletionVectors.readPath(spark, dst), "id") ==
+      Seq(Seq(1L, "a"), Seq(2L, "b")))
+    assert(CopyInto.run(spark, dst, src, "parquet").filesLoaded == 0L)
+    assert(ids(dst) == Seq(1L, 2L))
   }
 }

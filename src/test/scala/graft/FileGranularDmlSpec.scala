@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.layout.{DataSkipping, DeletionVectors, FileGranularDml}
 
-/** File-granular copy-on-write DML on flat snapshots: only files holding
-  * matched rows are rewritten (inode identity for the rest), the version
-  * law holds, and the skipping manifest / DV sidecar compose. */
+/** File-granular copy-on-write DML on flat and hive-partitioned
+  * snapshots: only files holding matched rows are rewritten (inode
+  * identity for the rest), the version law holds, and the skipping
+  * manifest / DV sidecar compose. */
 class FileGranularDmlSpec extends SparkSuite {
   import spark.implicits._
 
@@ -146,5 +147,47 @@ class FileGranularDmlSpec extends SparkSuite {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(graft.layout.SwapProtocol.readPointer(fs, dir) == 1)
+  }
+
+  /** A hive table whose one writing task named its file alike in both
+    * partition dirs: `p=a` holds id 1, `p=b` holds id 2. */
+  private def mkHive(): (String, String) = {
+    val dir = tmpDir("fgdml-hive") + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").coalesce(1)
+      .write.partitionBy("p").parquet(dir)
+    val names = Seq("a", "b").map(p => new java.io.File(s"$dir/p=$p")
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq)
+    assert(names(0) == names(1) && names(0).size == 1,
+      s"expected one same-named file per partition: $names")
+    (dir, names(0).head)
+  }
+
+  private def inode(f: String): Object = java.nio.file.Files.readAttributes(
+    java.nio.file.Paths.get(f),
+    classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+
+  test("hive DELETE rewrites one of two same-named files; the other keeps its rows and inode") {
+    val (dir, name) = mkHive()
+    val other = inode(s"$dir/p=b/$name")
+    assert(graft.catalog.Catalog.deleteWherePath(spark, dir,
+      col("id") === 1L) == 1)
+    assert(rowsOf(spark.read.parquet(dir), "id") == Seq(Seq(2L, "b")))
+    assert(inode(s"$dir/p=b/$name") == other,
+      "the untouched partition's file must be linked, not rewritten")
+    assert(!new java.io.File(s"$dir/p=a").exists())
+  }
+
+  test("hive UPDATE of the partition column moves the row to its new dir") {
+    val (dir, name) = mkHive()
+    val other = inode(s"$dir/p=b/$name")
+    assert(graft.catalog.Catalog.updateWherePath(spark, dir,
+      col("id") === 1L, Seq("p" -> lit("b"))) == 1)
+    assert(rowsOf(spark.read.parquet(dir), "id") ==
+      Seq(Seq(1L, "b"), Seq(2L, "b")))
+    assert(!new java.io.File(s"$dir/p=a").exists())
+    assert(inode(s"$dir/p=b/$name") == other)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.catalog.Catalog.partitionColsOf(fs, dir) == Seq("p"))
   }
 }
